@@ -129,6 +129,12 @@ object Bench {
     } else (sec, obj("jobs").map { case (k, v) => k -> v.toLong })
   }
 
+  /** The one stderr line a failed query leaves: name, exception class
+    * and message, the message folded onto the line. */
+  private[graft] def failureLine(name: String, t: Throwable): String =
+    s"[bench] FAILED $name: ${t.getClass.getName}: " +
+      Option(t.getMessage).getOrElse("").replaceAll("\\s*\\R\\s*", " ")
+
   /** EMA fold for one query's normalized sample. A heavily loaded run
     * (median inflation `speed` > 1.5) has per-query noise far above the
     * median correction — the r17 driver run at hs 3.616 put l4_tfidf at
@@ -370,7 +376,8 @@ object Bench {
         spark.sparkContext.setLocalProperty("spark.jobGroup.id", s"bq:$name")
         val q0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }
-        catch { case _: Throwable => false }
+        catch { case t: Throwable =>
+          System.err.println(failureLine(name, t)); false }
         (name, (System.nanoTime() - q0) / 1e9, ok)
       }
     }
@@ -440,7 +447,13 @@ object Bench {
             "\"" + k + "\":" + f"$folded%.3f"
           }.mkString(""","ema":{""", ",", "}")
         }
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs$jobs$ema$calib,"sf":"$sfDir","loadavg_start":"$loadStart","loadavg_end":"$loadEnd","cpus":$cpus}"""
+      // failed queries by name (file artifact only): a -1.0 entry in
+      // `queries` says THAT a query failed, this list is the roll call
+      val failed =
+        if (!withJobs) ""
+        else entries.collect { case (k, _, false) => "\"" + k + "\"" }
+          .mkString(""","failed":[""", ",", "]")
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs$jobs$ema$failed$calib,"sf":"$sfDir","loadavg_start":"$loadStart","loadavg_end":"$loadEnd","cpus":$cpus}"""
     }
     // Full per-query detail goes to the file; the PRINTED line carries a
     // headline subset because the bench driver keeps only the final 2000

@@ -243,20 +243,24 @@ object BranchFilePruning extends Rule[LogicalPlan] with PredicateHelper {
     }
   }
 
-  /** [[toBounds]] for callers OUTSIDE the optimizer rule —
-    * [[graft.sources.DeltaInterop.exportDeleteWhere]] prunes its
-    * candidate file set from the SAME conjunct→bound translation the
-    * read-path rule uses (one pruning semantics, not two). External
-    * callers hand ANALYZED (not optimized) conditions, where type
+  /** [[toBounds]] for callers OUTSIDE the optimizer rule — THE
+    * predicate→bound converter of the row-level DML candidate path:
+    * [[graft.sources.DeltaInterop]]'s DELETE / UPDATE prune their
+    * candidate files with it, and [[DeltaLite.scopePredicateBounds]]
+    * turns MERGE `incremental_predicates` into bounds through it (one
+    * pruning semantics, not two). External callers hand ANALYZED (not
+    * optimized) conditions, which the rule itself never sees: type
     * coercion wraps literals in Cast (`id <= 4` on BIGINT becomes
-    * `id <= cast(4 as bigint)`) — the rule itself runs after constant
-    * folding and never sees these, but here they'd silently disable
-    * every bound (review finding), so fold literal-rooted Casts first. */
+    * `id <= cast(4 as bigint)`) and bounds may be written as
+    * expressions (`day >= date_add(DATE'2024-01-31', 1)`). Unfolded,
+    * either would silently disable its bound, so every deterministic
+    * foldable subtree folds to a Literal first; one whose evaluation
+    * throws stays as it is and contributes no bound. */
   private[graft] def boundsOf(cond: Expression,
       scanOutput: AttributeSet): Seq[DeltaLite.ColumnBound] =
-    toBounds(cond.transformUp {
-      case c: Cast if c.child.isInstanceOf[Literal] && c.foldable =>
-        Literal.create(c.eval(null), c.dataType)
+    toBounds(cond.transformDown {
+      case e if e.foldable && e.deterministic && !e.isInstanceOf[Literal] =>
+        scala.util.Try(Literal(e.eval(null), e.dataType)).getOrElse(e)
     }, scanOutput)
 
   /** Simple conjuncts → stat bounds; everything else contributes

@@ -62,10 +62,17 @@ import org.json4s.jackson.JsonMethods
   * resolved by read-back compare), and a lost race re-replays and
   * REBUILDS the commit against the new state ([[occCommit]]) — so
   * concurrent writers (including the reference stack racing the
-  * exporter) interleave instead of clobbering. Deletes are
-  * partition-aligned only (remove actions, zero rewrite) — the
-  * metadata-only shape that survives 100 TB; row-level deletes belong
-  * to the native format's DV/MERGE machinery.
+  * exporter) interleave instead of clobbering. Row-level DML —
+  * `exportDeleteWhere`, `exportUpdateWhere`, `exportMerge`, the dbt
+  * incremental `delete` / `merge` traffic — writes deletion vectors:
+  * one locator ([[locateRows]]) replays the log, gates the table,
+  * prunes candidate files with the native log's bound converters
+  * (`BranchFilePruning.boundsOf` for predicates,
+  * `DeltaLite.sourceKeyBounds` for merge keys, both through
+  * [[DeltaLite.pruneFiles]]) and cuts the matched live rows; one
+  * commit tail ([[dvFlipCommit]]) flips their DVs. Whole-partition
+  * deletes (`exportDeletePartition`) stay remove actions only, zero
+  * rewrite.
   */
 object DeltaInterop {
 
@@ -1395,9 +1402,8 @@ object DeltaInterop {
   /** Partition-aligned DELETE on a standard Delta table: every live
     * file whose `partitionValues` carry `column = value` is removed in
     * one metadata-only commit — zero data rewritten, the delete shape
-    * that stays O(log) at 100 TB. Row-level deletes are deliberately
-    * NOT offered here (they need DVs or rewrite machinery — the native
-    * format's job). */
+    * that stays O(log) at 100 TB. Row-level deletes are
+    * [[exportDeleteWhere]]'s (deletion vectors). */
   def exportDeletePartition(spark: SparkSession, path: String,
       column: String, value: String): Long = {
     occCommit(spark, path, "exportDeletePartition") { st =>
@@ -1412,6 +1418,130 @@ object DeltaInterop {
       val now = System.currentTimeMillis()
       doomed.map(removeLine(_, now)) :+ commitInfoLine("DELETE")
     }
+  }
+
+  /** Which rows a row-level DV op touches: rows where the SQL
+    * `predicate` holds (DELETE; UPDATE, whose `set` expressions must
+    * be deterministic too), or target rows whose `keys` equal a row of
+    * the (cut) MERGE `source`. */
+  private sealed trait RowScope
+  private final case class Where(predicate: String,
+      set: Map[String, String] = Map.empty) extends RowScope
+  private final case class OnKeys(source: DataFrame, keys: Seq[String])
+      extends RowScope
+
+  /** What [[locateRows]] hands an op's commit: the replayed state, the
+    * candidate files' positional read (table columns + `path` /
+    * `row_index`), those files' existing DV positions, and the matched
+    * LIVE rows — cut once, since every op references them several
+    * times (DV positions, rewrite source, cdc images). A DELETE's
+    * matched frame carries positions only; no data column reaches its
+    * commit. */
+  private final case class Located(v0: Long, st0: State,
+      withPos: DataFrame, oldPos: DataFrame, matched: DataFrame) {
+    /** The freshly-deleted (`path`, `row_index`) positions. */
+    def fresh: DataFrame = matched.select("path", "row_index")
+  }
+
+  /** THE candidate-and-match path of the row-level DV ops (DELETE /
+    * UPDATE / MERGE), in order: log replay; the writability,
+    * unmapped-column and row-position-collision gates; the scope's own
+    * validation (determinism of predicate and SET; MERGE's key and
+    * source checks); candidate pruning — a file whose logged min/max
+    * (or partition value) disprove the scope holds no matching live
+    * row, so it is never opened (a DV'd file's stats are PHYSICAL
+    * bounds — deletion only shrinks the live set, so pruning stays
+    * sound). Predicate bounds come from
+    * [[graft.plans.BranchFilePruning.boundsOf]], key bounds from
+    * [[DeltaLite.sourceKeyBounds]] — the converters the native log
+    * prunes with. Then the DV-less positional read of the candidates
+    * (positions are per-file PHYSICAL indexes, the DV's domain), the
+    * anti-join that keeps already-deleted rows from counting as fresh
+    * matches (they would make an untouched file look touched and
+    * inflate cardinality), and the cut. Left(version) when the op is a
+    * no-op: a predicate scope over no candidate file, or an empty
+    * MERGE source (an empty target still takes a MERGE's inserts). */
+  private def locateRows(spark: SparkSession, path: String, op: String,
+      commitOp: String, scope: RowScope): Either[Long, Located] = {
+    import org.apache.spark.sql.functions.{col, count, expr, lit}
+    val (v0, st0) = replayState(spark, path)
+    requireWritable(st0, path, op, removesRows = true,
+      writesRows = scope match {
+        case Where(_, set) => set.nonEmpty
+        case _: OnKeys => true
+      })
+    requireUnmapped(st0, path, op)
+    requireNoPosCollision(st0.schema, st0.physical,
+      s"deletion-vector ${commitOp.toLowerCase}")
+    val (bounds, matchRows) = scope match {
+      case Where(predicate, set) =>
+        val unknown = set.keySet -- st0.schema.fieldNames
+        require(unknown.isEmpty,
+          s"$op on $path: SET names unknown column(s) " +
+            s"${unknown.toSeq.sorted.mkString(", ")}")
+        if (st0.live.isEmpty) return Left(v0)
+        // analyzing over an empty frame validates the predicate's
+        // names/types before any I/O
+        val emptyT = spark.createDataFrame(
+          new java.util.ArrayList[Row](), st0.schema)
+        val conds = emptyT.filter(expr(predicate))
+          .queryExecution.analyzed.collect {
+            case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+              f.condition -> f.child.outputSet
+          }
+        // a nondeterministic predicate (rand()-based sampling deletes)
+        // cannot produce a consistent DV: the matching scan and any
+        // re-evaluation would disagree — delta-spark declines these too
+        require(conds.forall(_._1.deterministic),
+          s"$op on $path: predicate '$predicate' is " +
+            "nondeterministic — a deletion vector must name a stable " +
+            "row set; materialize the choice into a column first")
+        // SET expressions re-evaluate on rebase retries and feed cdc
+        // postimages — nondeterminism would let the three disagree
+        require(emptyT.select(set.toSeq.map { case (k, e) =>
+            expr(e).as(k) }: _*).queryExecution.analyzed.expressions
+            .forall(_.deterministic),
+          s"$op on $path: a SET expression is nondeterministic — " +
+            "materialize the choice into a column first")
+        (conds.flatMap { case (c, out) =>
+            graft.plans.BranchFilePruning.boundsOf(c, out) },
+          (pos: DataFrame) => {
+            val hit = pos.filter(expr(predicate))
+            // a DELETE (no SET) reads positions only
+            if (set.isEmpty) hit.select(col("path"), col("row_index"))
+            else hit
+          })
+      case OnKeys(src, keys) =>
+        requireSchemaMatch(src, st0, path, op)
+        require(keys.nonEmpty, s"$op on $path: empty key list")
+        val unknown = keys.toSet -- st0.schema.fieldNames
+        require(unknown.isEmpty,
+          s"$op on $path: unknown key column(s) " +
+            s"${unknown.toSeq.sorted.mkString(", ")}")
+        require(src.groupBy(keys.map(col): _*)
+            .agg(count(lit(1)).as("__n"))
+            .filter(col("__n") > 1).limit(1).count() == 0L,
+          s"$op on $path: duplicate source keys — a target row " +
+            "matched by two source rows is ambiguous (delta-spark's " +
+            "multiple-source-match error); de-duplicate the source " +
+            "first")
+        // empty source: nothing matches, nothing inserts
+        if (src.isEmpty) return Left(v0)
+        (DeltaLite.sourceKeyBounds(src, keys),
+          (pos: DataFrame) =>
+            pos.join(src.select(keys.map(col): _*), keys, "left_semi"))
+    }
+    val candidates = DeltaLite.pruneFiles(toSnapshot(v0, st0), bounds)
+    if (candidates.isEmpty && scope.isInstanceOf[Where]) return Left(v0)
+    val withPos = DeltaLite.readFilesWithPos(spark, path, st0.schema,
+      candidates.map(_.copy(dv = None)), st0.partitionBy, st0.physical,
+      st0.config)
+    val oldDvs = candidates.flatMap(f => dvDescriptor(f).map(f.path -> _))
+    val (oldPos, _) = dvPositionsFrame(spark, path, oldDvs)
+    val matched = graft.Frames.cut(matchRows(withPos).join(oldPos,
+      col("path") === col("__dv_path") &&
+        col("row_index") === col("__dv_ri"), "left_anti"))
+    Right(Located(v0, st0, withPos, oldPos, matched))
   }
 
   /** Row-level DELETE on a standard Delta table via DELETION VECTORS —
@@ -1430,71 +1560,20 @@ object DeltaInterop {
     * under the SAME DV identity the union was computed against — a
     * concurrent flip or file removal declines loudly (delta-spark's
     * concurrent-delete conflict), never commits a DV that would
-    * resurrect or double-count rows. Returns the committed version, or
-    * the current version unchanged when no live row matches. */
+    * resurrect or double-count rows. Candidate files and matched rows
+    * come from [[locateRows]]. Returns the committed version, or the
+    * current version unchanged when no live row matches. */
   def exportDeleteWhere(spark: SparkSession, path: String,
       predicate: String): Long = {
-    import org.apache.spark.sql.functions.{col, collect_set, expr, sort_array}
-    val (v0, st0) = replayState(spark, path)
-    requireWritable(st0, path, "exportDeleteWhere", removesRows = true,
-      writesRows = false)
-    requireUnmapped(st0, path, "exportDeleteWhere")
-    requireNoPosCollision(st0.schema, st0.physical,
-      "deletion-vector delete")
-    val live = st0.live.values.toSeq
-    if (live.isEmpty) return v0
-    // log-stats candidate pruning — the 100 TB lever: a selective
-    // delete must not OPEN every file. The predicate's simple
-    // conjuncts translate to stat bounds through the SAME machinery
-    // the read path prunes with (BranchFilePruning.boundsOf →
-    // DeltaLite.pruneFiles); a file whose logged min/max disprove the
-    // predicate holds no matching live row (a DV'd file's stats are
-    // PHYSICAL bounds — deletion only shrinks the live set, so
-    // pruning stays sound). Analyzing the filter over an empty frame
-    // also validates the predicate's names/types before any I/O.
-    val probe = spark.createDataFrame(
-      new java.util.ArrayList[Row](), st0.schema).filter(expr(predicate))
-    val conds = probe.queryExecution.analyzed.collect {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition -> f.child.outputSet
-    }
-    // a nondeterministic predicate (rand()-based sampling deletes)
-    // cannot produce a consistent DV: the matching scan and any
-    // re-evaluation would disagree — delta-spark declines these too
-    require(conds.forall(_._1.deterministic),
-      s"exportDeleteWhere on $path: predicate '$predicate' is " +
-        "nondeterministic — a deletion vector must name a stable row " +
-        "set; materialize the choice into a column first")
-    val bounds = conds.flatMap { case (c, out) =>
-      graft.plans.BranchFilePruning.boundsOf(c, out) }
-    val candidates =
-      if (bounds.isEmpty) live
-      else DeltaLite.pruneFiles(toSnapshot(v0, st0), bounds)
-    if (candidates.isEmpty) return v0
-    // physical row positions of rows matching the predicate (DV-less
-    // read: positions are per-file PHYSICAL indexes, the DV's domain)
-    val withPos = DeltaLite.readFilesWithPos(spark, path, st0.schema,
-      candidates.map(_.copy(dv = None)), st0.partitionBy, st0.physical,
-      st0.config)
-    val matches = withPos.filter(expr(predicate))
-      .select(col("path"), col("row_index"))
-    val oldDvs = candidates.flatMap(f => dvDescriptor(f).map(f.path -> _))
-    val (oldPos, _) = dvPositionsFrame(spark, path, oldDvs)
-    // rows already deleted must not count as fresh matches (they would
-    // make an untouched file look touched and inflate cardinality);
-    // the CUT matters: `fresh` feeds BOTH union branches (directly and
-    // through `touched`) — uncut, the predicate scan and DV anti-join
-    // would execute twice per delete (review finding)
-    val fresh = graft.Frames.cut(matches.join(oldPos,
-      col("path") === col("__dv_path") &&
-        col("row_index") === col("__dv_ri"), "left_anti"))
-    dvFlipCommit(spark, path, "exportDeleteWhere", "DELETE", v0, st0,
-      fresh, oldPos, () => Nil,
-      () => Some(withPos.filter(expr(predicate))
-        .join(fresh, Seq("path", "row_index"), "left_semi")
-        .drop("path", "row_index")
-        .withColumn("_change_type",
-          org.apache.spark.sql.functions.lit("delete"))))
+    import org.apache.spark.sql.functions.{expr, lit}
+    locateRows(spark, path, "exportDeleteWhere", "DELETE",
+        Where(predicate)).fold(identity, l =>
+      dvFlipCommit(spark, path, "exportDeleteWhere", "DELETE", l.v0, l.st0,
+        l.fresh, l.oldPos, () => Nil,
+        () => Some(l.withPos.filter(expr(predicate))
+          .join(l.fresh, Seq("path", "row_index"), "left_semi")
+          .drop("path", "row_index")
+          .withColumn("_change_type", lit("delete")))))
   }
 
   /** Row-level UPDATE via deletion vectors on the export path: DV the
@@ -1513,73 +1592,29 @@ object DeltaInterop {
   def exportUpdateWhere(spark: SparkSession, path: String,
       predicate: String, set: Map[String, String]): Long = {
     import org.apache.spark.sql.functions.{col, expr, lit}
-    val (v0, st0) = replayState(spark, path)
-    requireWritable(st0, path, "exportUpdateWhere", removesRows = true,
-      writesRows = true)
-    requireUnmapped(st0, path, "exportUpdateWhere")
-    requireNoPosCollision(st0.schema, st0.physical,
-      "deletion-vector update")
     require(set.nonEmpty, s"exportUpdateWhere on $path: empty SET")
-    val unknown = set.keySet -- st0.schema.fieldNames
-    require(unknown.isEmpty,
-      s"exportUpdateWhere on $path: SET names unknown column(s) " +
-        s"${unknown.toSeq.sorted.mkString(", ")}")
-    val live = st0.live.values.toSeq
-    if (live.isEmpty) return v0
-    val emptyT = spark.createDataFrame(
-      new java.util.ArrayList[Row](), st0.schema)
-    val probe = emptyT.filter(expr(predicate))
-    val conds = probe.queryExecution.analyzed.collect {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition -> f.child.outputSet
-    }
-    require(conds.forall(_._1.deterministic),
-      s"exportUpdateWhere on $path: predicate '$predicate' is " +
-        "nondeterministic — a deletion vector must name a stable row " +
-        "set; materialize the choice into a column first")
-    // SET expressions re-evaluate on rebase retries and feed cdc
-    // postimages — nondeterminism would let the three disagree
-    val setProbe = emptyT.select(
-      set.toSeq.map { case (k, e) => expr(e).as(k) }: _*)
-    require(setProbe.queryExecution.analyzed.expressions
-        .forall(_.deterministic),
-      s"exportUpdateWhere on $path: a SET expression is " +
-        "nondeterministic — materialize the choice into a column first")
-    val bounds = conds.flatMap { case (c, out) =>
-      graft.plans.BranchFilePruning.boundsOf(c, out) }
-    val candidates =
-      if (bounds.isEmpty) live
-      else DeltaLite.pruneFiles(toSnapshot(v0, st0), bounds)
-    if (candidates.isEmpty) return v0
-    val withPos = DeltaLite.readFilesWithPos(spark, path, st0.schema,
-      candidates.map(_.copy(dv = None)), st0.partitionBy, st0.physical,
-      st0.config)
-    val oldDvs = candidates.flatMap(f => dvDescriptor(f).map(f.path -> _))
-    val (oldPos, _) = dvPositionsFrame(spark, path, oldDvs)
-    // matched LIVE rows with their data — multi-referenced (positions,
-    // rewrite source, cdc preimage), so cut once
-    val matchedData = graft.Frames.cut(withPos.filter(expr(predicate))
-      .join(oldPos, col("path") === col("__dv_path") &&
-        col("row_index") === col("__dv_ri"), "left_anti")
-      .drop("__dv_path", "__dv_ri"))
-    val fresh = matchedData.select(col("path"), col("row_index"))
-    // every SET expression sees the OLD row (one select, not chained
-    // withColumn — a chained form would let one SET read another's
-    // result); the cast to the declared type is UPDATE's implicit cast
-    val rewritten = matchedData.select(st0.schema.fields.map(f =>
-      set.get(f.name)
-        .map(e => expr(e).cast(f.dataType).as(f.name))
-        .getOrElse(col(f.name))).toSeq: _*)
-    requireSchemaMatch(rewritten, st0, path, "exportUpdateWhere")
-    dvFlipCommit(spark, path, "exportUpdateWhere", "UPDATE", v0, st0,
-      fresh, oldPos,
-      () => if (matchedData.isEmpty) Nil
-        else writeDataFiles(spark, rewritten, root(path), st0.partitionBy),
-      () => Some(
-        matchedData.drop("path", "row_index")
-          .withColumn("_change_type", lit("update_preimage"))
-          .unionByName(rewritten
-            .withColumn("_change_type", lit("update_postimage")))))
+    locateRows(spark, path, "exportUpdateWhere", "UPDATE",
+        Where(predicate, set)).fold(identity, l => {
+      val matchedData = l.matched.drop("path", "row_index")
+      // every SET expression sees the OLD row (one select, not chained
+      // withColumn — a chained form would let one SET read another's
+      // result); the cast to the declared type is UPDATE's implicit cast
+      val rewritten = matchedData.select(l.st0.schema.fields.map(f =>
+        set.get(f.name)
+          .map(e => expr(e).cast(f.dataType).as(f.name))
+          .getOrElse(col(f.name))).toSeq: _*)
+      requireSchemaMatch(rewritten, l.st0, path, "exportUpdateWhere")
+      dvFlipCommit(spark, path, "exportUpdateWhere", "UPDATE", l.v0,
+        l.st0, l.fresh, l.oldPos,
+        () => if (l.matched.isEmpty) Nil
+          else writeDataFiles(spark, rewritten, root(path),
+            l.st0.partitionBy),
+        () => Some(
+          matchedData
+            .withColumn("_change_type", lit("update_preimage"))
+            .unionByName(rewritten
+              .withColumn("_change_type", lit("update_postimage")))))
+    })
   }
 
   /** MERGE (upsert) on the export path — the reference stack's
@@ -1598,108 +1633,37 @@ object DeltaInterop {
     * change files. */
   def exportMerge(spark: SparkSession, path: String,
       source: DataFrame, keys: Seq[String]): Long = {
-    import org.apache.spark.sql.functions.{col, count, lit, max, min}
-    val (v0, st0) = replayState(spark, path)
-    requireWritable(st0, path, "exportMerge", removesRows = true,
-      writesRows = true)
-    requireUnmapped(st0, path, "exportMerge")
-    requireNoPosCollision(st0.schema, st0.physical,
-      "deletion-vector merge")
-    requireSchemaMatch(source, st0, path, "exportMerge")
-    require(keys.nonEmpty, s"exportMerge on $path: empty key list")
-    val unknown = keys.toSet -- st0.schema.fieldNames
-    require(unknown.isEmpty,
-      s"exportMerge on $path: unknown key column(s) " +
-        s"${unknown.toSeq.sorted.mkString(", ")}")
+    import org.apache.spark.sql.functions.{col, lit}
     val src = graft.Frames.cut(source)
-    require(src.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
-        .filter(col("__n") > 1).limit(1).count() == 0L,
-      s"exportMerge on $path: duplicate source keys — a target row " +
-        "matched by two source rows is ambiguous (delta-spark's " +
-        "multiple-source-match error); de-duplicate the source first")
-    val live = st0.live.values.toSeq
-    if (src.isEmpty) return v0 // empty source: nothing matches, nothing inserts
-    // key-bound candidate pruning — the 100 TB lever: a merge's
-    // touchable files are those whose logged per-key min/max overlap
-    // the SOURCE's key ranges (one small agg over the source); a
-    // pruned-out file has some key column's range disjoint from every
-    // source value, so no row in it can match
-    val keyTypes = keys.map(k => k -> st0.schema(k).dataType)
-    val aggExprs = keyTypes.zipWithIndex.flatMap { case ((k, _), i) =>
-      Seq(min(col(k)).as(s"mn$i"), max(col(k)).as(s"mx$i")) }
-    val mm = src.agg(aggExprs.head, aggExprs.tail: _*).collect().head
-    val bounds = keyTypes.zipWithIndex.flatMap { case ((k, dt), i) =>
-      (decodedBoundValue(dt, mm.get(2 * i)),
-        decodedBoundValue(dt, mm.get(2 * i + 1))) match {
-        case (lo @ Some(_), hi @ Some(_)) =>
-          Some(DeltaLite.ColumnBound(k, lower = lo, upper = hi))
-        case _ => None
-      }
-    }
-    val candidates =
-      if (bounds.isEmpty) live
-      else DeltaLite.pruneFiles(toSnapshot(v0, st0), bounds)
-    val withPos = DeltaLite.readFilesWithPos(spark, path, st0.schema,
-      candidates.map(_.copy(dv = None)), st0.partitionBy, st0.physical,
-      st0.config)
-    val oldDvs = candidates.flatMap(f => dvDescriptor(f).map(f.path -> _))
-    val (oldPos, _) = dvPositionsFrame(spark, path, oldDvs)
-    // matched LIVE target rows (deleted rows must neither flip again
-    // nor block a source row from inserting) — multi-referenced, cut
-    val matchedData = graft.Frames.cut(withPos
-      .join(src.select(keys.map(col): _*), keys, "left_semi")
-      .join(oldPos, col("path") === col("__dv_path") &&
-        col("row_index") === col("__dv_ri"), "left_anti")
-      .drop("__dv_path", "__dv_ri"))
-    val fresh = matchedData.select(col("path"), col("row_index"))
-    // WHEN MATCHED: each matched target row takes its source row's
-    // values (a key shared by N target rows yields N identical
-    // rewrites — delta-spark's multi-target-match semantics)
-    val rewritten = matchedData.select(keys.map(col): _*)
-      .join(src, keys, "inner")
-      .select(st0.schema.fieldNames.map(col).toSeq: _*)
-    // WHEN NOT MATCHED: source rows whose key matches no LIVE target
-    // row (candidate pruning is sound for this anti-join too — a
-    // non-candidate file cannot hold a matching key)
-    val inserts = src.join(matchedData.select(keys.map(col): _*),
-      keys, "left_anti").select(st0.schema.fieldNames.map(col).toSeq: _*)
-    val appendDf = rewritten.unionByName(inserts)
-    dvFlipCommit(spark, path, "exportMerge", "MERGE", v0, st0,
-      fresh, oldPos,
-      () => if (appendDf.isEmpty) Nil
-        else writeDataFiles(spark, appendDf, root(path), st0.partitionBy),
-      () => Some(
-        matchedData.drop("path", "row_index")
-          .withColumn("_change_type", lit("update_preimage"))
-          .unionByName(rewritten
-            .withColumn("_change_type", lit("update_postimage")))
-          .unionByName(inserts
-            .withColumn("_change_type", lit("insert")))))
+    locateRows(spark, path, "exportMerge", "MERGE", OnKeys(src, keys))
+        .fold(identity, l => {
+      val cols = l.st0.schema.fieldNames.map(col).toSeq
+      val matchedData = l.matched.drop("path", "row_index")
+      // WHEN MATCHED: each matched target row takes its source row's
+      // values (a key shared by N target rows yields N identical
+      // rewrites — delta-spark's multi-target-match semantics)
+      val rewritten = l.matched.select(keys.map(col): _*)
+        .join(src, keys, "inner").select(cols: _*)
+      // WHEN NOT MATCHED: source rows whose key matches no LIVE target
+      // row (candidate pruning is sound for this anti-join too — a
+      // non-candidate file cannot hold a matching key)
+      val inserts = src.join(l.matched.select(keys.map(col): _*),
+        keys, "left_anti").select(cols: _*)
+      val appendDf = rewritten.unionByName(inserts)
+      dvFlipCommit(spark, path, "exportMerge", "MERGE", l.v0, l.st0,
+        l.fresh, l.oldPos,
+        () => if (appendDf.isEmpty) Nil
+          else writeDataFiles(spark, appendDf, root(path),
+            l.st0.partitionBy),
+        () => Some(
+          matchedData
+            .withColumn("_change_type", lit("update_preimage"))
+            .unionByName(rewritten
+              .withColumn("_change_type", lit("update_postimage")))
+            .unionByName(inserts
+              .withColumn("_change_type", lit("insert")))))
+    })
   }
-
-  /** A collected external value → the decoded representation
-    * [[DeltaLite.pruneFiles]] compares stats in (epoch-day /
-    * epoch-micros longs for temporal types). None = no bound for this
-    * type (pruning is only an optimization). */
-  private def decodedBoundValue(dt: DataType, v: Any): Option[Any] =
-    (dt, v) match {
-      case (_, null) => None
-      case (ByteType | ShortType | IntegerType | LongType, n: Number) =>
-        Some(n.longValue)
-      case (FloatType | DoubleType, n: Number) => Some(n.doubleValue)
-      case (StringType, s: String) => Some(s)
-      case (_: DecimalType, d: java.math.BigDecimal) => Some(BigDecimal(d))
-      case (DateType, d: java.sql.Date) => Some(d.toLocalDate.toEpochDay)
-      case (DateType, d: java.time.LocalDate) => Some(d.toEpochDay)
-      case (TimestampType | TimestampNTZType, t: java.sql.Timestamp) =>
-        Some(t.getTime / 1000L * 1000000L + t.getNanos / 1000L)
-      case (TimestampType | TimestampNTZType, i: java.time.Instant) =>
-        Some(i.getEpochSecond * 1000000L + i.getNano / 1000L)
-      case (TimestampNTZType, l: java.time.LocalDateTime) =>
-        Some(l.toInstant(java.time.ZoneOffset.UTC).getEpochSecond
-          * 1000000L + l.getNano / 1000L)
-      case _ => None
-    }
 
   /** The shared COMMIT TAIL of the row-level DV write surfaces
     * (DELETE / UPDATE / MERGE): per-file DV union (fresh positions ∪

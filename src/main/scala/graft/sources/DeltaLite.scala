@@ -5147,66 +5147,25 @@ object DeltaLite {
       tsMillis: Long): Long =
     restore(spark, path, versionAtTimestamp(path, tsMillis))
 
-  /** Files of `snap` holding at least one of `keyed`'s key tuples, plus
-    * a DataFrame of exactly those files' rows: stats-prune candidates by
-    * the key bounds (one tiny agg), then an exact `_metadata.file_path`
-    * semi-join. Shared by [[merge]] and [[deleteInsert]]. */
-  /** Extract stats-prunable [[ColumnBound]]s from dbt-style
-    * `incremental_predicates` strings: simple `col <op> literal`
-    * conjuncts (both operand orders, foldable right-hand sides) become
-    * bounds for [[pruneFiles]]. Anything the extractor cannot read is
-    * simply not used for file pruning — the caller still applies the
-    * predicate row-level, so extraction stays a pure optimization. */
+  /** Stats-prunable [[ColumnBound]]s of dbt-style
+    * `incremental_predicates` strings: the predicates analyze over an
+    * empty frame of the table's schema and the condition converts
+    * through [[graft.plans.BranchFilePruning.boundsOf]] — the one
+    * predicate→bound converter, shared with the read path and the
+    * standard-log DML. Anything it cannot read is simply not used for
+    * file pruning — the caller still applies the predicate row-level,
+    * so extraction stays a pure optimization. */
   private[graft] def scopePredicateBounds(spark: SparkSession,
       schema: StructType, preds: Seq[String]): Seq[ColumnBound] = {
     if (preds.isEmpty) return Nil
-    import org.apache.spark.sql.catalyst.expressions.{And => CAnd,
-      AttributeReference, EqualTo, Expression, GreaterThan,
-      GreaterThanOrEqual, LessThan, LessThanOrEqual}
     val empty = spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    val analyzed = empty.filter(preds.map(p => expr(p)).reduce(_ && _))
-      .queryExecution.analyzed
-    val conds = analyzed.collect {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition
-    }
-    def conj(e: Expression): Seq[Expression] = e match {
-      case CAnd(l, r) => conj(l) ++ conj(r)
-      case x => Seq(x)
-    }
-    // foldable RHS evaluated to a DRIVER value (days Int → sql.Date,
-    // UTF8String → String, ...) so normBound can re-encode it
-    object Lit {
-      def unapply(e: Expression): Option[Any] =
-        if (!e.foldable) None
-        else Option(e.eval(null)).map(v =>
-          org.apache.spark.sql.catalyst.CatalystTypeConverters
-            .convertToScala(v, e.dataType))
-    }
-    conds.flatMap(conj).flatMap {
-      case GreaterThan(a: AttributeReference, Lit(v)) =>
-        Seq(ColumnBound(a.name, lower = Some(v)))
-      case GreaterThanOrEqual(a: AttributeReference, Lit(v)) =>
-        Seq(ColumnBound(a.name, lower = Some(v)))
-      case LessThan(a: AttributeReference, Lit(v)) =>
-        Seq(ColumnBound(a.name, upper = Some(v)))
-      case LessThanOrEqual(a: AttributeReference, Lit(v)) =>
-        Seq(ColumnBound(a.name, upper = Some(v)))
-      case EqualTo(a: AttributeReference, Lit(v)) =>
-        Seq(ColumnBound(a.name, Some(v), Some(v)))
-      case GreaterThan(Lit(v), a: AttributeReference) =>
-        Seq(ColumnBound(a.name, upper = Some(v)))
-      case GreaterThanOrEqual(Lit(v), a: AttributeReference) =>
-        Seq(ColumnBound(a.name, upper = Some(v)))
-      case LessThan(Lit(v), a: AttributeReference) =>
-        Seq(ColumnBound(a.name, lower = Some(v)))
-      case LessThanOrEqual(Lit(v), a: AttributeReference) =>
-        Seq(ColumnBound(a.name, lower = Some(v)))
-      case EqualTo(Lit(v), a: AttributeReference) =>
-        Seq(ColumnBound(a.name, Some(v), Some(v)))
-      case _ => Nil
-    }
+    empty.filter(preds.map(p => expr(p)).reduce(_ && _))
+      .queryExecution.analyzed.collect {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+          graft.plans.BranchFilePruning.boundsOf(f.condition,
+            f.child.outputSet)
+      }.flatten
   }
 
   /** The candidate-file set a MERGE with these keys (+ optional
@@ -5221,7 +5180,12 @@ object DeltaLite {
       scopePredicateBounds(spark, snap.schema, incrementalPredicates))
   }
 
-  private def sourceKeyBounds(keyed: DataFrame,
+  /** Per-key [min, max] bounds of `keyed`'s key columns (one small
+    * agg) — THE key-bound builder of the merge candidate path, for both
+    * logs ([[merge]] here, [[DeltaInterop.exportMerge]] on `_delta_log`).
+    * Values stay in their collected external form; [[pruneFiles]]
+    * normalizes them. An all-null key column yields an open bound. */
+  private[graft] def sourceKeyBounds(keyed: DataFrame,
       keys: Seq[String]): Seq[ColumnBound] = {
     val aggExprs = keys.zipWithIndex.flatMap { case (k, i) => Seq(
       min(keyed.col(k)).as(s"__lo$i"), max(keyed.col(k)).as(s"__hi$i")) }
@@ -5232,6 +5196,10 @@ object DeltaLite {
     }
   }
 
+  /** Files of `snap` holding at least one of `keyed`'s key tuples, plus
+    * a DataFrame of exactly those files' rows: stats-prune candidates by
+    * the key bounds (one tiny agg), then an exact `_metadata.file_path`
+    * semi-join. Shared by [[merge]] and [[deleteInsert]]. */
   private def filesHoldingKeys(spark: SparkSession, path: String,
       snap: Snapshot, keyed: DataFrame, keys: Seq[String],
       scope: Option[Column] = None,

@@ -1396,114 +1396,144 @@ class DeltaInteropSpec extends AnyFunSuite with TestSpark {
   test("exportMerge prunes candidate files by source key bounds: files outside the source's key range never open") {
     import spark.implicits._
     import graft.sources.DeltaLite
-    val path = tmp("interop_merge_prune")
-    DeltaInterop.exportToDelta(spark,
-      (1L to 8L).map(i => (i, s"v$i")).toDF("id", "s").coalesce(1),
-      path)                                                          // v0
-    DeltaInterop.exportAppend(spark,
-      (100L to 108L).map(i => (i, s"v$i")).toDF("id", "s").coalesce(1),
-      path)                                                          // v1
-    // source keys 101..103: only the second file's bounds overlap —
-    // the first file must not flip (its rows stay under their add)
-    val v = DeltaInterop.exportMerge(spark, path,
-      Seq((101L, "X"), (103L, "Y")).toDF("id", "s"), Seq("id"))
-    assert(v === 2L)
-    val commitJson = new String(Files.readAllBytes(
-      Paths.get(path, "_delta_log").resolve(f"${2L}%020d.json")), "UTF-8")
-    val snap = DeltaInterop.snapshot(spark, path)
-    val flipped = snap.files.filter(_.dv.isDefined).map(_.path)
-    assert(flipped.size === 1,
-      s"exactly ONE file (the key-overlapping one) must flip: $flipped")
-    assert(DeltaInterop.read(spark, path).count() === 17L)
-    assert(DeltaInterop.read(spark, path)
-      .filter(org.apache.spark.sql.functions.col("id") === 101L)
-      .select("s").collect().map(_.getString(0)).toSeq === Seq("X"))
+    // key column types: BIGINT, and the temporal types whose collected
+    // values (java.sql.Timestamp / Date) normalize to the log's
+    // epoch-micros / epoch-day stats — the timestamp keys carry
+    // sub-second micros
+    import org.apache.spark.sql.Column
+    val keyTypes: Seq[(String, Column => Column)] = Seq(
+      "bigint" -> (c => c),
+      "timestamp" -> (c =>
+        timestamp_micros(lit(1704067200000000L) + c * 1000001L)),
+      "date" -> (c => date_add(lit(java.sql.Date.valueOf("2024-01-01")),
+        c.cast("int"))))
+    keyTypes.foreach { case (kt, key) =>
+      def rows(is: Seq[(Long, String)]): DataFrame =
+        is.toDF("i", "s").select(key(col("i")).as("id"), col("s"))
+      val path = tmp(s"interop_merge_prune_$kt")
+      DeltaInterop.exportToDelta(spark,
+        rows((1L to 8L).map(i => (i, s"v$i"))).coalesce(1), path)  // v0
+      DeltaInterop.exportAppend(spark,
+        rows((100L to 108L).map(i => (i, s"v$i"))).coalesce(1), path) // v1
+      // source keys 101..103: only the second file's bounds overlap —
+      // the first file must not flip (its rows stay under their add)
+      val src = rows(Seq((101L, "X"), (103L, "Y")))
+      val cands = DeltaLite.pruneFiles(DeltaInterop.snapshot(spark, path),
+        DeltaLite.sourceKeyBounds(src, Seq("id")))
+      assert(cands.size === 1,
+        s"$kt: the source key bounds must prune the first file: $cands")
+      val v = DeltaInterop.exportMerge(spark, path, src, Seq("id"))
+      assert(v === 2L)
+      val commitJson = new String(Files.readAllBytes(
+        Paths.get(path, "_delta_log").resolve(f"${2L}%020d.json")), "UTF-8")
+      val snap = DeltaInterop.snapshot(spark, path)
+      val flipped = snap.files.filter(_.dv.isDefined).map(_.path)
+      assert(flipped.size === 1,
+        s"exactly ONE file (the key-overlapping one) must flip: $flipped")
+      assert(DeltaInterop.read(spark, path).count() === 17L)
+      assert(DeltaInterop.read(spark, path)
+        .filter(col("id") === key(lit(101L)))
+        .select("s").collect().map(_.getString(0)).toSeq === Seq("X"))
+    }
   }
 
   test("exportDeleteWhere prunes candidates by log stats: a file whose bounds disprove the predicate never flips") {
     import graft.sources.DeletionVectors
     import spark.implicits._
-    val path = tmp("interop_dv_prune")
-    DeltaInterop.exportToDelta(spark, (1L to 8L).toDF("id").coalesce(1),
-      path)                                                          // v0
-    DeltaInterop.exportAppend(spark,
-      (100L to 108L).toDF("id").coalesce(1), path)                   // v1
-    assert(DeltaInterop.exportDeleteWhere(spark, path, "id <= 4") === 2L)
-    val snap = DeltaInterop.snapshot(spark, path)
-    val (flipped, untouched) = snap.files.partition(_.dv.isDefined)
-    assert(flipped.size === 1 && untouched.size === 1,
-      "exactly the stats-overlapping file must flip")
-    assert(DeletionVectors.fromJson(flipped.head.dv.get
-      .stripPrefix("delta-dv:")).cardinality === 4L)
-    // the commit itself touches ONE file: one remove + one DV'd add
-    // (the pruned file appears in no action — it was never even read)
-    val commitJson = new String(Files.readAllBytes(Paths.get(path,
-      "_delta_log").resolve(f"${2L}%020d.json")), "UTF-8")
-    assert("\"remove\"".r.findAllIn(commitJson).size === 1,
-      s"the pruned file must not appear in the commit: $commitJson")
-    assert(DeltaInterop.read(spark, path).select("id").collect()
-      .map(_.getLong(0)).sorted.toSeq ===
-      ((5L to 8L) ++ (100L to 108L)))
-    // an unparseable predicate fails FAST (analysis over an empty
-    // probe frame), before any replay-visible side effect
-    intercept[Exception] {
-      DeltaInterop.exportDeleteWhere(spark, path, "no_such_col = 1")
+    // both predicate-scoped row-level ops locate their candidates the
+    // same way: DELETE, and UPDATE (its rewritten rows, `id + 1000`,
+    // append as a fresh DV-free file — `moved` names them)
+    val ops: Seq[(String, (String, String) => Long, Seq[Long] => Seq[Long])] =
+      Seq(
+        ("delete", (p, pred) => DeltaInterop.exportDeleteWhere(spark, p,
+          pred), _ => Nil),
+        ("update", (p, pred) => DeltaInterop.exportUpdateWhere(spark, p,
+          pred, Map("id" -> "id + 1000")), _.map(_ + 1000L)))
+    ops.foreach { case (op, run, moved) =>
+      val path = tmp(s"interop_dv_prune_$op")
+      DeltaInterop.exportToDelta(spark, (1L to 8L).toDF("id").coalesce(1),
+        path)                                                          // v0
+      DeltaInterop.exportAppend(spark,
+        (100L to 108L).toDF("id").coalesce(1), path)                   // v1
+      assert(run(path, "id <= 4") === 2L)
+      val before = DeltaInterop.snapshot(spark, path, Some(1L)).files
+        .map(_.path).toSet
+      val snap = DeltaInterop.snapshot(spark, path)
+      val (flipped, untouched) = snap.files.filter(f => before(f.path))
+        .partition(_.dv.isDefined)
+      assert(flipped.size === 1 && untouched.size === 1,
+        "exactly the stats-overlapping file must flip")
+      assert(DeletionVectors.fromJson(flipped.head.dv.get
+        .stripPrefix("delta-dv:")).cardinality === 4L)
+      // the commit itself touches ONE file: one remove + one DV'd add
+      // (the pruned file appears in no action — it was never even read)
+      val commitJson = new String(Files.readAllBytes(Paths.get(path,
+        "_delta_log").resolve(f"${2L}%020d.json")), "UTF-8")
+      assert("\"remove\"".r.findAllIn(commitJson).size === 1,
+        s"the pruned file must not appear in the commit: $commitJson")
+      assert(DeltaInterop.read(spark, path).select("id").collect()
+        .map(_.getLong(0)).sorted.toSeq ===
+        ((5L to 8L) ++ (100L to 108L) ++ moved(1L to 4L)).sorted)
+      // an unparseable predicate fails FAST (analysis over an empty
+      // probe frame), before any replay-visible side effect
+      intercept[Exception] { run(path, "no_such_col = 1") }
+      // …as does a NONDETERMINISTIC one (a DV must name a stable row set)
+      val nd = intercept[IllegalArgumentException] {
+        run(path, "rand() < 0.5")
+      }
+      assert(nd.getMessage.contains("nondeterministic"))
+      assert(DeltaInterop.latestVersion(path) === Some(2L))
+      // the pruning pin must not be VACUOUS (an unpruned no-match file
+      // also yields no action): assert the bound translation itself
+      // survives analyzed-plan literals, which arrive Cast-wrapped
+      // (`id <= 4` on BIGINT analyzes to `id <= cast(4 as bigint)` —
+      // review finding: bare-Literal matching silently disabled pruning)
+      val probeDf = spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](),
+        new org.apache.spark.sql.types.StructType().add("id", "long"))
+        .filter(expr("id <= 4"))
+      val bs = probeDf.queryExecution.analyzed.collect {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+          graft.plans.BranchFilePruning.boundsOf(f.condition,
+            f.child.outputSet)
+      }.flatten
+      assert(bs.nonEmpty && bs.head.column == "id",
+        s"coerced literals must still translate to stat bounds: $bs")
+      // restatement fidelity: the flipped add preserves the ORIGINAL
+      // modificationTime (a metadata-only delete must not re-stamp the
+      // file as just-modified) and keeps its real stats
+      def addActions(v: Long): Seq[String] =
+        new String(Files.readAllBytes(Paths.get(path, "_delta_log")
+          .resolve(f"$v%020d.json")), "UTF-8")
+          .linesIterator.filter(_.contains("\"add\"")).toSeq
+      def mtimeOf(line: String): Long =
+        """"modificationTime":(\d+)""".r.findFirstMatchIn(line)
+          .get.group(1).toLong
+      val origAdd = addActions(0L).head
+      val flipAdd = addActions(2L).head
+      assert(mtimeOf(flipAdd) === mtimeOf(origAdd),
+        "a DV flip must restate the original modificationTime")
+      assert(flipAdd.contains("\"stats\""),
+        "a stats-bearing add keeps its stats through the flip")
+      // DV deletes COMPOSE across a checkpoint boundary: checkpoint the
+      // DV'd state, clean up every JSON commit, and a further delete
+      // unions with the checkpoint-carried DV
+      DeltaInterop.exportCheckpoint(spark, path)
+      (0L to 2L).foreach(v => Files.delete(
+        Paths.get(path, "_delta_log").resolve(f"$v%020d.json")))
+      assert(run(path, "id = 7") === 3L)
+      assert(DeltaInterop.read(spark, path).select("id").collect()
+        .map(_.getLong(0)).sorted.toSeq ===
+        (Seq(5L, 6L, 8L) ++ (100L to 108L) ++ moved(Seq(1L, 2L, 3L, 4L, 7L)))
+          .sorted,
+        "the post-checkpoint delete must union with the restated DV")
+      val snap4 = DeltaInterop.snapshot(spark, path)
+      val card4 = snap4.files.flatMap(_.dv).map(s =>
+        graft.sources.DeletionVectors.fromJson(
+          s.stripPrefix("delta-dv:")).cardinality).sum
+      assert(card4 === 5L, // {1,2,3,4} from the flip + {7}
+        s"the union across the checkpoint boundary must not forget: $card4")
     }
-    // …as does a NONDETERMINISTIC one (a DV must name a stable row set)
-    val nd = intercept[IllegalArgumentException] {
-      DeltaInterop.exportDeleteWhere(spark, path, "rand() < 0.5")
-    }
-    assert(nd.getMessage.contains("nondeterministic"))
-    assert(DeltaInterop.latestVersion(path) === Some(2L))
-    // the pruning pin must not be VACUOUS (an unpruned no-match file
-    // also yields no action): assert the bound translation itself
-    // survives analyzed-plan literals, which arrive Cast-wrapped
-    // (`id <= 4` on BIGINT analyzes to `id <= cast(4 as bigint)` —
-    // review finding: bare-Literal matching silently disabled pruning)
-    val probeDf = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      new org.apache.spark.sql.types.StructType().add("id", "long"))
-      .filter(expr("id <= 4"))
-    val bs = probeDf.queryExecution.analyzed.collect {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        graft.plans.BranchFilePruning.boundsOf(f.condition,
-          f.child.outputSet)
-    }.flatten
-    assert(bs.nonEmpty && bs.head.column == "id",
-      s"coerced literals must still translate to stat bounds: $bs")
-    // restatement fidelity: the flipped add preserves the ORIGINAL
-    // modificationTime (a metadata-only delete must not re-stamp the
-    // file as just-modified) and keeps its real stats
-    def addActions(v: Long): Seq[String] =
-      new String(Files.readAllBytes(Paths.get(path, "_delta_log")
-        .resolve(f"$v%020d.json")), "UTF-8")
-        .linesIterator.filter(_.contains("\"add\"")).toSeq
-    def mtimeOf(line: String): Long =
-      """"modificationTime":(\d+)""".r.findFirstMatchIn(line)
-        .get.group(1).toLong
-    val origAdd = addActions(0L).head
-    val flipAdd = addActions(2L).head
-    assert(mtimeOf(flipAdd) === mtimeOf(origAdd),
-      "a DV flip must restate the original modificationTime")
-    assert(flipAdd.contains("\"stats\""),
-      "a stats-bearing add keeps its stats through the flip")
-    // DV deletes COMPOSE across a checkpoint boundary: checkpoint the
-    // DV'd state, clean up every JSON commit, and a further delete
-    // unions with the checkpoint-carried DV
-    DeltaInterop.exportCheckpoint(spark, path)
-    (0L to 2L).foreach(v => Files.delete(
-      Paths.get(path, "_delta_log").resolve(f"$v%020d.json")))
-    assert(DeltaInterop.exportDeleteWhere(spark, path, "id = 7") === 3L)
-    assert(DeltaInterop.read(spark, path).select("id").collect()
-      .map(_.getLong(0)).sorted.toSeq ===
-      Seq(5L, 6L, 8L) ++ (100L to 108L),
-      "the post-checkpoint delete must union with the restated DV")
-    val snap4 = DeltaInterop.snapshot(spark, path)
-    val card4 = snap4.files.flatMap(_.dv).map(s =>
-      graft.sources.DeletionVectors.fromJson(
-        s.stripPrefix("delta-dv:")).cardinality).sum
-    assert(card4 === 5L, // {1,2,3,4} from the flip + {7}
-      s"the union across the checkpoint boundary must not forget: $card4")
   }
 
   test("exportDeleteWhere on a stats-less foreign add: the flip re-emits WITHOUT stats instead of fabricating numRecords:0") {

@@ -247,6 +247,15 @@ class OperatorSpec extends AnyFunSuite with TestSpark {
       s"expected the non-null-bin contract error, got: $ex")
   }
 
+  test("Bench failure line: one stderr line naming the query, exception class and message") {
+    val line = Bench.failureLine("q7",
+      new IllegalStateException("first line\n  second line"))
+    assert(line ===
+      "[bench] FAILED q7: java.lang.IllegalStateException: first line second line")
+    assert(Bench.failureLine("q8", new RuntimeException()) ===
+      "[bench] FAILED q8: java.lang.RuntimeException: ")
+  }
+
   test("Bench seed loader: full-coverage seeds load, headline-subset overwrites are rejected, garbage is empty") {
     val declared = (1 to 100).map(i => s"q$i").toSet
     def artifact(names: Seq[String], withEma: Boolean): String = {

@@ -3820,6 +3820,15 @@ class ScaleSpec extends AnyFunSuite with TestSpark {
     assert(without.size === 2, "both waves overlap the source key bounds")
     assert(withPred.size === 1, "the Jan file must prune on the day bound")
     assert(withPred.size < without.size)
+    // the same pruning from an IN list and from a foldable non-literal
+    // bound — each shape once had only one of two extractors
+    Seq("day IN (DATE'2024-02-15', DATE'2024-03-01')",
+        "day >= date_add(DATE'2024-01-31', 1)").foreach { p =>
+      val cands = DeltaLite.mergeCandidates(spark, pathA, src, Seq("k"),
+        Seq(p))
+      assert(cands.map(_.path) === withPred.map(_.path),
+        s"the Jan file must prune on $p: $cands")
+    }
     // identical result either way (the semi-join confirm already
     // protected correctness; the predicate removes scan cost only)
     val clauses = Seq(

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, Logic
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.graft.LogFileScan
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 import graft.sources.DeltaLite
@@ -38,7 +39,11 @@ import graft.sources.DeltaLite
   *      through an aliasing Project, the FormatReadBranching pattern),
   *      or replaces a provably-empty branch with an empty
   *      LocalRelation. The Filter STAYS — pruning only removes whole
-  *      files, rows inside kept files still filter normally.
+  *      files, rows inside kept files still filter normally. The
+  *      rebuilt scan comes from the kept log entries
+  *      ([[org.apache.spark.sql.graft.LogFileScan]]), with no Spark
+  *      listing: above 32 paths a listing is a job with one task per
+  *      file, which would run inside query planning.
   *
   * Fixed-point termination: the rebuilt scan is re-tagged with the
   * KEPT subset, so a second visit with the same bounds prunes nothing
@@ -211,9 +216,8 @@ object BranchFilePruning extends Rule[LogicalPlan] with PredicateHelper {
             val rootP = java.nio.file.Paths.get(info.root)
             val physSchema = StructType(lr.output.map(a =>
               StructField(a.name, a.dataType, a.nullable)))
-            val raw = spark.read.schema(physSchema)
-              .parquet(kept.map(x => rootP.resolve(x.path).toString): _*)
-              .queryExecution.analyzed
+            val raw = LogFileScan.frame(spark, rootP, kept.map(_.path),
+              physSchema).queryExecution.analyzed
             // the original scan carried the log's CatalogStatistics
             // (row count, CBO column stats — the S55 surface); the
             // rebuilt scan keeps them UNCHANGED: the Filter stays in

@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graft.LogFileScan
 import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -1025,8 +1026,7 @@ object DeltaInterop {
             p2l.getOrElse(k, k) -> x }))
           .groupBy(_.rawPv).toSeq.sortBy(_._1.toString)
           .map { case (pv, group) =>
-            val base = spark.read.schema(cdcSchema)
-              .parquet(group.map(a => r.resolve(a.rel).toString): _*)
+            val base = LogFileScan.frame(spark, r, group.map(_.rel), cdcSchema)
               .select(schema.fields
                 .filterNot(f => partitionBy.contains(f.name))
                 .map(f => col(phys(f.name)).as(f.name)).toSeq :+

@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.LogFileScan
 import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -27,7 +28,10 @@ import scala.jdk.CollectionConverters._
   *                    version (the Delta log's visibility rule).
   *   - snapshot read: replay actions 0..V → live file set → one parquet
   *                    scan over exactly those files (distributed,
-  *                    predicate-pushable).
+  *                    predicate-pushable), built from the log's file
+  *                    list with no Spark listing: above 32 paths a
+  *                    listing is a job with one task per file, paid on
+  *                    every read before its own action starts.
   *   - APPEND writes ONLY the new batch (O(batch), never O(table)):
   *                    adds files, removes nothing — unchanged files are
   *                    never rewritten. At 100 TB a daily append costs the
@@ -2687,6 +2691,13 @@ object DeltaLite {
       }
     }
 
+  /** The scan of a snapshot's live `files`: one parquet scan per file
+    * group, each built by [[LogFileScan]] straight from the log's file
+    * list, so no read lists files through Spark (above 32 paths that
+    * listing is a job with one task per file, before the read's own
+    * action). Each scan carries the log's statistics and the tag
+    * BranchFilePruning prunes by; files with deletion vectors take
+    * [[readFilesWithPos]]. */
   private[graft] def readFiles(spark: SparkSession, path: String, schema: StructType,
       files: Seq[AddFile], partitionBy: Seq[String],
       physical: Map[String, String],
@@ -2707,9 +2718,9 @@ object DeltaLite {
         // tagged for BranchFilePruning: a later Filter can drop whole
         // files from the log's min/max stats (see graft.plans)
         val base = graft.plans.BranchFilePruning.tagScan(
-          withLogStats(spark, spark.read.schema(physSchema)
-            .parquet(files.map(f => r.resolve(f.path).toString): _*), path, files,
-            props, churn),
+          withLogStats(spark,
+            LogFileScan.frame(spark, r, files.map(_.path), physSchema),
+            path, files, props, churn),
           r.toString,
           physSchema.fields.map(f => f.name -> f.dataType).toMap, files,
           derive)
@@ -2732,8 +2743,8 @@ object DeltaLite {
             // column then resolves against the group's logged partition
             // value — whole-branch elimination from a base-column filter
             val base = graft.plans.BranchFilePruning.tagScan(
-              withLogStats(spark, spark.read.schema(dataSchema)
-                .parquet(group.map(f => r.resolve(f.path).toString): _*),
+              withLogStats(spark,
+                LogFileScan.frame(spark, r, group.map(_.path), dataSchema),
                 path, group, props, churn),
               r.toString,
               dataSchema.fields.map(f => f.name -> f.dataType).toMap ++
@@ -2790,9 +2801,9 @@ object DeltaLite {
       def scanShape(fs: Seq[AddFile], prefixLen: Int): Option[DataFrame] =
         if (fs.isEmpty) None
         else Some(attachPartitionCols(
-          withLogStats(spark, spark.read.schema(dataSchema)
-            .parquet(fs.map(f => r.resolve(f.path).toString): _*), path, fs,
-            props, churn)
+          withLogStats(spark,
+            LogFileScan.frame(spark, r, fs.map(_.path), dataSchema),
+            path, fs, props, churn)
             .withColumn("path", substring(col("_metadata.file_path"), prefixLen, 100000))
             .withColumn("row_index", col("_metadata.row_index")),
           schema, partitionBy, pv)

@@ -3868,4 +3868,99 @@ class ScaleSpec extends AnyFunSuite with TestSpark {
     assert(d.filter($"day" >= to_date(lit("2024-02-01"))).count() === 2,
       "in-scope rows absent from the source are deleted")
   }
+
+  /** Jobs that `body` submits from this thread. Suites share one
+    * session, so only this thread's job group counts; a flush job in a
+    * second group then proves every earlier job start was delivered
+    * (one listener sees events in posting order). */
+  private def jobsSubmitted(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"job-pin-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(g) if g == s"$group-flush" => flushed.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job-count pin")
+      body
+      sc.setJobGroup(s"$group-flush", "listener flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("log-driven scans run no listing job: one job per read over 40+ files") {
+    // above 32 paths a Spark file listing is a job of its own; the scan
+    // comes from the log's file list, so the write is the only job
+    val rows = spark.range(0, 4500).select(col("id").as("k"), (col("id") * 2).as("v"))
+      .repartitionByRange(45, col("k"))
+    val lite = Files.createTempDirectory("graft_nolist").toString
+    DeltaLite.create(spark, lite, rows)
+    val liteFiles = DeltaLite.snapshot(lite).files.size
+    assert(liteFiles >= 40, s"$liteFiles files")
+    assert(jobsSubmitted(
+      DeltaLite.read(spark, lite).write.format("noop").mode("overwrite").save()) === 1)
+    val delta = Files.createTempDirectory("graft_nolist").resolve("t").toString
+    graft.sources.DeltaInterop.exportToDelta(spark, rows, delta)
+    assert(graft.sources.DeltaInterop.snapshot(spark, delta).files.size >= 40)
+    assert(jobsSubmitted(graft.sources.DeltaInterop.read(spark, delta)
+      .write.format("noop").mode("overwrite").save()) === 1)
+    // BranchFilePruning drops the low-k files and rebuilds the scan
+    // over the kept ones, still more than 32
+    def pruned = DeltaLite.read(spark, lite).filter(col("k") >= 1000)
+    val kept = pruned.inputFiles.length
+    assert(kept > 32 && kept < liteFiles, s"kept $kept of $liteFiles")
+    assert(jobsSubmitted(pruned.write.format("noop").mode("overwrite").save()) === 1)
+    assert(pruned.count() === 3500)
+  }
+
+  test("log-driven scans: same-snapshot reads match, cache serves them, file metadata kept") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val p = Files.createTempDirectory("graft_scan_id").toString
+    DeltaLite.create(spark, p, spark.range(0, 200)
+      .select(col("id").as("k"), (col("id") % 7).as("v")).repartition(4))
+    assert(DeltaLite.read(spark, p).queryExecution.analyzed
+      .sameResult(DeltaLite.read(spark, p).queryExecution.analyzed))
+    // the scan reports each file as a plain parquet read of the same
+    // files does: path, size and modification time from the file itself
+    val files = DeltaLite.snapshot(p).files.map(f => Paths.get(p).resolve(f.path))
+    val metaCols = Seq("file_path", "file_size", "file_modification_time")
+      .map(c => col(s"_metadata.$c"))
+    val meta = DeltaLite.read(spark, p).select(metaCols: _*).distinct().collect()
+    assert(meta.length === files.size)
+    meta.foreach { r =>
+      val f = Paths.get(new java.net.URI(r.getString(0)))
+      assert(r.getLong(1) === Files.size(f))
+      assert(r.getTimestamp(2).getTime === Files.getLastModifiedTime(f).toMillis)
+    }
+    val plain = spark.read.parquet(files.map(_.toString): _*)
+    assert(meta.toSet === plain.select(metaCols: _*).distinct().collect().toSet)
+    assert(DeltaLite.read(spark, p).inputFiles.sorted === plain.inputFiles.sorted)
+    def cachedIn(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.withCachedData.exists(_.isInstanceOf[InMemoryRelation])
+    val cached = DeltaLite.read(spark, p).cache()
+    try {
+      assert(cached.count() === 200)
+      val again = DeltaLite.read(spark, p)
+      assert(cachedIn(again), "a second read of the version must hit the cache")
+      assert(again.count() === 200)
+      DeltaLite.append(spark, p, spark.range(200, 210)
+        .select(col("id").as("k"), (col("id") % 7).as("v")))
+      val after = DeltaLite.read(spark, p)
+      assert(!cachedIn(after), "a read of the next version must not")
+      assert(after.count() === 210)
+    } finally cached.unpersist()
+  }
 }

@@ -58,10 +58,13 @@ import org.json4s.jackson.JsonMethods
   * delta-spark's own Snapshot cost shape.
   *
   * Write-side: the mutating exports commit through the SAME
-  * claim-store OCC contract the native format uses — `<v>.json` is
-  * CLAIMED (conditional-PUT semantics, exactly one winner, ambiguity
-  * resolved by read-back compare), and a lost race re-replays and
-  * REBUILDS the commit against the new state ([[occCommit]]) — so
+  * claim-and-retry loop the native format uses
+  * ([[DeltaLite.claimLoop]]) — `<v>.json` is CLAIMED (conditional-PUT
+  * semantics, exactly one winner, ambiguity resolved by read-back
+  * compare). Of the loop's three lost-race rules (reapply, rebase,
+  * decline) the exports take the rebuild form: a lost race re-replays
+  * and each export's build closure REBUILDS the commit against the new
+  * state, declining whatever it cannot rebase ([[rebuildOnTip]]) — so
   * concurrent writers (including the reference stack racing the
   * exporter) interleave instead of clobbering. Row-level DML —
   * `exportDeleteWhere`, `exportUpdateWhere`, `exportMerge`, the dbt
@@ -1288,13 +1291,13 @@ object DeltaInterop {
           DeltaLite.withFeature(snap.properties, "deletionVectors",
             reader = true))
       }
-    DeltaLite.writeCommit(path, 0L, "CONVERT_FROM_DELTA", snap.schema,
-      files, Nil, None, Map.empty, snap.partitionBy, snap.physical,
-      Map.empty, Map.empty,
-      // delta.* table configuration is provenance, not behavior, on
-      // the graft side — carried so SHOW TBLPROPERTIES tells the story
-      properties = props,
-      txns = snap.txns.toSeq)
+    DeltaLite.commit(path, DeltaLite.NoTable, "CONVERT_FROM_DELTA",
+      next = DeltaLite.NoTable.copy(schema = snap.schema,
+        partitionBy = snap.partitionBy, physical = snap.physical,
+        // delta.* table configuration is provenance, not behavior, on
+        // the graft side — carried so SHOW TBLPROPERTIES tells the story
+        properties = props),
+      adds = files, txns = snap.txns.toSeq)
   }
 
   // ------------------------------------------------------------ export
@@ -1328,14 +1331,10 @@ object DeltaInterop {
         commitInfoLine("WRITE")
     // a lost CREATE claim is not rebase-able — another writer owns the
     // table now; say so instead of surfacing a raw claim collision
-    try writeCommitFile(path, 0L, lines)
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalStateException(
-          s"exportToDelta on $path: a concurrent writer created the " +
-            "table first", e)
+    DeltaLite.claimLoop(-1L)(v => writeCommitFile(path, v + 1, lines)) {
+      (_, _) => throw new IllegalStateException(
+        s"exportToDelta on $path: a concurrent writer created the table first")
     }
-    0L
   }
 
   /** Append `df` to a standard Delta table — one adds-only commit
@@ -1346,14 +1345,15 @@ object DeltaInterop {
     requireUnmapped(st0, path, "exportAppend")
     requireSchemaMatch(df, st0, path, "exportAppend")
     val adds = writeDataFiles(spark, df, root(path), st0.partitionBy)
-    occCommit(spark, path, "exportAppend", Some((v0, st0))) { st =>
+    DeltaLite.claimLoop((v0, st0)) { case (v, st) =>
       requireWritable(st, path, "exportAppend", removesRows = false)
       requireUnmapped(st, path, "exportAppend")
       requireSchemaMatch(df, st, path, "exportAppend")
       requireSameLayout(st, st0, path, "exportAppend")
-      adds.map(a => JsonMethods.compact(encodeDeltaAdd(a, st.schema))) :+
-        commitInfoLine("WRITE")
-    }
+      writeCommitFile(path, v + 1,
+        adds.map(a => JsonMethods.compact(encodeDeltaAdd(a, st.schema))) :+
+          commitInfoLine("WRITE"))
+    }(rebuildOnTip(spark, path, "exportAppend"))
   }
 
   /** OCC-rebase gate twin of the writability checks: the staged data
@@ -1385,7 +1385,7 @@ object DeltaInterop {
     requireUnmapped(st0, path, "exportOverwrite")
     requireSchemaMatch(df, st0, path, "exportOverwrite")
     val adds = writeDataFiles(spark, df, root(path), st0.partitionBy)
-    occCommit(spark, path, "exportOverwrite", Some((v0, st0))) { st =>
+    DeltaLite.claimLoop((v0, st0)) { case (v, st) =>
       requireWritable(st, path, "exportOverwrite", removesRows = true)
       requireUnmapped(st, path, "exportOverwrite")
       requireSchemaMatch(df, st, path, "exportOverwrite")
@@ -1393,10 +1393,11 @@ object DeltaInterop {
       val now = System.currentTimeMillis()
       // the CURRENT live set per attempt — a rebase removes the racing
       // writer's files too, which is exactly what overwrite means
-      adds.map(a => JsonMethods.compact(encodeDeltaAdd(a, st.schema))) ++
-        st.live.values.map(f => removeLine(f, now)) :+
-        commitInfoLine("WRITE")
-    }
+      writeCommitFile(path, v + 1,
+        adds.map(a => JsonMethods.compact(encodeDeltaAdd(a, st.schema))) ++
+          st.live.values.map(f => removeLine(f, now)) :+
+          commitInfoLine("WRITE"))
+    }(rebuildOnTip(spark, path, "exportOverwrite"))
   }
 
   /** Partition-aligned DELETE on a standard Delta table: every live
@@ -1406,7 +1407,7 @@ object DeltaInterop {
     * [[exportDeleteWhere]]'s (deletion vectors). */
   def exportDeletePartition(spark: SparkSession, path: String,
       column: String, value: String): Long = {
-    occCommit(spark, path, "exportDeletePartition") { st =>
+    DeltaLite.claimLoop(replayState(spark, path)) { case (v, st) =>
       requireWritable(st, path, "exportDeletePartition", removesRows = true,
         writesRows = false)
       require(st.partitionBy.contains(column),
@@ -1416,8 +1417,9 @@ object DeltaInterop {
         .toSeq
       require(doomed.nonEmpty, s"no live files with $column=$value at $path")
       val now = System.currentTimeMillis()
-      doomed.map(removeLine(_, now)) :+ commitInfoLine("DELETE")
-    }
+      writeCommitFile(path, v + 1,
+        doomed.map(removeLine(_, now)) :+ commitInfoLine("DELETE"))
+    }(rebuildOnTip(spark, path, "exportDeletePartition"))
   }
 
   /** Which rows a row-level DV op touches: rows where the SQL
@@ -1721,7 +1723,7 @@ object DeltaInterop {
       dvDescriptor(f).map(dvIdentity)
     val oldIdent: Map[String, Option[(String, String, Option[Int])]] =
       perFile.map { case (p, _, _) => p -> dvIdent(st0.live(p)) }.toMap
-    occCommit(spark, path, op, Some((v0, st0))) { st =>
+    DeltaLite.claimLoop((v0, st0)) { case (v, st) =>
       requireWritable(st, path, op, removesRows = true,
         writesRows = newAdds.nonEmpty)
       requireUnmapped(st, path, op)
@@ -1751,18 +1753,19 @@ object DeltaInterop {
           "appended concurrently and may match — re-run against " +
           "fresh state")
       val now = System.currentTimeMillis()
-      (if (perFile.isEmpty) None else dvProtocolUpgrade(st)).toSeq ++
-        perFile.flatMap { case (p, _, _) =>
-          val old = st.live(p)
-          val upd = old.copy(dv =
-            Some(DvMarker + DeletionVectors.toJson(newDv(p))))
-          Seq(removeLine(old, now),
-            JsonMethods.compact(encodeDeltaAdd(upd, st.schema)))
-        } ++
-        newAdds.map(a => JsonMethods.compact(
-          encodeDeltaAdd(a, st.schema))) ++
-        cdcActs :+ commitInfoLine(commitOp)
-    }
+      writeCommitFile(path, v + 1,
+        (if (perFile.isEmpty) None else dvProtocolUpgrade(st)).toSeq ++
+          perFile.flatMap { case (p, _, _) =>
+            val old = st.live(p)
+            val upd = old.copy(dv =
+              Some(DvMarker + DeletionVectors.toJson(newDv(p))))
+            Seq(removeLine(old, now),
+              JsonMethods.compact(encodeDeltaAdd(upd, st.schema)))
+          } ++
+          newAdds.map(a => JsonMethods.compact(
+            encodeDeltaAdd(a, st.schema))) ++
+          cdcActs :+ commitInfoLine(commitOp))
+    }(rebuildOnTip(spark, path, op))
   }
 
   /** Stage `df` (table columns + _change_type) as change-data parquet
@@ -2077,54 +2080,38 @@ object DeltaInterop {
   /** Claim `<version>.json` through the SAME claim-store contract the
     * native format uses ([[DeltaLite.claimCommit]]: conditional PUT
     * semantics, exactly one winner, ambiguity resolved by read-back
-    * compare) — one attempt; the OCC REBASE on a lost race is
-    * [[occCommit]]'s loop. Log READS on the interop side stay on the
+    * compare) — the last step of one [[DeltaLite.claimLoop]] attempt;
+    * returns `version`. Log READS on the interop side stay on the
     * filesystem layer (the standard `_delta_log` is the foreign
     * stack's directory); the claim store guards the one mutation. */
   private def writeCommitFile(path: String, version: Long,
-      lines: Seq[String]): Unit = {
+      lines: Seq[String]): Long = {
     val d = logDir(path)
     Files.createDirectories(d)
     DeltaLite.claimCommit(d.resolve(f"$version%020d.json"), lines)
+    version
   }
 
-  /** OCC commit loop for the mutating export surfaces — the same
-    * contract the native format's commitExclusive gives: build the
-    * commit lines against a FRESH replay, claim `<v+1>.json`, and on
-    * a lost race re-replay and rebuild. The exports' semantics are
-    * all rebase-safe by construction (append re-encodes the same
-    * already-written files against the new schema state; overwrite
-    * re-removes the CURRENT live set; partition delete re-selects the
-    * CURRENT doomed set), and `build` re-runs the writability gates so
-    * a concurrent protocol upgrade or appendOnly flip declines instead
-    * of laundering through a stale check. Bounded attempts keep a
-    * runaway-writer table loud. `first` lets a caller that already
-    * replayed for its pre-staging gates hand that state to the first
-    * attempt — halving the pre-commit replay cost (each replay is O(log)
-    * plus a Spark checkpoint-read job on checkpointed tables; review
-    * finding); the claim still arbitrates, and any lost race replays
-    * fresh. */
-  private def occCommit(spark: SparkSession, path: String, op: String,
-      first: Option[(Long, State)] = None)(
-      build: State => Seq[String]): Long = {
-    var attempts = 0
-    var pre = first
-    while (true) {
-      val (version, st) = pre.getOrElse(replayState(spark, path))
-      pre = None
-      val lines = build(st)
-      try {
-        writeCommitFile(path, version + 1, lines)
-        return version + 1
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          attempts += 1
-          require(attempts < 16,
-            s"$op on $path lost $attempts consecutive commit claims — " +
-              "a livelocked or runaway-writer table; giving up loudly")
-      }
-    }
-    -1L // unreachable
+  /** The mutating exports' lost-race rule for [[DeltaLite.claimLoop]]:
+    * re-replay, and the export's build closure rebuilds the commit on
+    * the tip. The exports' semantics are all rebuild-safe by
+    * construction (append re-encodes the same already-written files
+    * against the new schema state; overwrite re-removes the CURRENT
+    * live set; partition delete re-selects the CURRENT doomed set; the
+    * DV tail re-checks its touched files and declines any concurrent
+    * add), and each closure re-runs the writability gates so a
+    * concurrent protocol upgrade or appendOnly flip declines instead of
+    * laundering through a stale check. A caller that already replayed
+    * for its pre-staging gates hands that state to the first attempt —
+    * each replay is O(log) plus a Spark checkpoint-read job on
+    * checkpointed tables. At most 16 attempts keep a runaway-writer
+    * table loud. */
+  private def rebuildOnTip(spark: SparkSession, path: String, op: String)(
+      lostOn: (Long, State), losses: Int): (Long, State) = {
+    require(losses < 16,
+      s"$op on $path lost $losses consecutive commit claims — " +
+        "a livelocked or runaway-writer table; giving up loudly")
+    replayState(spark, path)
   }
 
   /** The classic checkpoint parquet schema (PROTOCOL.md "Checkpoints"),

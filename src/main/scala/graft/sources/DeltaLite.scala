@@ -158,8 +158,11 @@ object DeltaLite {
   private def logDir(path: String): Path = root(path).resolve("_graft_log")
 
   /** COMMIT-CLAIM STORE — the object-store port seam. Every write path
-    * funnels into [[claim]]; its three-property contract is what OCC,
-    * commitResolve rebase, and snapshot replay are derived from:
+    * on both logs funnels into [[claim]] through ONE claim-and-retry
+    * loop ([[claimLoop]]); its three-property contract is what that
+    * loop's three lost-race rules (Reapply for appends, Rebase for
+    * rewrites, Decline for every other op — see [[LostRace]]) and
+    * snapshot replay are derived from:
     *  (1) claiming a target either succeeds for exactly ONE racing
     *      writer or throws `FileAlreadyExistsException` — never two
     *      winners;
@@ -184,22 +187,24 @@ object DeltaLite {
       * RECOVERY CONTRACT for real stores (what the engine guarantees
       * and what an impl may therefore throw):
       *  - known failure (target taken): throw
-      *    `FileAlreadyExistsException` — the engine's OCC rebase loop
-      *    owns it;
+      *    `FileAlreadyExistsException` — [[claimLoop]] owns it and
+      *    applies the commit's lost-race rule (reapply, rebase or
+      *    decline);
       *  - UNKNOWN outcome (request timeout, dropped response — "did my
       *    PUT land?"): throw [[AmbiguousClaimException]]. The engine
       *    resolves it at the commit boundary by READ-BACK COMPARE:
       *    it reads the target and (a) treats byte-identical content as
       *    its own landed claim (success, no double-apply), (b) treats
-      *    different content as a lost race (normal rebase), (c) retries
-      *    the claim a bounded number of times when nothing landed.
+      *    different content as a lost race (the lost-race rule
+      *    applies), (c) retries the claim a bounded number of times
+      *    when nothing landed.
       *    Read-back compare is sound because commit payloads are
       *    globally unique (added files carry UUID names), so a racer's
       *    commit can never be byte-identical to this writer's;
       *  - transient LIST staleness (eventual consistency) is tolerated
-      *    by the same rebase loop: a claim at a stale version fails as
-      *    taken, the loop re-snapshots and advances — it converges as
-      *    soon as the list does, and never double-assigns a version
+      *    by the same loop: a claim at a stale version fails as taken,
+      *    Reapply and Rebase re-snapshot and advance — they converge as
+      *    soon as the list does, and never double-assign a version
       *    (the claim, not the list, is the arbiter). ScaleSpec's flaky
       *    store suite drives all three injections through the full OCC
       *    scenario. */
@@ -296,6 +301,31 @@ object DeltaLite {
           }
       }
     }
+  }
+
+  /** THE claim-and-retry loop both logs commit through: [[commit]] on
+    * `_graft_log`, the mutating exports on `_delta_log`. `attempt`
+    * builds one commit against a state and claims its version through
+    * [[claimCommit]] as its LAST step, so a `FileAlreadyExistsException`
+    * reaching the loop is a lost version claim and nothing else. `lost`
+    * is the lost-race rule: given the state the losing attempt was
+    * built on and the number of claims lost so far, it returns the
+    * freshly replayed tip to rebuild against, or throws to decline. The
+    * first attempt runs on the caller's state, so a commit that wins
+    * its race replays nothing. */
+  private[sources] def claimLoop[S](first: S)(attempt: S => Long)(
+      lost: (S, Int) => S): Long = {
+    var st = first
+    var losses = 0
+    while (true) {
+      try return attempt(st)
+      catch {
+        case _: java.nio.file.FileAlreadyExistsException =>
+          losses += 1
+          st = lost(st, losses)
+      }
+    }
+    -1L // unreachable
   }
 
   object PosixCommitClaimStore extends CommitClaimStore {
@@ -746,10 +776,8 @@ object DeltaLite {
         (!reader || SupportedReaderFeatures.contains(feature)),
       s"cannot require feature '$feature': this engine does not support " +
         "it, so the resulting table would refuse itself")
-    commitExclusive(path, snap.version + 1, "SET_PROTOCOL_FEATURE",
-      snap.schema, Nil, Nil, snap.constraints, snap.partitionBy,
-      snap.physical, snap.generated, snap.identity,
-      withFeature(snap.properties, feature, reader))
+    commit(path, snap, "SET_PROTOCOL_FEATURE", next = snap.copy(
+      properties = withFeature(snap.properties, feature, reader)))
   }
 
   /** Tip-snapshot cache (the Delta driver's snapshot-management design):
@@ -1418,40 +1446,47 @@ object DeltaLite {
          f.bloom.toList.sortBy(_._1).map { case (c, s) => c -> JString(s) }))))))
   }
 
-  private def encodeIdentity(
-      identity: Map[String, IdentityCol]): List[(String, JValue)] =
-    if (identity.isEmpty) Nil
-    else List("identityColumns" -> JObject(
-      identity.toList.sortBy(_._1).map { case (c, ic) =>
-        c -> JObject(List("start" -> JLong(ic.start), "step" -> JLong(ic.step)) ++
-          ic.highWater.map(h => List("highWater" -> JLong(h))).getOrElse(Nil))
-      }))
+  /** The metaData line every commit re-states and every checkpoint
+    * carries: schema, partitioning, constraints, column mapping,
+    * generated and identity columns, properties. */
+  private def metaDataLine(m: Snapshot): String = {
+    def sorted(kv: Map[String, String]): JObject =
+      JObject(kv.toList.sortBy(_._1).map { case (k, x) => k -> JString(x) })
+    val fields = List("schema" -> JString(m.schema.json)) ++
+      (if (m.partitionBy.isEmpty) Nil
+       else List("partitionBy" -> JArray(m.partitionBy.toList.map(JString(_))))) ++
+      (if (m.constraints.isEmpty) Nil else List("constraints" -> sorted(m.constraints))) ++
+      (if (m.physical.isEmpty) Nil else List("physicalNames" -> sorted(m.physical))) ++
+      (if (m.generated.isEmpty) Nil
+       else List("generatedColumns" -> sorted(m.generated))) ++
+      (if (m.identity.isEmpty) Nil
+       else List("identityColumns" -> JObject(
+         m.identity.toList.sortBy(_._1).map { case (c, ic) =>
+           c -> JObject(List("start" -> JLong(ic.start), "step" -> JLong(ic.step)) ++
+             ic.highWater.map(h => List("highWater" -> JLong(h))).getOrElse(Nil))
+         }))) ++
+      (if (m.properties.isEmpty) Nil else List("properties" -> sorted(m.properties)))
+    JsonMethods.compact(JObject(List("metaData" -> JObject(fields))))
+  }
 
-  /** Atomically commit a version: actions to a temp file, then rename. */
-  private[graft] def writeCommit(path: String, version: Long, op: String,
-      schema: StructType, adds: Seq[AddFile], removes: Seq[String],
-      txn: Option[(String, Long)],
-      constraints: Map[String, String],
-      partitionBy: Seq[String],
-      physical: Map[String, String],
-      generated: Map[String, String],
-      identity: Map[String, IdentityCol],
-      properties: Map[String, String],
-      txns: Seq[(String, Long)] = Nil): Long = {
-    // `constraints`/`partitionBy`/`physical`/`generated`/`identity` have
-    // NO default on purpose: metaData is re-stated on every commit, so a
-    // call site that forgot to carry the snapshot's values forward would
-    // silently DROP them from the table. `txns` (multi-txn commits —
-    // COPY INTO records one loaded-file identity per txn action) is
-    // accumulative state, not re-stated metadata, so a default is safe.
+  /** The log lines of one commit attempt at `version`: header, the
+    * metaData re-stated from `meta` (schema, partitioning, constraints,
+    * column mapping, generated and identity columns, properties), txn,
+    * remove and add actions. Row-tracking ids and the in-commit
+    * timestamp are assigned HERE, from the state the attempt is built
+    * on, so every write path gets them and a rebuilt attempt re-assigns
+    * them against the winner's state. */
+  private def encodeCommit(path: String, version: Long, op: String,
+      meta: Snapshot, adds: Seq[AddFile], removes: Seq[String],
+      txns: Seq[(String, Long)]): Seq[String] = {
+    val properties = meta.properties
     checkWriterFeatures(path, properties)
-    Files.createDirectories(logDir(path))
     // ROW TRACKING (Delta `delta.enableRowTracking`, fresh-row-ID tier):
     // every committed file gets a disjoint row-id range [baseRowId,
     // baseRowId + rows) above a property-carried high-water mark, so
     // `_row_id` = base + in-file position is unique table-wide. The
-    // assignment lives HERE, in the single commit choke point, so every
-    // write path gets it for free and a retried commit (fresh snapshot →
+    // assignment lives HERE, in the one commit encoding, so every write
+    // path gets it for free and a rebuilt attempt (fresh snapshot →
     // fresh properties) re-assigns above the winner's mark. Files that
     // already carry a base (DV re-adds, RESTORE re-adds by reference)
     // KEEP it — their rows' ids survive soft deletes and restores —
@@ -1481,22 +1516,6 @@ object DeltaLite {
         }
         (assigned, properties + (hwKey -> hw.toString))
       }
-    val metaFields = List("schema" -> JString(schema.json)) ++
-      (if (partitionBy.isEmpty) Nil
-       else List("partitionBy" -> JArray(partitionBy.toList.map(JString(_))))) ++
-      (if (constraints.isEmpty) Nil
-       else List("constraints" -> JObject(
-         constraints.toList.sortBy(_._1).map { case (n, e) => n -> JString(e) }))) ++
-      (if (physical.isEmpty) Nil
-       else List("physicalNames" -> JObject(
-         physical.toList.sortBy(_._1).map { case (l, p) => l -> JString(p) }))) ++
-      (if (generated.isEmpty) Nil
-       else List("generatedColumns" -> JObject(
-         generated.toList.sortBy(_._1).map { case (c, e) => c -> JString(e) }))) ++
-      encodeIdentity(identity) ++
-      (if (properties2.isEmpty) Nil
-       else List("properties" -> JObject(
-         properties2.toList.sortBy(_._1).map { case (k, x) => k -> JString(x) })))
     // IN-COMMIT TIMESTAMPS (Delta `delta.enableInCommitTimestamps`,
     // `graft.inCommitTimestamps` here): TIMESTAMP AS OF / RESTORE resolve
     // versions from commit-header instants, so those instants must be
@@ -1512,29 +1531,17 @@ object DeltaLite {
       else math.max(
         commitHeaderMs(path, version - 1).map(_ + 1L).getOrElse(Long.MinValue),
         clockMs())
-    val lines = Seq(
+    Seq(
       JsonMethods.compact(JObject(List("commit" -> JObject(List(
         "version" -> JLong(version), "op" -> JString(op),
         "committedAtMs" -> JLong(commitMs)))))),
-      JsonMethods.compact(JObject(List("metaData" -> JObject(metaFields))))) ++
-      (txn.toSeq ++ txns).map { case (app, ver) =>
+      metaDataLine(meta.copy(properties = properties2))) ++
+      txns.map { case (app, ver) =>
         JsonMethods.compact(JObject(List("txn" ->
           JObject(List("app" -> JString(app), "version" -> JLong(ver)))))) } ++
       removes.map(p => JsonMethods.compact(JObject(List("remove" ->
         JObject(List("path" -> JString(p))))))) ++
-      adds2.map(f => JsonMethods.compact(encodeAdd(f, schema, physical)))
-    // COMMIT BOUNDARY: the atomic version claim — see
-    // [[CommitClaimStore]] for the 3-property contract (one winner,
-    // immutable won commits, failed claims leave nothing) that OCC,
-    // commitResolve rebase, and snapshot replay are derived from, and
-    // for the object-store port story (swap ONE trait impl). Ambiguous
-    // outcomes (store timeouts) resolve here by read-back compare
-    // (claimCommit) so a landed-but-unacknowledged claim never
-    // double-applies and a lost race feeds the normal rebase loop.
-    claimCommit(logDir(path).resolve(s"$version.json"), lines)
-    if (version > 0 && version % CheckpointInterval == 0)
-      writeCheckpoint(path, version)
-    version
+      adds2.map(f => JsonMethods.compact(encodeAdd(f, meta.schema, meta.physical)))
   }
 
   /** Materialize the resolved state at `version` as a checkpoint so
@@ -1590,28 +1597,11 @@ object DeltaLite {
   }
 
   /** The metaData + txn lines shared by both checkpoint formats. */
-  private def checkpointJsonLines(snap: Snapshot): Seq[String] = {
-    val ckptMeta = List("schema" -> JString(snap.schema.json)) ++
-      (if (snap.partitionBy.isEmpty) Nil
-       else List("partitionBy" -> JArray(snap.partitionBy.toList.map(JString(_))))) ++
-      (if (snap.constraints.isEmpty) Nil
-       else List("constraints" -> JObject(
-         snap.constraints.toList.sortBy(_._1).map { case (n, e) => n -> JString(e) }))) ++
-      (if (snap.physical.isEmpty) Nil
-       else List("physicalNames" -> JObject(
-         snap.physical.toList.sortBy(_._1).map { case (l, p) => l -> JString(p) }))) ++
-      (if (snap.generated.isEmpty) Nil
-       else List("generatedColumns" -> JObject(
-         snap.generated.toList.sortBy(_._1).map { case (c, e) => c -> JString(e) }))) ++
-      encodeIdentity(snap.identity) ++
-      (if (snap.properties.isEmpty) Nil
-       else List("properties" -> JObject(
-         snap.properties.toList.sortBy(_._1).map { case (k, x) => k -> JString(x) })))
-    JsonMethods.compact(JObject(List("metaData" -> JObject(ckptMeta)))) +:
+  private def checkpointJsonLines(snap: Snapshot): Seq[String] =
+    metaDataLine(snap) +:
       snap.txns.toSeq.sortBy(_._1).map { case (app, ver) =>
         JsonMethods.compact(JObject(List("txn" -> JObject(List(
           "app" -> JString(app), "version" -> JLong(ver)))))) }
-  }
 
   /** Parquet checkpoint row shape: `meta` rows carry the metaData/txn
     * JSON line (a handful, driver-parsed); `add` rows carry the file
@@ -1980,110 +1970,148 @@ object DeltaLite {
 
   // ------------------------------- optimistic concurrency (Delta-style)
 
-  /** Commit an ADD-ONLY action set with optimistic retry: appends
-    * logically conflict with nothing, so when another writer wins the
-    * version (the atomic log rename fails), re-resolve the snapshot,
-    * merge any evolved schema, bump the version and retry — the Delta
-    * protocol's auto-resolvable-conflict rule. The batch's data files
-    * are already on disk and stay valid across retries. */
-  private def commitAddsWithRetry(path: String, op: String,
-      batchSchema: StructType, adds: Seq[AddFile],
-      txn: Option[(String, Long)] = None,
-      txns: Seq[(String, Long)] = Nil): Long = {
-    var attempts = 0
-    while (true) {
-      val snap = snapshot(path)
-      // txn idempotence (Delta's streaming-sink rule): if this app already
-      // committed this or a later txn version — including via a racing
-      // duplicate of ourselves — the batch is already in the table. For a
-      // multi-txn batch (COPY INTO): ALL identities present = full replay
-      // (no-op); SOME present = a concurrent loader landed an overlapping
-      // subset, and blindly committing would double-load it — surface the
-      // conflict instead (the caller re-runs and re-filters).
-      val allTxns = txn.toSeq ++ txns
-      if (allTxns.nonEmpty) {
-        val done = allTxns.count { case (app, ver) =>
-          snap.txns.get(app).exists(_ >= ver) }
-        if (done == allTxns.size) return snap.version
-        if (done > 0) throw new java.util.ConcurrentModificationException(
-          s"concurrent $op committed an overlapping txn subset on $path; " +
-            "re-run against the new snapshot")
-      }
-      val known = snap.schema.fieldNames.toSet
-      val schema = StructType(snap.schema.fields ++
-        batchSchema.fields.filterNot(f => known.contains(f.name)))
-      try return writeCommit(path, snap.version + 1, op, schema, adds, Nil, txn,
-        snap.constraints, snap.partitionBy, snap.physical, snap.generated,
-        snap.identity, snap.properties, txns)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException if attempts < 100 =>
-          attempts += 1 // lost the race — replay the new commits and retry
-      }
-    }
-    -1L // unreachable
+  /** Test hook: runs between an operation's snapshot-resolution and its
+    * first commit attempt — lets a race test inject a concurrent commit
+    * into exactly the conflict window (same injectable-seam pattern as
+    * [[clockMs]]). Thread-scoped like [[withClaimStore]]: suites share
+    * the JVM and every commit fires it. Production value is a no-op. */
+  private val commitHook = ThreadLocal.withInitial[() => Unit](() => () => ())
+  private[graft] def testHookBeforeCommit: () => Unit = commitHook.get()
+  private[graft] def testHookBeforeCommit_=(f: () => Unit): Unit =
+    commitHook.set(f)
+
+  /** What [[commit]] does when a concurrent writer claims its version
+    * first: a rule of (base, tip), applied by [[claimLoop]]. */
+  private[graft] sealed trait LostRace
+  private[graft] object LostRace {
+    /** Appends: rebuild on the tip — the batch's new columns merge into
+      * the tip's schema, and txn idempotence is re-checked against the
+      * tip (Delta's auto-resolvable append conflict). The batch's data
+      * files are on disk and stay valid. Declines instead when `base`
+      * has identity columns or `next` births physical names: both are
+      * allocated from the base and baked into the batch. At most 100
+      * reapplies. */
+    case object Reapply extends LostRace
+    /** Rewrites: Delta's ConflictChecker. The SAME adds/removes
+      * re-commit on the tip only when every semantic read of the
+      * losing operation is provably unaffected:
+      *
+      *   - winners changed no table metadata (schema / properties /
+      *     constraints / partitioning / column mapping / generated /
+      *     identity — any change invalidates the loser's write
+      *     projection);
+      *   - every file the loser removes is still live with an
+      *     IDENTICAL log entry (a concurrent DV on a victim means
+      *     concurrently deleted rows that a stale rewrite would
+      *     resurrect; a vanished victim means a concurrent rewrite
+      *     already consumed it);
+      *   - the winners' newly added files don't conflict with the
+      *     loser's read: for predicate DML (`readConflict`) the
+      *     winner's adds are READ and the predicate evaluated — an
+      *     appended row matching a DELETE/UPDATE predicate is a genuine
+      *     serialization conflict (Delta's ConcurrentAppendException);
+      *     pure file-rewrite maintenance (OPTIMIZE / REORG) reads
+      *     nothing beyond its victims (`readConflict = None`).
+      *
+      * The rewrite work (often minutes of IO at 100-TB file sizes) is
+      * preserved; at most one cheap predicate scan of the winners' adds
+      * is spent per rebase, at most 20 rebases. Anything else throws
+      * ConcurrentModificationException. */
+    final case class Rebase(readConflict: Option[Seq[AddFile] => Boolean])
+        extends LostRace
+    /** Every other op: a concurrent winner may have removed, rewritten
+      * or re-described what the op read (Delta's non-resolvable
+      * conflict class), so throw ConcurrentModificationException for
+      * the caller to re-run against the new snapshot. */
+    case object Decline extends LostRace
   }
 
-  /** Commit an action set that REMOVES files. A concurrent winner may
-    * have removed or rewritten the same files, so blind retry is unsafe
-    * (Delta's non-resolvable conflict class): surface it to the caller
-    * to re-run against the new snapshot. */
-  /** Test hook: runs between an operation's snapshot-resolution and its
-    * commit attempt — lets a race test inject a concurrent commit into
-    * exactly the conflict window (same injectable-seam pattern as
-    * [[clockMs]]). Production value is a no-op. */
-  private[graft] var testHookBeforeCommit: () => Unit = () => ()
+  /** The base of a version-0 commit (CREATE, CONVERT, CLONE): no table. */
+  private[graft] val NoTable: Snapshot = Snapshot(-1L, new StructType(), Nil)
 
-  /** Delta-style LOGICAL conflict resolution (the ConflictChecker): a
-    * rewrite operation that loses the physical commit race re-examines
-    * what the winners actually did instead of discarding its work.
-    * The rebase is allowed only when EVERY semantic read of the losing
-    * operation is provably unaffected:
-    *
-    *   - winners changed no table metadata (schema / properties /
-    *     constraints / partitioning / column mapping / generated /
-    *     identity — any change invalidates the loser's write projection);
-    *   - every file the loser removes is still live with an IDENTICAL
-    *     log entry (a concurrent DV on a victim means concurrently
-    *     deleted rows that a stale rewrite would resurrect; a vanished
-    *     victim means a concurrent rewrite already consumed it);
-    *   - the winners' newly added files don't conflict with the loser's
-    *     read: for predicate DML (`readConflict`) the winner's adds are
-    *     READ and the predicate evaluated — an appended row matching a
-    *     DELETE/UPDATE predicate is a genuine serialization conflict
-    *     (Delta's ConcurrentAppendException); pure file-rewrite
-    *     maintenance (OPTIMIZE / REORG / CLUSTER) reads nothing beyond
-    *     its victims, so winner adds never conflict.
-    *
-    * On a clean check the SAME adds/removes re-commit on top of the
-    * winners — the rewrite work (often minutes of IO at 100-TB file
-    * sizes) is preserved; at most one cheap predicate scan of the
-    * winners' adds is spent per rebase. Anything else throws
-    * ConcurrentModificationException exactly as before. */
-  private[graft] def commitResolve(path: String, base: Snapshot, op: String,
-      adds: Seq[AddFile], removes: Seq[String],
-      readConflict: Option[Seq[AddFile] => Boolean],
-      maxRebases: Int = 20): Long = {
-    var version = base.version + 1
-    var rebases = 0
+  /** THE native commit. Claims the version after `base` — the snapshot
+    * the operation read, [[NoTable]] for version 0 — for `adds` and
+    * `removes` under the table metadata of `next` (`base`'s when null).
+    * metaData is re-stated on every commit, so it travels as one
+    * Snapshot: no call site can drop a field by forgetting to carry it.
+    * `txn`/`txns` record loaded batch identities (accumulative state,
+    * not re-stated). A lost race is settled by `onLost`. Returns the
+    * committed version; a Reapply whose txn identities the tip already
+    * holds commits nothing and returns the tip's version. */
+  private[graft] def commit(path: String, base: Snapshot, op: String,
+      next: Snapshot = null, adds: Seq[AddFile] = Nil,
+      removes: Seq[String] = Nil, txn: Option[(String, Long)] = None,
+      txns: Seq[(String, Long)] = Nil,
+      onLost: LostRace = LostRace.Decline): Long = {
+    val meta = if (next == null) base else next
+    val rule = onLost match {
+      case LostRace.Reapply
+          if base.identity.nonEmpty || meta.physical != base.physical =>
+        LostRace.Decline
+      case r => r
+    }
+    val allTxns = txn.toSeq ++ txns
+    // txn idempotence (Delta's streaming-sink rule): if this app already
+    // committed this or a later txn version — including via a racing
+    // duplicate of ourselves — the batch is already in the table. For a
+    // multi-txn batch (COPY INTO): ALL identities present = full replay
+    // (no-op); SOME present = a concurrent loader landed an overlapping
+    // subset, and blindly committing would double-load it — surface the
+    // conflict instead (the caller re-runs and re-filters).
+    def landed(tip: Snapshot): Boolean = allTxns.nonEmpty && {
+      val done = allTxns.count { case (app, ver) =>
+        tip.txns.get(app).exists(_ >= ver) }
+      if (done > 0 && done < allTxns.size)
+        throw new java.util.ConcurrentModificationException(
+          s"concurrent $op committed an overlapping txn subset on $path; " +
+            "re-run against the new snapshot")
+      done == allTxns.size
+    }
+    Files.createDirectories(logDir(path))
     testHookBeforeCommit()
-    while (true) {
-      try {
-        val v = writeCommit(path, version, op, base.schema, adds, removes,
-          None, base.constraints, base.partitionBy, base.physical,
-          base.generated, base.identity, base.properties)
-        if (ChurnOps(op) && (adds.nonEmpty || removes.nonEmpty))
-          maybeRepairChurnStats(path,
-            (adds.map(f => pvKey(f.pv)) ++ removes.flatMap(p =>
-              base.files.find(_.path == p).map(f => pvKey(f.pv)))).toSet)
-        return v
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          rebases += 1
-          def conflict(why: String): Nothing =
-            throw new java.util.ConcurrentModificationException(
-              s"concurrent commit beat $op at version $version on $path " +
-                s"and cannot be rebased ($why); re-run against the new snapshot")
-          if (rebases > maxRebases) conflict("rebase limit reached")
+    var claimed = false
+    val version = claimLoop(base) { tip =>
+      val m = rule match {
+        case LostRace.Reapply if tip ne base =>
+          val known = tip.schema.fieldNames.toSet
+          tip.copy(schema = StructType(tip.schema.fields ++
+            meta.schema.fields.filterNot(f => known.contains(f.name))))
+        case _ => meta
+      }
+      if (rule == LostRace.Reapply && landed(tip)) tip.version
+      else {
+        val v = tip.version + 1
+        // COMMIT BOUNDARY: the atomic version claim, the last step of
+        // the attempt — see [[CommitClaimStore]] for the 3-property
+        // contract (one winner, immutable won commits, failed claims
+        // leave nothing) that [[claimLoop]] and its three lost-race
+        // rules are derived from, and for the object-store port story
+        // (swap ONE trait impl). Ambiguous outcomes (store timeouts)
+        // resolve inside claimCommit by read-back compare, so a
+        // landed-but-unacknowledged claim never double-applies and a
+        // lost race reaches the loop as `FileAlreadyExistsException`.
+        claimCommit(logDir(path).resolve(s"$v.json"),
+          encodeCommit(path, v, op, m, adds, removes, allTxns))
+        claimed = true
+        v
+      }
+    } { (lostOn, losses) =>
+      val v = lostOn.version + 1
+      def decline(): Nothing =
+        throw new java.util.ConcurrentModificationException(
+          s"concurrent commit beat $op at version $v on $path; " +
+            "re-run the operation against the new snapshot")
+      def conflict(why: String): Nothing =
+        throw new java.util.ConcurrentModificationException(
+          s"concurrent commit beat $op at version $v on $path " +
+            s"and cannot be rebased ($why); re-run against the new snapshot")
+      rule match {
+        case LostRace.Decline => decline()
+        case LostRace.Reapply =>
+          if (losses > 100) decline()
+          snapshot(path)
+        case LostRace.Rebase(readConflict) =>
+          if (losses > 20) conflict("rebase limit reached")
           clearSnapshotCache()
           val tip = snapshot(path)
           if (tip.schema != base.schema || tip.properties != base.properties ||
@@ -2101,41 +2129,22 @@ object DeltaLite {
           val winnerAdds = tip.files.filterNot(f => baseByPath.contains(f.path))
           if (winnerAdds.nonEmpty && readConflict.exists(f => f(winnerAdds)))
             conflict("concurrently appended rows match the operation's predicate")
-          version = tip.version + 1
+          tip
       }
     }
-    -1L // unreachable
-  }
-
-  private[graft] def commitExclusive(path: String, version: Long, op: String,
-      schema: StructType, adds: Seq[AddFile], removes: Seq[String],
-      constraints: Map[String, String], partitionBy: Seq[String],
-      physical: Map[String, String],
-      generated: Map[String, String],
-      identity: Map[String, IdentityCol],
-      properties: Map[String, String],
-      txn: Option[(String, Long)] = None,
-      txns: Seq[(String, Long)] = Nil): Long =
-    try {
+    if (claimed) {
+      if (version > 0 && version % CheckpointInterval == 0)
+        writeCheckpoint(path, version)
       // churn repair needs the removed files' partitions, which only
-      // the PRE-commit snapshot can name — resolve before claiming
-      val preFiles =
-        if (!ChurnOps(op) || (adds.isEmpty && removes.isEmpty)) Nil
-        else scala.util.Try(snapshot(path).files).getOrElse(Nil)
-      val v = writeCommit(path, version, op, schema, adds, removes, txn,
-        constraints, partitionBy, physical, generated, identity,
-        properties, txns)
-      if (ChurnOps(op) && (adds.nonEmpty || removes.nonEmpty))
-        maybeRepairChurnStats(path,
-          (adds.map(f => pvKey(f.pv)) ++ removes.flatMap(p =>
-            preFiles.find(_.path == p).map(f => pvKey(f.pv)))).toSet)
-      v
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent commit beat $op at version $version on $path; " +
-            "re-run the operation against the new snapshot")
+      // the pre-commit snapshot can name
+      if (ChurnOps(op) && (adds.nonEmpty || removes.nonEmpty)) {
+        val removed = removes.toSet
+        maybeRepairChurnStats(path, (adds.map(f => pvKey(f.pv)) ++
+          base.files.filter(f => removed(f.path)).map(f => pvKey(f.pv))).toSet)
+      }
     }
+    version
+  }
 
   // ------------------------------------------------------------ read API
 
@@ -2855,10 +2864,7 @@ object DeltaLite {
       .select("path", "row_index")
     val touched = matches.select("path").distinct()
       .collect().map(_.getString(0)).toSeq
-    if (touched.isEmpty)
-      return writeCommit(path, snap.version + 1, "DELETE_DV", snap.schema, Nil, Nil,
-        None, snap.constraints, snap.partitionBy, snap.physical, snap.generated,
-      snap.identity, snap.properties)
+    if (touched.isEmpty) return commit(path, snap, "DELETE_DV")
     val touchedSet = touched.toSet
     val priorDvDirs = snap.files
       .filter(f => touchedSet.contains(f.path)).flatMap(_.dv).distinct
@@ -2874,10 +2880,9 @@ object DeltaLite {
       .map(_.copy(dv = Some(dvRel)))
     // a table carrying DVs needs the DV read path → auto-require the
     // reader feature with the first vector (Delta's automatic upgrade)
-    commitExclusive(path, snap.version + 1, "DELETE_DV", snap.schema,
-      readds, touched, snap.constraints, snap.partitionBy, snap.physical, snap.generated,
-      snap.identity,
-      withFeature(snap.properties, "deletionVectors", reader = true))
+    commit(path, snap, "DELETE_DV", next = snap.copy(
+        properties = withFeature(snap.properties, "deletionVectors", reader = true)),
+      adds = readds, removes = touched)
   }
 
   /** Injectable wall clock (test hook for the in-commit-timestamp skew
@@ -3134,9 +3139,11 @@ object DeltaLite {
       generatedChecks(df.columns.toSet, generated), "CREATE")
     val adds = writeData(spark, root(path), 0L, withIds, schema, partitionBy,
       Map.empty, generated, props)
-    writeCommit(path, 0L, "CREATE", schema, adds, Nil, txn, Map.empty,
-      partitionBy, Map.empty, generated,
-      advanceHighWater(identity, adds, schema, Map.empty), props, txns)
+    commit(path, NoTable, "CREATE", next = NoTable.copy(schema = schema,
+        partitionBy = partitionBy, generated = generated,
+        identity = advanceHighWater(identity, adds, schema, Map.empty),
+        properties = props),
+      adds = adds, txn = txn, txns = txns)
   }
 
   /** Sparse identity allocation above `highWater`: unique and ascending
@@ -3224,10 +3231,8 @@ object DeltaLite {
       s"'$column' is an identity column and cannot have a DEFAULT")
     spark.createDataFrame(new java.util.ArrayList[Row](), snap.schema)
       .select(expr(e).cast(snap.schema(column).dataType)).schema // analysis check
-    commitExclusive(path, snap.version + 1, "SET_COLUMN_DEFAULT", snap.schema,
-      Nil, Nil, snap.constraints, snap.partitionBy, snap.physical,
-      snap.generated, snap.identity,
-      snap.properties + (DefaultPrefix + column -> e))
+    commit(path, snap, "SET_COLUMN_DEFAULT", next = snap.copy(
+      properties = snap.properties + (DefaultPrefix + column -> e)))
   }
 
   /** Delta `ALTER TABLE ... ALTER COLUMN c DROP DEFAULT`. */
@@ -3235,10 +3240,8 @@ object DeltaLite {
     val snap = snapshot(path)
     require(snap.properties.contains(DefaultPrefix + column),
       s"no DEFAULT on column '$column'")
-    commitExclusive(path, snap.version + 1, "DROP_COLUMN_DEFAULT", snap.schema,
-      Nil, Nil, snap.constraints, snap.partitionBy, snap.physical,
-      snap.generated, snap.identity,
-      snap.properties - (DefaultPrefix + column))
+    commit(path, snap, "DROP_COLUMN_DEFAULT", next = snap.copy(
+      properties = snap.properties - (DefaultPrefix + column)))
   }
 
   /** Delta `CONVERT TO DELTA parquet.\`path\``: adopt an EXISTING parquet
@@ -3264,8 +3267,9 @@ object DeltaLite {
       s"partition path columns $partitionBy missing from inferred schema")
     val adds = footerAdds(spark, r, r, schema, partitionBy, Map.empty)
     require(adds.nonEmpty, s"no parquet files under $path to convert")
-    writeCommit(path, 0L, "CONVERT", schema, adds, Nil, None, Map.empty,
-      partitionBy, Map.empty, Map.empty, Map.empty, Map.empty)
+    commit(path, NoTable, "CONVERT",
+      next = NoTable.copy(schema = schema, partitionBy = partitionBy),
+      adds = adds)
   }
 
   /** Partition column names present in the Hive layout under `dir`
@@ -3294,19 +3298,9 @@ object DeltaLite {
       generatedChecks(df.columns.toSet, snap.generated), "APPEND")
     val adds = writeData(spark, root(path), snap.version + 1, withIds, snap.schema,
       snap.partitionBy, snap.physical, snap.generated, snap.properties)
-    val v =
-      if (snap.identity.isEmpty)
-        commitAddsWithRetry(path, "APPEND", snap.schema, adds)
-      else
-        // Identity allocation reads the snapshot's high-water mark, so a
-        // lost commit race CANNOT blind-retry (the winner may have taken
-        // the same id range — the values are baked into this batch's data
-        // files). Surface the conflict like the other read-dependent ops;
-        // Delta similarly downgrades concurrent identity appends.
-        commitExclusive(path, snap.version + 1, "APPEND", snap.schema, adds, Nil,
-          snap.constraints, snap.partitionBy, snap.physical, snap.generated,
-          advanceHighWater(snap.identity, adds, snap.schema, snap.physical),
-          snap.properties)
+    val v = commit(path, snap, "APPEND", next = snap.copy(identity =
+        advanceHighWater(snap.identity, adds, snap.schema, snap.physical)),
+      adds = adds, onLost = LostRace.Reapply)
     maybeAutoCompact(spark, path)
     maybeFoldStats(spark, path, adds)
     v
@@ -3509,24 +3503,9 @@ object DeltaLite {
       generatedChecks(df.columns.toSet, snap.generated), "APPEND")
     val adds = writeData(spark, root(path), snap.version + 1, withIds, snap.schema,
       snap.partitionBy, snap.physical, snap.generated, snap.properties)
-    val v =
-      if (snap.identity.isEmpty)
-        commitAddsWithRetry(path, "APPEND", snap.schema, adds,
-          txn = Some((app, txnVersion)))
-      else
-        // exclusive for the same reason as [[append]]; the txn action still
-        // rides the commit so replays stay no-ops
-        try writeCommit(path, snap.version + 1, "APPEND", snap.schema, adds, Nil,
-          Some((app, txnVersion)), snap.constraints, snap.partitionBy,
-          snap.physical, snap.generated,
-          advanceHighWater(snap.identity, adds, snap.schema, snap.physical),
-          snap.properties)
-        catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            throw new java.util.ConcurrentModificationException(
-              s"concurrent commit beat identity APPEND at version " +
-                s"${snap.version + 1} on $path; re-run against the new snapshot")
-        }
+    val v = commit(path, snap, "APPEND", next = snap.copy(identity =
+        advanceHighWater(snap.identity, adds, snap.schema, snap.physical)),
+      adds = adds, txn = Some((app, txnVersion)), onLost = LostRace.Reapply)
     maybeAutoCompact(spark, path)
     maybeFoldStats(spark, path, adds)
     v
@@ -3554,7 +3533,8 @@ object DeltaLite {
     val adds = writeData(spark, root(path), snap.version + 1, filled,
       snap.schema, snap.partitionBy, snap.physical, snap.generated,
       snap.properties)
-    val v = commitAddsWithRetry(path, "APPEND", snap.schema, adds, txns = txns)
+    val v = commit(path, snap, "APPEND", adds = adds, txns = txns,
+      onLost = LostRace.Reapply)
     maybeAutoCompact(spark, path)
     maybeFoldStats(spark, path, adds)
     v
@@ -3601,18 +3581,9 @@ object DeltaLite {
       snap.schema, snap.partitionBy, snap.physical, snap.generated,
       snap.properties)
     val loadedTxns = fresh.map(p => key(p) -> 1L)
-    val v =
-      if (snap.identity.isEmpty)
-        commitAddsWithRetry(path, "COPY INTO", snap.schema, adds,
-          txns = loadedTxns)
-      else
-        // identity allocation pins this batch to the snapshot it read
-        // (same rule as [[append]]) — lost races surface, never retry
-        commitExclusive(path, snap.version + 1, "COPY INTO", snap.schema,
-          adds, Nil, snap.constraints, snap.partitionBy, snap.physical,
-          snap.generated,
-          advanceHighWater(snap.identity, adds, snap.schema, snap.physical),
-          snap.properties, txns = loadedTxns)
+    val v = commit(path, snap, "COPY INTO", next = snap.copy(identity =
+        advanceHighWater(snap.identity, adds, snap.schema, snap.physical)),
+      adds = adds, txns = loadedTxns, onLost = LostRace.Reapply)
     maybeAutoCompact(spark, path)
     (v, fresh.size.toLong)
   }
@@ -3645,14 +3616,10 @@ object DeltaLite {
       generatedChecks(df.columns.toSet, snap.generated), "APPEND_EVOLVE")
     val adds = writeData(spark, root(path), snap.version + 1, withIds, evolved,
       snap.partitionBy, physical, snap.generated, snap.properties)
-    val v =
-      if (snap.identity.isEmpty && physical == snap.physical)
-        commitAddsWithRetry(path, "APPEND_EVOLVE", evolved, adds)
-      else
-        commitExclusive(path, snap.version + 1, "APPEND_EVOLVE", evolved, adds,
-          Nil, snap.constraints, snap.partitionBy, physical, snap.generated,
-          advanceHighWater(snap.identity, adds, evolved, physical),
-          snap.properties)
+    val v = commit(path, snap, "APPEND_EVOLVE", next = snap.copy(
+        schema = evolved, physical = physical,
+        identity = advanceHighWater(snap.identity, adds, evolved, physical)),
+      adds = adds, onLost = LostRace.Reapply)
     maybeFoldStats(spark, path, adds)
     v
   }
@@ -3676,9 +3643,8 @@ object DeltaLite {
       .filter(not(coalesce(expr(check), lit(true)))).limit(1).count()
     require(bad == 0L,
       s"cannot add constraint '$name': existing rows violate CHECK ($check)")
-    commitExclusive(path, snap.version + 1, "ADD_CONSTRAINT", snap.schema,
-      Nil, Nil, snap.constraints + (name -> check), snap.partitionBy, snap.physical,
-      snap.generated, snap.identity, snap.properties)
+    commit(path, snap, "ADD_CONSTRAINT",
+      next = snap.copy(constraints = snap.constraints + (name -> check)))
   }
 
   /** Delta `ALTER TABLE ... RENAME COLUMN old TO new` (column-mapping
@@ -3720,9 +3686,8 @@ object DeltaLite {
     val newSchema = StructType(snap.schema.fields.map(f =>
       if (f.name == oldName) f.copy(name = newName) else f))
     val newPhysical = (snap.physical - oldName) + (newName -> snap.phys(oldName))
-    commitExclusive(path, snap.version + 1, "RENAME_COLUMN", newSchema,
-      Nil, Nil, snap.constraints, snap.partitionBy, newPhysical, snap.generated,
-      snap.identity, snap.properties)
+    commit(path, snap, "RENAME_COLUMN",
+      next = snap.copy(schema = newSchema, physical = newPhysical))
   }
 
   /** Delta type widening (`delta.enableTypeWidening` / `ALTER COLUMN ...
@@ -3777,10 +3742,8 @@ object DeltaLite {
       if (f.name == name) f.copy(dataType = to) else f))
     // widened tables need the widening read path → auto-require the
     // reader feature (Delta's automatic protocol upgrade on enablement)
-    commitExclusive(path, snap.version + 1, "WIDEN_COLUMN_TYPE", newSchema,
-      Nil, Nil, snap.constraints, snap.partitionBy, snap.physical,
-      snap.generated, snap.identity,
-      withFeature(snap.properties, "typeWidening", reader = true))
+    commit(path, snap, "WIDEN_COLUMN_TYPE", next = snap.copy(schema = newSchema,
+      properties = withFeature(snap.properties, "typeWidening", reader = true)))
   }
 
   /** Delta `ALTER TABLE ... DROP COLUMN name` (column mapping):
@@ -3818,10 +3781,10 @@ object DeltaLite {
     // (Delta avoids this by assigning fresh physical ids at birth).
     val retired = (retiredPhys(snap.properties) + snap.phys(name))
       .toSeq.sorted.mkString(",")
-    commitExclusive(path, snap.version + 1, "DROP_COLUMN", newSchema,
-      Nil, Nil, snap.constraints, snap.partitionBy, snap.physical - name,
-      snap.generated - name, snap.identity - name,
-      snap.properties + (RetiredPhysKey -> retired))
+    commit(path, snap, "DROP_COLUMN", next = snap.copy(schema = newSchema,
+      physical = snap.physical - name, generated = snap.generated - name,
+      identity = snap.identity - name,
+      properties = snap.properties + (RetiredPhysKey -> retired)))
   }
 
   /** Delta `ALTER TABLE ... ADD COLUMN name type` — METADATA-ONLY
@@ -3849,9 +3812,8 @@ object DeltaLite {
     val newSchema = StructType(snap.schema.fields :+ field)
     val physical =
       snap.physical ++ birthPhysical(snap, snap.version + 1, Seq(field))
-    commitExclusive(path, snap.version + 1, "ADD_COLUMN", newSchema,
-      Nil, Nil, snap.constraints, snap.partitionBy, physical,
-      snap.generated, snap.identity, snap.properties)
+    commit(path, snap, "ADD_COLUMN",
+      next = snap.copy(schema = newSchema, physical = physical))
   }
 
   /** Table property holding comma-separated physical names that once
@@ -3894,9 +3856,8 @@ object DeltaLite {
   def dropConstraint(path: String, name: String): Long = {
     val snap = snapshot(path)
     require(snap.constraints.contains(name), s"no constraint '$name' on $path")
-    commitExclusive(path, snap.version + 1, "DROP_CONSTRAINT", snap.schema,
-      Nil, Nil, snap.constraints - name, snap.partitionBy, snap.physical,
-      snap.generated, snap.identity, snap.properties)
+    commit(path, snap, "DROP_CONSTRAINT",
+      next = snap.copy(constraints = snap.constraints - name))
   }
 
   /** Delta `ALTER TABLE ... SET TBLPROPERTIES (k = v, ...)` — free-form
@@ -3910,9 +3871,8 @@ object DeltaLite {
   def setProperties(path: String, props: Map[String, String]): Long = {
     require(props.nonEmpty, "no properties given")
     val snap = snapshot(path)
-    commitExclusive(path, snap.version + 1, "SET_TBLPROPERTIES", snap.schema,
-      Nil, Nil, snap.constraints, snap.partitionBy, snap.physical,
-      snap.generated, snap.identity, snap.properties ++ props)
+    commit(path, snap, "SET_TBLPROPERTIES",
+      next = snap.copy(properties = snap.properties ++ props))
   }
 
   /** Table property holding ANALYZE-computed column statistics (JSON:
@@ -4744,9 +4704,8 @@ object DeltaLite {
   def unsetProperty(path: String, key: String): Long = {
     val snap = snapshot(path)
     require(snap.properties.contains(key), s"no property '$key' on $path")
-    commitExclusive(path, snap.version + 1, "UNSET_TBLPROPERTIES", snap.schema,
-      Nil, Nil, snap.constraints, snap.partitionBy, snap.physical,
-      snap.generated, snap.identity, snap.properties - key)
+    commit(path, snap, "UNSET_TBLPROPERTIES",
+      next = snap.copy(properties = snap.properties - key))
   }
 
   /** `delta.appendOnly` enforcement: refuse any op that removes or
@@ -4778,9 +4737,7 @@ object DeltaLite {
       val v = snap.version + 1
       val adds = writeData(spark, root(path), v, merged, snap.schema,
         snap.partitionBy, snap.physical, snap.generated, snap.properties)
-      commitExclusive(path, v, "MERGE", snap.schema, adds, touched,
-        snap.constraints, snap.partitionBy, snap.physical, snap.generated,
-        snap.identity, snap.properties)
+      commit(path, snap, "MERGE", adds = adds, removes = touched)
     }
   }
 
@@ -4933,9 +4890,9 @@ object DeltaLite {
     val v = snap.version + 1
     val adds = writeData(spark, root(path), v, merged, evolved,
       snap.partitionBy, physical, snap.generated, snap.properties)
-    commitExclusive(path, v, "MERGE", evolved, adds, touched,
-      snap.constraints, snap.partitionBy, physical, snap.generated,
-      snap.identity, snap.properties, txn)
+    commit(path, snap, "MERGE",
+      next = snap.copy(schema = evolved, physical = physical),
+      adds = adds, removes = touched, txn = txn)
     }
   }
 
@@ -4963,9 +4920,7 @@ object DeltaLite {
       val v = snap.version + 1
       val adds = writeData(spark, root(path), v, newData, snap.schema,
         snap.partitionBy, snap.physical, snap.generated, snap.properties)
-      commitExclusive(path, v, "DELETE_INSERT", snap.schema, adds, touched,
-        snap.constraints, snap.partitionBy, snap.physical, snap.generated,
-        snap.identity, snap.properties)
+      commit(path, snap, "DELETE_INSERT", adds = adds, removes = touched)
     }
   }
 
@@ -4999,9 +4954,7 @@ object DeltaLite {
     val srcRoot = root(sourcePath)
     val adds = snap.files.map(f =>
       f.copy(path = srcRoot.resolve(f.path).toString))
-    writeCommit(targetPath, 0L, "CLONE", snap.schema, adds, Nil, None,
-      snap.constraints, snap.partitionBy, snap.physical, snap.generated,
-      snap.identity, snap.properties)
+    commit(targetPath, NoTable, "CLONE", next = snap, adds = adds)
   }
 
   /** Delta `CLONE ... DEEP`: a fully materialized, independent copy.
@@ -5056,9 +5009,7 @@ object DeltaLite {
         f
       }
     }
-    writeCommit(targetPath, 0L, "CLONE", snap.schema, adds, Nil, None,
-      snap.constraints, snap.partitionBy, snap.physical, snap.generated,
-      snap.identity, snap.properties)
+    commit(targetPath, NoTable, "CLONE", next = snap, adds = adds)
   }
 
   /** Delta `RESTORE TABLE ... TO VERSION AS OF v`: a NEW commit whose
@@ -5081,9 +5032,7 @@ object DeltaLite {
     val readds = old.files.filterNot(f => curKeys.contains((f.path, f.dv)))
     val removes = cur.files.filterNot(f => oldKeys.contains((f.path, f.dv)))
       .map(_.path)
-    commitExclusive(path, cur.version + 1, "RESTORE", old.schema, readds, removes,
-      old.constraints, old.partitionBy, old.physical, old.generated,
-      old.identity, old.properties)
+    commit(path, cur, "RESTORE", next = old, adds = readds, removes = removes)
   }
 
   /** Delta `GENERATE symlink_format_manifest`: export the CURRENT live
@@ -5255,10 +5204,10 @@ object DeltaLite {
     // rebase over concurrent blind appends; a winner's appended row that
     // MATCHES the predicate is a real ConcurrentAppend conflict (the
     // delete must be serializable against rows it should have removed)
-    commitResolve(path, snap, "DELETE", adds, touched,
-      readConflict = Some(winnerAdds =>
+    commit(path, snap, "DELETE", adds = adds, removes = touched,
+      onLost = LostRace.Rebase(readConflict = Some(winnerAdds =>
         readFiles(spark, path, snap.schema, winnerAdds, snap.partitionBy,
-          snap.physical).filter(hit).limit(1).count() > 0))
+          snap.physical).filter(hit).limit(1).count() > 0)))
   }
 
   /** Delta `UPDATE ... SET col = expr WHERE cond`: same touched-file
@@ -5293,10 +5242,10 @@ object DeltaLite {
         snap.partitionBy, snap.physical, snap.generated, snap.properties)
     // same rebase-vs-conflict rule as DELETE: a concurrently appended row
     // matching the predicate should have been updated — real conflict
-    commitResolve(path, snap, "UPDATE", adds, touched,
-      readConflict = Some(winnerAdds =>
+    commit(path, snap, "UPDATE", adds = adds, removes = touched,
+      onLost = LostRace.Rebase(readConflict = Some(winnerAdds =>
         readFiles(spark, path, snap.schema, winnerAdds, snap.partitionBy,
-          snap.physical).filter(hit).limit(1).count() > 0))
+          snap.physical).filter(hit).limit(1).count() > 0)))
   }
 
   /** Delta `replaceWhere` overwrite — the dbt incremental
@@ -5322,9 +5271,7 @@ object DeltaLite {
     val v = snap.version + 1
     val adds = writeData(spark, root(path), v, newData, snap.schema,
       snap.partitionBy, snap.physical, snap.generated, snap.properties)
-    commitExclusive(path, v, "REPLACE_WHERE", snap.schema, adds, touched,
-      snap.constraints, snap.partitionBy, snap.physical, snap.generated,
-      snap.identity, snap.properties)
+    commit(path, snap, "REPLACE_WHERE", adds = adds, removes = touched)
   }
 
   /** Files of `snap` containing a row where `hit` is true, plus a
@@ -5413,8 +5360,8 @@ object DeltaLite {
       snap.properties)
     // maintenance reads nothing beyond its victims — winner appends
     // rebase freely (their files are not in the remove set)
-    commitResolve(path, snap, "OPTIMIZE", adds, snap.files.map(_.path),
-      readConflict = None)
+    commit(path, snap, "OPTIMIZE", adds = adds, removes = snap.files.map(_.path),
+      onLost = LostRace.Rebase(readConflict = None))
   }
 
   /** Change Data Feed (Delta `table_changes`): the row-level difference
@@ -5607,9 +5554,8 @@ object DeltaLite {
     val v = snap.version + 1
     val adds = writeData(spark, root(path), v, packed, snap.schema,
       snap.partitionBy, snap.physical, snap.generated, snap.properties)
-    commitExclusive(path, v, "OPTIMIZE_PARTITION", snap.schema, adds,
-      victims.map(_.path), snap.constraints, snap.partitionBy, snap.physical, snap.generated,
-      snap.identity, snap.properties)
+    commit(path, snap, "OPTIMIZE_PARTITION", adds = adds,
+      removes = victims.map(_.path))
   }
 
   /** Bin-packing OPTIMIZE (what Delta's OPTIMIZE actually does): compact
@@ -5659,8 +5605,8 @@ object DeltaLite {
     val v = snap.version + 1
     val adds = writeData(spark, root(path), v, packed, snap.schema,
       snap.partitionBy, snap.physical, snap.generated, snap.properties)
-    commitResolve(path, snap, "OPTIMIZE_SMALL", adds, small.map(_.path),
-      readConflict = None)
+    commit(path, snap, "OPTIMIZE_SMALL", adds = adds, removes = small.map(_.path),
+      onLost = LostRace.Rebase(readConflict = None))
   }
 
   /** Delta `REORG TABLE ... APPLY (PURGE)`: materialize soft deletes.
@@ -5681,8 +5627,8 @@ object DeltaLite {
     val v = snap.version + 1
     val adds = writeData(spark, root(path), v, survivors, snap.schema,
       snap.partitionBy, snap.physical, snap.generated, snap.properties)
-    commitResolve(path, snap, "REORG", adds, dvFiles.map(_.path),
-      readConflict = None)
+    commit(path, snap, "REORG", adds = adds, removes = dvFiles.map(_.path),
+      onLost = LostRace.Rebase(readConflict = None))
   }
 
   /** `OPTIMIZE ... ZORDER BY` analogue: rewrite the live set
@@ -5702,9 +5648,7 @@ object DeltaLite {
     val v = snap.version + 1
     val adds = writeData(spark, root(path), v, rewritten, snap.schema,
       snap.partitionBy, snap.physical, snap.generated, snap.properties)
-    commitExclusive(path, v, "CLUSTER", snap.schema, adds, snap.files.map(_.path),
-      snap.constraints, snap.partitionBy, snap.physical, snap.generated,
-      snap.identity, snap.properties)
+    commit(path, snap, "CLUSTER", adds = adds, removes = snap.files.map(_.path))
   }
 
   /** True Z-order clustering on TWO bigint keys (`OPTIMIZE ZORDER BY
@@ -5726,9 +5670,7 @@ object DeltaLite {
     val v = snap.version + 1
     val adds = writeData(spark, root(path), v, rewritten, snap.schema,
       snap.partitionBy, snap.physical, snap.generated, snap.properties)
-    commitExclusive(path, v, "CLUSTER_Z", snap.schema, adds, snap.files.map(_.path),
-      snap.constraints, snap.partitionBy, snap.physical, snap.generated,
-      snap.identity, snap.properties)
+    commit(path, snap, "CLUSTER_Z", adds = adds, removes = snap.files.map(_.path))
   }
 
   /** Liquid-clustering-style INCREMENTAL clustering (Delta `CLUSTER BY`
@@ -5841,9 +5783,8 @@ object DeltaLite {
     val v = snap.version + 1
     val adds = writeData(spark, root(path), v, ordered, snap.schema,
       snap.partitionBy, snap.physical, snap.generated, snap.properties)
-    commitExclusive(path, v, "CLUSTER_INCREMENTAL", snap.schema, adds,
-      victims.map(_.path), snap.constraints, snap.partitionBy, snap.physical,
-      snap.generated, snap.identity, snap.properties)
+    commit(path, snap, "CLUSTER_INCREMENTAL", adds = adds,
+      removes = victims.map(_.path))
   }
 
   /** The 2-D layout curve for clustering rewrites: `graft.cluster.curve
@@ -5894,9 +5835,8 @@ object DeltaLite {
     val v = snap.version + 1
     val adds = writeData(spark, root(path), v, rewritten, snap.schema,
       snap.partitionBy, snap.physical, snap.generated, snap.properties)
-    commitExclusive(path, v, "CLUSTER_Z_PARTITION", snap.schema, adds,
-      victims.map(_.path), snap.constraints, snap.partitionBy, snap.physical,
-      snap.generated, snap.identity, snap.properties)
+    commit(path, snap, "CLUSTER_Z_PARTITION", adds = adds,
+      removes = victims.map(_.path))
   }
 
   /** `DESCRIBE DETAIL` analogue: one-row table summary from the log

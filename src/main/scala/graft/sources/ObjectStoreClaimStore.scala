@@ -23,7 +23,9 @@ import java.time.Duration
   *
   * FAILURE MAPPING is the trait's recovery contract, applied to HTTP
   * reality: `412 Precondition Failed` / `409` = the known loss →
-  * `FileAlreadyExistsException` (the OCC rebase loop owns it); an I/O
+  * `FileAlreadyExistsException` (the one claim-and-retry loop,
+  * [[DeltaLite.claimLoop]], owns it and applies the commit's lost-race
+  * rule: reapply an append, rebase a rewrite, decline the rest); an I/O
   * error or timeout ON THE PUT = the PUT may or may not have landed →
   * [[DeltaLite.AmbiguousClaimException]], which the engine resolves by
   * read-back compare at the commit boundary; 5xx after send is the

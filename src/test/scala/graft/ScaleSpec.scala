@@ -1488,9 +1488,9 @@ class ScaleSpec extends AnyFunSuite with TestSpark {
           stats = Map("k" -> DeltaLite.ColStats(
             Some((v * 10000 + i) * 10L), Some((v * 10000 + i) * 10L + 9L))))
       }
-      DeltaLite.commitExclusive(path, v, "APPEND", schema, adds,
-        if (v == 1L) seedFiles else Nil,
-        Map.empty, Nil, Map.empty, Map.empty, Map.empty, props)
+      DeltaLite.commit(path,
+        DeltaLite.Snapshot(v - 1, schema, Nil, properties = props), "APPEND",
+        adds = adds, removes = if (v == 1L) seedFiles else Nil)
     }
     val ckpt = Paths.get(path, "_graft_log", "checkpoint-10.parquet")
     assert(Files.isDirectory(ckpt) && Files.exists(ckpt.resolve("_SUCCESS")))
@@ -3255,9 +3255,8 @@ class ScaleSpec extends AnyFunSuite with TestSpark {
     val tip = DeltaLite.snapshot(path)
     val tipBytes = bytes(tip.version)
     val e = intercept[java.util.ConcurrentModificationException] {
-      DeltaLite.commitExclusive(path, tip.version, "TEST_CLAIM",
-        tip.schema, Nil, Nil, tip.constraints, tip.partitionBy,
-        tip.physical, tip.generated, tip.identity, tip.properties)
+      DeltaLite.commit(path, DeltaLite.snapshot(path, Some(tip.version - 1)),
+        "TEST_CLAIM")
     }
     assert(e.getMessage.contains("concurrent commit"))
     assert(bytes(tip.version) === tipBytes)
@@ -3742,6 +3741,73 @@ class ScaleSpec extends AnyFunSuite with TestSpark {
         DeltaLite.delete(spark, path, col("k") >= 100L))
       assert(e.getMessage.contains("metadata changed"))
     } finally DeltaLite.testHookBeforeCommit = () => ()
+  }
+
+  test("lost race declines: a DV delete that matches nothing loses to a concurrent append") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("graft_dv_empty_race").toString
+    DeltaLite.create(spark, path, Seq((1L, "a"), (2L, "b")).toDF("k", "s").coalesce(1))
+    DeltaLite.testHookBeforeCommit = () => {
+      DeltaLite.testHookBeforeCommit = () => ()
+      DeltaLite.append(spark, path, Seq((3L, "c")).toDF("k", "s").coalesce(1))
+    }
+    try {
+      val e = intercept[java.util.ConcurrentModificationException](
+        DeltaLite.deleteVectorized(spark, path, col("k") === 99L))
+      assert(e.getMessage.contains("concurrent commit"))
+      assert(e.getMessage.contains("DELETE_DV"))
+    } finally DeltaLite.testHookBeforeCommit = () => ()
+    assert(DeltaLite.snapshot(path).version === 1L)
+    assert(DeltaLite.read(spark, path).orderBy("k").select("k")
+      .as[Long].collect().toSeq === Seq(1L, 2L, 3L))
+  }
+
+  test("lost race declines: MERGE and an identity-column APPEND lose to a concurrent append, the winner stands") {
+    import spark.implicits._
+    // `winner` runs inside the loser's snapshot→commit window; the loser
+    // must throw naming its op, leave the winner's commit file byte for
+    // byte, and land nothing
+    def losesTo(path: String, op: String, winner: => Unit)(loser: => Long): Unit = {
+      val won = DeltaLite.snapshot(path).version + 1
+      val file = Paths.get(path, "_graft_log", s"$won.json")
+      var atWin: Seq[Byte] = null
+      DeltaLite.testHookBeforeCommit = () => {
+        DeltaLite.testHookBeforeCommit = () => ()
+        winner
+        atWin = Files.readAllBytes(file).toSeq
+      }
+      val e =
+        try intercept[java.util.ConcurrentModificationException](loser)
+        finally DeltaLite.testHookBeforeCommit = () => ()
+      assert(e.getMessage.contains(s"concurrent commit beat $op at version $won"),
+        e.getMessage)
+      assert(atWin != null && Files.readAllBytes(file).toSeq === atWin,
+        "the winner's commit must survive the losing claim byte for byte")
+      assert(DeltaLite.snapshot(path).version === won, "the loser must land nothing")
+    }
+    def rows(path: String): Seq[(Long, String)] =
+      DeltaLite.read(spark, path).select("k", "s").as[(Long, String)]
+        .collect().toSeq.sorted
+
+    val merged = Files.createTempDirectory("graft_race_merge").toString
+    DeltaLite.create(spark, merged,
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "s").coalesce(1))
+    losesTo(merged, "MERGE", DeltaLite.append(spark, merged,
+        Seq((10L, "w")).toDF("k", "s").coalesce(1))) {
+      DeltaLite.merge(spark, merged,
+        Seq((1L, "x"), (4L, "y")).toDF("k", "s").coalesce(1), Seq("k"))
+    }
+    assert(rows(merged) === Seq((1L, "a"), (2L, "b"), (3L, "c"), (10L, "w")))
+
+    val ids = Files.createTempDirectory("graft_race_identity").toString
+    DeltaLite.create(spark, ids,
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "s").coalesce(1),
+      identity = Map("id" -> DeltaLite.IdentityCol(start = 1, step = 1)))
+    losesTo(ids, "APPEND", DeltaLite.append(spark, ids,
+        Seq((10L, "w")).toDF("k", "s").coalesce(1))) {
+      DeltaLite.append(spark, ids, Seq((20L, "l")).toDF("k", "s").coalesce(1))
+    }
+    assert(rows(ids) === Seq((1L, "a"), (2L, "b"), (3L, "c"), (10L, "w")))
   }
 
   test("cleanupLogs refuses to cut the chain when no checkpoint anchors it") {

@@ -4786,14 +4786,14 @@ ORDER BY bucket ASC NULLS LAST"""),
     // This query authors exactly that commit shape against a real
     // exported table (protocol upgrade to readerFeatures
     // [deletionVectors], remove + re-add with a `u`-stored DV built by
-    // graft.sources.DeletionVectors — the same public-format codec the
-    // reader decodes), then reads the final snapshot through the
-    // format dispatch: the deleted rows must vanish without any file
-    // rewrite. The row-index set is derived from the WRITTEN file's
-    // own `_metadata.row_index` (authoring-side bounded collect — at
-    // 100 TB the DV writer owns that cost; the READ side ships only
-    // compact roaring bytes to executors and anti-joins). Oracle: the
-    // surviving predicate restated on the fixture.
+    // graft's one DV writer — the same public-format codec the reader
+    // decodes), then reads the final snapshot through the format
+    // dispatch: the deleted rows must vanish without any file rewrite.
+    // The row-index set is derived from the WRITTEN file's own
+    // `_metadata.row_index` (the bitmap builds on executors; the READ
+    // side ships only compact roaring bytes to executors and
+    // anti-joins). Oracle: the surviving predicate restated on the
+    // fixture.
     QueryDef("s71_delta_dv", (s, dir) => {
       val path = tmp("s71_delta")
       val li = t(s, dir, "lineitem").filter(col("l_orderkey") % 3 === 0)
@@ -4809,12 +4809,10 @@ ORDER BY bucket ASC NULLS LAST"""),
       }
       // the positions a foreign DELETE WHERE l_returnflag='R' would mask
       val positions = s.read.parquet(root.resolve(rel).toString)
-        .select(expr("_metadata.row_index").as("ri"), col("l_returnflag"))
         .filter(col("l_returnflag") === "R")
-        .select("ri").collect().map(_.getLong(0)).sorted
-      val desc = graft.sources.DeletionVectors.writeDvFile(root,
-        graft.sources.DeletionVectors.serialize(positions),
-        positions.length.toLong)
+        .select(lit(rel).as("path"), expr("_metadata.row_index").as("row_index"))
+      val Seq((_, desc)) = graft.sources.DeltaLite.writeDeletionVectors(s,
+        path, positions, graft.sources.DeltaLite.dvPositionsFrame(s, path, Nil)._1)
       val dvJson = graft.sources.DeletionVectors.toJson(desc)
       java.nio.file.Files.write(
         root.resolve("_delta_log").resolve(f"${1L}%020d.json"), Seq(

@@ -34,11 +34,16 @@ import org.json4s.jackson.JsonMethods
   * RoaringFormatSpec. Everything inside the bitmap is little-endian;
   * only the file framing's size/checksum are big-endian.
   *
+  * This is graft's ONLY deletion-vector format: both the native
+  * `_graft_log` and `_delta_log` tables carry these descriptors on
+  * `AddFile.dv`, [[DeltaLite.writeDeletionVectors]] is the one writer
+  * and [[DeltaLite.readFilesWithPos]] the one reader.
+  *
   * Scale shape: descriptors and bitmap BYTES are driver-held metadata
   * (roaring is compact — the log already bounds them via
   * `sizeInBytes`); position EXPANSION happens on executors
-  * ([[DeltaInterop]] parallelizes the bytes and flatMaps), so the
-  * driver never materializes per-row positions.
+  * ([[DeltaLite.dvPositionsFrame]] parallelizes the bytes and
+  * flatMaps), so the driver never materializes per-row positions.
   */
 object DeletionVectors {
 
@@ -67,15 +72,19 @@ object DeletionVectors {
       case _ => sys.error(s"$where: malformed deletionVector")
     }
 
-  /** Round-trip through compact JSON — how [[DeltaInterop]] carries a
-    * descriptor inside graft's `AddFile.dv` slot (marker-prefixed). */
-  private[graft] def toJson(d: Descriptor): String =
-    JsonMethods.compact(JObject(List(
+  /** The PROTOCOL.md `deletionVector` object — what both logs write. */
+  private[graft] def toJValue(d: Descriptor): JValue =
+    JObject(List(
       "storageType" -> JString(d.storageType),
       "pathOrInlineDv" -> JString(d.pathOrInlineDv),
       "offset" -> d.offset.map(o => JInt(BigInt(o))).getOrElse(JNothing),
       "sizeInBytes" -> JInt(BigInt(d.sizeInBytes)),
-      "cardinality" -> JLong(d.cardinality))))
+      "cardinality" -> JLong(d.cardinality)))
+
+  /** Compact JSON of [[toJValue]] — the native parquet checkpoint's
+    * `dv` string column. */
+  private[graft] def toJson(d: Descriptor): String =
+    JsonMethods.compact(toJValue(d))
 
   private[graft] def fromJson(s: String): Descriptor =
     parseJValue(JsonMethods.parse(s), "dv-json")
@@ -334,8 +343,8 @@ object DeletionVectors {
 
   /** Serialize sorted 64-bit row indexes as a portable
     * RoaringBitmapArray (array/bitmap containers, no-runs cookie) —
-    * used by the spec's hand-authored foreign DV tables and by any
-    * future DV-writing surface. The DECODER above is additionally
+    * used by [[DeltaLite.writeDeletionVectors]] and by the specs'
+    * hand-authored foreign DV tables. The DECODER above is additionally
     * pinned against hand-computed byte fixtures so the encoder/decoder
     * pair can't be wrong together. */
   private[graft] def serialize(sorted: Array[Long]): Array[Byte] = {
@@ -429,9 +438,9 @@ object DeletionVectors {
 
   /** Write `bitmapData` as a fresh single-DV file under `tableRoot`
     * and return the matching `u`-typed descriptor — the single-entry
-    * case of [[writeDvFilePacked]] (one framing implementation; a
-    * second copy would drift, and the packed writer's temp-file +
-    * atomic move covers this path too — review finding). */
+    * case of [[writeDvFilePacked]], for the specs' hand-authored DV
+    * tables (tables themselves write through
+    * [[DeltaLite.writeDeletionVectors]]). */
   private[graft] def writeDvFile(tableRoot: Path, bitmapData: Array[Byte],
       cardinality: Long): Descriptor =
     writeDvFilePacked(tableRoot, Seq((bitmapData, cardinality))).head

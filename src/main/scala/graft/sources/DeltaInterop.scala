@@ -35,8 +35,8 @@ import org.json4s.jackson.JsonMethods
   *     pruned reads anti-filter the deleted row indexes, the change
   *     feed diffs DV flips into row-level deletes/restores, the
   *     streaming source treats a DV flip as the rewrite it is, and
-  *     CONVERT adopts DVs by translating them into graft's native
-  *     (path, row_index) DV dirs — still zero data-file copies.
+  *     CONVERT adopts the descriptors unchanged (the native log stores
+  *     DVs in the same format) — zero data-file or DV-file copies.
   *     Unsupported DV STORAGE types decline loudly, naming them.
   *   - checkpoints: classic parquet checkpoints, single-part
   *     (`<v>.checkpoint.parquet`) and multi-part
@@ -95,26 +95,6 @@ object DeltaInterop {
   private[graft] val SupportedReaderFeatures: Set[String] =
     Set("timestampNtz", "vacuumProtocolCheck", "v2Checkpoint",
       "columnMapping", "deletionVectors")
-
-  /** Foreign DV descriptors ride graft's `AddFile.dv` slot as
-    * marker-prefixed JSON (native dv strings are parquet dir PATHS —
-    * the marker keeps the two representations unmistakable; the native
-    * read path never sees interop AddFiles, [[read]]/[[scanSnapshot]]
-    * strip or translate the marker first). */
-  private[sources] val DvMarker = "delta-dv:"
-
-  private[sources] def dvDescriptor(f: AddFile)
-      : Option[DeletionVectors.Descriptor] =
-    f.dv.filter(_.startsWith(DvMarker))
-      .map(s => DeletionVectors.fromJson(s.substring(DvMarker.length)))
-
-  /** A deletion vector's reconciliation identity (PROTOCOL.md
-    * `dvUniqueId` — storage type + payload + offset): the unit a
-    * remove action names and the second half of the (path, DV)
-    * logical-file key replay and tombstones match on. */
-  private def dvIdentity(d: DeletionVectors.Descriptor)
-      : (String, String, Option[Int]) =
-    (d.storageType, d.pathOrInlineDv, d.offset)
 
   /** A directory is a standard Delta table iff `_delta_log/` holds at
     * least one versioned commit or checkpoint (classic or v2). */
@@ -228,19 +208,19 @@ object DeltaInterop {
       * scans the checkpoint, not cleaned-up JSON) can still distinguish
       * recently-removed files from untracked garbage.
       *
-      * Keyed by the LOGICAL FILE identity — (path, DV identity) — the
-      * same key Delta reconciliation uses, NOT by path alone: a DV
-      * flip is remove(path, oldDV) + add(path, newDV), and under a
+      * Keyed by the LOGICAL FILE identity — (path, DV descriptor; a
+      * remove restates its add's descriptor, so descriptor equality is
+      * PROTOCOL.md's `dvUniqueId` match) — the same key Delta
+      * reconciliation uses, NOT by path alone: a DV flip is
+      * remove(path, oldDV) + add(path, newDV), and under a
       * path key the re-add erased (or pre-empted) the superseded
       * identity's tombstone, so a checkpoint written after the flip
       * dropped the remove that keeps the superseded deletion_vector
       * file safe from foreign VACUUM inside the retention window
       * (review finding — the r17 known limitation, now closed). Value
-      * = (deletionTimestamp, the full DV descriptor for checkpoint
-      * restatement). */
+      * = deletionTimestamp. */
     val tombstones = scala.collection.mutable.LinkedHashMap
-      .empty[(String, Option[(String, String, Option[Int])]),
-        (Long, Option[DeletionVectors.Descriptor])]
+      .empty[(String, Option[DeletionVectors.Descriptor]), Long]
     /** metaData.id — restated verbatim by checkpoints (a fresh random
       * id per checkpoint would change table identity under foreign
       * streaming queries that pin it; review finding). */
@@ -298,11 +278,10 @@ object DeltaInterop {
           }.getOrElse(Nil)
         case ("add", JObject(a)) =>
           val am = a.toMap
-          // deletionVector descriptors parse into the AddFile.dv slot
-          // (marker-prefixed JSON — graft's native dv strings are
-          // parquet dir paths, never "delta-dv:…"); the read paths
-          // anti-filter the decoded row indexes. Unsupported STORAGE
-          // types still fail loudly — at bitmapBytes time, naming them.
+          // deletionVector descriptors parse into AddFile.dv, the same
+          // typed slot the native log fills; the read paths anti-filter
+          // the decoded row indexes. Unsupported STORAGE types still
+          // fail loudly — at bitmapBytes time, naming them.
           val dvDesc = am.get("deletionVector") match {
             case Some(o @ JObject(_)) =>
               Some(DeletionVectors.parseJValue(o, where))
@@ -336,14 +315,13 @@ object DeltaInterop {
           val mtime = am.get("modificationTime").collect {
             case JLong(l) => l; case JInt(i) => i.toLong
           }
-          st.live(rel) = AddFile(rel, rows, stats,
-            dvDesc.map(d => DvMarker + DeletionVectors.toJson(d)),
+          st.live(rel) = AddFile(rel, rows, stats, dvDesc,
             pv, bytes = bytes, mtime = mtime)
           // resurrect exactly THIS logical file (path + DV identity);
           // a tombstone for the same path under a different DV
           // identity refers to a superseded logical file and must
           // survive the re-add (DV-flip checkpoint restatement)
-          st.tombstones.remove((rel, dvDesc.map(dvIdentity)))
+          st.tombstones.remove((rel, dvDesc))
         case ("remove", JObject(r)) =>
           val rm = r.toMap
           rm.get("path").collect { case JString(p) => p }.foreach { p =>
@@ -366,8 +344,8 @@ object DeltaInterop {
                 Some(DeletionVectors.parseJValue(o, where))
               case _ => None
             }
-            val liveDv = st.live.get(rel).flatMap(dvDescriptor)
-            if (liveDv.map(dvIdentity) == rmDv.map(dvIdentity))
+            val liveDv = st.live.get(rel).flatMap(_.dv)
+            if (liveDv == rmDv)
               st.live.remove(rel)
             // Tombstone the removed LOGICAL identity unconditionally:
             // keyed by (path, DV identity), a tombstone can never
@@ -383,10 +361,10 @@ object DeltaInterop {
             // to wall-clock would make replays non-deterministic and
             // pin the tombstone in every future checkpoint (review
             // finding)
-            st.tombstones((rel, rmDv.map(dvIdentity))) =
-              (rm.get("deletionTimestamp").collect {
+            st.tombstones((rel, rmDv)) =
+              rm.get("deletionTimestamp").collect {
                 case JLong(l) => l; case JInt(i) => i.toLong
-              }.getOrElse(0L), rmDv)
+              }.getOrElse(0L)
           }
         case ("txn", JObject(t)) =>
           val tm = t.toMap
@@ -712,21 +690,6 @@ object DeltaInterop {
       snap.partitionBy, snap.physical, snap.properties))
   }
 
-  /** DVs small enough broadcast their positions to the anti-join;
-    * larger ones fall back to a shuffled anti-join, the plan that
-    * survives a mostly-deleted 100 TB table. The decision weighs
-    * BYTES, not row count (each position row carries the file's full
-    * path string — a 4M-row broadcast of date-partitioned paths is
-    * hundreds of MB; review finding), estimated from the log alone
-    * (cardinality × path length — no decode needed to decide). */
-  private val BroadcastDvMaxBytes = 64L << 20
-
-  /** Snapshot-file read with deletion vectors applied: DV-free files
-    * take the untouched fast path ([[DeltaLite.readFiles]], no
-    * row_index plumbing); DV-carrying files read position-aware and
-    * anti-join their decoded deleted positions. The DV side holds only
-    * compact roaring BYTES on the driver; position expansion happens
-    * on executors. */
   /** Spark's parquet reader resolves columns by FIELD ID (instead of
     * name) only under this conf; flip it on lazily the first time an
     * id-mapped schema (carrying the translated `parquet.field.id`
@@ -764,104 +727,37 @@ object DeltaInterop {
       }.toSeq: _*)
     }
 
+  /** Snapshot-file read with deletion vectors applied — the native
+    * log's reader ([[DeltaLite.readFiles]]) over this log's files. */
   private def readLive(spark: SparkSession, path: String,
       schema: StructType, files: Seq[AddFile], partitionBy: Seq[String],
       physical: Map[String, String], props: Map[String, String])
       : DataFrame = {
     ensureFieldIdRead(spark, schema)
-    val (dvFiles, plain) = files.partition(f => dvDescriptor(f).isDefined)
-    val plainDf = DeltaLite.readFiles(spark, path, schema, plain,
-      partitionBy, physical, props)
-    if (dvFiles.isEmpty) plainDf
-    else plainDf.unionByName(readMinusOwnDv(spark, path, schema, dvFiles,
-      partitionBy, physical, props))
-  }
-
-  /** Rows of `dvFiles` MINUS each file's own deletion vector. */
-  private def readMinusOwnDv(spark: SparkSession, path: String,
-      schema: StructType, dvFiles: Seq[AddFile], partitionBy: Seq[String],
-      physical: Map[String, String], props: Map[String, String])
-      : DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    requireNoPosCollision(schema, physical, "deletion-vector read")
-    val (pos, estBytes) = dvPositionsFrame(spark, path,
-      dvFiles.flatMap(f => dvDescriptor(f).map(f.path -> _)))
-    val withPos = DeltaLite.readFilesWithPos(spark, path, schema,
-      dvFiles.map(_.copy(dv = None)), partitionBy, physical, props)
-    val dvSide =
-      if (estBytes <= BroadcastDvMaxBytes) broadcast(pos) else pos
-    withPos.join(dvSide,
-      col("path") === col("__dv_path") &&
-        col("row_index") === col("__dv_ri"), "left_anti")
-      .select(schema.fieldNames.map(col).toSeq: _*)
+    DeltaLite.readFiles(spark, path, schema, files, partitionBy, physical,
+      props)
   }
 
   /** Rows of `files` AT the given positions only (the change-feed's
-    * "exactly the newly-deleted/restored rows" read). */
+    * "exactly the newly-deleted/restored rows" read): the files' own
+    * DVs are dropped from the positional read so their deleted rows
+    * can be selected. */
   private def readOnlyPositions(spark: SparkSession, path: String,
       schema: StructType, files: Seq[AddFile], partitionBy: Seq[String],
       physical: Map[String, String], props: Map[String, String],
       pos: DataFrame, estBytes: Long): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
     ensureFieldIdRead(spark, schema)
-    requireNoPosCollision(schema, physical, "deletion-vector change feed")
+    DeltaLite.requireNoPosCollision(schema, physical,
+      "deletion-vector change feed")
     val withPos = DeltaLite.readFilesWithPos(spark, path, schema,
       files.map(_.copy(dv = None)), partitionBy, physical, props)
     val dvSide =
-      if (estBytes <= BroadcastDvMaxBytes) broadcast(pos) else pos
+      if (estBytes <= DeltaLite.BroadcastDvMaxBytes) broadcast(pos) else pos
     withPos.join(dvSide,
       col("path") === col("__dv_path") &&
         col("row_index") === col("__dv_ri"), "left_semi")
       .select(schema.fieldNames.map(col).toSeq: _*)
-  }
-
-  /** The row-position reads inject `path`/`row_index` columns (the
-    * shared [[DeltaLite.readFilesWithPos]] plumbing); a FOREIGN table
-    * whose own columns use either name would collide and misread —
-    * decline loudly instead (the pre-DV behavior for such tables),
-    * never serve the file path as the user's data. */
-  private def requireNoPosCollision(schema: StructType,
-      physical: Map[String, String], what: String): Unit = {
-    val taken = schema.fieldNames.toSet ++ physical.values
-    val clash = Seq("path", "row_index").filter(taken)
-    require(clash.isEmpty,
-      s"$what: the table has a column named ${clash.mkString("/")}, " +
-        "which collides with the row-position plumbing the DV " +
-        "anti-filter rides — this reader declines rather than risk " +
-        "serving wrong values; OPTIMIZE/VACUUM the source to " +
-        "materialize its deletes first")
-  }
-
-  /** (`__dv_path`, `__dv_ri`) frame of the given descriptors' deleted
-    * positions. The driver holds (path, roaring bytes, cardinality)
-    * triples — metadata-proportional, like the log itself; executors
-    * decode and expand, and each decode is cardinality-checked against
-    * the log's declared count (a short decode would silently resurrect
-    * rows). Returns the frame plus an estimated materialized byte
-    * weight (the broadcast decision input — path strings dominate). */
-  private def dvPositionsFrame(spark: SparkSession, path: String,
-      descs: Seq[(String, DeletionVectors.Descriptor)])
-      : (DataFrame, Long) = {
-    val r = root(path)
-    val payload: Seq[(String, Array[Byte], Long)] = descs.map {
-      case (rel, d) => (rel, DeletionVectors.bitmapBytes(r, d),
-        d.cardinality)
-    }
-    val total = descs.map { case (rel, d) =>
-      d.cardinality * (rel.length.toLong * 2 + 24) }.sum
-    import spark.implicits._
-    val df = spark.sparkContext
-      .parallelize(payload, math.max(1, math.min(payload.size, 32)))
-      .flatMap { case (rel, bytes, card) =>
-        val ps = DeletionVectors.positions(bytes)
-        require(ps.length == card,
-          s"deletion vector of '$rel' decodes to ${ps.length} " +
-            s"positions but the log declares cardinality $card " +
-            "(corrupt DV)")
-        ps.iterator.map(ri => (rel, ri))
-      }
-      .toDF("__dv_path", "__dv_ri")
-    (df, total)
   }
 
   /** Stats-pruned read: files whose logged min/max (or partition
@@ -1074,10 +970,10 @@ object DeltaInterop {
             .withColumn("_change_type", lit(label))
         val flipFrames: Seq[DataFrame] = if (readds.isEmpty) Nil else {
           val flipFiles = readds.map(a => prevFiles(a.rel))
-          val (newPos, newBytes) = dvPositionsFrame(spark, path,
+          val (newPos, newBytes) = DeltaLite.dvPositionsFrame(spark, path,
             readds.flatMap(a => a.dv.map(a.rel -> _)))
-          val (oldPos, oldBytes) = dvPositionsFrame(spark, path,
-            flipFiles.flatMap(f => dvDescriptor(f).map(f.path -> _)))
+          val (oldPos, oldBytes) = DeltaLite.dvPositionsFrame(spark, path,
+            flipFiles.flatMap(f => f.dv.map(f.path -> _)))
           def diff(a: DataFrame, b: DataFrame): DataFrame =
             a.join(b.withColumnRenamed("__dv_path", "__o_p")
                 .withColumnRenamed("__dv_ri", "__o_r"),
@@ -1245,9 +1141,11 @@ object DeltaInterop {
 
   /** Adopt a standard Delta table as a graft-delta table IN PLACE —
     * zero copy: graft's version 0 re-states the Delta snapshot's live
-    * file set (stats, partition values, sizes and all; `txn` app
-    * versions carry over so idempotent-append dedup survives the
-    * switch). The `_delta_log` stays untouched beside the new
+    * file set (stats, partition values, sizes, deletion-vector
+    * descriptors and all — both logs store DVs in the one standard
+    * format, so the `deletion_vector_*.bin` files are adopted as they
+    * are; `txn` app versions carry over so idempotent-append dedup
+    * survives the switch). The `_delta_log` stays untouched beside the new
     * `_graft_log`; after convert the table has graft's FULL write
     * surface — nothing distinguishes adopted files from written ones.
     * The 100 TB migration path: one driver-side log replay, no data
@@ -1268,36 +1166,17 @@ object DeltaInterop {
         "which id-mode files do not guarantee; keep reading it through " +
         "the interop surfaces instead")
     val snap = toSnapshot(v, st)
-    // foreign deletion vectors ADOPT by translation, not data rewrite:
-    // the roaring positions decode once into ONE graft-native DV dir
-    // (the (path, row_index) parquet every native read path
-    // anti-joins), data files untouched — the convert stays zero-copy
-    // on the 100 TB side and pays only O(deleted positions) once
-    val dvCarrying = snap.files.filter(f => dvDescriptor(f).isDefined)
-    val (files, props) =
-      if (dvCarrying.isEmpty) (snap.files, snap.properties)
-      else {
-        import org.apache.spark.sql.functions.col
-        val (pos, _) = dvPositionsFrame(spark, path,
-          dvCarrying.flatMap(f => dvDescriptor(f).map(f.path -> _)))
-        val dvRel = "dv-00000-adopt-" +
-          java.util.UUID.randomUUID.toString.take(8)
-        pos.select(col("__dv_path").as("path"),
-            col("__dv_ri").as("row_index"))
-          .write.mode("errorifexists")
-          .parquet(root(path).resolve(dvRel).toString)
-        (snap.files.map(f =>
-          if (dvDescriptor(f).isDefined) f.copy(dv = Some(dvRel)) else f),
-          DeltaLite.withFeature(snap.properties, "deletionVectors",
-            reader = true))
-      }
+    val props =
+      if (snap.files.forall(_.dv.isEmpty)) snap.properties
+      else DeltaLite.withFeature(snap.properties, "deletionVectors",
+        reader = true)
     DeltaLite.commit(path, DeltaLite.NoTable, "CONVERT_FROM_DELTA",
       next = DeltaLite.NoTable.copy(schema = snap.schema,
         partitionBy = snap.partitionBy, physical = snap.physical,
         // delta.* table configuration is provenance, not behavior, on
         // the graft side — carried so SHOW TBLPROPERTIES tells the story
         properties = props),
-      adds = files, txns = snap.txns.toSeq)
+      adds = snap.files, txns = snap.txns.toSeq)
   }
 
   // ------------------------------------------------------------ export
@@ -1473,7 +1352,7 @@ object DeltaInterop {
         case _: OnKeys => true
       })
     requireUnmapped(st0, path, op)
-    requireNoPosCollision(st0.schema, st0.physical,
+    DeltaLite.requireNoPosCollision(st0.schema, st0.physical,
       s"deletion-vector ${commitOp.toLowerCase}")
     val (bounds, matchRows) = scope match {
       case Where(predicate, set) =>
@@ -1491,13 +1370,8 @@ object DeltaInterop {
             case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
               f.condition -> f.child.outputSet
           }
-        // a nondeterministic predicate (rand()-based sampling deletes)
-        // cannot produce a consistent DV: the matching scan and any
-        // re-evaluation would disagree — delta-spark declines these too
-        require(conds.forall(_._1.deterministic),
-          s"$op on $path: predicate '$predicate' is " +
-            "nondeterministic — a deletion vector must name a stable " +
-            "row set; materialize the choice into a column first")
+        DeltaLite.requireDeterministicDv(op, path, predicate,
+          conds.forall(_._1.deterministic))
         // SET expressions re-evaluate on rebase retries and feed cdc
         // postimages — nondeterminism would let the three disagree
         require(emptyT.select(set.toSeq.map { case (k, e) =>
@@ -1538,8 +1412,8 @@ object DeltaInterop {
     val withPos = DeltaLite.readFilesWithPos(spark, path, st0.schema,
       candidates.map(_.copy(dv = None)), st0.partitionBy, st0.physical,
       st0.config)
-    val oldDvs = candidates.flatMap(f => dvDescriptor(f).map(f.path -> _))
-    val (oldPos, _) = dvPositionsFrame(spark, path, oldDvs)
+    val (oldPos, _) = DeltaLite.dvPositionsFrame(spark, path,
+      candidates.flatMap(f => f.dv.map(f.path -> _)))
     val matched = graft.Frames.cut(matchRows(withPos).join(oldPos,
       col("path") === col("__dv_path") &&
         col("row_index") === col("__dv_ri"), "left_anti"))
@@ -1668,9 +1542,10 @@ object DeltaInterop {
   }
 
   /** The shared COMMIT TAIL of the row-level DV write surfaces
-    * (DELETE / UPDATE / MERGE): per-file DV union (fresh positions ∪
-    * the file's existing deletes, touched files only — untouched DV
-    * files keep their descriptor), packed DV file write, cdc staging
+    * (DELETE / UPDATE / MERGE): the DV write of both logs
+    * ([[DeltaLite.writeDeletionVectors]] — fresh positions ∪ the
+    * touched files' existing deletes into one packed DV file;
+    * untouched DV files keep their descriptor), cdc staging
     * when CDF is enabled, and the OCC commit with rebase-identity +
     * concurrent-append serializability checks. `fresh` is the
     * (path, row_index) frame of freshly-deleted positions (already
@@ -1687,21 +1562,9 @@ object DeltaInterop {
       fresh: DataFrame, oldPos: DataFrame,
       stageAdds: () => Seq[AddFile],
       cdcFrame: () => Option[DataFrame]): Long = {
-    import org.apache.spark.sql.functions.{col, collect_set, sort_array}
-    val touched = fresh.select(col("path")).distinct()
-    val finalPos = fresh.unionByName(
-      oldPos.toDF("path", "row_index")
-        .join(touched, Seq("path"), "left_semi"))
-    import spark.implicits._
-    val perFile: Seq[(String, Array[Byte], Long)] = finalPos
-      .groupBy(col("path"))
-      .agg(sort_array(collect_set(col("row_index"))).as("pos"))
-      .as[(String, Array[Long])]
-      .map { case (p, pos) =>
-        (p, DeletionVectors.serialize(pos), pos.length.toLong) }
-      .collect().toSeq.sortBy(_._1)
+    val newDv = DeltaLite.writeDeletionVectors(spark, path, fresh, oldPos)
     val newAdds = stageAdds()
-    if (perFile.isEmpty && newAdds.isEmpty) return v0 // no-op
+    if (newDv.isEmpty && newAdds.isEmpty) return v0 // no-op
     // delta.enableChangeDataFeed=true obliges ROW-LEVEL change files:
     // a foreign CDF reader sees remove+re-add of the same path as a
     // file rewrite, so the change rows materialize under
@@ -1713,16 +1576,6 @@ object DeltaInterop {
           .exists(_.equalsIgnoreCase("true"))) Nil
       else cdcFrame().map(stageCdcFiles(spark, path, _, st0))
         .getOrElse(Nil)
-    val descs =
-      if (perFile.isEmpty) Nil
-      else DeletionVectors.writeDvFilePacked(root(path),
-        perFile.map(e => (e._2, e._3)))
-    val newDv: Map[String, DeletionVectors.Descriptor] =
-      perFile.map(_._1).zip(descs).toMap
-    def dvIdent(f: AddFile): Option[(String, String, Option[Int])] =
-      dvDescriptor(f).map(dvIdentity)
-    val oldIdent: Map[String, Option[(String, String, Option[Int])]] =
-      perFile.map { case (p, _, _) => p -> dvIdent(st0.live(p)) }.toMap
     DeltaLite.claimLoop((v0, st0)) { case (v, st) =>
       requireWritable(st, path, op, removesRows = true,
         writesRows = newAdds.nonEmpty)
@@ -1732,11 +1585,11 @@ object DeltaInterop {
       // flip in the race window means our union misses its deletes
       // (committing would RESURRECT them); a foreign removal means the
       // file is gone (committing would resurrect the whole file)
-      perFile.foreach { case (p, _, _) =>
+      newDv.foreach { case (p, _) =>
         val cur = st.live.get(p).getOrElse(sys.error(
           s"$op on $path: file '$p' was removed by a concurrent " +
             "writer — re-run against fresh state"))
-        require(dvIdent(cur) == oldIdent(p),
+        require(cur.dv == st0.live(p).dv,
           s"$op on $path: the deletion vector of '$p' changed " +
             "concurrently — re-run against fresh state (committing a " +
             "stale union would resurrect rows)")
@@ -1754,11 +1607,10 @@ object DeltaInterop {
           "fresh state")
       val now = System.currentTimeMillis()
       writeCommitFile(path, v + 1,
-        (if (perFile.isEmpty) None else dvProtocolUpgrade(st)).toSeq ++
-          perFile.flatMap { case (p, _, _) =>
+        (if (newDv.isEmpty) None else dvProtocolUpgrade(st)).toSeq ++
+          newDv.flatMap { case (p, d) =>
             val old = st.live(p)
-            val upd = old.copy(dv =
-              Some(DvMarker + DeletionVectors.toJson(newDv(p))))
+            val upd = old.copy(dv = Some(d))
             Seq(removeLine(old, now),
               JsonMethods.compact(encodeDeltaAdd(upd, st.schema)))
           } ++
@@ -1832,8 +1684,8 @@ object DeltaInterop {
         "partitionValues" -> JObject(f.pv.toList.sortBy(_._1)
           .map { case (k, v) => k -> JString(v) }),
         "size" -> JLong(f.bytes)) ++
-        dvDescriptor(f).map(d => "deletionVector" ->
-          JsonMethods.parse(DeletionVectors.toJson(d))).toList))))
+        f.dv.map(d => "deletionVector" ->
+          DeletionVectors.toJValue(d)).toList))))
 
   /** WRITER-side protocol gate (review finding: the reader gate
     * accepting a table says nothing about writing it). This exporter
@@ -2060,8 +1912,8 @@ object DeltaInterop {
       "dataChange" -> JBool(true)) ++
       (if (f.stats.isEmpty && f.rows == 0L) Nil
        else List("stats" -> JString(deltaStatsJson(f, schema)))) ++
-      dvDescriptor(f).map(d => "deletionVector" ->
-        JsonMethods.parse(DeletionVectors.toJson(d))).toList)))
+      f.dv.map(d => "deletionVector" -> DeletionVectors.toJValue(d))
+        .toList)))
 
   private def microsToIso(micros: Long, suffix: String): String = {
     val inst = java.time.Instant.ofEpochSecond(
@@ -2245,7 +2097,7 @@ object DeltaInterop {
     // foreign VACUUM resolves "recently removed, don't collect yet"
     // from the checkpoint once the JSON commits are cleaned up
     val keepSince = now - tombstoneRetentionMs(st0.config)
-    val tombs = st0.tombstones.toSeq.filter(_._2._1 >= keepSince)
+    val tombs = st0.tombstones.toSeq.filter(_._2 >= keepSince)
     // the checkpoint RESTATES the table's protocol — hardcoding (1,2)
     // would falsify a higher-versioned table's requirements once the
     // JSON commits are cleaned up, and launder writes past the
@@ -2277,9 +2129,9 @@ object DeltaInterop {
             // the tombstone rows below already wrote false)
             java.lang.Long.valueOf(f.mtime.getOrElse(now)), false,
             if (f.stats.isEmpty && f.rows == 0L) null else statsJson(f),
-            dvDescriptor(f).map(dvRow).orNull),
+            f.dv.map(dvRow).orNull),
           null, null)) ++
-        tombs.map { case ((p, _), (ts, dv)) => Row(null, null, null,
+        tombs.map { case ((p, dv), ts) => Row(null, null, null,
           Row(encodePath(p), ts, false, dv.map(dvRow).orNull), null) } ++
         snap.txns.toSeq.sortBy(_._1).map { case (app, v) =>
           Row(null, null, null, null, Row(app, v)) }

@@ -63,11 +63,13 @@ object DeltaLite {
   /** One live data file: path relative to the table root + PHYSICAL row
     * count + data-skipping stats + optional deletion vector + partition
     * values (Hive-layout tables; string-encoded like Delta's
-    * partitionValues). `dv` points at a parquet dir of (path, row_index)
-    * soft-deleted positions for this file; `rows`/`stats` stay physical
-    * (valid upper bounds for pruning — a DV only ever removes rows). */
+    * partitionValues). `dv` is the standard PROTOCOL.md descriptor of
+    * this file's soft-deleted row indexes ([[DeletionVectors]]) — the
+    * one DV format of both logs; `rows`/`stats` stay physical (valid
+    * upper bounds for pruning — a DV only ever removes rows). */
   final case class AddFile(path: String, rows: Long, stats: Map[String, ColStats],
-      dv: Option[String] = None, pv: Map[String, String] = Map.empty,
+      dv: Option[DeletionVectors.Descriptor] = None,
+      pv: Map[String, String] = Map.empty,
       bloom: Map[String, String] = Map.empty,
       bytes: Long = 0L,
       baseRowId: Option[Long] = None,
@@ -881,6 +883,7 @@ object DeltaLite {
           case CkptRef(cv, _) =>
             applyActions(claimStore.readImmutable(
               logDir(path).resolve(s"checkpoint-$cv.json")),
+              s"table $path checkpoint $cv",
               s => schema = s, live, txns, c => constraints = c,
               p => partitionBy = p, m => physical = m, g => generated = g,
               i => identity = i, pr => setProps(pr))
@@ -900,7 +903,7 @@ object DeltaLite {
       // single-action objects, so the action key is the line head.
       def touchedData = lines.exists(l =>
         l.startsWith("{\"add\"") || l.startsWith("{\"remove\""))
-      applyActions(lines,
+      applyActions(lines, s"table $path version $i",
         s => schema = s, live, txns, c => constraints = c, p => partitionBy = p,
         m => physical = m, g => generated = g, x => identity = x,
         pr => setProps(pr),
@@ -918,7 +921,8 @@ object DeltaLite {
       physical, generated, identity, properties, churn)
   }
 
-  private def applyActions(lines: Seq[String], onSchema: StructType => Unit,
+  private def applyActions(lines: Seq[String], where: String,
+      onSchema: StructType => Unit,
       live: scala.collection.mutable.LinkedHashMap[String, AddFile],
       txns: scala.collection.mutable.HashMap[String, Long],
       onConstraints: Map[String, String] => Unit,
@@ -970,7 +974,7 @@ object DeltaLite {
               ps.collect { case (k, JString(x)) => k -> x }.toMap
             }.getOrElse(Map.empty))
           case ("add", a: JObject) =>
-            val af = decodeAdd(a, schema, physical)
+            val af = decodeAdd(a, schema, physical, where)
             live(af.path) = af
           case ("remove", JObject(r)) =>
             r.collectFirst { case ("path", JString(p)) => p }.foreach(live.remove)
@@ -990,7 +994,7 @@ object DeltaLite {
   }
 
   private def decodeAdd(a: JObject, schema: StructType,
-      physical: Map[String, String] = Map.empty): AddFile = {
+      physical: Map[String, String], where: String): AddFile = {
     val m = a.obj.toMap
     val p = m.get("path").collect { case JString(s) => s }
       .getOrElse(sys.error("add action without path"))
@@ -1017,7 +1021,11 @@ object DeltaLite {
         }.toMap
       case _ => Map.empty[String, ColStats]
     }
-    val dv = m.get("dv").collect { case JString(d) => d }
+    val dv = m.get("dv") match {
+      case Some(o: JObject) => Some(DeletionVectors.parseJValue(o, where))
+      case Some(JString(old)) => retiredDvFormat(where, old)
+      case _ => None
+    }
     val pv = m.get("pv") match {
       case Some(JObject(vals)) =>
         vals.collect { case (c, JString(s)) => c -> s }.toMap
@@ -1042,6 +1050,16 @@ object DeltaLite {
     }
     AddFile(p, rows, stats, dv, pv, bloom, bytes, baseRowId, rowCommitVersion)
   }
+
+  /** Before the standard descriptor, the native log named a parquet
+    * directory of (path, row_index) rows in `dv`. No reader for that
+    * form remains: replay declines it instead of reading the file
+    * without its deletes. */
+  private def retiredDvFormat(where: String, value: String): Nothing =
+    throw new IllegalStateException(s"$where: an add carries the " +
+      s"parquet-directory deletion vector '$value', a format this build " +
+      "no longer reads; REORG TABLE ... APPLY (PURGE) the table with a " +
+      "build that still reads it, then reopen it here")
 
   // -------------------------------------------------------------- write
 
@@ -1434,7 +1452,8 @@ object DeltaLite {
     JObject(List("add" -> JObject(List(
       "path" -> JString(f.path), "rows" -> JLong(f.rows),
       "bytes" -> JLong(f.bytes),
-      "dv" -> f.dv.map(JString(_)).getOrElse(JNull), "stats" -> stats) ++
+      "dv" -> f.dv.map(DeletionVectors.toJValue).getOrElse(JNull),
+      "stats" -> stats) ++
       f.baseRowId.map(b => List("baseRowId" -> JLong(b))).getOrElse(Nil) ++
       f.rowCommitVersion.map(v => List("rowCommitVersion" -> JLong(v)))
         .getOrElse(Nil) ++
@@ -1615,7 +1634,7 @@ object DeltaLite {
     StructField("path", StringType, nullable = true),
     StructField("rows", LongType, nullable = true),
     StructField("bytes", LongType, nullable = true),
-    StructField("dv", StringType, nullable = true),
+    StructField("dv", StringType, nullable = true), // DeletionVectors.toJson
     StructField("base_row_id", LongType, nullable = true),
     StructField("row_commit_version", LongType, nullable = true),
     StructField("pv", MapType(StringType, StringType), nullable = true),
@@ -1655,7 +1674,8 @@ object DeltaLite {
           for { dt <- types.get(cn); v <- pick(cs); t <- tagStat(dt, v) }
             yield cn -> t
         }
-      Row("add", null, f.path, f.rows, f.bytes, f.dv.orNull,
+      Row("add", null, f.path, f.rows, f.bytes,
+        f.dv.map(DeletionVectors.toJson).orNull,
         f.baseRowId.map(Long.box).orNull,
         f.rowCommitVersion.map(Long.box).orNull,
         f.pv, f.bloom, statMap(_.min), statMap(_.max))
@@ -1709,7 +1729,7 @@ object DeltaLite {
     var physical = Map.empty[String, String]
     val metaLines = df.filter(col("kind") === "meta").select(col("json"))
       .collect().map(_.getString(0)).toSeq
-    applyActions(metaLines,
+    applyActions(metaLines, s"table $path checkpoint $cv",
       s => { schema = s; onSchema(s) }, live, txns, onConstraints,
       onPartitionBy, m => { physical = m; onPhysical(m) }, onGenerated,
       onIdentity, onProperties)
@@ -1719,14 +1739,15 @@ object DeltaLite {
       physical.getOrElse(f.name, f.name) -> f.dataType).toMap
     df.filter(col("kind") === "add").drop("kind", "json")
       .collect().foreach { r =>
-        val f = addFromCkptRow(r, types)
+        val f = addFromCkptRow(r, types, s"table $path checkpoint $cv")
         live(f.path) = f
       }
   }
 
   /** Decode one typed checkpoint/sidecar parquet row back to an AddFile
     * (shared by the multi-part and v2-sidecar replay paths). */
-  private def addFromCkptRow(r: Row, types: Map[String, DataType]): AddFile = {
+  private def addFromCkptRow(r: Row, types: Map[String, DataType],
+      where: String): AddFile = {
     def statsOf(minCol: String, maxCol: String): Map[String, ColStats] = {
       val mins = Option(r.getAs[Map[String, String]](minCol))
         .getOrElse(Map.empty)
@@ -1743,7 +1764,9 @@ object DeltaLite {
       path = r.getAs[String]("path"),
       rows = r.getAs[Long]("rows"),
       stats = statsOf("stats_min", "stats_max"),
-      dv = Option(r.getAs[String]("dv")),
+      dv = Option(r.getAs[String]("dv")).map(d =>
+        if (d.startsWith("{")) DeletionVectors.fromJson(d)
+        else retiredDvFormat(where, d)),
       pv = Option(r.getAs[Map[String, String]]("pv")).getOrElse(Map.empty),
       bloom = Option(r.getAs[Map[String, String]]("bloom"))
         .getOrElse(Map.empty),
@@ -1860,7 +1883,8 @@ object DeltaLite {
                 for { dt <- types.get(cn); v <- pick(cs); t <- tagStat(dt, v) }
                   yield cn -> t
               }
-            Row(b, f.path, f.rows, f.bytes, f.dv.orNull,
+            Row(b, f.path, f.rows, f.bytes,
+              f.dv.map(DeletionVectors.toJson).orNull,
               f.baseRowId.map(Long.box).orNull,
               f.rowCommitVersion.map(Long.box).orNull,
               f.pv, f.bloom, statMap(_.min), statMap(_.max))
@@ -1946,7 +1970,7 @@ object DeltaLite {
     var physical = Map.empty[String, String]
     // metaData/txn lines apply as usual; `sidecar` lines fall through
     // applyActions' catch-all and are parsed separately below
-    applyActions(lines,
+    applyActions(lines, s"table $path checkpoint $cv",
       s => { schema = s; onSchema(s) }, live, txns, onConstraints,
       onPartitionBy, m => { physical = m; onPhysical(m) }, onGenerated,
       onIdentity, onProperties)
@@ -1963,7 +1987,7 @@ object DeltaLite {
       .toSeq.distinct
     spark.read.schema(sidecarSchema).parquet(paths: _*)
       .collect().foreach { r =>
-        val f = addFromCkptRow(r, types)
+        val f = addFromCkptRow(r, types, s"table $path checkpoint $cv")
         live(f.path) = f
       }
   }
@@ -2700,13 +2724,14 @@ object DeltaLite {
       }
     }
 
-  /** The scan of a snapshot's live `files`: one parquet scan per file
-    * group, each built by [[LogFileScan]] straight from the log's file
-    * list, so no read lists files through Spark (above 32 paths that
-    * listing is a job with one task per file, before the read's own
-    * action). Each scan carries the log's statistics and the tag
-    * BranchFilePruning prunes by; files with deletion vectors take
-    * [[readFilesWithPos]]. */
+  /** The scan of a snapshot's live `files`, for both logs: one parquet
+    * scan per file group, each built by [[LogFileScan]] straight from
+    * the log's file list, so no read lists files through Spark (above
+    * 32 paths that listing is a job with one task per file, before the
+    * read's own action). DV-free files take the plain scan, which
+    * carries the log's statistics and the tag BranchFilePruning prunes
+    * by; only the files carrying a deletion vector take
+    * [[readFilesWithPos]], unioned in. */
   private[graft] def readFiles(spark: SparkSession, path: String, schema: StructType,
       files: Seq[AddFile], partitionBy: Seq[String],
       physical: Map[String, String],
@@ -2715,7 +2740,14 @@ object DeltaLite {
       generated: Map[String, String] = Map.empty): DataFrame =
     if (files.isEmpty)
       spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-    else if (files.forall(_.dv.isEmpty)) {
+    else if (files.exists(_.dv.isDefined)) {
+      val (dvFiles, plain) = files.partition(_.dv.isDefined)
+      readFiles(spark, path, schema, plain, partitionBy, physical, props,
+          churn, generated)
+        .unionByName(readFilesWithPos(spark, path, schema, dvFiles,
+          partitionBy, physical, props, churn)
+          .select(schema.fieldNames.map(col).toSeq: _*))
+    } else {
       val r = root(path)
       def phys(n: String) = physical.getOrElse(n, n)
       val derive = generatedDeriveHook(schema, physical, generated)
@@ -2765,10 +2797,7 @@ object DeltaLite {
               .select(schema.fieldNames.map(col).toSeq: _*)
           })
       }
-    } else
-      readFilesWithPos(spark, path, schema, files, partitionBy, physical,
-        props, churn)
-        .select(schema.fieldNames.map(col).toSeq: _*)
+    }
 
   /** Partition columns as typed literals from the logged string values
     * (`__HIVE_DEFAULT_PARTITION__` / absent = null, like Spark's own
@@ -2783,9 +2812,12 @@ object DeltaLite {
     }
   }
 
-  /** Like [[readFiles]] but with `path` (table-relative) and `row_index`
-    * position columns, deletion vectors applied — the row-position view
-    * that both the DV read path and DV creation share. */
+  /** Like [[readFiles]] but with `path` (the file's log key) and
+    * `row_index` position columns, deletion vectors applied — the
+    * row-position view that the DV read path, DV creation and the DML
+    * locators share. Each file's descriptor decodes to its deleted
+    * positions ([[dvPositionsFrame]]), which the scan anti-joins on
+    * (path, row_index), broadcast up to [[BroadcastDvMaxBytes]]. */
   private[sources] def readFilesWithPos(spark: SparkSession, path: String,
       schema: StructType, files: Seq[AddFile],
       partitionBy: Seq[String],
@@ -2797,6 +2829,14 @@ object DeltaLite {
       return spark.createDataFrame(new java.util.ArrayList[Row](),
         StructType(schema.fields ++ Seq(StructField("path", StringType),
           StructField("row_index", LongType))))
+    // the DV side first: a collision, a corrupt or an unreadable DV
+    // declines before any data file is touched
+    val dvs = files.flatMap(f => f.dv.map(f.path -> _))
+    val dvSide = if (dvs.isEmpty) None else {
+      requireNoPosCollision(schema, physical, "deletion-vector read")
+      val (pos, estBytes) = dvPositionsFrame(spark, path, dvs)
+      Some(if (estBytes <= BroadcastDvMaxBytes) broadcast(pos) else pos)
+    }
     def phys(n: String) = physical.getOrElse(n, n)
     val dataSchema = StructType(
       schema.fields.filterNot(f => partitionBy.contains(f.name))
@@ -2829,60 +2869,147 @@ object DeltaLite {
       else unionTree(files.groupBy(_.pv).toSeq
         .sortBy(_._1.toList.sortBy(_._1).mkString(","))
         .map { case (pv, group) => scanGroup(group, pv) })
-    val dvDirs = files.flatMap(_.dv).distinct
-    if (dvDirs.isEmpty) data
-    else {
-      // deletion vectors: anti-join (file, row_index) against the DV
-      // rows — the DV side is tiny and broadcasts; data files are
-      // never rewritten by a soft delete
-      val dv = broadcast(
-        spark.read.parquet(dvDirs.map(d => r.resolve(d).toString): _*)
-          .select(col("path").as("__dv_path"), col("row_index").as("__dv_ri")))
-      data.join(dv,
-        col("path") === col("__dv_path") && col("row_index") === col("__dv_ri"),
-        "left_anti").drop("__dv_path", "__dv_ri")
-    }
+    dvSide.fold(data)(data.join(_,
+      col("path") === col("__dv_path") && col("row_index") === col("__dv_ri"),
+      "left_anti").drop("__dv_path", "__dv_ri"))
   }
 
+  /** DVs small enough broadcast their positions to the anti-join;
+    * larger ones fall back to a shuffled anti-join, the plan that
+    * survives a mostly-deleted 100 TB table. The decision weighs
+    * BYTES, not row count (each position row carries the file's full
+    * path string — a 4M-row broadcast of date-partitioned paths is
+    * hundreds of MB), estimated from the log alone (cardinality × path
+    * length — no decode needed to decide). */
+  private[sources] val BroadcastDvMaxBytes = 64L << 20
+
+  /** (`__dv_path`, `__dv_ri`) frame of the given descriptors' deleted
+    * positions. The driver holds (path, roaring bytes, cardinality)
+    * triples — metadata-proportional, like the log itself; executors
+    * decode and expand, and each decode is cardinality-checked against
+    * the log's declared count (a short decode would silently resurrect
+    * rows). Returns the frame plus an estimated materialized byte
+    * weight (the broadcast decision input — path strings dominate). */
+  private[graft] def dvPositionsFrame(spark: SparkSession, path: String,
+      descs: Seq[(String, DeletionVectors.Descriptor)])
+      : (DataFrame, Long) = {
+    val r = root(path)
+    val payload: Seq[(String, Array[Byte], Long)] = descs.map {
+      case (rel, d) => (rel, DeletionVectors.bitmapBytes(r, d),
+        d.cardinality)
+    }
+    val total = descs.map { case (rel, d) =>
+      d.cardinality * (rel.length.toLong * 2 + 24) }.sum
+    import spark.implicits._
+    val df = spark.sparkContext
+      .parallelize(payload, math.max(1, math.min(payload.size, 32)))
+      .flatMap { case (rel, bytes, card) =>
+        val ps = DeletionVectors.positions(bytes)
+        require(ps.length == card,
+          s"deletion vector of '$rel' decodes to ${ps.length} " +
+            s"positions but the log declares cardinality $card " +
+            "(corrupt DV)")
+        ps.iterator.map(ri => (rel, ri))
+      }
+      .toDF("__dv_path", "__dv_ri")
+    (df, total)
+  }
+
+  /** The row-position reads inject `path`/`row_index` columns; a table
+    * whose own columns use either name would collide and misread —
+    * decline loudly instead, never serve the file path as the user's
+    * data. */
+  private[sources] def requireNoPosCollision(schema: StructType,
+      physical: Map[String, String], what: String): Unit = {
+    val taken = schema.fieldNames.toSet ++ physical.values
+    val clash = Seq("path", "row_index").filter(taken)
+    require(clash.isEmpty,
+      s"$what: the table has a column named ${clash.mkString("/")}, " +
+        "which collides with the row-position plumbing the DV " +
+        "anti-filter rides — this reader declines rather than risk " +
+        "serving wrong values; OPTIMIZE/VACUUM the source to " +
+        "materialize its deletes first")
+  }
+
+  /** THE deletion-vector writer of both logs: fresh positions ∪ the
+    * prior positions of every touched file → one sorted roaring bitmap
+    * per file, built on executors → one packed `deletion_vector_*.bin`
+    * ([[DeletionVectors.writeDvFilePacked]]) → one descriptor per
+    * touched file, sorted by path. `fresh` is a (path, row_index) frame
+    * of newly deleted positions and is evaluated once, by the single
+    * collect here; `oldPos` is the [[dvPositionsFrame]] of the files'
+    * current DVs (only touched files' entries are folded in, so each
+    * file references exactly one DV that never forgets a prior
+    * delete). Nothing is written when nothing matched. The caller
+    * commits the descriptors through its own log: the file stays
+    * invisible until then, and VACUUM reclaims it if that commit never
+    * lands. */
+  private[graft] def writeDeletionVectors(spark: SparkSession,
+      path: String, fresh: DataFrame, oldPos: DataFrame)
+      : Seq[(String, DeletionVectors.Descriptor)] = {
+    val touched = fresh.select(col("path")).distinct()
+    val finalPos = fresh.unionByName(
+      oldPos.toDF("path", "row_index")
+        .join(touched, Seq("path"), "left_semi"))
+    import spark.implicits._
+    val perFile: Seq[(String, Array[Byte], Long)] = finalPos
+      .groupBy(col("path"))
+      .agg(sort_array(collect_set(col("row_index"))).as("pos"))
+      .as[(String, Array[Long])]
+      .map { case (p, pos) =>
+        (p, DeletionVectors.serialize(pos), pos.length.toLong) }
+      .collect().toSeq.sortBy(_._1)
+    if (perFile.isEmpty) Nil
+    else perFile.map(_._1).zip(DeletionVectors.writeDvFilePacked(root(path),
+      perFile.map(e => (e._2, e._3))))
+  }
+
+  /** The nondeterminism gate of every deletion-vector write: the
+    * matching scan and any re-evaluation would disagree, so a DV could
+    * not name a stable row set — delta-spark declines these too. */
+  private[sources] def requireDeterministicDv(op: String, path: String,
+      predicate: String, deterministic: Boolean): Unit =
+    require(deterministic,
+      s"$op on $path: predicate '$predicate' is " +
+        "nondeterministic — a deletion vector must name a stable " +
+        "row set; materialize the choice into a column first")
+
   /** Soft delete via DELETION VECTORS (the Delta DV feature): rows
-    * matching `cond` are recorded as (file, row_index) positions in a DV
-    * parquet; the data files are NOT rewritten — the commit re-adds each
-    * touched file with its new DV attached, and every read path
-    * anti-joins the (tiny, broadcast) DV. The write cost of a delete
-    * drops from O(touched file bytes) to O(deleted row positions);
-    * [[compact]]/[[cluster]] materialize DVs away, [[vacuum]] keeps DV
-    * files of retained versions. Prior DVs of touched files are folded
-    * into the new DV so each file references exactly one. */
+    * matching `cond` are recorded as standard roaring descriptors by
+    * [[writeDeletionVectors]] (one packed `deletion_vector_*.bin` per
+    * delete); the data files are NOT rewritten — the commit re-adds
+    * each touched file with its new descriptor, and every read path
+    * anti-joins the decoded positions ([[readFilesWithPos]]). The write
+    * cost of a delete drops from O(touched file bytes) to O(deleted row
+    * positions); [[compact]]/[[cluster]]/[[reorgPurge]] materialize DVs
+    * away, [[vacuum]] keeps the DV files of retained versions. Prior
+    * DVs of touched files are folded into the new DV so each file
+    * references exactly one. A nondeterministic `cond` is declined. */
   def deleteVectorized(spark: SparkSession, path: String, cond: Column): Long = {
     val snap = snapshot(path)
     rejectIfAppendOnly(snap, "DELETE_DV")
-    val r = root(path)
-    val hit = coalesce(cond, lit(false))
-    val matches = readFilesWithPos(spark, path, snap.schema, snap.files,
-      snap.partitionBy, snap.physical)
-      .filter(hit)
-      .select("path", "row_index")
-    val touched = matches.select("path").distinct()
-      .collect().map(_.getString(0)).toSeq
-    if (touched.isEmpty) return commit(path, snap, "DELETE_DV")
-    val touchedSet = touched.toSet
-    val priorDvDirs = snap.files
-      .filter(f => touchedSet.contains(f.path)).flatMap(_.dv).distinct
-    val priorRows =
-      if (priorDvDirs.isEmpty) None
-      else Some(spark.read.parquet(priorDvDirs.map(d => r.resolve(d).toString): _*)
-        .filter(col("path").isin(touched: _*)))
-    val dvRel = f"dv-${snap.version + 1}%05d-" +
-      java.util.UUID.randomUUID.toString.take(8)
-    priorRows.map(matches.unionByName(_)).getOrElse(matches)
-      .write.mode("errorifexists").parquet(r.resolve(dvRel).toString)
-    val readds = snap.files.filter(f => touchedSet.contains(f.path))
-      .map(_.copy(dv = Some(dvRel)))
+    requireNoPosCollision(snap.schema, snap.physical, "DELETE_DV")
+    requireDeterministicDv("DELETE_DV", path, cond.toString,
+      spark.createDataFrame(new java.util.ArrayList[Row](), snap.schema)
+        .filter(cond).queryExecution.analyzed.collect {
+          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+            f.condition.deterministic
+        }.forall(identity))
+    val fresh = graft.Frames.cut(readFilesWithPos(spark, path, snap.schema,
+        snap.files, snap.partitionBy, snap.physical)
+      .filter(coalesce(cond, lit(false)))
+      .select("path", "row_index"))
+    val (oldPos, _) = dvPositionsFrame(spark, path,
+      snap.files.flatMap(f => f.dv.map(f.path -> _)))
+    val newDv = writeDeletionVectors(spark, path, fresh, oldPos).toMap
+    if (newDv.isEmpty) return commit(path, snap, "DELETE_DV")
+    val readds = snap.files.filter(f => newDv.contains(f.path))
+      .map(f => f.copy(dv = newDv.get(f.path)))
     // a table carrying DVs needs the DV read path → auto-require the
     // reader feature with the first vector (Delta's automatic upgrade)
     commit(path, snap, "DELETE_DV", next = snap.copy(
         properties = withFeature(snap.properties, "deletionVectors", reader = true)),
-      adds = readds, removes = touched)
+      adds = readds, removes = readds.map(_.path))
   }
 
   /** Injectable wall clock (test hook for the in-commit-timestamp skew
@@ -4932,8 +5059,8 @@ object DeltaLite {
     * (relative paths), the source never changes, and the clone's VACUUM
     * only walks the clone's root so referenced source files are never
     * deleted. Cloning a table with live deletion vectors is rejected
-    * (their positions key on source-relative paths); OPTIMIZE the source
-    * first to materialize DVs, like Delta requires.
+    * (their `u` descriptors resolve against the source root); OPTIMIZE
+    * the source first to materialize DVs, like Delta requires.
     *
     * `asOf` = CLONE AT VERSION (Delta `CLONE src VERSION AS OF n`): the
     * clone's v0 references the files live at that SOURCE version — a
@@ -4958,16 +5085,18 @@ object DeltaLite {
   }
 
   /** Delta `CLONE ... DEEP`: a fully materialized, independent copy.
-    * Data files are byte-copied PRESERVING their table-relative layout,
+    * Data files and the `deletion_vector_*.bin` files their descriptors
+    * reference are byte-copied PRESERVING their table-relative layout,
     * so every logged attribute — stats, partition values, blooms, and
-    * deletion-vector references (DV rows name files by relative path) —
-    * stays valid in the target without recomputation; the copy is pure
-    * I/O, no Spark jobs. By-reference files (a shallow-clone source)
-    * materialize under a fresh clone dir, so deep-cloning a shallow
-    * clone is the documented way to cut its tie to the origin; such
-    * files must not carry DVs (their DV rows name the ABSOLUTE origin
-    * path — REORG first). O(table bytes), embarrassingly parallel
-    * per-file at scale. The target starts its own timeline at CLONE.
+    * deletion-vector descriptors (row indexes of a byte-identical file,
+    * resolved against the table root) — stays valid in the target
+    * without recomputation; the copy is pure I/O, no Spark jobs.
+    * By-reference files (a shallow-clone source) materialize under a
+    * fresh clone dir, so deep-cloning a shallow clone is the documented
+    * way to cut its tie to the origin (a DV on such a file keeps its
+    * descriptor: the copy is byte-identical, so its row indexes hold).
+    * O(table bytes), embarrassingly parallel per-file at scale. The
+    * target starts its own timeline at CLONE.
     * `asOf` = CLONE AT VERSION: materializes the files live at that
     * source version — a fully independent copy of historical state
     * (no vacuum hazard, unlike the shallow form). */
@@ -4984,23 +5113,17 @@ object DeltaLite {
       Files.copy(src, dst,
         java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
     }
-    // DV dirs keep their relative names → the (path, row_index) rows in
-    // them keep meaning in the target
-    snap.files.flatMap(_.dv).distinct.foreach { d =>
-      val from = srcRoot.resolve(d)
-      val walk = Files.walk(from)
-      try walk.iterator().asScala.filter(Files.isRegularFile(_)).foreach { p =>
-        copyInto(p, dstRoot.resolve(d).resolve(from.relativize(p).toString))
-      } finally walk.close()
-    }
+    // `u` descriptors resolve against the table root → DV files keep
+    // their relative names and the descriptors keep meaning in the target
+    snap.files.flatMap(_.dv).filter(_.storageType == "u")
+      .map(DeletionVectors.dvFilePath(srcRoot, _)).distinct.foreach { f =>
+        copyInto(f, dstRoot.resolve(srcRoot.relativize(f).toString))
+      }
     val cloneDir = "files-00000-deep-" +
       java.util.UUID.randomUUID.toString.take(8)
     val adds = snap.files.zipWithIndex.map { case (f, i) =>
       val p = Paths.get(f.path)
       if (p.isAbsolute) {
-        require(f.dv.isEmpty,
-          "cannot deep-clone a deletion vector on a by-reference file " +
-            "(its DV names the origin's path); REORG the source first")
         val rel = s"$cloneDir/$i-${p.getFileName}"
         copyInto(p, dstRoot.resolve(rel))
         f.copy(path = rel)
@@ -5611,11 +5734,13 @@ object DeltaLite {
 
   /** Delta `REORG TABLE ... APPLY (PURGE)`: materialize soft deletes.
     * Rewrites ONLY the files carrying a deletion vector — their surviving
-    * rows land in fresh files and the DV reference is dropped; every
-    * DV-free file is carried forward untouched. Cost is O(DV'd file
-    * bytes), not O(table). Run it when the DV anti-join tax outweighs the
-    * rewrite (or before [[cloneShallow]], which requires a DV-free
-    * source). No-op (version unchanged) when no file has a DV. */
+    * rows land in fresh files and the descriptor is dropped (its
+    * `deletion_vector_*.bin` goes at the [[vacuum]] after no retained
+    * version references it); every DV-free file is carried forward
+    * untouched. Cost is O(DV'd file bytes), not O(table). Run it when
+    * the DV anti-join tax outweighs the rewrite (or before
+    * [[cloneShallow]], which requires a DV-free source). No-op (version
+    * unchanged) when no file has a DV. */
   def reorgPurge(spark: SparkSession, path: String): Long = {
     val snap = snapshot(path)
     val dvFiles = snap.files.filter(_.dv.nonEmpty)
@@ -5949,34 +6074,49 @@ object DeltaLite {
     victims.size
   }
 
-  /** Physically delete data files not referenced by the newest
-    * `keepVersions` snapshots (Delta `VACUUM`): the retention boundary —
-    * time travel older than that stops working, by design. Returns the
-    * deleted file count. `dryRun` (Delta `VACUUM ... DRY RUN`) reports
-    * the victim count without deleting anything. */
-  def vacuum(path: String, keepVersions: Int = -1,
-      dryRun: Boolean = false): Int = {
+  /** Table-relative names of every file the newest `keepVersions`
+    * snapshots reference — data files plus the `deletion_vector_*.bin`
+    * files their descriptors resolve to. -1 = "table default": the
+    * graft.retention.keepVersions property (the
+    * deletedFileRetentionDuration analogue for a version-addressed log),
+    * else 1 — so an ops-set retention policy travels WITH the table
+    * instead of living in every caller's cron job. */
+  private def retainedFiles(path: String, keepVersions: Int): Set[String] = {
     val latest = latestVersion(path)
       .getOrElse(throw new IllegalArgumentException(s"no DeltaLite table at $path"))
-    // -1 = "table default": the graft.retention.keepVersions property
-    // (the deletedFileRetentionDuration analogue for a version-addressed
-    // log), else 1 — so an ops-set retention policy travels WITH the
-    // table instead of living in every caller's cron job.
     val keep =
       if (keepVersions >= 0) keepVersions
       else snapshot(path).properties.collectFirst {
         case (k, v) if k.equalsIgnoreCase("graft.retention.keepVersions") => v
       }.flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(1)
-    val keepFrom = math.max(0L, latest - keep + 1)
-    val keptSnaps = (keepFrom to latest).map(v => snapshot(path, Some(v)))
-    val referenced = keptSnaps.flatMap(_.files.map(_.path)).toSet
-    // a referenced deletion vector keeps every file under its dir
-    val referencedDvDirs = keptSnaps.flatMap(_.files.flatMap(_.dv)).distinct
+    val r = root(path)
+    (math.max(0L, latest - keep + 1) to latest).flatMap { v =>
+      snapshot(path, Some(v)).files.flatMap(f => f.path +:
+        f.dv.filter(_.storageType != "i").map(d =>
+          r.relativize(DeletionVectors.dvFilePath(r, d)).toString).toSeq)
+    }.toSet
+  }
+
+  /** The name of a deletion-vector file
+    * ([[DeletionVectors.writeDvFilePacked]]) — with `.parquet`, what
+    * VACUUM may reclaim. */
+  private val DvFileName = """deletion_vector_[^/]*\.bin"""
+
+  /** Physically delete data and deletion-vector files not referenced by
+    * the newest `keepVersions` snapshots (Delta `VACUUM`): the retention
+    * boundary — time travel older than that stops working, by design.
+    * Returns the deleted file count. `dryRun` (Delta `VACUUM ... DRY
+    * RUN`) reports the victim count without deleting anything. */
+  def vacuum(path: String, keepVersions: Int = -1,
+      dryRun: Boolean = false): Int = {
+    val referenced = retainedFiles(path, keepVersions)
     val r = root(path)
     val all = Files.walk(r)
     try {
       val victims = all.iterator().asScala
-        .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
+        .filter(p => Files.isRegularFile(p) &&
+          (p.toString.endsWith(".parquet") ||
+            p.getFileName.toString.matches(DvFileName)))
         .map(p => r.relativize(p).toString)
         // the log dirs hold parquet CHECKPOINT parts, not data files —
         // never vacuum metadata. `_delta_log/` covers CONVERT FROM
@@ -5987,7 +6127,6 @@ object DeltaLite {
         .filterNot(_.startsWith("_graft_log/"))
         .filterNot(_.startsWith("_delta_log/"))
         .filterNot(referenced.contains)
-        .filterNot(rel => referencedDvDirs.exists(d => rel.startsWith(d + "/")))
         .toList
       if (!dryRun) victims.foreach(p => Files.delete(r.resolve(p)))
       victims.size
@@ -6007,10 +6146,11 @@ object DeltaLite {
     * machine ever materializes the file census. Deletion likewise runs
     * per-partition on executors — O(victims / parallelism) wall clock.
     *
-    * Safety rules match [[vacuum]]: only `.parquet` files, never the log
-    * dir, never files under a referenced deletion-vector directory, and —
-    * because an inventory row is UNTRUSTED input — any path that escapes
-    * the table root (`..`, absolute) is ignored rather than resolved.
+    * Safety rules match [[vacuum]]: only `.parquet` and
+    * `deletion_vector_*.bin` files, never the log dir, never a file a
+    * retained version references, and — because an inventory row is
+    * UNTRUSTED input — any path that escapes the table root (`..`,
+    * absolute) is ignored rather than resolved.
     * Staleness is safe in one direction only: files missing from the
     * inventory are simply not collected this pass (a newer file listed by
     * an old inventory can't be deleted either — it's referenced by the
@@ -6018,29 +6158,15 @@ object DeltaLite {
     */
   def vacuumInventory(spark: SparkSession, path: String, inventory: DataFrame,
       keepVersions: Int = -1, dryRun: Boolean = false): Long = {
-    val latest = latestVersion(path)
-      .getOrElse(throw new IllegalArgumentException(s"no DeltaLite table at $path"))
-    val keep =
-      if (keepVersions >= 0) keepVersions
-      else snapshot(path).properties.collectFirst {
-        case (k, v) if k.equalsIgnoreCase("graft.retention.keepVersions") => v
-      }.flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(1)
-    val keepFrom = math.max(0L, latest - keep + 1)
-    val keptSnaps = (keepFrom to latest).map(v => snapshot(path, Some(v)))
-    val referenced = keptSnaps.flatMap(_.files.map(_.path)).distinct
-    val dvDirs = keptSnaps.flatMap(_.files.flatMap(_.dv)).distinct
     import spark.implicits._
-    val refDf = referenced.toDF("path")
-    val underDv = dvDirs
-      .map(d => col("path").startsWith(d + "/"))
-      .foldLeft(lit(false))(_ || _)
+    val refDf = retainedFiles(path, keepVersions).toSeq.toDF("path")
     val victims = inventory
       .select(col("path").cast("string").as("path"))
-      .filter(col("path").endsWith(".parquet"))
+      .filter(col("path").endsWith(".parquet") ||
+        col("path").rlike(s"(^|/)$DvFileName$$"))
       .filter(!col("path").startsWith("_graft_log/"))
       .filter(!col("path").startsWith("_delta_log/"))
       .filter(!col("path").startsWith("/") && !col("path").contains(".."))
-      .filter(!underDv)
       .join(refDf, Seq("path"), "left_anti")
     if (dryRun) victims.count()
     else {

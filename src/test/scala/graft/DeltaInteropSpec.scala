@@ -774,9 +774,9 @@ class DeltaInteropSpec extends AnyFunSuite with TestSpark {
       Files.delete(logDir.resolve(f"$v%020d.json")))
     assert(ids(DeltaInterop.read(spark, path)) === Seq(2L, 3, 4, 5, 6),
       "a checkpoint-only fast-start must carry the DV state")
-    // CONVERT adopts by TRANSLATION: data files untouched, DVs decoded
-    // once into a graft-native (path, row_index) dir; the native read
-    // and the full native write surface work after
+    // CONVERT adopts the DV descriptors unchanged (both logs store the
+    // one standard format): no data or DV file is copied or decoded;
+    // the native read and the full native write surface work after
     DeltaInterop.convertFromDelta(spark, path)
     assert(ids(DeltaLite.read(spark, path)) === Seq(2L, 3, 4, 5, 6))
     val nv = DeltaLite.deleteVectorized(spark, path, col("id") === 4L)
@@ -1068,8 +1068,7 @@ class DeltaInteropSpec extends AnyFunSuite with TestSpark {
       (1L to 16L).filterNot(i => i % 3 == 0 || i % 4 == 0))
     val snap3 = DeltaInterop.snapshot(spark, path)
     val cards = snap3.files.flatMap(f =>
-      f.dv.map(s => DeletionVectors.fromJson(
-        s.stripPrefix("delta-dv:")).cardinality)).sorted
+      f.dv.map(_.cardinality)).sorted
     assert(cards === Seq(4L, 4L), // file1: {3,4,6,8}; file2: {9,12,15,16}
       s"per-file DV cardinality must be the UNION of both deletes: $cards")
     // no-match delete is a no-op at the current version
@@ -1207,8 +1206,7 @@ class DeltaInteropSpec extends AnyFunSuite with TestSpark {
     DeltaInterop.exportDeleteWhere(spark, path, "id % 3 = 0")        // v1
     // capture DV1's identity before it is superseded
     val dv1 = DeltaInterop.snapshot(spark, path, Some(1L)).files
-      .flatMap(f => f.dv.map(s =>
-        DeletionVectors.fromJson(s.stripPrefix("delta-dv:")))).head
+      .flatMap(_.dv).head
     DeltaInterop.exportDeleteWhere(spark, path, "id % 4 = 0")        // v2
     DeltaInterop.exportCheckpoint(spark, path)
     def removeRows(v: Long): Seq[(String, Option[String])] = {
@@ -1463,8 +1461,7 @@ class DeltaInteropSpec extends AnyFunSuite with TestSpark {
         .partition(_.dv.isDefined)
       assert(flipped.size === 1 && untouched.size === 1,
         "exactly the stats-overlapping file must flip")
-      assert(DeletionVectors.fromJson(flipped.head.dv.get
-        .stripPrefix("delta-dv:")).cardinality === 4L)
+      assert(flipped.head.dv.get.cardinality === 4L)
       // the commit itself touches ONE file: one remove + one DV'd add
       // (the pruned file appears in no action — it was never even read)
       val commitJson = new String(Files.readAllBytes(Paths.get(path,
@@ -1528,9 +1525,7 @@ class DeltaInteropSpec extends AnyFunSuite with TestSpark {
           .sorted,
         "the post-checkpoint delete must union with the restated DV")
       val snap4 = DeltaInterop.snapshot(spark, path)
-      val card4 = snap4.files.flatMap(_.dv).map(s =>
-        graft.sources.DeletionVectors.fromJson(
-          s.stripPrefix("delta-dv:")).cardinality).sum
+      val card4 = snap4.files.flatMap(_.dv).map(_.cardinality).sum
       assert(card4 === 5L, // {1,2,3,4} from the flip + {7}
         s"the union across the checkpoint boundary must not forget: $card4")
     }

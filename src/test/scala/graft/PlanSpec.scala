@@ -2300,22 +2300,32 @@ class PlanSpec extends AnyFunSuite with TestSpark {
       s"""{"add":{"path":"$plain","partitionValues":{},"size":1,"modificationTime":1,"dataChange":true}}""",
       s"""{"add":{"path":"$dvd","partitionValues":{},"size":1,"modificationTime":1,"dataChange":true,"deletionVector":{"storageType":"u","pathOrInlineDv":"${desc.pathOrInlineDv}","offset":1,"sizeInBytes":${desc.sizeInBytes},"cardinality":1}}}""")
       .mkString("", "\n", "\n").getBytes("UTF-8"))
-    val df = DeltaInterop.read(spark, path)
-    assert(df.count() === 7L) // 4 plain + 4 minus 1 deleted
-    val plan = df.queryExecution.executedPlan.toString
-    // the DV side anti-joins a small BROADCAST position set — a
-    // shuffled anti-join here would pay an exchange per read at any
-    // deletion count; the bytes-weighted decision picks broadcast
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
-      s"expected a broadcast anti-join for the DV positions:\n$plan")
-    // the DV-free branch stays a PLAIN scan: of the two parquet file
-    // scans (one per branch), exactly ONE carries the _metadata
-    // row-index plumbing in its read schema
-    val fileScans = plan.linesIterator
-      .filter(_.contains("FileScan parquet")).toSeq
-    assert(fileScans.size === 2,
-      s"expected one scan per branch (plain + DV):\n$plan")
-    assert(fileScans.count(_.contains("_tmp_metadata_row_index")) === 1,
-      s"exactly the DV branch must read row indexes:\n$plan")
+    def checkPlan(df: org.apache.spark.sql.DataFrame): Unit = {
+      assert(df.count() === 7L) // 4 plain + 4 minus 1 deleted
+      val plan = df.queryExecution.executedPlan.toString
+      // the DV side anti-joins a small BROADCAST position set — a
+      // shuffled anti-join here would pay an exchange per read at any
+      // deletion count; the bytes-weighted decision picks broadcast
+      assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
+        s"expected a broadcast anti-join for the DV positions:\n$plan")
+      // the DV-free branch stays a PLAIN scan: of the two parquet file
+      // scans (one per branch), exactly ONE carries the _metadata
+      // row-index plumbing in its read schema
+      val fileScans = plan.linesIterator
+        .filter(_.contains("FileScan parquet")).toSeq
+      assert(fileScans.size === 2,
+        s"expected one scan per branch (plain + DV):\n$plan")
+      assert(fileScans.count(_.contains("_tmp_metadata_row_index")) === 1,
+        s"exactly the DV branch must read row indexes:\n$plan")
+    }
+    checkPlan(DeltaInterop.read(spark, path))
+    // the native log reads its DVs through the same reader
+    val D = graft.sources.DeltaLite
+    val native = TempDirs.fresh("plan_dv_native")
+    D.create(spark, native, (0L until 4L).toDF("id").coalesce(1))
+    D.append(spark, native, (4L until 8L).toDF("id").coalesce(1))
+    D.deleteVectorized(spark, native, $"id" === 5L)
+    assert(D.snapshot(native).files.count(_.dv.isDefined) === 1)
+    checkPlan(D.read(spark, native))
   }
 }

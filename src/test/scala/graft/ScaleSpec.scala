@@ -1965,8 +1965,117 @@ class ScaleSpec extends AnyFunSuite with TestSpark {
     assert(DeltaLite.read(spark, path).count() === 189)
 
     // vacuum keeps only the live compacted file + nothing DV'd remains live
+    def dvBins(): Seq[String] = {
+      val w = Files.walk(Paths.get(path))
+      try w.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("deletion_vector_") && n.endsWith(".bin"))
+        .toSeq.sorted
+      finally w.close()
+    }
+    assert(dvBins().size === 2, "one packed DV file per DV delete")
     DeltaLite.vacuum(path, keepVersions = 1)
     assert(DeltaLite.read(spark, path).count() === 189)
+    assert(dvBins().isEmpty,
+      "no retained version references a DV, so no DV file may remain")
+
+    // a DV still live after vacuum keeps its file; the one it
+    // superseded (folded into it) is reclaimed
+    DeltaLite.deleteVectorized(spark, path, $"k" === 7L)
+    DeltaLite.deleteVectorized(spark, path, $"k" === 8L)
+    val liveDv = DeltaLite.snapshot(path).files.flatMap(_.dv)
+    assert(liveDv.size === 1 && liveDv.head.cardinality === 2L)
+    val live = graft.sources.DeletionVectors.dvFilePath(
+      Paths.get(path).toAbsolutePath.normalize, liveDv.head)
+    assert(dvBins().size === 2)
+    DeltaLite.vacuum(path, keepVersions = 1)
+    assert(dvBins() === Seq(live.getFileName.toString))
+    assert(DeltaLite.read(spark, path).count() === 187)
+    assert(DeltaLite.read(spark, path).filter($"k".isin(7L, 8L)).count() === 0)
+  }
+
+  test("DeltaLite deletion vectors: a nondeterministic predicate is declined, nothing commits") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("graft_dv_rand").toString
+    DeltaLite.create(spark, path, (0L until 100L).toDF("k").coalesce(1))
+    val before = DeltaLite.latestVersion(path)
+    val e = intercept[IllegalArgumentException] {
+      DeltaLite.deleteVectorized(spark, path, rand(7) < 0.5)
+    }
+    assert(e.getMessage.contains("nondeterministic"), e.getMessage)
+    assert(DeltaLite.latestVersion(path) === before)
+    assert(DeltaLite.read(spark, path).count() === 100)
+  }
+
+  test("DeltaLite deletion vectors: each descriptor decodes to exactly the deleted physical rows; a corrupt DV fails its CRC") {
+    import spark.implicits._
+    import graft.sources.DeletionVectors
+    val path = Files.createTempDirectory("graft_dv_crc").toString
+    DeltaLite.create(spark, path, (0L until 10L).toDF("k").coalesce(1))
+    DeltaLite.append(spark, path, (10L until 20L).toDF("k").coalesce(1))
+    DeltaLite.deleteVectorized(spark, path, $"k" % 3 === 0L)
+    val root = Paths.get(path).toAbsolutePath.normalize
+    val files = DeltaLite.snapshot(path).files
+    assert(files.size === 2 && files.forall(_.dv.isDefined))
+    files.foreach { f =>
+      val raw = spark.read.parquet(root.resolve(f.path).toString)
+      val deleted = raw
+        .select(col("_metadata.row_index"), col(raw.columns.head).as("k"))
+        .filter($"k" % 3 === 0L).collect().map(_.getLong(0)).sorted.toSeq
+      assert(deleted.nonEmpty)
+      assert(DeletionVectors.positions(
+        DeletionVectors.bitmapBytes(root, f.dv.get)).toSeq === deleted,
+        s"the DV of ${f.path} must name exactly its deleted row indexes")
+    }
+    assert(DeltaLite.read(spark, path).count() === 13)
+    // both descriptors share one packed file: corrupt one byte of the
+    // last bitmap → the read fails loudly instead of resurrecting rows
+    val dvFile = DeletionVectors.dvFilePath(root, files.head.dv.get)
+    val bytes = Files.readAllBytes(dvFile)
+    bytes(bytes.length - 6) = (bytes(bytes.length - 6) ^ 0x7f).toByte
+    Files.write(dvFile, bytes)
+    val crc = intercept[Exception] {
+      DeltaLite.read(spark, path).collect()
+    }
+    assert(crc.getMessage.toLowerCase.contains("crc"),
+      s"a corrupt DV must fail its checksum loudly: $crc")
+  }
+
+  test("DeltaLite replay declines the retired parquet-directory DV form in commits and parquet checkpoints") {
+    import spark.implicits._
+    val retired = "dv-00001-0a1b2c3d"
+    // JSON commit: v1 re-adds the file naming a DV directory
+    val path = Files.createTempDirectory("graft_dv_retired").toString
+    DeltaLite.create(spark, path, (0L until 10L).toDF("k").coalesce(1))
+    val log = Paths.get(path, "_graft_log")
+    val v1 = Files.readAllLines(log.resolve("0.json")).asScala.map(
+      _.replace("\"version\":0", "\"version\":1")
+        .replace("\"dv\":null", s"\"dv\":\"$retired\""))
+    assert(v1.exists(_.contains(retired)))
+    Files.write(log.resolve("1.json"), v1.mkString("\n").getBytes("UTF-8"))
+    DeltaLite.clearSnapshotCache()
+    val e = intercept[IllegalStateException](DeltaLite.snapshot(path))
+    Seq(path, "version 1", retired, "no longer reads").foreach(w =>
+      assert(e.getMessage.contains(w), s"'$w' missing from: ${e.getMessage}"))
+    // parquet checkpoint: its add rows carry the retired string
+    val cpath = Files.createTempDirectory("graft_dv_retired_ckpt").toString
+    DeltaLite.create(spark, cpath, Seq(0L).toDF("k"),
+      properties = Map("graft.checkpoint.parquetThreshold" -> "1"))
+    (1 to 10).foreach(b => DeltaLite.append(spark, cpath, Seq(b.toLong).toDF("k")))
+    val ckpt = Paths.get(cpath, "_graft_log", "checkpoint-10.parquet")
+    assert(Files.isDirectory(ckpt), "expected a parquet checkpoint dir")
+    val forged = Paths.get(cpath, "_graft_log", ".forged")
+    spark.read.parquet(ckpt.toString)
+      .withColumn("dv", when($"kind" === "add", lit(retired))
+        .otherwise($"dv"))
+      .write.parquet(forged.toString)
+    val w = Files.walk(ckpt)
+    try w.iterator().asScala.toSeq.reverse.foreach(Files.delete(_))
+    finally w.close()
+    Files.move(forged, ckpt)
+    DeltaLite.clearSnapshotCache()
+    val ce = intercept[IllegalStateException](DeltaLite.snapshot(cpath))
+    Seq(cpath, "checkpoint 10", retired, "no longer reads").foreach(w =>
+      assert(ce.getMessage.contains(w), s"'$w' missing from: ${ce.getMessage}"))
   }
 
   test("DeltaLite change data feed diffs versions from touched files only") {
@@ -3539,7 +3648,7 @@ class ScaleSpec extends AnyFunSuite with TestSpark {
       flaky.beforeClaim = { t =>
         if (t.getFileName.toString == f"${2L}%020d.json") {
           flaky.beforeClaim = _ => ()
-          val oldDvJson = f4.dv.get.stripPrefix("delta-dv:")
+          val oldDvJson = graft.sources.DeletionVectors.toJson(f4.dv.get)
           DeltaLite.PosixCommitClaimStore.claim(
             log4.resolve(f"${2L}%020d.json"),
             (s"""{"remove":{"path":"${f4.path}","deletionTimestamp":1700000000003,"dataChange":true,"deletionVector":$oldDvJson}}""" + "\n" +

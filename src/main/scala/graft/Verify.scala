@@ -56,6 +56,16 @@ object Verify {
       } }
     Await.result(Future.sequence(futures), Duration.Inf)
     pool.shutdown()
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleSqlJson(SparkEntry.oracleSql, only))
+    spark.stop()
+  }
+
+  /** `oracle_sql.json`: the oracle SQL of the queries this run dumped —
+    * every entry when `only` is empty, else exactly the named ones, so a
+    * subset run never asks the checker for outputs it did not write. */
+  private[graft] def oracleSqlJson(oracle: Map[String, String],
+      only: Set[String]): String = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -68,9 +78,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    oracle.filter { case (k, _) => only.isEmpty || only(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

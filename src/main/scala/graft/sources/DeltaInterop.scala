@@ -47,15 +47,24 @@ import org.json4s.jackson.JsonMethods
   *     whichever checkpoint shape its writer left behind. A missing
   *     sidecar or multi-part piece throws; half a state never serves.
   *
-  * Mechanics: the log replays into [[DeltaLite.Snapshot]] — the same
-  * driver-side state model the native format uses — so EVERYTHING
-  * downstream is shared, not re-implemented: the Hive-layout partition
-  * re-attachment, the min/max stats file pruning ([[DeltaLite.pruneFiles]]
-  * — Delta's `stats` JSON decodes into the same typed bounds), the
+  * Mechanics: this module is the PROTOCOL.md CODEC of the one log
+  * replayer both logs share ([[DeltaLite.replayLog]]): it lists
+  * `_delta_log`, discovers its checkpoints, decodes commit lines and
+  * checkpoint rows into [[DeltaLite.LogAction]]s (stats, percent-encoded
+  * paths, column-mapping field ids and physical partition keys, DV
+  * descriptors, (path, DV)-exact removes with tombstones) and gates the
+  * result ([[checkProtocol]]). The replayer owns the rest — the
+  * per-log-directory tip cache, checkpoint selection, and the one fold
+  * ([[DeltaLite.fold]]) into [[DeltaLite.Snapshot]], the same state
+  * model the native format uses — so EVERYTHING downstream is shared,
+  * not re-implemented: the Hive-layout partition re-attachment, the
+  * min/max stats file pruning ([[DeltaLite.pruneFiles]] — Delta's
+  * `stats` JSON decodes into the same typed bounds), the
   * BranchFilePruning scan tagging, and the `graft-delta` V1 relation.
-  * At 100 TB the replay is one driver pass over log JSON + at most one
-  * Spark job over checkpoint parquet — metadata-proportional, exactly
-  * delta-spark's own Snapshot cost shape.
+  * At 100 TB a cold replay is one driver pass over log JSON + at most
+  * one Spark job over checkpoint parquet — metadata-proportional,
+  * exactly delta-spark's own Snapshot cost shape — and a warm one folds
+  * only the commits after the cached tip.
   *
   * Write-side: the mutating exports commit through the SAME
   * claim-and-retry loop the native format uses
@@ -80,7 +89,7 @@ import org.json4s.jackson.JsonMethods
   */
 object DeltaInterop {
 
-  import DeltaLite.{AddFile, ColStats, Snapshot}
+  import DeltaLite.{AddFile, ColStats, LogAction, LogListing, Snapshot, longOf}
 
   private def root(path: String): Path =
     Paths.get(path).toAbsolutePath.normalize()
@@ -98,7 +107,7 @@ object DeltaInterop {
 
   /** A directory is a standard Delta table iff `_delta_log/` holds at
     * least one versioned commit or checkpoint (classic or v2). */
-  def isStandardDelta(path: String): Boolean = !listing(path).isEmpty
+  def isStandardDelta(path: String): Boolean = DeltaLog.list(path).latest.nonEmpty
 
   private def listLog(path: String): Seq[String] = {
     val d = logDir(path)
@@ -106,25 +115,6 @@ object DeltaInterop {
     val s = Files.list(d)
     try s.iterator().asScala.map(_.getFileName.toString).toSeq
     finally s.close()
-  }
-
-  /** One directory listing, all three artifact views (review finding:
-    * commitVersions + checkpoints + v2Checkpoints each re-listed
-    * `_delta_log` — with latestVersion re-running all three, a replay
-    * paid ~7 listings on the hottest metadata path; on an object
-    * store each is a round trip). `v2s` is UNFILTERED here — replay
-    * prefers the classic checkpoint at a shared version, but `latest`
-    * must see every version either kind restates. */
-  private final case class LogListing(jsons: Seq[Long],
-      cps: Map[Long, Seq[Path]], v2s: Map[Long, Path]) {
-    def isEmpty: Boolean = jsons.isEmpty && cps.isEmpty && v2s.isEmpty
-    def latest: Option[Long] = (jsons ++ cps.keys ++ v2s.keys).maxOption
-  }
-
-  private def listing(path: String): LogListing = {
-    val names = listLog(path)
-    LogListing(commitVersionsOf(names), checkpointsOf(path, names),
-      v2CheckpointsOf(path, names))
   }
 
   private def commitVersionsOf(names: Seq[String]): Seq[Long] =
@@ -178,54 +168,72 @@ object DeltaInterop {
     }.toMap
   }
 
-  def latestVersion(path: String): Option[Long] = listing(path).latest
+  /** Every checkpoint present and complete in the log: version → its
+    * classic parts (Left) or its v2 manifest (Right). A version with
+    * both restates one state twice; the classic one serves it (a single
+    * read, no sidecars). */
+  private def checkpointFiles(path: String,
+      names: Seq[String]): Map[Long, Either[Seq[Path], Path]] =
+    v2CheckpointsOf(path, names).map { case (v, m) =>
+      v -> (Right(m): Either[Seq[Path], Path]) } ++
+      checkpointsOf(path, names).map { case (v, ps) => v -> Left(ps) }
+
+  def latestVersion(path: String): Option[Long] = DeltaLog.list(path).latest
 
   // ------------------------------------------------------------- replay
 
-  /** Mutable replay state — one pass over checkpoint rows + JSON lines. */
-  private final class State {
-    var schema: StructType = null
-    var partitionBy: Seq[String] = Nil
-    var config: Map[String, String] = Map.empty
-    var minReader: Int = 1
-    var readerFeatures: Seq[String] = Nil
-    var minWriter: Int = 1
-    var writerFeatures: Seq[String] = Nil
-    /** Column mapping `name` mode: logical → physical parquet name,
-      * from `delta.columnMapping.physicalName` field metadata. */
-    private var physicalV: Map[String, String] = Map.empty
-    private var p2l: Map[String, String] = Map.empty
-    def physical: Map[String, String] = physicalV
-    def physical_=(m: Map[String, String]): Unit = {
-      physicalV = m
-      p2l = m.map(_.swap) // cached: consulted once per add action
+  /** The PROTOCOL.md codec of the shared replayer
+    * ([[DeltaLite.replayLog]]): `<20-digit>.json` commits listed and
+    * read on the filesystem (the standard `_delta_log` is the foreign
+    * stack's directory), classic and v2 checkpoints ([[checkpointFiles]]),
+    * [[deltaActions]] decoding, and the [[checkProtocol]] read gate. */
+  private object DeltaLog extends DeltaLite.LogCodec {
+    def logDir(path: String): Path = DeltaInterop.logDir(path)
+
+    def list(path: String): LogListing = {
+      val names = listLog(path)
+      val jsons = commitVersionsOf(names)
+      LogListing(names, jsons.toSet,
+        (jsons ++ checkpointFiles(path, names).keys).maxOption)
     }
-    def physToLogical: Map[String, String] = p2l
-    val live = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
-    val txns = scala.collection.mutable.HashMap.empty[String, Long]
-    /** Remove TOMBSTONES still inside the retention window's reach:
-      * PROTOCOL.md checkpoints carry them so foreign VACUUM (which
-      * scans the checkpoint, not cleaned-up JSON) can still distinguish
-      * recently-removed files from untracked garbage.
-      *
-      * Keyed by the LOGICAL FILE identity — (path, DV descriptor; a
-      * remove restates its add's descriptor, so descriptor equality is
-      * PROTOCOL.md's `dvUniqueId` match) — the same key Delta
-      * reconciliation uses, NOT by path alone: a DV flip is
-      * remove(path, oldDV) + add(path, newDV), and under a
-      * path key the re-add erased (or pre-empted) the superseded
-      * identity's tombstone, so a checkpoint written after the flip
-      * dropped the remove that keeps the superseded deletion_vector
-      * file safe from foreign VACUUM inside the retention window
-      * (review finding — the r17 known limitation, now closed). Value
-      * = deletionTimestamp. */
-    val tombstones = scala.collection.mutable.LinkedHashMap
-      .empty[(String, Option[DeletionVectors.Descriptor]), Long]
-    /** metaData.id — restated verbatim by checkpoints (a fresh random
-      * id per checkpoint would change table identity under foreign
-      * streaming queries that pin it; review finding). */
-    var tableId: String = null
+
+    def target(path: String, log: LogListing, asOf: Option[Long]): Long = {
+      val latest = log.latest.getOrElse(
+        sys.error(s"no standard Delta log at $path"))
+      val target = asOf.getOrElse(latest)
+      require(target <= latest && (log.commits(target) ||
+          checkpointFiles(path, log.names).contains(target)),
+        s"version $target does not exist at $path (latest: $latest)")
+      target
+    }
+
+    // a checkpoint restates the complete state at its version as action
+    // rows — one Spark job (plus one per sidecar set), metadata-proportional
+    def checkpoints(spark: Option[SparkSession], path: String,
+        log: LogListing, v: Long): Seq[(Long, () => Seq[LogAction])] =
+      checkpointFiles(path, log.names).toSeq.filter(_._1 <= v)
+        .sortBy(-_._1).map { case (cp, files) =>
+          cp -> (() => deltaActions(files match {
+            case Left(parts) => spark.get.read.parquet(parts.map(_.toString): _*)
+              .toJSON.collect().toSeq.map(JsonMethods.parse(_))
+            case Right(manifest) =>
+              v2CheckpointActions(spark.get, path, cp, manifest)
+          }, s"checkpoint $cp"))
+        }
+
+    def commit(path: String, v: Long): Seq[LogAction] =
+      deltaActions(commitLines(path, v), s"commit $v")
+
+    def gate(path: String, snap: Snapshot): Unit = {
+      require(snap.schema != null,
+        s"no metaData action found replaying $path to version ${snap.version}")
+      checkProtocol(path, snap)
+    }
   }
+
+  private def commitLines(path: String, v: Long): Seq[JValue] =
+    Files.readAllLines(logDir(path).resolve(f"$v%020d.json")).asScala
+      .filter(_.nonEmpty).toSeq.map(JsonMethods.parse(_))
 
   /** Delta `add.path`/`remove.path` are RFC 2396 percent-encoded
     * relative URIs (PROTOCOL.md "Add File and Remove File"). */
@@ -235,155 +243,93 @@ object DeltaInterop {
   private def encodePath(p: String): String =
     new java.net.URI(null, null, p, null).getRawPath
 
-  /** metaData/protocol actions first — add actions need the schema to
-    * type their stats (and, under column mapping, to translate
-    * partitionValues keys to logical names). PROTOCOL.md does NOT
-    * guarantee metaData precedes add within a commit's line order, so
-    * BOTH the checkpoint replay and the JSON commit replay reorder
-    * (review finding: only the checkpoint path did — an
-    * add-before-metaData commit 0 silently dropped stats typing and
-    * re-attached mapped partition columns as NULL). Classified on the
-    * PARSED key set: a substring test would hoist an add row whose
-    * stats VALUES contain the text "metaData". */
-  private def isMeta(jv: JValue): Boolean = jv match {
-    case JObject(fs) => fs.exists { case (k, v) =>
-      (k == "metaData" || k == "protocol") && v != JNull }
-    case _ => false
-  }
+  private def stringsOf(j: Option[JValue]): Option[Seq[String]] =
+    j.collect { case JArray(xs) => xs.collect { case JString(x) => x } }
 
-  private def applyActionsMetaFirst(st: State, actions: Seq[JValue],
-      where: String): Unit = {
-    val (meta, rest) = actions.partition(isMeta)
-    (meta ++ rest).foreach(applyParsedAction(st, _, where))
-  }
-
-  private def applyParsedAction(st: State, jv: JValue,
-      where: String): Unit =
-    jv match {
-      case JObject(fields) => fields.foreach {
-        case ("metaData", JObject(m)) => applyMetaData(st, m.toMap, where)
+  /** The PROTOCOL.md codec: a commit's action lines, or a checkpoint's
+    * rows, → [[LogAction]]s. commitInfo / cdc / domainMetadata carry no
+    * snapshot state (a table REQUIRING them to read gates via protocol
+    * features). */
+  private def deltaActions(actions: Seq[JValue], where: String): Seq[LogAction] =
+    actions.flatMap {
+      case JObject(fields) => fields.flatMap {
+        case ("metaData", JObject(m)) =>
+          Some(LogAction.Meta(deltaMeta(m.toMap, where)))
         case ("protocol", JObject(p)) =>
           val pm = p.toMap
-          st.minReader = pm.get("minReaderVersion").collect {
-            case JInt(i) => i.toInt; case JLong(l) => l.toInt
-          }.getOrElse(1)
-          st.readerFeatures = pm.get("readerFeatures").collect {
-            case JArray(fs) => fs.collect { case JString(f) => f }
-          }.getOrElse(Nil)
-          st.minWriter = pm.get("minWriterVersion").collect {
-            case JInt(i) => i.toInt; case JLong(l) => l.toInt
-          }.getOrElse(1)
-          st.writerFeatures = pm.get("writerFeatures").collect {
-            case JArray(fs) => fs.collect { case JString(f) => f }
-          }.getOrElse(Nil)
-        case ("add", JObject(a)) =>
-          val am = a.toMap
-          // deletionVector descriptors parse into AddFile.dv, the same
-          // typed slot the native log fills; the read paths anti-filter
-          // the decoded row indexes. Unsupported STORAGE types still
-          // fail loudly — at bitmapBytes time, naming them.
-          val dvDesc = am.get("deletionVector") match {
-            case Some(o @ JObject(_)) =>
-              Some(DeletionVectors.parseJValue(o, where))
-            case Some(JNull) | None => None
-            case Some(_) => sys.error(
-              s"$where: malformed deletionVector on add action")
-          }
-          val rel = decodePath(am.get("path").collect {
-            case JString(s) => s
-          }.getOrElse(sys.error(s"$where: add action without path")))
-          val p2l = st.physToLogical
-          val pv = am.get("partitionValues") match {
-            // JSON null value = null partition (absent key reads as
-            // null through attachPartitionCols, same as Hive default).
-            // Under column mapping Delta keys partitionValues by the
-            // PHYSICAL name; graft's model (pruneFiles' pv fallback,
-            // attachPartitionCols) wants LOGICAL keys — translate.
-            case Some(JObject(vals)) =>
-              vals.collect { case (c, JString(s)) =>
-                p2l.getOrElse(c, c) -> s }.toMap
-            case _ => Map.empty[String, String]
-          }
-          val bytes = am.get("size").collect {
-            case JLong(l) => l; case JInt(i) => i.toLong
-          }.getOrElse(0L)
-          val (rows, stats) = am.get("stats") match {
-            case Some(JString(s)) if s.nonEmpty =>
-              parseStats(s, st.schema, st.partitionBy, st.physical)
-            case _ => (0L, Map.empty[String, ColStats])
-          }
-          val mtime = am.get("modificationTime").collect {
-            case JLong(l) => l; case JInt(i) => i.toLong
-          }
-          st.live(rel) = AddFile(rel, rows, stats, dvDesc,
-            pv, bytes = bytes, mtime = mtime)
-          // resurrect exactly THIS logical file (path + DV identity);
-          // a tombstone for the same path under a different DV
-          // identity refers to a superseded logical file and must
-          // survive the re-add (DV-flip checkpoint restatement)
-          st.tombstones.remove((rel, dvDesc))
+          Some(LogAction.SetProtocol(DeltaLite.Protocol(
+            longOf(pm.get("minReaderVersion")).fold(1)(_.toInt),
+            stringsOf(pm.get("readerFeatures")).getOrElse(Nil),
+            longOf(pm.get("minWriterVersion")).fold(1)(_.toInt),
+            stringsOf(pm.get("writerFeatures")).getOrElse(Nil))))
+        case ("add", JObject(a)) => Some(deltaAdd(a.toMap, where))
         case ("remove", JObject(r)) =>
           val rm = r.toMap
-          rm.get("path").collect { case JString(p) => p }.foreach { p =>
-            val rel = decodePath(p)
-            // Delta reconciliation identifies a LOGICAL file by (path,
-            // deletionVector.uniqueId), and line order within a commit
-            // is not guaranteed — a DV-flip commit may order
-            // [add(path, newDV), remove(path, oldDV-or-none)]. A
-            // remove evicts the live entry only when their DV
-            // identities MATCH EXACTLY (none matches none): if the
-            // add landed first, the live entry's identity differs and
-            // the remove refers to the superseded logical file — a
-            // path-only removal there silently dropped the whole file
-            // (wrong rows; review finding). Strict matching is correct
-            // for every spec-legal order; only a spec-violating remove
-            // (evicting a DV'd file without naming its DV) is
-            // mis-replayed, and in the safe direction across commits.
-            val rmDv = rm.get("deletionVector") match {
-              case Some(o @ JObject(_)) =>
-                Some(DeletionVectors.parseJValue(o, where))
-              case _ => None
-            }
-            val liveDv = st.live.get(rel).flatMap(_.dv)
-            if (liveDv == rmDv)
-              st.live.remove(rel)
-            // Tombstone the removed LOGICAL identity unconditionally:
-            // keyed by (path, DV identity), a tombstone can never
-            // shadow the live entry — when identities differ, the live
-            // file under the same path is a DIFFERENT logical file
-            // (the post-flip one), and a spec-conformant foreign
-            // replay reconciles on the same compound key, so a
-            // checkpoint restating both rows round-trips. This is what
-            // closes the r17 limitation: the flip's superseded
-            // identity now restates into checkpoints regardless of
-            // remove/add line order. deletionTimestamp is optional; an
-            // absent one defaults to 0 (already aged out) — defaulting
-            // to wall-clock would make replays non-deterministic and
-            // pin the tombstone in every future checkpoint (review
-            // finding)
-            st.tombstones((rel, rmDv)) =
-              rm.get("deletionTimestamp").collect {
-                case JLong(l) => l; case JInt(i) => i.toLong
-              }.getOrElse(0L)
+          // Delta reconciliation identifies a LOGICAL file by (path,
+          // deletionVector.uniqueId), and line order within a commit is
+          // not guaranteed — a DV-flip commit may order [add(path,
+          // newDV), remove(path, oldDV)]; a path-only eviction there
+          // would drop the whole file. So the remove evicts on an EXACT
+          // identity match and tombstones its identity — a tombstone
+          // keyed by (path, DV) never shadows the post-flip live file,
+          // and restates into checkpoints whatever the line order.
+          // deletionTimestamp is optional; an absent one is 0 (already
+          // aged out) — wall clock would make replays non-deterministic
+          // and pin the tombstone in every future checkpoint.
+          rm.get("path").collect { case JString(p) =>
+            LogAction.Remove(decodePath(p),
+              rm.get("deletionVector").collect { case o @ JObject(_) =>
+                DeletionVectors.parseJValue(o, where) },
+              longOf(rm.get("deletionTimestamp")).getOrElse(0L),
+              exactDv = true)
           }
         case ("txn", JObject(t)) =>
           val tm = t.toMap
           for {
-            app <- tm.get("appId").collect { case JString(a) => a }
-            ver <- tm.get("version").collect {
-              case JLong(l) => l; case JInt(i) => i.toLong
-            }
-          } st.txns(app) = math.max(ver, st.txns.getOrElse(app, Long.MinValue))
-        // commitInfo / cdc / domainMetadata carry no snapshot state; a
-        // table REQUIRING them to read gates via protocol features
-        case _ => ()
+            app <- tm.get("appId").collect { case JString(x) => x }
+            ver <- longOf(tm.get("version"))
+          } yield LogAction.Txn(app, ver)
+        case _ => None
       }
-      case _ => ()
+      case _ => Nil
     }
 
-  private def applyMetaData(st: State, m: Map[String, JValue],
-      where: String): Unit = {
-    m.get("id").foreach { case JString(i) => st.tableId = i; case _ => () }
+  /** A Delta add. Its `deletionVector` descriptor parses into
+    * `AddFile.dv`, the typed slot the native log fills (an unsupported
+    * STORAGE type fails loudly at bitmapBytes time, naming it). Under
+    * column mapping Delta keys partitionValues by PHYSICAL name; graft's
+    * model (pruneFiles' pv fallback, attachPartitionCols) wants logical
+    * keys. A JSON-null partition value is a null partition (an absent
+    * key reads as null, the Hive default). */
+  private def deltaAdd(am: Map[String, JValue], where: String): LogAction = {
+    val dv = am.get("deletionVector") match {
+      case Some(o @ JObject(_)) => Some(DeletionVectors.parseJValue(o, where))
+      case Some(JNull) | None => None
+      case Some(_) => sys.error(s"$where: malformed deletionVector on add action")
+    }
+    val rel = decodePath(am.get("path").collect { case JString(s) => s }
+      .getOrElse(sys.error(s"$where: add action without path")))
+    val rawPv = am.get("partitionValues") match {
+      case Some(JObject(vals)) => vals.collect { case (c, JString(s)) => c -> s }
+      case _ => Nil
+    }
+    val stats = am.get("stats").collect { case JString(s) if s.nonEmpty => s }
+    val bytes = longOf(am.get("size")).getOrElse(0L)
+    val mtime = longOf(am.get("modificationTime"))
+    LogAction.Add { meta =>
+      val (rows, colStats) = stats.fold((0L, Map.empty[String, ColStats]))(
+        parseStats(_, meta.schema, meta.partitionBy, meta.physical))
+      AddFile(rel, rows, colStats, dv,
+        rawPv.map { case (c, s) => meta.physToLogical.getOrElse(c, c) -> s }.toMap,
+        bytes = bytes, mtime = mtime)
+    }
+  }
+
+  /** A Delta metaData action. Its `id` is restated verbatim by
+    * checkpoints (a fresh random id per checkpoint would change table
+    * identity under foreign streaming queries that pin it). */
+  private def deltaMeta(m: Map[String, JValue],
+      where: String): Snapshot => Snapshot = {
     m.get("format").foreach {
       case JObject(f) => f.toMap.get("provider").foreach {
         case JString(p) => require(p.equalsIgnoreCase("parquet"),
@@ -392,46 +338,54 @@ object DeltaInterop {
       }
       case _ => ()
     }
-    m.get("schemaString").foreach {
-      case JString(s) =>
-        // Delta's schemaString IS Spark's StructType JSON dialect —
-        // including the column-mapping field metadata
-        st.schema = DataType.fromJson(s).asInstanceOf[StructType]
-        st.physical = st.schema.fields.flatMap { f =>
+    val id = m.get("id").collect { case JString(i) => i }
+    // Delta's schemaString IS Spark's StructType JSON dialect —
+    // including the column-mapping field metadata
+    val schema = m.get("schemaString").collect { case JString(s) =>
+      DataType.fromJson(s).asInstanceOf[StructType] }
+    val partitionBy = stringsOf(m.get("partitionColumns"))
+    val config = m.get("configuration").collect { case JObject(cs) =>
+      cs.collect { case (k, JString(v)) => k -> v }.toMap }
+    meta => {
+      val conf = config.getOrElse(meta.properties)
+      val sch = schema.getOrElse(meta.schema)
+      meta.copy(tableId = id.orElse(meta.tableId),
+        schema =
+          if (conf.get("delta.columnMapping.mode").contains("id") && sch != null)
+            withFieldIds(sch)
+          else sch,
+        // column mapping `name` mode: logical → physical parquet name,
+        // from `delta.columnMapping.physicalName` field metadata
+        physical = schema.fold(meta.physical)(_.fields.flatMap { f =>
           if (f.metadata.contains("delta.columnMapping.physicalName"))
             Some(f.name ->
               f.metadata.getString("delta.columnMapping.physicalName"))
           else None
-        }.toMap
-      case _ => ()
+        }.toMap),
+        partitionBy = partitionBy.getOrElse(meta.partitionBy),
+        properties = conf)
     }
-    st.partitionBy = m.get("partitionColumns").collect {
-      case JArray(ps) => ps.collect { case JString(p) => p }
-    }.getOrElse(st.partitionBy)
-    st.config = m.get("configuration").collect {
-      case JObject(cs) => cs.collect { case (k, JString(v)) => k -> v }.toMap
-    }.getOrElse(st.config)
-    // `id` mapping mode: parquet columns resolve by FIELD ID, not name
-    // (the file's column names are free to differ from physicalName —
-    // iceberg-converted tables do). Spark's reader speaks field ids
-    // natively when the read schema carries `parquet.field.id`
-    // metadata, so translate Delta's `delta.columnMapping.id` into it
-    // once here — every downstream read (snapshot scans, row-position
-    // DV reads, CDF) inherits the id-resolving schema through the
-    // shared physSchema copy.
-    if (st.config.get("delta.columnMapping.mode").contains("id") &&
-        st.schema != null)
-      st.schema = StructType(st.schema.fields.map { f =>
-        if (f.metadata.contains("delta.columnMapping.id") &&
-            !f.metadata.contains("parquet.field.id"))
-          f.copy(metadata = new MetadataBuilder()
-            .withMetadata(f.metadata)
-            .putLong("parquet.field.id",
-              f.metadata.getLong("delta.columnMapping.id"))
-            .build())
-        else f
-      })
   }
+
+  /** `id` mapping mode: parquet columns resolve by FIELD ID, not name
+    * (the file's column names are free to differ from physicalName —
+    * iceberg-converted tables do). Spark's reader speaks field ids
+    * natively when the read schema carries `parquet.field.id` metadata,
+    * so Delta's `delta.columnMapping.id` translates into it once at
+    * replay — every downstream read (snapshot scans, row-position DV
+    * reads, CDF) inherits the id-resolving schema through the shared
+    * physSchema copy. */
+  private def withFieldIds(schema: StructType): StructType =
+    StructType(schema.fields.map { f =>
+      if (f.metadata.contains("delta.columnMapping.id") &&
+          !f.metadata.contains("parquet.field.id"))
+        f.copy(metadata = new MetadataBuilder()
+          .withMetadata(f.metadata)
+          .putLong("parquet.field.id",
+            f.metadata.getLong("delta.columnMapping.id"))
+          .build())
+      else f
+    })
 
   /** Delta per-file `stats` JSON → (numRecords, typed graft ColStats).
     * Values land in the DECODED representation [[DeltaLite]] prunes on
@@ -458,9 +412,7 @@ object DeltaInterop {
         case JObject(fs) => fs.toMap
         case _ => return (0L, Map.empty)
       }
-      val rows = o.get("numRecords").collect {
-        case JLong(l) => l; case JInt(i) => i.toLong
-      }.getOrElse(0L)
+      val rows = longOf(o.get("numRecords")).getOrElse(0L)
       def side(key: String): Map[String, Any] = o.get(key) match {
         case Some(JObject(cols)) => cols.flatMap { case (c, v) =>
           types.get(c).flatMap(dt => decodeDeltaStat(dt, v)).map(c -> _)
@@ -514,77 +466,15 @@ object DeltaInterop {
     inst.getEpochSecond * 1000000L + inst.getNano / 1000L
   }
 
-  /** Replay the standard log to (and including) `asOf` (default
-    * latest) into graft's snapshot model. Starts from the newest
-    * classic checkpoint ≤ target when the JSON commits alone don't
-    * reach back to version 0; throws — naming what's missing — when
+  /** The standard log at `asOf` (default latest) in graft's snapshot
+    * model: the PROTOCOL.md codec through the shared replayer
+    * ([[DeltaLite.replayLog]] — tip cache, then the newest checkpoint at
+    * or below the target whose later commits are all present, else every
+    * commit from version 0). Throws — naming what's missing — when
     * neither can reconstruct the state. */
   def snapshot(spark: SparkSession, path: String,
-      asOf: Option[Long] = None): Snapshot = {
-    val (target, st) = replayState(spark, path, asOf)
-    toSnapshot(target, st)
-  }
-
-  private def toSnapshot(version: Long, st: State): Snapshot =
-    Snapshot(version, st.schema, st.live.values.toSeq,
-      txns = st.txns.toMap, partitionBy = st.partitionBy,
-      physical = st.physical, properties = st.config)
-
-  /** The full replay including the parts [[DeltaLite.Snapshot]] has no
-    * slot for (writer protocol) — the export surfaces gate on it. */
-  private def replayState(spark: SparkSession, path: String,
-      asOf: Option[Long] = None): (Long, State) = {
-    val log = listing(path)
-    val jsons = log.jsons
-    val cps = log.cps
-    // a version with BOTH a classic and a v2 checkpoint restates the
-    // same state — prefer the classic one (single read, no sidecars)
-    val v2s = log.v2s.filterNot(kv => cps.contains(kv._1))
-    val latest = log.latest.getOrElse(
-      sys.error(s"no standard Delta log at $path"))
-    val target = asOf.getOrElse(latest)
-    require(target <= latest && (jsons.contains(target) ||
-        cps.contains(target) || v2s.contains(target)),
-      s"version $target does not exist at $path (latest: $latest)")
-    val st = new State
-    // JSON-only replay when commits cover 0..target; otherwise replay
-    // the newest checkpoint ≤ target whose tail commits are all present
-    val fromCp: Option[Long] =
-      if (jsons.headOption.contains(0L) &&
-          jsons.takeWhile(_ <= target) == (0L to target)) None
-      else {
-        val cp = (cps.keySet ++ v2s.keySet).filter(_ <= target).maxOption
-          .getOrElse(
-            sys.error(s"cannot reconstruct version $target at $path: JSON " +
-              s"commits ${jsons.headOption.getOrElse("none")}..${jsons.lastOption
-                .getOrElse("none")} do not reach version 0 and no " +
-              "checkpoint (classic or v2) ≤ target exists"))
-        require(((cp + 1) to target).forall(jsons.contains),
-          s"cannot reconstruct version $target at $path: commits after " +
-            s"checkpoint $cp are incomplete")
-        Some(cp)
-      }
-    fromCp.foreach { cp =>
-      // a checkpoint restates the complete state at cp as action rows
-      // — one Spark job (plus one per sidecar set), metadata-proportional
-      val rows: Seq[JValue] =
-        if (cps.contains(cp))
-          spark.read.parquet(cps(cp).map(_.toString): _*)
-            .toJSON.collect().toSeq.map(JsonMethods.parse(_))
-        else v2CheckpointActions(spark, path, cp, v2s(cp))
-      applyActionsMetaFirst(st, rows, s"checkpoint $cp")
-    }
-    ((fromCp.map(_ + 1L).getOrElse(0L)) to target).foreach { v =>
-      val f = logDir(path).resolve(f"$v%020d.json")
-      applyActionsMetaFirst(st,
-        Files.readAllLines(f).asScala.filter(_.nonEmpty).toSeq
-          .map(JsonMethods.parse(_)), s"commit $v")
-    }
-    require(st.schema != null,
-      s"no metaData action found replaying $path to version $target")
-    checkProtocol(path, st)
-    (target, st)
-  }
+      asOf: Option[Long] = None): Snapshot =
+    DeltaLite.replayLog(DeltaLog, Some(spark), path, asOf)
 
   /** One v2 checkpoint manifest → the full action row set: validates
     * the mandatory `checkpointMetadata` (its declared version must
@@ -593,8 +483,8 @@ object DeltaInterop {
     * add/remove rows. A MISSING sidecar fails loudly — replaying
     * without it would silently drop its file actions, the wrong-rows
     * outcome this module never produces. `checkpointMetadata` and
-    * `sidecar` keys are inert in [[applyParsedAction]], so the
-    * combined row set replays through the one shared path. */
+    * `sidecar` keys are inert in [[deltaActions]], so the combined row
+    * set replays through the one shared path. */
   private def v2CheckpointActions(spark: SparkSession, path: String,
       cp: Long, manifest: Path): Seq[JValue] = {
     val raw: Seq[JValue] =
@@ -615,8 +505,7 @@ object DeltaInterop {
         "(mandatory per spec) — refusing to replay an unidentified " +
         "manifest")
     metas.foreach { m =>
-      val v = m.get("version").collect {
-        case JInt(i) => i.toLong; case JLong(l) => l }
+      val v = longOf(m.get("version"))
       require(v.contains(cp),
         s"v2 checkpoint $manifest declares version " +
           s"${v.getOrElse("<none>")} but is named for version $cp")
@@ -644,37 +533,38 @@ object DeltaInterop {
     raw ++ sidecarActions
   }
 
-  private def checkProtocol(path: String, st: State): Unit = {
-    val mappingMode = st.config.getOrElse("delta.columnMapping.mode", "none")
+  private def checkProtocol(path: String, snap: Snapshot): Unit = {
+    val mappingMode = snap.properties.getOrElse("delta.columnMapping.mode", "none")
     // `name` mode reads natively: the physical names feed the SAME
     // logical→physical aliasing graft's own RENAME COLUMN machinery
     // uses in readFiles. `id` mode reads by parquet FIELD ID (the
     // translated parquet.field.id metadata + Spark's field-id reader —
-    // see applyMetaData); anything else declines loudly.
+    // see withFieldIds); anything else declines loudly.
     require(mappingMode == "none" || mappingMode == "name" ||
         mappingMode == "id",
       s"$path requires column mapping mode '$mappingMode' — unsupported")
-    require(mappingMode == "none" || (st.schema != null &&
-        st.schema.fields.forall(f =>
+    require(mappingMode == "none" || (snap.schema != null &&
+        snap.schema.fields.forall(f =>
           f.metadata.contains("delta.columnMapping.physicalName"))),
       s"$path declares column mapping mode '$mappingMode' but not EVERY " +
         "field carries delta.columnMapping.physicalName metadata — a " +
         "partially-mapped schema would silently resolve the unmapped " +
         "columns by the wrong (logical) name")
     require(mappingMode != "id" ||
-        st.schema.fields.forall(f =>
+        snap.schema.fields.forall(f =>
           f.metadata.contains("delta.columnMapping.id")),
       s"$path declares column mapping mode 'id' but not EVERY field " +
         "carries delta.columnMapping.id metadata — field-id resolution " +
         "would silently miss the unmapped columns")
-    if (st.minReader >= 3) {
-      val unsupported = st.readerFeatures.filterNot(SupportedReaderFeatures)
+    val proto = snap.protocol
+    if (proto.minReader >= 3) {
+      val unsupported = proto.readerFeatures.filterNot(SupportedReaderFeatures)
       require(unsupported.isEmpty,
         s"$path requires reader features ${unsupported.mkString(", ")} — " +
           s"unsupported (this reader implements: " +
           s"${SupportedReaderFeatures.toSeq.sorted.mkString(", ")})")
-    } else require(st.minReader <= 2,
-      s"$path requires minReaderVersion ${st.minReader} — unsupported")
+    } else require(proto.minReader <= 2,
+      s"$path requires minReaderVersion ${proto.minReader} — unsupported")
   }
 
   // -------------------------------------------------------------- reads
@@ -693,7 +583,7 @@ object DeltaInterop {
   /** Spark's parquet reader resolves columns by FIELD ID (instead of
     * name) only under this conf; flip it on lazily the first time an
     * id-mapped schema (carrying the translated `parquet.field.id`
-    * metadata — see applyMetaData) reaches a read. The conf is
+    * metadata — see withFieldIds) reaches a read. The conf is
     * SESSION-GLOBAL and consumed at plan time (ParquetFileFormat
     * re-sets the hadoopConf key from the session conf, so a per-read
     * option cannot scope it) — schemas without the metadata keep
@@ -808,13 +698,13 @@ object DeltaInterop {
     * changes), seeds the state at `from - 1` (one snapshot — uses a
     * checkpoint when available), then per commit parses the action
     * lines ONCE, hands the consumer the pre-commit live-file map plus
-    * the commit's visible actions, advances the state through the
-    * commit, and re-gates the protocol. O(total touched files) for
-    * any range. The consumer sees `st` AFTER the commit applied (the
-    * at-v schema/partition/physical view). */
+    * the commit's visible actions, advances the snapshot through the
+    * commit with the shared [[DeltaLite.fold]], and re-gates the
+    * protocol. The consumer sees the snapshot AFTER the commit applied
+    * (the at-v schema/partition/physical view). */
   private def foldCommitRange[A](spark: SparkSession, path: String,
       from: Long, to: Long, what: String)(
-      consume: (Long, State, Map[String, AddFile], Seq[CommitAct]) => A)
+      consume: (Long, Snapshot, Map[String, AddFile], Seq[CommitAct]) => A)
       : Seq[A] = {
     val jsons = commitVersions(path)
     val jsonSet = jsons.toSet
@@ -823,21 +713,13 @@ object DeltaInterop {
         "has been cleaned up (a checkpoint restates STATE, not " +
         "per-commit changes); earliest JSON commit: " +
         s"${jsons.headOption.getOrElse(-1L)}"))
-    val st = new State
-    if (from > 0) {
-      val base = snapshot(spark, path, Some(from - 1))
-      base.files.foreach(f => st.live(f.path) = f)
-      st.schema = base.schema
-      st.partitionBy = base.partitionBy
-      st.physical = base.physical
-      st.config = base.properties
-    }
+    var snap =
+      if (from > 0) snapshot(spark, path, Some(from - 1))
+      else DeltaLite.Unreplayed
     (from to to).map { v =>
       foldedCommitsLocal.set(foldedCommitsLocal.get() + 1L)
-      val parsed = Files.readAllLines(
-        logDir(path).resolve(f"$v%020d.json")).asScala
-        .filter(_.nonEmpty).map(JsonMethods.parse(_))
-      val prevFiles: Map[String, AddFile] = st.live.toMap
+      val parsed = commitLines(path, v)
+      val prevFiles = snap.byPath
       val acts = parsed.flatMap {
         case JObject(fields) => fields.collectFirst {
           case (k @ ("add" | "remove" | "cdc"), JObject(a)) =>
@@ -865,10 +747,11 @@ object DeltaInterop {
         // cdc actions carry dataChange=false BY SPEC (they describe
         // the change, they don't change the table) — the flag only
         // gates add/remove visibility
-      }.filter(a => a.kind == "cdc" || a.dataChange).toSeq
-      applyActionsMetaFirst(st, parsed.toSeq, s"commit $v")
-      checkProtocol(path, st)
-      consume(v, st, prevFiles, acts)
+      }.filter(a => a.kind == "cdc" || a.dataChange)
+      snap = DeltaLite.fold(snap,
+        Iterator(v -> deltaActions(parsed, s"commit $v")))
+      checkProtocol(path, snap)
+      consume(v, snap, prevFiles, acts)
     }
   }
 
@@ -902,18 +785,18 @@ object DeltaInterop {
     import org.apache.spark.sql.functions.{col, lit}
     var lastSchema: StructType = null
     val perCommit = foldCommitRange(spark, path, fromVersion, toVersion,
-        "change feed") { (v, st, prevFiles, acts) =>
-      val schema = st.schema
+        "change feed") { (v, snap, prevFiles, acts) =>
+      val schema = snap.schema
       lastSchema = schema
-      val partitionBy = st.partitionBy
-      val physical = st.physical
+      val partitionBy = snap.partitionBy
+      val physical = snap.physical
       def phys(c: String) = physical.getOrElse(c, c)
       val cdcs = acts.filter(_.kind == "cdc")
       if (cdcs.nonEmpty) {
         // cdc files carry the table columns + _change_type as DATA;
         // their partitionValues are raw (physical under mapping)
         ensureFieldIdRead(spark, schema)
-        val p2l = st.physToLogical
+        val p2l = snap.physToLogical
         val dataFields = schema.fields
           .filterNot(f => partitionBy.contains(f.name))
           .map(f => f.copy(name = phys(f.name)))
@@ -950,8 +833,7 @@ object DeltaInterop {
         val (readds, freshActs) =
           addActs.partition(a => prevFiles.contains(a.rel))
         val freshRels = freshActs.map(_.rel).toSet
-        val fresh = st.live.values
-          .filter(f => freshRels.contains(f.path)).toSeq
+        val fresh = snap.files.filter(f => freshRels.contains(f.path))
         val removedOnly = acts
           .filter(a => a.kind == "remove" && !addRelSet.contains(a.rel))
           .map { a =>
@@ -966,7 +848,7 @@ object DeltaInterop {
         // pre-commit content excludes its already-deleted rows)
         def readAs(files: Seq[AddFile], label: String) =
           readLive(spark, path, schema, files, partitionBy, physical,
-            st.config)
+            snap.properties)
             .withColumn("_change_type", lit(label))
         val flipFrames: Seq[DataFrame] = if (readds.isEmpty) Nil else {
           val flipFiles = readds.map(a => prevFiles(a.rel))
@@ -983,10 +865,10 @@ object DeltaInterop {
           // restored rows (dropped from the DV) are inserts
           Seq(
             readOnlyPositions(spark, path, schema, flipFiles, partitionBy,
-              physical, st.config, diff(newPos, oldPos), newBytes)
+              physical, snap.properties, diff(newPos, oldPos), newBytes)
               .withColumn("_change_type", lit("delete")),
             readOnlyPositions(spark, path, schema, flipFiles, partitionBy,
-              physical, st.config, diff(oldPos, newPos), oldBytes)
+              physical, snap.properties, diff(oldPos, newPos), oldBytes)
               .withColumn("_change_type", lit("insert")))
         }
         (if (fresh.nonEmpty) Some(readAs(fresh, "insert")) else None)
@@ -1031,7 +913,7 @@ object DeltaInterop {
         new java.util.ArrayList[org.apache.spark.sql.Row](), sch))
     }
     foldCommitRange(spark, path, from, toVersion, "streaming read") {
-        (v, st, prevFiles, acts) =>
+        (v, snap, prevFiles, acts) =>
       // a DV flip on an already-live path IS a rewrite: the stream
       // delivered those rows already and the new add re-describes them
       val dvFlip = acts.exists(a =>
@@ -1043,10 +925,10 @@ object DeltaInterop {
           "ignoreChanges=true to accept re-delivered rewritten rows " +
           "(Delta's contract)")
       val addRels = acts.iterator.filter(_.kind == "add").map(_.rel).toSet
-      val files = st.live.values.filter(f => addRels.contains(f.path)).toSeq
+      val files = snap.files.filter(f => addRels.contains(f.path))
       // files carry their DV markers — delivery excludes deleted rows
-      readLive(spark, path, st.schema, files,
-        st.partitionBy, st.physical, st.config)
+      readLive(spark, path, snap.schema, files,
+        snap.partitionBy, snap.physical, snap.properties)
     }.reduce(_ unionByName _).transform(stripFieldIds)
   }
 
@@ -1086,23 +968,18 @@ object DeltaInterop {
   private[graft] def historyRows(path: String)
       : Seq[(Long, String, Long, Int, Int, Long)] =
     commitVersions(path).map { v =>
-      val lines = Files.readAllLines(
-        logDir(path).resolve(f"$v%020d.json")).asScala.filter(_.nonEmpty)
       var op = ""
       var ts = -1L
       var nAdd = 0
       var nRemove = 0
       var rowsAdded = 0L
-      lines.foreach(l => JsonMethods.parse(l) match {
+      commitLines(path, v).foreach {
         case JObject(fields) => fields.foreach {
           case ("commitInfo", JObject(ci)) =>
             val cm = ci.toMap
             cm.get("operation").foreach {
               case JString(o) => op = o; case _ => () }
-            cm.get("timestamp").foreach {
-              case JLong(t) => ts = t
-              case JInt(t) => ts = t.toLong
-              case _ => () }
+            longOf(cm.get("timestamp")).foreach(ts = _)
           case ("add", JObject(a)) =>
             nAdd += 1
             a.toMap.get("stats").foreach {
@@ -1114,7 +991,7 @@ object DeltaInterop {
           case _ => ()
         }
         case _ => ()
-      })
+      }
       (v, op, if (ts >= 0) ts else commitTimestamp(path, v),
         nAdd, nRemove, rowsAdded)
     }
@@ -1123,17 +1000,8 @@ object DeltaInterop {
     * operation) — operation from `commitInfo` when present. */
   def history(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    commitVersions(path).map { v =>
-      val op = Files.readAllLines(logDir(path).resolve(f"$v%020d.json"))
-        .asScala.iterator.filter(_.contains("\"commitInfo\""))
-        .map(JsonMethods.parse(_)).collectFirst {
-          case JObject(fs) => fs.collectFirst {
-            case ("commitInfo", JObject(ci)) => ci.collectFirst {
-              case ("operation", JString(o)) => o
-            }
-          }.flatten
-        }.flatten.getOrElse("")
-      (v, new java.sql.Timestamp(commitTimestamp(path, v)), op)
+    historyRows(path).map { case (v, op, ts, _, _, _) =>
+      (v, new java.sql.Timestamp(ts), op)
     }.toDF("version", "timestamp", "operation")
   }
 
@@ -1154,18 +1022,17 @@ object DeltaInterop {
       asOf: Option[Long] = None): Long = {
     require(DeltaLite.latestVersion(path).isEmpty,
       s"a graft-delta table already exists at $path")
-    val (v, st) = replayState(spark, path, asOf)
+    val snap = snapshot(spark, path, asOf)
     // `id`-mapped adoption declines: the native read path resolves
     // parquet columns by (physical) NAME, and id-mode files are free
     // to name columns anything (iceberg-converted tables do) — an
     // adopted table could silently read NULLs. Reading/streaming the
     // table through the interop surfaces keeps working.
-    require(!st.config.get("delta.columnMapping.mode").contains("id"),
+    require(!snap.properties.get("delta.columnMapping.mode").contains("id"),
       s"CONVERT FROM DELTA on $path: the table uses column mapping " +
         "mode 'id' — graft's native reader resolves by physical name, " +
         "which id-mode files do not guarantee; keep reading it through " +
         "the interop surfaces instead")
-    val snap = toSnapshot(v, st)
     val props =
       if (snap.files.forall(_.dv.isEmpty)) snap.properties
       else DeltaLite.withFeature(snap.properties, "deletionVectors",
@@ -1219,18 +1086,18 @@ object DeltaInterop {
   /** Append `df` to a standard Delta table — one adds-only commit
     * (Delta does not restate metaData per commit). */
   def exportAppend(spark: SparkSession, df: DataFrame, path: String): Long = {
-    val (v0, st0) = replayState(spark, path)
-    requireWritable(st0, path, "exportAppend", removesRows = false)
-    requireUnmapped(st0, path, "exportAppend")
-    requireSchemaMatch(df, st0, path, "exportAppend")
-    val adds = writeDataFiles(spark, df, root(path), st0.partitionBy)
-    DeltaLite.claimLoop((v0, st0)) { case (v, st) =>
-      requireWritable(st, path, "exportAppend", removesRows = false)
-      requireUnmapped(st, path, "exportAppend")
-      requireSchemaMatch(df, st, path, "exportAppend")
-      requireSameLayout(st, st0, path, "exportAppend")
-      writeCommitFile(path, v + 1,
-        adds.map(a => JsonMethods.compact(encodeDeltaAdd(a, st.schema))) :+
+    val snap0 = snapshot(spark, path)
+    requireWritable(snap0, path, "exportAppend", removesRows = false)
+    requireUnmapped(snap0, path, "exportAppend")
+    requireSchemaMatch(df, snap0, path, "exportAppend")
+    val adds = writeDataFiles(spark, df, root(path), snap0.partitionBy)
+    DeltaLite.claimLoop(snap0) { snap =>
+      requireWritable(snap, path, "exportAppend", removesRows = false)
+      requireUnmapped(snap, path, "exportAppend")
+      requireSchemaMatch(df, snap, path, "exportAppend")
+      requireSameLayout(snap, snap0, path, "exportAppend")
+      writeCommitFile(path, snap.version + 1,
+        adds.map(a => JsonMethods.compact(encodeDeltaAdd(a, snap.schema))) :+
           commitInfoLine("WRITE"))
     }(rebuildOnTip(spark, path, "exportAppend"))
   }
@@ -1243,12 +1110,12 @@ object DeltaInterop {
     * attach stale partitionValues and foreign readers would re-attach
     * the partition columns as NULL (review finding). Decline loudly;
     * the caller re-stages against fresh state. */
-  private def requireSameLayout(st: State, st0: State, path: String,
+  private def requireSameLayout(snap: Snapshot, snap0: Snapshot, path: String,
       op: String): Unit =
-    require(st.partitionBy == st0.partitionBy,
+    require(snap.partitionBy == snap0.partitionBy,
       s"$op on $path: the table's partitioning changed concurrently " +
-        s"(${st0.partitionBy.mkString(",")} -> " +
-        s"${st.partitionBy.mkString(",")}) — the staged files follow " +
+        s"(${snap0.partitionBy.mkString(",")} -> " +
+        s"${snap.partitionBy.mkString(",")}) — the staged files follow " +
         "the old layout; re-run the export against the new state")
 
   /** OVERWRITE the table's contents in one commit — delta-rs's
@@ -1259,22 +1126,22 @@ object DeltaInterop {
     * the native format's job). */
   def exportOverwrite(spark: SparkSession, df: DataFrame,
       path: String): Long = {
-    val (v0, st0) = replayState(spark, path)
-    requireWritable(st0, path, "exportOverwrite", removesRows = true)
-    requireUnmapped(st0, path, "exportOverwrite")
-    requireSchemaMatch(df, st0, path, "exportOverwrite")
-    val adds = writeDataFiles(spark, df, root(path), st0.partitionBy)
-    DeltaLite.claimLoop((v0, st0)) { case (v, st) =>
-      requireWritable(st, path, "exportOverwrite", removesRows = true)
-      requireUnmapped(st, path, "exportOverwrite")
-      requireSchemaMatch(df, st, path, "exportOverwrite")
-      requireSameLayout(st, st0, path, "exportOverwrite")
+    val snap0 = snapshot(spark, path)
+    requireWritable(snap0, path, "exportOverwrite", removesRows = true)
+    requireUnmapped(snap0, path, "exportOverwrite")
+    requireSchemaMatch(df, snap0, path, "exportOverwrite")
+    val adds = writeDataFiles(spark, df, root(path), snap0.partitionBy)
+    DeltaLite.claimLoop(snap0) { snap =>
+      requireWritable(snap, path, "exportOverwrite", removesRows = true)
+      requireUnmapped(snap, path, "exportOverwrite")
+      requireSchemaMatch(df, snap, path, "exportOverwrite")
+      requireSameLayout(snap, snap0, path, "exportOverwrite")
       val now = System.currentTimeMillis()
       // the CURRENT live set per attempt — a rebase removes the racing
       // writer's files too, which is exactly what overwrite means
-      writeCommitFile(path, v + 1,
-        adds.map(a => JsonMethods.compact(encodeDeltaAdd(a, st.schema))) ++
-          st.live.values.map(f => removeLine(f, now)) :+
+      writeCommitFile(path, snap.version + 1,
+        adds.map(a => JsonMethods.compact(encodeDeltaAdd(a, snap.schema))) ++
+          snap.files.map(f => removeLine(f, now)) :+
           commitInfoLine("WRITE"))
     }(rebuildOnTip(spark, path, "exportOverwrite"))
   }
@@ -1286,17 +1153,16 @@ object DeltaInterop {
     * [[exportDeleteWhere]]'s (deletion vectors). */
   def exportDeletePartition(spark: SparkSession, path: String,
       column: String, value: String): Long = {
-    DeltaLite.claimLoop(replayState(spark, path)) { case (v, st) =>
-      requireWritable(st, path, "exportDeletePartition", removesRows = true,
+    DeltaLite.claimLoop(snapshot(spark, path)) { snap =>
+      requireWritable(snap, path, "exportDeletePartition", removesRows = true,
         writesRows = false)
-      require(st.partitionBy.contains(column),
+      require(snap.partitionBy.contains(column),
         s"'$column' is not a partition column of $path " +
-          s"(partitioned by: ${st.partitionBy.mkString(", ")})")
-      val doomed = st.live.values.filter(_.pv.get(column).contains(value))
-        .toSeq
+          s"(partitioned by: ${snap.partitionBy.mkString(", ")})")
+      val doomed = snap.files.filter(_.pv.get(column).contains(value))
       require(doomed.nonEmpty, s"no live files with $column=$value at $path")
       val now = System.currentTimeMillis()
-      writeCommitFile(path, v + 1,
+      writeCommitFile(path, snap.version + 1,
         doomed.map(removeLine(_, now)) :+ commitInfoLine("DELETE"))
     }(rebuildOnTip(spark, path, "exportDeletePartition"))
   }
@@ -1318,7 +1184,7 @@ object DeltaInterop {
     * times (DV positions, rewrite source, cdc images). A DELETE's
     * matched frame carries positions only; no data column reaches its
     * commit. */
-  private final case class Located(v0: Long, st0: State,
+  private final case class Located(snap0: Snapshot,
       withPos: DataFrame, oldPos: DataFrame, matched: DataFrame) {
     /** The freshly-deleted (`path`, `row_index`) positions. */
     def fresh: DataFrame = matched.select("path", "row_index")
@@ -1345,26 +1211,26 @@ object DeltaInterop {
   private def locateRows(spark: SparkSession, path: String, op: String,
       commitOp: String, scope: RowScope): Either[Long, Located] = {
     import org.apache.spark.sql.functions.{col, count, expr, lit}
-    val (v0, st0) = replayState(spark, path)
-    requireWritable(st0, path, op, removesRows = true,
+    val snap0 = snapshot(spark, path)
+    requireWritable(snap0, path, op, removesRows = true,
       writesRows = scope match {
         case Where(_, set) => set.nonEmpty
         case _: OnKeys => true
       })
-    requireUnmapped(st0, path, op)
-    DeltaLite.requireNoPosCollision(st0.schema, st0.physical,
+    requireUnmapped(snap0, path, op)
+    DeltaLite.requireNoPosCollision(snap0.schema, snap0.physical,
       s"deletion-vector ${commitOp.toLowerCase}")
     val (bounds, matchRows) = scope match {
       case Where(predicate, set) =>
-        val unknown = set.keySet -- st0.schema.fieldNames
+        val unknown = set.keySet -- snap0.schema.fieldNames
         require(unknown.isEmpty,
           s"$op on $path: SET names unknown column(s) " +
             s"${unknown.toSeq.sorted.mkString(", ")}")
-        if (st0.live.isEmpty) return Left(v0)
+        if (snap0.files.isEmpty) return Left(snap0.version)
         // analyzing over an empty frame validates the predicate's
         // names/types before any I/O
         val emptyT = spark.createDataFrame(
-          new java.util.ArrayList[Row](), st0.schema)
+          new java.util.ArrayList[Row](), snap0.schema)
         val conds = emptyT.filter(expr(predicate))
           .queryExecution.analyzed.collect {
             case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
@@ -1388,9 +1254,9 @@ object DeltaInterop {
             else hit
           })
       case OnKeys(src, keys) =>
-        requireSchemaMatch(src, st0, path, op)
+        requireSchemaMatch(src, snap0, path, op)
         require(keys.nonEmpty, s"$op on $path: empty key list")
-        val unknown = keys.toSet -- st0.schema.fieldNames
+        val unknown = keys.toSet -- snap0.schema.fieldNames
         require(unknown.isEmpty,
           s"$op on $path: unknown key column(s) " +
             s"${unknown.toSeq.sorted.mkString(", ")}")
@@ -1402,22 +1268,23 @@ object DeltaInterop {
             "multiple-source-match error); de-duplicate the source " +
             "first")
         // empty source: nothing matches, nothing inserts
-        if (src.isEmpty) return Left(v0)
+        if (src.isEmpty) return Left(snap0.version)
         (DeltaLite.sourceKeyBounds(src, keys),
           (pos: DataFrame) =>
             pos.join(src.select(keys.map(col): _*), keys, "left_semi"))
     }
-    val candidates = DeltaLite.pruneFiles(toSnapshot(v0, st0), bounds)
-    if (candidates.isEmpty && scope.isInstanceOf[Where]) return Left(v0)
-    val withPos = DeltaLite.readFilesWithPos(spark, path, st0.schema,
-      candidates.map(_.copy(dv = None)), st0.partitionBy, st0.physical,
-      st0.config)
+    val candidates = DeltaLite.pruneFiles(snap0, bounds)
+    if (candidates.isEmpty && scope.isInstanceOf[Where])
+      return Left(snap0.version)
+    val withPos = DeltaLite.readFilesWithPos(spark, path, snap0.schema,
+      candidates.map(_.copy(dv = None)), snap0.partitionBy, snap0.physical,
+      snap0.properties)
     val (oldPos, _) = DeltaLite.dvPositionsFrame(spark, path,
       candidates.flatMap(f => f.dv.map(f.path -> _)))
     val matched = graft.Frames.cut(matchRows(withPos).join(oldPos,
       col("path") === col("__dv_path") &&
         col("row_index") === col("__dv_ri"), "left_anti"))
-    Right(Located(v0, st0, withPos, oldPos, matched))
+    Right(Located(snap0, withPos, oldPos, matched))
   }
 
   /** Row-level DELETE on a standard Delta table via DELETION VECTORS —
@@ -1444,7 +1311,7 @@ object DeltaInterop {
     import org.apache.spark.sql.functions.{expr, lit}
     locateRows(spark, path, "exportDeleteWhere", "DELETE",
         Where(predicate)).fold(identity, l =>
-      dvFlipCommit(spark, path, "exportDeleteWhere", "DELETE", l.v0, l.st0,
+      dvFlipCommit(spark, path, "exportDeleteWhere", "DELETE", l.snap0,
         l.fresh, l.oldPos, () => Nil,
         () => Some(l.withPos.filter(expr(predicate))
           .join(l.fresh, Seq("path", "row_index"), "left_semi")
@@ -1475,16 +1342,16 @@ object DeltaInterop {
       // every SET expression sees the OLD row (one select, not chained
       // withColumn — a chained form would let one SET read another's
       // result); the cast to the declared type is UPDATE's implicit cast
-      val rewritten = matchedData.select(l.st0.schema.fields.map(f =>
+      val rewritten = matchedData.select(l.snap0.schema.fields.map(f =>
         set.get(f.name)
           .map(e => expr(e).cast(f.dataType).as(f.name))
           .getOrElse(col(f.name))).toSeq: _*)
-      requireSchemaMatch(rewritten, l.st0, path, "exportUpdateWhere")
-      dvFlipCommit(spark, path, "exportUpdateWhere", "UPDATE", l.v0,
-        l.st0, l.fresh, l.oldPos,
+      requireSchemaMatch(rewritten, l.snap0, path, "exportUpdateWhere")
+      dvFlipCommit(spark, path, "exportUpdateWhere", "UPDATE", l.snap0,
+        l.fresh, l.oldPos,
         () => if (l.matched.isEmpty) Nil
           else writeDataFiles(spark, rewritten, root(path),
-            l.st0.partitionBy),
+            l.snap0.partitionBy),
         () => Some(
           matchedData
             .withColumn("_change_type", lit("update_preimage"))
@@ -1513,7 +1380,7 @@ object DeltaInterop {
     val src = graft.Frames.cut(source)
     locateRows(spark, path, "exportMerge", "MERGE", OnKeys(src, keys))
         .fold(identity, l => {
-      val cols = l.st0.schema.fieldNames.map(col).toSeq
+      val cols = l.snap0.schema.fieldNames.map(col).toSeq
       val matchedData = l.matched.drop("path", "row_index")
       // WHEN MATCHED: each matched target row takes its source row's
       // values (a key shared by N target rows yields N identical
@@ -1526,11 +1393,11 @@ object DeltaInterop {
       val inserts = src.join(l.matched.select(keys.map(col): _*),
         keys, "left_anti").select(cols: _*)
       val appendDf = rewritten.unionByName(inserts)
-      dvFlipCommit(spark, path, "exportMerge", "MERGE", l.v0, l.st0,
+      dvFlipCommit(spark, path, "exportMerge", "MERGE", l.snap0,
         l.fresh, l.oldPos,
         () => if (appendDf.isEmpty) Nil
           else writeDataFiles(spark, appendDf, root(path),
-            l.st0.partitionBy),
+            l.snap0.partitionBy),
         () => Some(
           matchedData
             .withColumn("_change_type", lit("update_preimage"))
@@ -1558,13 +1425,13 @@ object DeltaInterop {
     * the rebase declines any concurrent append/flip, so the staged
     * rows stay exactly the commit's change set on every attempt. */
   private def dvFlipCommit(spark: SparkSession, path: String,
-      op: String, commitOp: String, v0: Long, st0: State,
+      op: String, commitOp: String, snap0: Snapshot,
       fresh: DataFrame, oldPos: DataFrame,
       stageAdds: () => Seq[AddFile],
       cdcFrame: () => Option[DataFrame]): Long = {
     val newDv = DeltaLite.writeDeletionVectors(spark, path, fresh, oldPos)
     val newAdds = stageAdds()
-    if (newDv.isEmpty && newAdds.isEmpty) return v0 // no-op
+    if (newDv.isEmpty && newAdds.isEmpty) return snap0.version // no-op
     // delta.enableChangeDataFeed=true obliges ROW-LEVEL change files:
     // a foreign CDF reader sees remove+re-add of the same path as a
     // file rewrite, so the change rows materialize under
@@ -1572,24 +1439,24 @@ object DeltaInterop {
     // readers then use as the ONLY change source for this commit
     // (PROTOCOL.md "Change Data Files"; dataChange=false BY SPEC)
     val cdcActs: Seq[String] =
-      if (!st0.config.get("delta.enableChangeDataFeed")
+      if (!snap0.properties.get("delta.enableChangeDataFeed")
           .exists(_.equalsIgnoreCase("true"))) Nil
-      else cdcFrame().map(stageCdcFiles(spark, path, _, st0))
+      else cdcFrame().map(stageCdcFiles(spark, path, _, snap0))
         .getOrElse(Nil)
-    DeltaLite.claimLoop((v0, st0)) { case (v, st) =>
-      requireWritable(st, path, op, removesRows = true,
+    DeltaLite.claimLoop(snap0) { snap =>
+      requireWritable(snap, path, op, removesRows = true,
         writesRows = newAdds.nonEmpty)
-      requireUnmapped(st, path, op)
+      requireUnmapped(snap, path, op)
       // rebase safety: every touched file must still be live under the
       // EXACT DV identity the union was computed against — a foreign
       // flip in the race window means our union misses its deletes
       // (committing would RESURRECT them); a foreign removal means the
       // file is gone (committing would resurrect the whole file)
       newDv.foreach { case (p, _) =>
-        val cur = st.live.get(p).getOrElse(sys.error(
+        val cur = snap.byPath.get(p).getOrElse(sys.error(
           s"$op on $path: file '$p' was removed by a concurrent " +
             "writer — re-run against fresh state"))
-        require(cur.dv == st0.live(p).dv,
+        require(cur.dv == snap0.byPath(p).dv,
           s"$op on $path: the deletion vector of '$p' changed " +
             "concurrently — re-run against fresh state (committing a " +
             "stale union would resurrect rows)")
@@ -1599,23 +1466,23 @@ object DeltaInterop {
       // committing over it yields a history no serial order explains
       // (delta-spark's ConcurrentAppendException). Decline every
       // concurrent add; re-running re-evaluates the full live set.
-      val appended = st.live.keySet -- st0.live.keySet
+      val appended = snap.byPath.keySet -- snap0.byPath.keySet
       require(appended.isEmpty,
         s"$op on $path: file(s) " +
           s"${appended.toSeq.sorted.take(3).mkString(", ")} were " +
           "appended concurrently and may match — re-run against " +
           "fresh state")
       val now = System.currentTimeMillis()
-      writeCommitFile(path, v + 1,
-        (if (newDv.isEmpty) None else dvProtocolUpgrade(st)).toSeq ++
+      writeCommitFile(path, snap.version + 1,
+        (if (newDv.isEmpty) None else dvProtocolUpgrade(snap)).toSeq ++
           newDv.flatMap { case (p, d) =>
-            val old = st.live(p)
+            val old = snap.byPath(p)
             val upd = old.copy(dv = Some(d))
             Seq(removeLine(old, now),
-              JsonMethods.compact(encodeDeltaAdd(upd, st.schema)))
+              JsonMethods.compact(encodeDeltaAdd(upd, snap.schema)))
           } ++
           newAdds.map(a => JsonMethods.compact(
-            encodeDeltaAdd(a, st.schema))) ++
+            encodeDeltaAdd(a, snap.schema))) ++
           cdcActs :+ commitInfoLine(commitOp))
     }(rebuildOnTip(spark, path, op))
   }
@@ -1624,16 +1491,16 @@ object DeltaInterop {
     * under `_change_data/` — per-partition files when the table is
     * partitioned — and return the commit's cdc action lines. */
   private def stageCdcFiles(spark: SparkSession, path: String,
-      df: DataFrame, st0: State): Seq[String] = {
+      df: DataFrame, snap0: Snapshot): Seq[String] = {
     val stage = root(path).resolve("_change_data")
       .resolve("cdc-" + java.util.UUID.randomUUID.toString.take(12))
-    val writer = if (st0.partitionBy.nonEmpty)
-      df.write.partitionBy(st0.partitionBy: _*) else df.write
+    val writer = if (snap0.partitionBy.nonEmpty)
+      df.write.partitionBy(snap0.partitionBy: _*) else df.write
     writer.parquet(stage.toString)
-    val cdcSchema = StructType(st0.schema.fields :+
+    val cdcSchema = StructType(snap0.schema.fields :+
       StructField("_change_type", StringType))
     DeltaLite.footerAdds(spark, root(path), stage, cdcSchema,
-      st0.partitionBy, Map.empty).map(a =>
+      snap0.partitionBy, Map.empty).map(a =>
       JsonMethods.compact(JObject(List("cdc" -> JObject(List(
         "path" -> JString(encodePath(a.path)),
         "partitionValues" -> JObject(a.pv.toList.sortBy(_._1)
@@ -1648,16 +1515,16 @@ object DeltaInterop {
     * reader/writer feature lists that RESTATE the legacy versions'
     * implied features (PROTOCOL.md: a table-features upgrade must name
     * everything the table uses). */
-  private def dvProtocolUpgrade(st: State): Option[String] = {
-    val has = st.minReader >= 3 &&
-      st.readerFeatures.contains("deletionVectors") &&
-      st.minWriter >= 7 && st.writerFeatures.contains("deletionVectors")
+  private def dvProtocolUpgrade(snap: Snapshot): Option[String] = {
+    val p = snap.protocol
+    val has = p.minReader >= 3 && p.readerFeatures.contains("deletionVectors") &&
+      p.minWriter >= 7 && p.writerFeatures.contains("deletionVectors")
     if (has) None
     else {
-      val readerFeats = (if (st.minReader >= 3) st.readerFeatures.toSet
-        else if (st.minReader == 2) Set("columnMapping")
+      val readerFeats = (if (p.minReader >= 3) p.readerFeatures.toSet
+        else if (p.minReader == 2) Set("columnMapping")
         else Set.empty[String]) + "deletionVectors"
-      val writerFeats = effectiveWriterFeatures(st) + "deletionVectors"
+      val writerFeats = effectiveWriterFeatures(snap) + "deletionVectors"
       Some(JsonMethods.compact(JObject(List("protocol" -> JObject(List(
         "minReaderVersion" -> JInt(3),
         "minWriterVersion" -> JInt(7),
@@ -1702,15 +1569,15 @@ object DeltaInterop {
   /** Legacy minWriterVersions imply fixed feature sets (PROTOCOL.md
     * "Table Features" — a version-7 upgrade must restate them); the
     * uniform gate below reasons about FEATURES, so translate once. */
-  private def effectiveWriterFeatures(st: State): Set[String] =
-    if (st.minWriter >= 7) st.writerFeatures.toSet
+  private def effectiveWriterFeatures(snap: Snapshot): Set[String] =
+    if (snap.protocol.minWriter >= 7) snap.protocol.writerFeatures.toSet
     else Seq(
       2 -> Seq("appendOnly", "invariants"),
       3 -> Seq("checkConstraints"),
       4 -> Seq("changeDataFeed", "generatedColumns"),
       5 -> Seq("columnMapping"),
       6 -> Seq("identityColumns"))
-      .filter(_._1 <= st.minWriter).flatMap(_._2).toSet
+      .filter(_._1 <= snap.protocol.minWriter).flatMap(_._2).toSet
 
   /** Writer features whose per-commit obligations these exporters MEET
     * (each conditionally — the checks in [[requireWritable]] are the
@@ -1730,17 +1597,19 @@ object DeltaInterop {
     "deletionVectors", "timestampNtz", "typeWidening",
     "typeWidening-preview", "vacuumProtocolCheck", "v2Checkpoint")
 
-  private def requireWritable(st: State, path: String, op: String,
+  private def requireWritable(snap: Snapshot, path: String, op: String,
       removesRows: Boolean, writesRows: Boolean = true): Unit = {
-    val feats = effectiveWriterFeatures(st)
+    val feats = effectiveWriterFeatures(snap)
     val unmet = (feats -- HonoredWriterFeatures).toSeq.sorted
     require(unmet.isEmpty,
       s"$op on $path: the table requires minWriterVersion " +
-        s"${st.minWriter} with writer features ${unmet.mkString(", ")} " +
+        s"${snap.protocol.minWriter} with writer features " +
+        s"${unmet.mkString(", ")} " +
         "whose write obligations this exporter does not meet; use the " +
         "native format (CONVERT FROM DELTA) for full write semantics")
     require(!removesRows ||
-        !st.config.get("delta.appendOnly").exists(_.equalsIgnoreCase("true")),
+        !snap.properties.get("delta.appendOnly")
+          .exists(_.equalsIgnoreCase("true")),
       s"$op on $path: the table declares delta.appendOnly=true — a " +
         "row-removing commit would break the append-only contract " +
         "downstream consumers rely on")
@@ -1748,16 +1617,16 @@ object DeltaInterop {
     // delete cannot create a violating row) — and only when the table
     // actually declares one
     require(!writesRows ||
-        !st.config.keys.exists(_.startsWith("delta.constraints.")),
+        !snap.properties.keys.exists(_.startsWith("delta.constraints.")),
       s"$op on $path: the table declares CHECK constraints " +
-        s"(${st.config.keys.filter(_.startsWith("delta.constraints."))
+        s"(${snap.properties.keys.filter(_.startsWith("delta.constraints."))
           .mkString(", ")}) this exporter does not enforce — writing " +
         "without enforcement would violate the writer contract")
     // generated/identity columns oblige the writer to PRODUCE
     // conforming values on new rows — gate row-writing commits when
     // the schema actually carries the metadata
-    if (writesRows && st.schema != null) {
-      val special = st.schema.fields.collect {
+    if (writesRows && snap.schema != null) {
+      val special = snap.schema.fields.collect {
         case f if f.metadata.contains("delta.generationExpression") =>
           s"${f.name} (generated)"
         case f if f.metadata.contains("delta.identity.start") ||
@@ -1783,8 +1652,8 @@ object DeltaInterop {
       case MapType(_, vt, _) => invariantIn(vt, at)
       case _ => None
     }
-    if (writesRows && st.schema != null)
-      invariantIn(st.schema, "").foreach(c => sys.error(
+    if (writesRows && snap.schema != null)
+      invariantIn(snap.schema, "").foreach(c => sys.error(
         s"$op on $path: column '$c' carries a delta.invariants " +
           "expression this exporter does not enforce — writing without " +
           "enforcement would violate the writer contract"))
@@ -1796,19 +1665,19 @@ object DeltaInterop {
     * promise non-null while the files carry nulls — foreign readers
     * trust the schema). A batch whose column provably holds no nulls
     * declares it non-nullable and passes. */
-  private def requireSchemaMatch(df: DataFrame, st: State, path: String,
+  private def requireSchemaMatch(df: DataFrame, snap: Snapshot, path: String,
       op: String): Unit = {
     require(df.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-        st.schema.fields.map(f => (f.name, f.dataType)).toSeq,
+        snap.schema.fields.map(f => (f.name, f.dataType)).toSeq,
       s"$op schema ${df.schema.simpleString} does not match table " +
-        s"schema ${st.schema.simpleString}")
+        s"schema ${snap.schema.simpleString}")
     // Non-nullable table columns enforce on the DATA (the actual
     // writer-v2 obligation), not the batch's nullable flag — every
     // file-sourced frame reads back nullable=true even when it holds
     // no nulls, so a flag check would decline all round-trips (review
     // finding). One cheap existence probe per affected column; usually
     // none are.
-    val suspect = st.schema.fields
+    val suspect = snap.schema.fields
       .filter(tf => !tf.nullable &&
         df.schema.fields.exists(bf => bf.name == tf.name && bf.nullable))
       .map(_.name)
@@ -1831,9 +1700,9 @@ object DeltaInterop {
     * un-gated these). [[exportDeletePartition]] stays allowed — remove
     * actions carry only paths, no name-bearing artifact — as do
     * reading and CONVERT FROM DELTA. */
-  private def requireUnmapped(st: State, path: String,
+  private def requireUnmapped(snap: Snapshot, path: String,
       op: String): Unit =
-    require(st.physical.isEmpty,
+    require(snap.physical.isEmpty,
       s"$op on $path: the table uses column mapping — this exporter " +
         "writes logical-named artifacts, which a mapped table's " +
         "readers would resolve to NULLs; read/convert the table " +
@@ -1959,11 +1828,11 @@ object DeltaInterop {
     * checkpointed tables. At most 16 attempts keep a runaway-writer
     * table loud. */
   private def rebuildOnTip(spark: SparkSession, path: String, op: String)(
-      lostOn: (Long, State), losses: Int): (Long, State) = {
+      lostOn: Snapshot, losses: Int): Snapshot = {
     require(losses < 16,
       s"$op on $path lost $losses consecutive commit claims — " +
         "a livelocked or runaway-writer table; giving up loudly")
-    replayState(spark, path)
+    snapshot(spark, path)
   }
 
   /** The classic checkpoint parquet schema (PROTOCOL.md "Checkpoints"),
@@ -2070,23 +1939,21 @@ object DeltaInterop {
     * look for, and the fixture this module's own checkpoint replay path
     * is tested against. */
   def exportCheckpoint(spark: SparkSession, path: String): Long = {
-    val (v0, st0) = replayState(spark, path)
-    requireUnmapped(st0, path, "exportCheckpoint")
+    val snap = snapshot(spark, path)
+    requireUnmapped(snap, path, "exportCheckpoint")
     // WRITER-side gate (review finding: the read path accepting a
     // feature says nothing about CHECKPOINTING it — a checkpoint that
     // restates the protocol but drops a feature's mandated state is
     // worse than declining, because foreign readers fast-starting from
     // _last_checkpoint after JSON cleanup lose that state silently).
-    val unsafe = st0.writerFeatures.filterNot(CheckpointSafeWriterFeatures)
+    val proto = snap.protocol
+    val unsafe = proto.writerFeatures.filterNot(CheckpointSafeWriterFeatures)
     require(unsafe.isEmpty,
       s"exportCheckpoint on $path: writer features " +
         s"${unsafe.mkString(", ")} mandate state (actions or per-add " +
         "fields) this classic checkpointer does not restate — a " +
         "checkpoint would silently drop it; checkpoint with the " +
         "feature-aware writer that owns the table instead")
-    val snap = Snapshot(v0, st0.schema, st0.live.values.toSeq,
-      txns = st0.txns.toMap, partitionBy = st0.partitionBy,
-      physical = st0.physical, properties = st0.config)
     def statsJson(f: AddFile): String = deltaStatsJson(f, snap.schema)
     def dvRow(d: DeletionVectors.Descriptor): Row =
       Row(d.storageType, d.pathOrInlineDv,
@@ -2096,22 +1963,23 @@ object DeltaInterop {
     // remove tombstones still inside the retention window ride along —
     // foreign VACUUM resolves "recently removed, don't collect yet"
     // from the checkpoint once the JSON commits are cleaned up
-    val keepSince = now - tombstoneRetentionMs(st0.config)
-    val tombs = st0.tombstones.toSeq.filter(_._2 >= keepSince)
+    val keepSince = now - tombstoneRetentionMs(snap.properties)
+    val tombs = snap.tombstones.toSeq.filter(_._2 >= keepSince)
+      .sortBy { case ((p, dv), _) => (p, dv.map(DeletionVectors.toJson)) }
     // the checkpoint RESTATES the table's protocol — hardcoding (1,2)
     // would falsify a higher-versioned table's requirements once the
     // JSON commits are cleaned up, and launder writes past the
     // requireWritable gate on replay-from-checkpoint (review finding)
     val rows: Seq[Row] =
-      Seq(Row(Row(st0.minReader, st0.minWriter,
-          if (st0.readerFeatures.isEmpty) null else st0.readerFeatures,
-          if (st0.writerFeatures.isEmpty) null else st0.writerFeatures),
+      Seq(Row(Row(proto.minReader, proto.minWriter,
+          if (proto.readerFeatures.isEmpty) null else proto.readerFeatures,
+          if (proto.writerFeatures.isEmpty) null else proto.writerFeatures),
         null, null, null, null),
         // restate the table's OWN id — a fresh random id per checkpoint
         // would change table identity under foreign streaming queries
         // that pin metaData.id (review finding); random only for a
         // spec-violating foreign log that never declared one
-        Row(null, Row(Option(st0.tableId)
+        Row(null, Row(snap.tableId
             .getOrElse(java.util.UUID.randomUUID.toString), Row("parquet"),
           snap.schema.json, snap.partitionBy, snap.properties), null,
           null, null)) ++

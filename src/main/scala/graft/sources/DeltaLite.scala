@@ -26,7 +26,10 @@ import scala.jdk.CollectionConverters._
   *                    committed atomically (write temp + rename) AFTER the
   *                    data write, so readers never see a half-written
   *                    version (the Delta log's visibility rule).
-  *   - snapshot read: replay actions 0..V → live file set → one parquet
+  *   - snapshot read: the graft-JSON codec decodes the log and the one
+  *                    replay fold both logs share ([[replayLog]]) folds
+  *                    it — from the cached tip, else the newest
+  *                    checkpoint — into the live file set → one parquet
   *                    scan over exactly those files (distributed,
   *                    predicate-pushable), built from the log's file
   *                    list with no Spark listing: above 32 paths a
@@ -110,7 +113,16 @@ object DeltaLite {
         * stats. A cold replay from a checkpoint sees only post-checkpoint
         * commits, so this is a LOWER bound there (same caveat as
         * cleanupLogs-pruned history). */
-      churnVersions: Seq[Long] = Nil) {
+      churnVersions: Seq[Long] = Nil,
+      /** `_delta_log` state the native log leaves empty: the protocol
+        * action, the remove TOMBSTONES keyed by logical file identity
+        * (path, DV descriptor) → deletionTimestamp (PROTOCOL.md
+        * checkpoints restate them for foreign VACUUM), and `metaData.id`
+        * (checkpoints restate it: foreign streams pin table identity). */
+      protocol: Protocol = Protocol(),
+      tombstones: Map[(String, Option[DeletionVectors.Descriptor]), Long] =
+        Map.empty,
+      tableId: Option[String] = None) {
     def filePaths(root: Path): Seq[String] = files.map(f => root.resolve(f.path).toString)
     def totalRows: Long = files.map(_.rows).sum
     /** Sum of logged file sizes (0 for pre-sizes-era adds). */
@@ -121,7 +133,24 @@ object DeltaLite {
       * files written before and after a rename share physical names and
       * are never rewritten. Identity for unmapped columns. */
     def phys(c: String): String = physical.getOrElse(c, c)
+    /** Physical → logical column name (Delta keys partitionValues by
+      * the physical name under column mapping). */
+    lazy val physToLogical: Map[String, String] = physical.map(_.swap)
+    /** Column types keyed by PHYSICAL name — the key space of file
+      * stats, so decoding an add's stats is one lookup per column. */
+    lazy val statTypes: Map[String, DataType] =
+      if (schema == null) Map.empty
+      else schema.fields.map(f => phys(f.name) -> f.dataType).toMap
+    /** Live files by table-relative path. */
+    lazy val byPath: Map[String, AddFile] =
+      files.iterator.map(f => f.path -> f).toMap
   }
+
+  /** A Delta `protocol` action: reader and writer versions and feature
+    * lists. Only `_delta_log` replay sets it — the native log carries
+    * its features in table properties ([[ProtocolReaderKey]]). */
+  final case class Protocol(minReader: Int = 1, readerFeatures: Seq[String] = Nil,
+      minWriter: Int = 1, writerFeatures: Seq[String] = Nil)
 
   /** Inclusive column bound for stats-based file pruning: a file is kept
     * unless its stats PROVE it cannot contain a row in [lower, upper].
@@ -610,6 +639,10 @@ object DeltaLite {
 
   private def parseLine(line: String): JValue = JsonMethods.parse(line)
 
+  /** A JSON integer as Long (json4s parses small ones as JInt). */
+  private[sources] def longOf(j: Option[JValue]): Option[Long] =
+    j.collect { case JLong(l) => l; case JInt(i) => i.toLong }
+
   /** Commits between checkpoints: every CHECKPOINT_INTERVAL-th commit
     * also writes `checkpoint-<V>.json` — the full resolved state at V —
     * so replay reads one checkpoint + at most CHECKPOINT_INTERVAL-1
@@ -635,36 +668,30 @@ object DeltaLite {
     }
   }
 
-  private def latestCheckpointAtOrBefore(path: String, v: Long,
-      parquetOk: Boolean): Option[CkptRef] = {
+  /** Every checkpoint among the log's file names `names`; parquet and
+    * v2 forms only when `parquetOk` (their replay needs a live session —
+    * skipped, never a crash). A parquet directory counts once Spark's
+    * `_SUCCESS` marker exists. */
+  private def checkpointRefs(path: String, names: Seq[String],
+      parquetOk: Boolean): Seq[CkptRef] = {
     val ld = logDir(path)
-    locally {
-        val cs = claimStore.listLog(ld).iterator
-          .flatMap { n =>
-            // the .v2.json test must run FIRST: the plain-json branch's
-            // suffix strip would otherwise parse "15.v2" as a version
-            if (parquetOk && n.startsWith("checkpoint-") &&
-                n.endsWith(".v2.json"))
-              Some(CkptRef(
-                n.stripPrefix("checkpoint-").stripSuffix(".v2.json").toLong,
-                "v2"))
-            else if (n.startsWith("checkpoint-") && n.endsWith(".v2.json"))
-              None // sidecar replay needs a live session; skip, don't crash
-            else if (n.startsWith("checkpoint-") && n.endsWith(".json"))
-              Some(CkptRef(
-                n.stripPrefix("checkpoint-").stripSuffix(".json").toLong,
-                "json"))
-            else if (parquetOk && n.startsWith("checkpoint-") &&
-                n.endsWith(".parquet") &&
-                Files.exists(ld.resolve(n).resolve("_SUCCESS")))
-              Some(CkptRef(
-                n.stripPrefix("checkpoint-").stripSuffix(".parquet").toLong,
-                "parquet"))
-            else None
-          }
-          .filter(_.version <= v)
-          .toSeq
-        cs.sortBy(c => (c.version, c.rank)).lastOption
+    names.flatMap { n =>
+      // the .v2.json test must run FIRST: the plain-json branch's
+      // suffix strip would otherwise parse "15.v2" as a version
+      if (!n.startsWith("checkpoint-")) None
+      else if (n.endsWith(".v2.json"))
+        if (parquetOk) Some(CkptRef(
+          n.stripPrefix("checkpoint-").stripSuffix(".v2.json").toLong, "v2"))
+        else None
+      else if (n.endsWith(".json"))
+        Some(CkptRef(
+          n.stripPrefix("checkpoint-").stripSuffix(".json").toLong, "json"))
+      else if (parquetOk && n.endsWith(".parquet") &&
+          Files.exists(ld.resolve(n).resolve("_SUCCESS")))
+        Some(CkptRef(
+          n.stripPrefix("checkpoint-").stripSuffix(".parquet").toLong,
+          "parquet"))
+      else None
     }
   }
 
@@ -782,15 +809,17 @@ object DeltaLite {
       properties = withFeature(snap.properties, feature, reader)))
   }
 
-  /** Tip-snapshot cache (the Delta driver's snapshot-management design):
-    * `snapshot()` is on EVERY operation's path, and a full log replay per
-    * call is O(live files) JSON parsing — the hot metadata cost once a
-    * table holds millions of files. The cache keeps the last resolved TIP
-    * per table (canonical path); a later call replays only the commits
-    * SINCE it (usually zero or one), after an always-fresh
-    * `latestVersion` listing — so external writers' commits are seen
-    * immediately and staleness is impossible. Historical `asOf` reads
-    * bypass the cache (full checkpoint-based replay, as before). */
+  /** Tip-snapshot cache (the Delta driver's snapshot-management design),
+    * shared by both logs: `snapshot()` is on EVERY operation's path, and
+    * a full log replay per call is O(live files) decoding — the hot
+    * metadata cost once a table holds millions of files. The cache keeps
+    * the last resolved TIP per LOG DIRECTORY (`_graft_log` and
+    * `_delta_log` of one root are two tables: CONVERT FROM DELTA leaves
+    * the foreign log beside the native one); a later call folds only
+    * the commits SINCE it (usually zero or one), after an always-fresh
+    * listing — so external writers' commits are seen immediately and
+    * staleness is impossible. Historical `asOf` reads bypass the cache
+    * (checkpoint-based replay). */
   private val snapCache =
     new java.util.concurrent.ConcurrentHashMap[String, Snapshot]()
   private val SnapCacheMax = 512
@@ -798,219 +827,294 @@ object DeltaLite {
   /** Test hook: drop all cached tips (forces full checkpoint replays). */
   private[graft] def clearSnapshotCache(): Unit = snapCache.clear()
 
-  /** Replay the log to (and including) version `asOf` (default latest),
-    * starting from the cached tip, else the newest checkpoint at or
-    * before it. */
-  def snapshot(path: String, asOf: Option[Long] = None): Snapshot = {
-    val latest = latestVersion(path)
-      .getOrElse(throw new IllegalArgumentException(s"no DeltaLite table at $path"))
-    val v = asOf.getOrElse(latest)
-    require(v <= latest, s"version $v was never committed at $path")
-    if (!claimStore.exists(logDir(path).resolve(s"$v.json")))
-      throw new IllegalArgumentException(
-        s"version $v at $path was pruned by log retention cleanup " +
-          s"(earliest retained commit: ${earliestVersion(path).getOrElse(-1L)})")
-    val key = root(path).toString
+  /** The native table at version `asOf` (default latest): the
+    * `_graft_log` codec ([[GraftLog]]) through the shared replayer
+    * ([[replayLog]] — tip cache, checkpoint selection, [[fold]]).
+    * Parquet and v2 checkpoints need a live session; without one their
+    * discovery skips them (checkpoints are an optimization, commits stay
+    * the source of truth — a cost difference, never a correctness one). */
+  def snapshot(path: String, asOf: Option[Long] = None): Snapshot =
+    replayLog(GraftLog, SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession), path, asOf)
+
+  /** One log action as a codec decodes it — from a `_graft_log` or a
+    * `_delta_log` commit line, or a row of either log's checkpoints —
+    * for [[fold]]. */
+  private[sources] sealed trait LogAction
+  private[sources] object LogAction {
+    /** metaData: the table metadata it sets, given the metadata in force
+      * (a Delta metaData may leave fields unset). */
+    final case class Meta(update: Snapshot => Snapshot) extends LogAction
+    final case class SetProtocol(protocol: Protocol) extends LogAction
+    /** add: the file, typed against the metadata in force once its
+      * commit's metaData applied (stats need the schema). */
+    final case class Add(decode: Snapshot => AddFile) extends LogAction
+    /** remove, with the eviction rule its codec states. `exactDv` is
+      * PROTOCOL.md's: the live file leaves only when its DV identity
+      * equals `dv` (none matches none — a DV flip may list its add
+      * before the remove of the superseded identity), and (path, `dv`)
+      * is tombstoned at `deletedAt`. Otherwise (the native log) the path
+      * leaves whatever its DV — OPTIMIZE over a DV'd file names the path
+      * only — and nothing is tombstoned. */
+    final case class Remove(path: String,
+        dv: Option[DeletionVectors.Descriptor], deletedAt: Long,
+        exactDv: Boolean) extends LogAction
+    final case class Txn(app: String, version: Long) extends LogAction
+    /** The native commit header's op: a [[ChurnOps]] op whose commit
+      * added or removed a file marks its version as row churn. */
+    final case class CommitOp(op: String) extends LogAction
+  }
+
+  /** The one replay fold of both logs: applies each commit's actions to
+    * `base` — a checkpoint folds as one commit at its version — and
+    * returns the snapshot at the last commit. Within a commit, metaData
+    * and protocol apply first: PROTOCOL.md does not order a commit's
+    * lines, and adds need the schema to type their stats (and, under
+    * column mapping, to name their partition columns). Row churn keeps
+    * only versions newer than the standing ANALYZE (an ANALYZE or fold
+    * commit moves `analyzedVersion` forward and clears older churn). */
+  private[sources] def fold(base: Snapshot,
+      commits: Iterator[(Long, Seq[LogAction])]): Snapshot = {
+    import LogAction._
+    var meta = base
+    val live = scala.collection.mutable.LinkedHashMap[String, AddFile]()
+    base.files.foreach(f => live(f.path) = f)
+    val txns = scala.collection.mutable.HashMap[String, Long]() ++= base.txns
+    val tombs = scala.collection.mutable.LinkedHashMap[
+      (String, Option[DeletionVectors.Descriptor]), Long]() ++= base.tombstones
+    var version = base.version
+    commits.foreach { case (v, actions) =>
+      version = v
+      val (head, rest) = actions.partition {
+        case _: Meta | _: SetProtocol => true
+        case _ => false
+      }
+      head.foreach {
+        case Meta(update) => meta = update(meta)
+        case SetProtocol(p) => meta = meta.copy(protocol = p)
+        case _ => ()
+      }
+      val touched = rest.exists {
+        case _: Add | _: Remove => true
+        case _ => false
+      }
+      rest.foreach {
+        case Add(decode) =>
+          val f = decode(meta)
+          live(f.path) = f
+          // resurrects exactly THIS logical file: a tombstone of the same
+          // path under another DV names a superseded file and stays
+          tombs.remove((f.path, f.dv))
+        case Remove(p, _, _, false) => live.remove(p)
+        case Remove(p, dv, at, true) =>
+          if (live.get(p).exists(_.dv == dv)) live.remove(p)
+          tombs((p, dv)) = at
+        case Txn(app, ver) =>
+          txns(app) = math.max(ver, txns.getOrElse(app, Long.MinValue))
+        case CommitOp(op) =>
+          if (ChurnOps(op) && touched)
+            meta = meta.copy(churnVersions = meta.churnVersions :+ v)
+        case _ => ()
+      }
+    }
+    val churn = props_analyzedVersion(meta.properties) match {
+      case Some(av) => meta.churnVersions.distinct.filter(_ > av).sorted
+      case None => Nil // no standing stats — nothing to disarm
+    }
+    meta.copy(version = version, files = live.values.toSeq,
+      txns = txns.toMap, tombstones = tombs.toMap, churnVersions = churn)
+  }
+
+  /** One log format's half of the replayer ([[replayLog]]): where its log
+    * lives, its listing, its checkpoint discovery, its decoding of
+    * commits and checkpoints into [[LogAction]]s, and its read gate.
+    * [[GraftLog]] is the `_graft_log` codec; `DeltaInterop.DeltaLog` is
+    * the PROTOCOL.md one. */
+  private[sources] trait LogCodec {
+    def logDir(path: String): Path
+    def list(path: String): LogListing
+    /** The version `asOf` (default latest) names; throws, in this log's
+      * own terms, when the table or the version does not exist. */
+    def target(path: String, log: LogListing, asOf: Option[Long]): Long
+    /** The readable checkpoints at or below `v`, newest first, each with
+      * the reader of its actions. */
+    def checkpoints(spark: Option[SparkSession], path: String,
+        log: LogListing, v: Long): Seq[(Long, () => Seq[LogAction])]
+    def commit(path: String, v: Long): Seq[LogAction]
+    /** The read gate every replayed snapshot passes. */
+    def gate(path: String, snap: Snapshot): Unit
+  }
+
+  /** One listing of a log: its file names, the versions of its commit
+    * files, and its latest version. */
+  private[sources] final case class LogListing(names: Seq[String],
+      commits: Set[Long], latest: Option[Long])
+
+  /** The base a cold replay folds from: no metadata, no files. */
+  private[sources] val Unreplayed: Snapshot = Snapshot(-1L, null, Nil)
+
+  /** THE snapshot entry of both logs: one listing, then the cached tip
+    * when it is the target; else a forward [[fold]] of the commits after
+    * the cached tip; else (a historical read, a cold cache, or a commit
+    * after the tip gone to log cleanup) the newest checkpoint at or below
+    * the target whose later commits are all present, else every commit
+    * from version 0. The codec gates the result; a latest-version result
+    * becomes the cached tip. */
+  private[sources] def replayLog(codec: LogCodec, spark: Option[SparkSession],
+      path: String, asOf: Option[Long]): Snapshot = {
+    val log = codec.list(path)
+    val v = codec.target(path, log, asOf)
+    val key = codec.logDir(path).toString
     val cached = snapCache.get(key)
     if (cached != null && cached.version == v) return cached
+    def reaches(from: Long): Boolean = (from + 1 to v).forall(log.commits)
+    def commitsAfter(from: Long): Iterator[(Long, Seq[LogAction])] =
+      (from + 1 to v).iterator.map(c => c -> codec.commit(path, c))
     val snap =
-      if (cached != null && cached.version < v)
-        replay(path, v, from = Some(cached))
-      else
-        replay(path, v, from = None)
-    if (v == latest) {
+      if (cached != null && cached.version < v && reaches(cached.version))
+        fold(cached, commitsAfter(cached.version))
+      else codec.checkpoints(spark, path, log, v).find(c => reaches(c._1)) match {
+        case Some((cp, read)) =>
+          fold(Unreplayed, Iterator(cp -> read()) ++ commitsAfter(cp))
+        case None if reaches(-1L) => fold(Unreplayed, commitsAfter(-1L))
+        case None => throw new IllegalStateException(
+          s"cannot reconstruct version $v at $path: the commits do not " +
+            "reach back to version 0 and no checkpoint at or below it is " +
+            "followed by all of its commits")
+      }
+    codec.gate(path, snap)
+    if (log.latest.contains(v)) {
       if (snapCache.size >= SnapCacheMax) snapCache.clear()
       snapCache.put(key, snap)
     }
     snap
   }
 
-  private def replay(path: String, v: Long, from: Option[Snapshot]): Snapshot = {
-    var schema: StructType = from.map(_.schema).orNull
-    var constraints = from.map(_.constraints).getOrElse(Map.empty[String, String])
-    var partitionBy = from.map(_.partitionBy).getOrElse(Nil: Seq[String])
-    var physical = from.map(_.physical).getOrElse(Map.empty[String, String])
-    var generated = from.map(_.generated).getOrElse(Map.empty[String, String])
-    var identity = from.map(_.identity).getOrElse(Map.empty[String, IdentityCol])
-    var properties = from.map(_.properties).getOrElse(Map.empty[String, String])
-    // row-churn tracking rides the replay (zero extra I/O). The buffer
-    // is declared BEFORE the checkpoint readers run because the
-    // checkpoint-persisted carrier (see writeCheckpoint) is harvested
-    // the moment a metaData's properties arrive: every commit re-states
-    // metaData from the (stripped) snapshot properties, so the FIRST
-    // post-checkpoint commit in the replay range would otherwise
-    // REPLACE the checkpoint's properties — and a post-loop harvest
-    // would find nothing, silently re-arming stale stats after a cold
-    // restart. Harvest-on-set is interposition-proof: whichever action
-    // carries the key, its versions land in the buffer and the key
-    // never surfaces in table properties or rides into a commit.
-    val churnBuf = scala.collection.mutable.ArrayBuffer[Long]()
-    from.foreach(_.churnVersions.foreach(churnBuf += _))
-    def setProps(pr: Map[String, String]): Unit = {
-      pr.get(PendingChurnKey).foreach { v =>
-        v.split(',').iterator.filter(_.nonEmpty)
-          .foreach(x => scala.util.Try(x.toLong).foreach(churnBuf += _))
-      }
-      properties = pr - PendingChurnKey
-    }
-    val live = scala.collection.mutable.LinkedHashMap[String, AddFile]()
-    from.foreach(_.files.foreach(f => live(f.path) = f))
-    val txns = scala.collection.mutable.HashMap[String, Long]()
-    from.foreach(_.txns.foreach { case (a, t) => txns(a) = t })
-    val start = from match {
-      case Some(base) => base.version + 1
-      case None =>
-        // Parquet checkpoints are only readable with a live session (the
-        // scan is distributed); without one, discovery ignores them and
-        // falls back to a JSON checkpoint or a from-0 commit replay —
-        // checkpoints are an optimization, commits stay the source of
-        // truth, so this is a cost difference, never a correctness one.
-        val sparkOpt = SparkSession.getActiveSession
-          .orElse(SparkSession.getDefaultSession)
-        val ckpt = latestCheckpointAtOrBefore(path, v,
-          parquetOk = sparkOpt.isDefined)
-        ckpt.foreach {
-          case CkptRef(cv, "v2") =>
-            readV2Checkpoint(sparkOpt.get, path, cv,
-              s => schema = s, live, txns, c => constraints = c,
-              p => partitionBy = p, m => physical = m, g => generated = g,
-              i => identity = i, pr => setProps(pr))
-          case CkptRef(cv, "parquet") =>
-            readParquetCheckpoint(sparkOpt.get, path, cv,
-              s => schema = s, live, txns, c => constraints = c,
-              p => partitionBy = p, m => physical = m, g => generated = g,
-              i => identity = i, pr => setProps(pr))
-          case CkptRef(cv, _) =>
-            applyActions(claimStore.readImmutable(
-              logDir(path).resolve(s"checkpoint-$cv.json")),
-              s"table $path checkpoint $cv",
-              s => schema = s, live, txns, c => constraints = c,
-              p => partitionBy = p, m => physical = m, g => generated = g,
-              i => identity = i, pr => setProps(pr))
-        }
-        ckpt.map(_.version + 1).getOrElse(0L)
-    }
-    // commit-range churn: collect the version of every row-removing
-    // commit, then keep only those newer than the FINAL analyzedVersion
-    // — an ANALYZE (or fold) commit moves that property forward and
-    // implicitly clears older churn
-    (start to v).foreach { i =>
-      val lines =
-        claimStore.readImmutable(logDir(path).resolve(s"$i.json"))
-      // a churn OP that touched no data (e.g. DELETE matching nothing —
-      // the op still writes its audit commit) must not count: nothing
-      // the standing stats describe changed. Commit lines are compact
-      // single-action objects, so the action key is the line head.
-      def touchedData = lines.exists(l =>
-        l.startsWith("{\"add\"") || l.startsWith("{\"remove\""))
-      applyActions(lines, s"table $path version $i",
-        s => schema = s, live, txns, c => constraints = c, p => partitionBy = p,
-        m => physical = m, g => generated = g, x => identity = x,
-        pr => setProps(pr),
-        onCommitOp = op => if (ChurnOps(op) && touchedData) churnBuf += i)
-    }
-    require(schema != null, s"log at $path has no metaData action")
-    // forward-compat gate: a log requiring reader features we don't
-    // implement must refuse resolution, not silently misread
-    checkReaderFeatures(path, properties)
-    val churn = props_analyzedVersion(properties) match {
-      case Some(av) => churnBuf.distinct.filter(_ > av).sorted.toSeq
-      case None => Nil // no standing stats — nothing to disarm
-    }
-    Snapshot(v, schema, live.values.toSeq, txns.toMap, constraints, partitionBy,
-      physical, generated, identity, properties, churn)
-  }
+  /** The `_graft_log` codec: graft-JSON commits `<v>.json` listed and
+    * read through the claim store, three checkpoint forms (JSON,
+    * multi-part parquet, v2 manifest + sidecars; at a shared version v2
+    * > parquet > json), and the reader-feature gate. */
+  private object GraftLog extends LogCodec {
+    def logDir(path: String): Path = DeltaLite.logDir(path)
 
-  private def applyActions(lines: Seq[String], where: String,
-      onSchema: StructType => Unit,
-      live: scala.collection.mutable.LinkedHashMap[String, AddFile],
-      txns: scala.collection.mutable.HashMap[String, Long],
-      onConstraints: Map[String, String] => Unit,
-      onPartitionBy: Seq[String] => Unit,
-      onPhysical: Map[String, String] => Unit,
-      onGenerated: Map[String, String] => Unit,
-      onIdentity: Map[String, IdentityCol] => Unit,
-      onProperties: Map[String, String] => Unit,
-      onCommitOp: String => Unit = _ => ()): Unit = {
-    var schema: StructType = null
-    var physical = Map.empty[String, String]
-    lines.filter(_.nonEmpty).foreach { line =>
-      parseLine(line) match {
-        case JObject(fields) => fields.foreach {
-          case ("metaData", JObject(m)) =>
-            m.collectFirst { case ("schema", JString(s)) => s }.foreach { s =>
-              schema = DataType.fromJson(s).asInstanceOf[StructType]
-              onSchema(schema)
-            }
-            // Constraints, partition columns, and the column-mapping
-            // table ride the SAME metaData action as the schema: every
-            // commit re-states them, so absence (old logs, or a RESTORE
-            // to a pre-constraint metadata) means "none".
-            onConstraints(m.collectFirst { case ("constraints", JObject(cs)) =>
-              cs.collect { case (n, JString(e)) => n -> e }.toMap
-            }.getOrElse(Map.empty))
-            onPartitionBy(m.collectFirst { case ("partitionBy", JArray(ps)) =>
-              ps.collect { case JString(p) => p }
-            }.getOrElse(Nil))
-            physical = m.collectFirst { case ("physicalNames", JObject(ms)) =>
-              ms.collect { case (l, JString(p)) => l -> p }.toMap
-            }.getOrElse(Map.empty)
-            onPhysical(physical)
-            onGenerated(m.collectFirst { case ("generatedColumns", JObject(gs)) =>
-              gs.collect { case (c, JString(e)) => c -> e }.toMap
-            }.getOrElse(Map.empty))
-            onIdentity(m.collectFirst { case ("identityColumns", JObject(ids)) =>
-              ids.collect { case (c, JObject(spec)) =>
-                val sm = spec.toMap
-                def num(k: String): Option[Long] = sm.get(k).collect {
-                  case JLong(l) => l
-                  case JInt(i) => i.toLong
-                }
-                c -> IdentityCol(num("start").getOrElse(1L),
-                  num("step").getOrElse(1L), num("highWater"))
-              }.toMap
-            }.getOrElse(Map.empty))
-            onProperties(m.collectFirst { case ("properties", JObject(ps)) =>
-              ps.collect { case (k, JString(x)) => k -> x }.toMap
-            }.getOrElse(Map.empty))
-          case ("add", a: JObject) =>
-            val af = decodeAdd(a, schema, physical, where)
-            live(af.path) = af
-          case ("remove", JObject(r)) =>
-            r.collectFirst { case ("path", JString(p)) => p }.foreach(live.remove)
-          case ("txn", JObject(t)) =>
-            val m = t.toMap
-            for {
-              app <- m.get("app").collect { case JString(a) => a }
-              ver <- m.get("version").collect { case JLong(l) => l; case JInt(i) => i.toLong }
-            } txns(app) = math.max(ver, txns.getOrElse(app, Long.MinValue))
-          case ("commit", JObject(c)) =>
-            c.collectFirst { case ("op", JString(s)) => s }.foreach(onCommitOp)
-          case _ => ()
-        }
-        case _ => ()
-      }
+    def list(path: String): LogListing = {
+      val names = claimStore.listLog(logDir(path))
+      val commits = names.iterator.filter(_.matches("""\d+\.json"""))
+        .map(_.stripSuffix(".json").toLong).toSet
+      LogListing(names, commits, commits.maxOption)
+    }
+
+    def target(path: String, log: LogListing, asOf: Option[Long]): Long = {
+      val latest = log.latest.getOrElse(
+        throw new IllegalArgumentException(s"no DeltaLite table at $path"))
+      val v = asOf.getOrElse(latest)
+      require(v <= latest, s"version $v was never committed at $path")
+      if (!log.commits(v))
+        throw new IllegalArgumentException(
+          s"version $v at $path was pruned by log retention cleanup " +
+            s"(earliest retained commit: ${log.commits.min})")
+      v
+    }
+
+    def checkpoints(spark: Option[SparkSession], path: String,
+        log: LogListing, v: Long): Seq[(Long, () => Seq[LogAction])] =
+      checkpointRefs(path, log.names, parquetOk = spark.isDefined)
+        .filter(_.version <= v).groupBy(_.version).values
+        .map(_.maxBy(_.rank)).toSeq.sortBy(-_.version)
+        .map(c => c.version -> (() => c.format match {
+          case "v2" => readV2Checkpoint(spark.get, path, c.version)
+          case "parquet" => readParquetCheckpoint(spark.get, path, c.version)
+          case _ => graftActions(claimStore.readImmutable(
+              logDir(path).resolve(s"checkpoint-${c.version}.json")),
+            s"table $path checkpoint ${c.version}")
+        }))
+
+    def commit(path: String, v: Long): Seq[LogAction] =
+      graftActions(claimStore.readImmutable(logDir(path).resolve(s"$v.json")),
+        s"table $path version $v")
+
+    def gate(path: String, snap: Snapshot): Unit = {
+      require(snap.schema != null, s"log at $path has no metaData action")
+      // forward-compat gate: a log requiring reader features we don't
+      // implement must refuse resolution, not silently misread
+      checkReaderFeatures(path, snap.properties)
     }
   }
 
-  private def decodeAdd(a: JObject, schema: StructType,
-      physical: Map[String, String], where: String): AddFile = {
+  /** The graft-JSON codec: commit or checkpoint lines → [[LogAction]]s.
+    * A native `remove` names a path only and evicts it whatever its DV. */
+  private def graftActions(lines: Seq[String], where: String): Seq[LogAction] =
+    lines.filter(_.nonEmpty).flatMap(line => parseLine(line) match {
+      case JObject(fields) => fields.flatMap {
+        case ("metaData", JObject(m)) => Some(LogAction.Meta(graftMeta(m)))
+        case ("add", a: JObject) =>
+          Some(LogAction.Add(s => decodeAdd(a, s, where)))
+        case ("remove", JObject(r)) => r.collectFirst {
+          case ("path", JString(p)) =>
+            LogAction.Remove(p, None, 0L, exactDv = false)
+        }
+        case ("txn", JObject(t)) =>
+          val m = t.toMap
+          for {
+            app <- m.get("app").collect { case JString(a) => a }
+            ver <- longOf(m.get("version"))
+          } yield LogAction.Txn(app, ver)
+        case ("commit", JObject(c)) =>
+          c.collectFirst { case ("op", JString(op)) => LogAction.CommitOp(op) }
+        case _ => None
+      }
+      case _ => Nil
+    })
+
+  /** A native metaData action. Constraints, partition columns, the
+    * column-mapping table, generated and identity columns and properties
+    * ride it beside the schema: every commit re-states them, so absence
+    * (old logs, or a RESTORE to a pre-constraint metadata) means "none".
+    * The checkpoint-persisted churn carrier (see [[writeCheckpoint]]) is
+    * harvested the moment a metaData carries it — whichever action
+    * carries the key, its versions land in the churn list and the key
+    * never surfaces in table properties or rides into a commit. */
+  private def graftMeta(m: List[(String, JValue)]): Snapshot => Snapshot = {
+    def strMap(k: String): Map[String, String] = m.collectFirst {
+      case (`k`, JObject(kv)) =>
+        kv.collect { case (n, JString(x)) => n -> x }.toMap
+    }.getOrElse(Map.empty)
+    val schema = m.collectFirst { case ("schema", JString(s)) =>
+      DataType.fromJson(s).asInstanceOf[StructType] }
+    val partitionBy = m.collectFirst { case ("partitionBy", JArray(ps)) =>
+      ps.collect { case JString(p) => p }
+    }.getOrElse(Nil)
+    val identity = m.collectFirst { case ("identityColumns", JObject(ids)) =>
+      ids.collect { case (c, JObject(spec)) =>
+        val sm = spec.toMap
+        def num(k: String): Option[Long] = longOf(sm.get(k))
+        c -> IdentityCol(num("start").getOrElse(1L),
+          num("step").getOrElse(1L), num("highWater"))
+      }.toMap
+    }.getOrElse(Map.empty[String, IdentityCol])
+    val props = strMap("properties")
+    val pendingChurn = props.get(PendingChurnKey).toSeq
+      .flatMap(_.split(',').filter(_.nonEmpty))
+      .flatMap(x => scala.util.Try(x.toLong).toOption)
+    s => s.copy(schema = schema.getOrElse(s.schema),
+      constraints = strMap("constraints"), partitionBy = partitionBy,
+      physical = strMap("physicalNames"), generated = strMap("generatedColumns"),
+      identity = identity, properties = props - PendingChurnKey,
+      churnVersions = s.churnVersions ++ pendingChurn)
+  }
+
+  /** A native add, its stats typed through `meta` (stats are keyed by
+    * PHYSICAL column name; each key's type is the logical field it
+    * currently backs). */
+  private def decodeAdd(a: JObject, meta: Snapshot, where: String): AddFile = {
     val m = a.obj.toMap
     val p = m.get("path").collect { case JString(s) => s }
       .getOrElse(sys.error("add action without path"))
-    val rows = m.get("rows").collect {
-      case JLong(l) => l
-      case JInt(i) => i.toLong
-    }.getOrElse(0L)
-    // stats are keyed by PHYSICAL column name: resolve each key's type
-    // through the logical field it currently backs
-    val types = if (schema == null) Map.empty[String, DataType]
-      else schema.fields.map(f =>
-        physical.getOrElse(f.name, f.name) -> f.dataType).toMap
+    val rows = longOf(m.get("rows")).getOrElse(0L)
     val stats = m.get("stats") match {
       case Some(JObject(cols)) =>
         cols.flatMap { case (cn, cv) =>
-          (types.get(cn), cv) match {
+          (meta.statTypes.get(cn), cv) match {
             case (Some(dt), JObject(mm)) =>
               val mmm = mm.toMap
               Some(cn -> ColStats(
@@ -1036,19 +1140,8 @@ object DeltaLite {
         vals.collect { case (c, JString(s)) => c -> s }.toMap
       case _ => Map.empty[String, String]
     }
-    val bytes = m.get("bytes").collect {
-      case JLong(l) => l
-      case JInt(i) => i.toLong
-    }.getOrElse(0L)
-    val baseRowId = m.get("baseRowId").collect {
-      case JLong(l) => l
-      case JInt(i) => i.toLong
-    }
-    val rowCommitVersion = m.get("rowCommitVersion").collect {
-      case JLong(l) => l
-      case JInt(i) => i.toLong
-    }
-    AddFile(p, rows, stats, dv, pv, bloom, bytes, baseRowId, rowCommitVersion)
+    AddFile(p, rows, stats, dv, pv, bloom, longOf(m.get("bytes")).getOrElse(0L),
+      longOf(m.get("baseRowId")), longOf(m.get("rowCommitVersion")))
   }
 
   /** Before the standard descriptor, the native log named a parquet
@@ -1713,36 +1806,22 @@ object DeltaLite {
     * table's replay used to do line-by-line on the driver is now the
     * executors' parquet decode. */
   private def readParquetCheckpoint(spark: SparkSession, path: String,
-      cv: Long,
-      onSchema: StructType => Unit,
-      live: scala.collection.mutable.LinkedHashMap[String, AddFile],
-      txns: scala.collection.mutable.HashMap[String, Long],
-      onConstraints: Map[String, String] => Unit,
-      onPartitionBy: Seq[String] => Unit,
-      onPhysical: Map[String, String] => Unit,
-      onGenerated: Map[String, String] => Unit,
-      onIdentity: Map[String, IdentityCol] => Unit,
-      onProperties: Map[String, String] => Unit): Unit = {
+      cv: Long): Seq[LogAction] = {
     val dir = logDir(path).resolve(s"checkpoint-$cv.parquet")
     val df = spark.read.schema(CkptParquetSchema).parquet(dir.toString)
-    var schema: StructType = null
-    var physical = Map.empty[String, String]
     val metaLines = df.filter(col("kind") === "meta").select(col("json"))
       .collect().map(_.getString(0)).toSeq
-    applyActions(metaLines, s"table $path checkpoint $cv",
-      s => { schema = s; onSchema(s) }, live, txns, onConstraints,
-      onPartitionBy, m => { physical = m; onPhysical(m) }, onGenerated,
-      onIdentity, onProperties)
-    require(schema != null,
+    require(metaLines.exists(_.startsWith("{\"metaData\"")),
       s"parquet checkpoint at $dir has no metaData row")
-    val types = schema.fields.map(f =>
-      physical.getOrElse(f.name, f.name) -> f.dataType).toMap
-    df.filter(col("kind") === "add").drop("kind", "json")
-      .collect().foreach { r =>
-        val f = addFromCkptRow(r, types, s"table $path checkpoint $cv")
-        live(f.path) = f
-      }
+    graftActions(metaLines, s"table $path checkpoint $cv") ++
+      ckptAdds(df.filter(col("kind") === "add").drop("kind", "json"),
+        s"table $path checkpoint $cv")
   }
+
+  /** The add rows of a parquet or sidecar checkpoint, typed on fold. */
+  private def ckptAdds(rows: DataFrame, where: String): Seq[LogAction] =
+    rows.collect().toSeq.map(r =>
+      LogAction.Add(s => addFromCkptRow(r, s.statTypes, where)))
 
   /** Decode one typed checkpoint/sidecar parquet row back to an AddFile
     * (shared by the multi-part and v2-sidecar replay paths). */
@@ -1813,10 +1892,7 @@ object DeltaLite {
           case ("sidecar", JObject(sc)) =>
             val m = sc.toMap
             def str(k: String) = m.get(k).collect { case JString(s) => s }
-            def num(k: String) = m.get(k).collect {
-              case JLong(l) => l
-              case JInt(i) => i.toLong
-            }
+            def num(k: String) = longOf(m.get(k))
             for {
               b <- num("bucket"); f <- str("file"); fp <- str("fingerprint")
             } yield b.toInt -> (f, fp, num("nAdds").getOrElse(0L))
@@ -1953,43 +2029,24 @@ object DeltaLite {
   }
 
   private def readV2Checkpoint(spark: SparkSession, path: String,
-      cv: Long,
-      onSchema: StructType => Unit,
-      live: scala.collection.mutable.LinkedHashMap[String, AddFile],
-      txns: scala.collection.mutable.HashMap[String, Long],
-      onConstraints: Map[String, String] => Unit,
-      onPartitionBy: Seq[String] => Unit,
-      onPhysical: Map[String, String] => Unit,
-      onGenerated: Map[String, String] => Unit,
-      onIdentity: Map[String, IdentityCol] => Unit,
-      onProperties: Map[String, String] => Unit): Unit = {
+      cv: Long): Seq[LogAction] = {
     val ld = logDir(path)
     val lines = claimStore.readImmutable(
       ld.resolve(s"checkpoint-$cv.v2.json"))
-    var schema: StructType = null
-    var physical = Map.empty[String, String]
-    // metaData/txn lines apply as usual; `sidecar` lines fall through
-    // applyActions' catch-all and are parsed separately below
-    applyActions(lines, s"table $path checkpoint $cv",
-      s => { schema = s; onSchema(s) }, live, txns, onConstraints,
-      onPartitionBy, m => { physical = m; onPhysical(m) }, onGenerated,
-      onIdentity, onProperties)
-    require(schema != null,
+    require(lines.exists(_.startsWith("{\"metaData\"")),
       s"v2 checkpoint manifest checkpoint-$cv.v2.json has no metaData row")
+    // metaData/txn lines decode as usual; `sidecar` lines fall through
+    // the codec's catch-all and are parsed separately below
+    val manifest = graftActions(lines, s"table $path checkpoint $cv")
     val sidecars = manifestSidecars(lines)
-    if (sidecars.isEmpty) return
-    val types = schema.fields.map(f =>
-      physical.getOrElse(f.name, f.name) -> f.dataType).toMap
+    if (sidecars.isEmpty) return manifest
     val sidecarSchema = StructType(CkptParquetSchema.fields.filterNot(f =>
       f.name == "kind" || f.name == "json"))
     // sidecar refs are log-dir-relative ("_sidecars/<uuid>.parquet")
     val paths = sidecars.values.map(s => ld.resolve(s._1).toString)
       .toSeq.distinct
-    spark.read.schema(sidecarSchema).parquet(paths: _*)
-      .collect().foreach { r =>
-        val f = addFromCkptRow(r, types, s"table $path checkpoint $cv")
-        live(f.path) = f
-      }
+    manifest ++ ckptAdds(spark.read.schema(sidecarSchema).parquet(paths: _*),
+      s"table $path checkpoint $cv")
   }
 
   // ------------------------------- optimistic concurrency (Delta-style)
@@ -6045,16 +6102,16 @@ object DeltaLite {
       }.flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(30)
     val earliestRetained = math.max(0L, latest - keep + 1)
     // anchor on ANY checkpoint format — replay needs a live session for
-    // parquet/v2 forms, but every query path here runs with one, and the
-    // JSON fallback ranks lowest so a same-version JSON twin still wins
-    val anchor = latestCheckpointAtOrBefore(path, earliestRetained,
-      parquetOk = true) match {
-      case Some(c) => c.version
+    // parquet/v2 forms, but every query path here runs with one
+    val ld = logDir(path)
+    val names = claimStore.listLog(ld)
+    val anchor = checkpointRefs(path, names, parquetOk = true)
+      .map(_.version).filter(_ <= earliestRetained).maxOption match {
+      case Some(cv) => cv
       case None => return 0 // no safe anchor: refuse to cut the chain
     }
     if (anchor <= 0L) return 0
-    val ld = logDir(path)
-    val victims = claimStore.listLog(ld).filter { n =>
+    val victims = names.filter { n =>
         if (n.matches("""\d+\.json""")) n.stripSuffix(".json").toLong < anchor
         else if (n.startsWith("checkpoint-") && n.endsWith(".v2.json"))
           n.stripPrefix("checkpoint-").stripSuffix(".v2.json").toLong < anchor

@@ -259,6 +259,152 @@ class DeltaInteropSpec extends AnyFunSuite with TestSpark {
       "the append must have landed; the overwrite must not")
   }
 
+  test("one replayer, two tip caches: a CONVERTed root's _graft_log and _delta_log each replay their own log through interleaved writes") {
+    import spark.implicits._
+    val path = tmp("interop_two_logs")
+    def ids(from: Long, to: Long) = (from to to).toDF("id").coalesce(1)
+    def paths(s: DeltaLite.Snapshot): Set[String] = s.files.map(_.path).toSet
+    DeltaInterop.exportToDelta(spark, ids(1, 4), path)                // delta v0
+    DeltaInterop.exportAppend(spark, ids(5, 6), path)                 // delta v1
+    assert(DeltaInterop.read(spark, path).count() === 6L)
+    DeltaInterop.convertFromDelta(spark, path)                        // graft v0
+    val adopted = paths(DeltaLite.snapshot(path))
+    assert(adopted === paths(DeltaInterop.snapshot(spark, path)))
+    DeltaLite.append(spark, path, ids(7, 9))                          // graft v1
+    assert(DeltaLite.read(spark, path).count() === 9L)
+    DeltaInterop.exportAppend(spark, ids(10, 10), path)               // delta v2
+    assert(DeltaInterop.read(spark, path).count() === 7L)
+    DeltaLite.append(spark, path, ids(11, 12))                        // graft v2
+    assert(DeltaLite.read(spark, path).count() === 11L)
+    // both logs now sit at version 2 under one root: a cache keyed by
+    // the root would hand either log the other's tip
+    val graft = DeltaLite.snapshot(path)
+    val delta = DeltaInterop.snapshot(spark, path)
+    assert(graft.version === 2L && delta.version === 2L)
+    assert(graft.files.size === 4 && delta.files.size === 3)
+    assert(adopted.subsetOf(paths(graft)) && adopted.subsetOf(paths(delta)))
+    assert((paths(graft) -- adopted).intersect(paths(delta) -- adopted).isEmpty,
+      "each log's own appends must stay in its own snapshot")
+    assert(DeltaLite.read(spark, path).select("id").as[Long].collect()
+      .sorted.toSeq === ((1L to 9L) ++ (11L to 12L)))
+    assert(DeltaInterop.read(spark, path).select("id").as[Long].collect()
+      .sorted.toSeq === ((1L to 6L) :+ 10L))
+  }
+
+  test("interop tip cache: a foreign commit after the cached tip is read next; a tip whose next commit was cleaned up replays from the checkpoint") {
+    import spark.implicits._
+    val path = tmp("interop_tip_cache")
+    val dir = Paths.get(path)
+    val logDir = dir.resolve("_delta_log")
+    def ids(p: String): Seq[Long] = DeltaInterop.read(spark, p)
+      .select("id").as[Long].collect().sorted.toSeq
+    DeltaInterop.exportToDelta(spark, (1L to 4L).toDF("id").coalesce(1), path)
+    assert(ids(path) === (1L to 4L))                                  // tip v0 cached
+    // a foreign writer lands version 1 behind the cache's back
+    Seq(5L, 6L).toDF("id").coalesce(1).write.parquet(dir.resolve("foreign").toString)
+    val part = {
+      val s = Files.list(dir.resolve("foreign"))
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .find(_.endsWith(".parquet")).get
+      finally s.close()
+    }
+    Files.write(logDir.resolve(f"${1L}%020d.json"),
+      (s"""{"add":{"path":"foreign/$part","partitionValues":{},"size":1,"modificationTime":1,"dataChange":true}}""" + "\n")
+        .getBytes("UTF-8"))
+    assert(ids(path) === (1L to 6L), "the commit after the cached tip must be read")
+    assert(DeltaInterop.snapshot(spark, path).version === 1L)         // tip v1 cached
+    // a twin of the table moves on without this cache: version 2, a
+    // checkpoint at 2, and log cleanup of every JSON commit (0..2)
+    val twin = tmp("interop_tip_cache_twin")
+    def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
+      val w = Files.walk(from)
+      try w.iterator().asScala.foreach { p =>
+        val t = to.resolve(from.relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(t)
+        else Files.copy(p, t, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      } finally w.close()
+    }
+    copyTree(dir, Paths.get(twin))
+    DeltaInterop.exportAppend(spark, Seq(7L, 8L).toDF("id").coalesce(1), twin)
+    DeltaInterop.exportCheckpoint(spark, twin)
+    (0L to 2L).foreach(v => Files.delete(
+      Paths.get(twin, "_delta_log").resolve(f"$v%020d.json")))
+    // the table takes the twin's log: the cached tip (v1) cannot fold
+    // forward — commit 2 is gone — so the read replays from checkpoint 2
+    (0L to 1L).foreach(v => Files.delete(logDir.resolve(f"$v%020d.json")))
+    copyTree(Paths.get(twin), dir)
+    assert(ids(path) === (1L to 8L),
+      "a cached tip with its next commit cleaned up must fall back to the checkpoint")
+    assert(DeltaInterop.snapshot(spark, path).version === 2L)
+  }
+
+  test("fold parity: one history encoded by each codec folds to the same files — append, DV flip in [add, remove] order, path-only native remove of a DV'd file") {
+    import graft.sources.DeletionVectors
+    val path = tmp("interop_fold_parity")
+    val dir = Paths.get(path)
+    val graftLog = dir.resolve("_graft_log")
+    val deltaLog = dir.resolve("_delta_log")
+    Files.createDirectories(graftLog)
+    Files.createDirectories(deltaLog)
+    val schema = new org.apache.spark.sql.types.StructType().add("id", "long")
+    val schemaJson = org.json4s.jackson.JsonMethods.compact(
+      org.json4s.JString(schema.json))
+    val dv = DeletionVectors.Descriptor("i", "wi5b=000010000siXQKl0rr91", None, 24, 2L)
+    val dvJson = DeletionVectors.toJson(dv)
+    // (path, rows, min id, max id, size)
+    val f1 = ("d/f1.parquet", 6L, 1L, 6L, 100L)
+    val f2 = ("d/f2.parquet", 3L, 7L, 9L, 60L)
+    val f3 = ("d/f3.parquet", 2L, 10L, 11L, 50L)
+    val f4 = ("d/f4.parquet", 4L, 2L, 6L, 70L)
+    type F = (String, Long, Long, Long, Long)
+    def graftAdd(f: F, withDv: Boolean = false): String =
+      s"""{"add":{"path":"${f._1}","rows":${f._2},"bytes":${f._5},"dv":${if (withDv) dvJson else "null"},"stats":{"id":{"min":${f._3},"max":${f._4}}}}}"""
+    def graftRemove(f: F): String = s"""{"remove":{"path":"${f._1}"}}"""
+    def graftCommit(v: Long, op: String, lines: String*): Unit =
+      Files.write(graftLog.resolve(s"$v.json"), (Seq(
+        s"""{"commit":{"version":$v,"op":"$op","committedAtMs":${1000 + v}}}""",
+        s"""{"metaData":{"schema":$schemaJson}}""") ++ lines)
+        .mkString("\n").getBytes("UTF-8"))
+    def deltaAdd(f: F, withDv: Boolean = false): String =
+      s"""{"add":{"path":"${f._1}","partitionValues":{},"size":${f._5},"modificationTime":1,"dataChange":true,"stats":"{\\"numRecords\\":${f._2},\\"minValues\\":{\\"id\\":${f._3}},\\"maxValues\\":{\\"id\\":${f._4}}}"""" +
+        (if (withDv) s""","deletionVector":$dvJson""" else "") + "}}"
+    def deltaRemove(f: F, withDv: Boolean = false): String =
+      s"""{"remove":{"path":"${f._1}","deletionTimestamp":1,"dataChange":true""" +
+        (if (withDv) s""","deletionVector":$dvJson""" else "") + "}}"
+    def deltaCommit(v: Long, lines: String*): Unit =
+      Files.write(deltaLog.resolve(f"$v%020d.json"),
+        lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    // v0: two files
+    graftCommit(0L, "CREATE", graftAdd(f1), graftAdd(f2))
+    deltaCommit(0L,
+      """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["deletionVectors"],"writerFeatures":["deletionVectors"]}}""",
+      s"""{"metaData":{"id":"m","format":{"provider":"parquet","options":{}},"schemaString":$schemaJson,"partitionColumns":[],"configuration":{}}}""",
+      deltaAdd(f1), deltaAdd(f2))
+    // v1: a DV flip of f1 — the Delta side lists the new identity FIRST
+    graftCommit(1L, "DELETE_DV", graftRemove(f1), graftAdd(f1, withDv = true))
+    deltaCommit(1L, deltaAdd(f1, withDv = true), deltaRemove(f1))
+    // v2: an append
+    graftCommit(2L, "WRITE", graftAdd(f3))
+    deltaCommit(2L, deltaAdd(f3))
+    // v3: the DV'd f1 compacts into f4 — the native remove names the
+    // path only, the Delta remove names the logical file (path, DV)
+    graftCommit(3L, "OPTIMIZE", graftRemove(f1), graftAdd(f4))
+    deltaCommit(3L, deltaRemove(f1, withDv = true), deltaAdd(f4))
+    def files(s: DeltaLite.Snapshot): Set[DeltaLite.AddFile] =
+      s.files.map(_.copy(mtime = None)).toSet
+    val expected = Seq(Set(f1, f2), Set(f1, f2), Set(f1, f2, f3), Set(f2, f3, f4))
+      .map(_.map(_._1))
+    (0L to 3L).foreach { v =>
+      val g = DeltaLite.snapshot(path, Some(v))
+      val d = DeltaInterop.snapshot(spark, path, Some(v))
+      assert(files(g) === files(d), s"the two codecs fold apart at version $v")
+      assert(g.files.map(_.path).toSet === expected(v.toInt), s"version $v")
+    }
+    val flipped = DeltaLite.snapshot(path, Some(1L)).files.find(_.path == f1._1)
+    assert(flipped.flatMap(_.dv) === Some(dv),
+      "the [add, remove] flip keeps the file live under its new DV")
+  }
+
   test("checkpoint replay: snapshot reconstructs from a classic parquet checkpoint after the early JSON commits are gone") {
     val path = tmp("interop_cp")
     val orders = spark.read.parquet(s"$sf/orders.parquet")
@@ -277,6 +423,7 @@ class DeltaInteropSpec extends AnyFunSuite with TestSpark {
     val logDir = Paths.get(path, "_delta_log")
     Files.delete(logDir.resolve(f"${0L}%020d.json"))
     Files.delete(logDir.resolve(f"${1L}%020d.json"))
+    DeltaLite.clearSnapshotCache()
     assert(sorted(DeltaInterop.read(spark, path)) === expectLatest,
       "checkpoint + tail commit must reconstruct the latest state")
     assert(sorted(DeltaInterop.read(spark, path, Some(1L))) === expectAtCp,
@@ -772,6 +919,7 @@ class DeltaInteropSpec extends AnyFunSuite with TestSpark {
     DeltaInterop.exportCheckpoint(spark, path)
     (0L to 3L).foreach(v =>
       Files.delete(logDir.resolve(f"$v%020d.json")))
+    DeltaLite.clearSnapshotCache()
     assert(ids(DeltaInterop.read(spark, path)) === Seq(2L, 3, 4, 5, 6),
       "a checkpoint-only fast-start must carry the DV state")
     // CONVERT adopts the DV descriptors unchanged (both logs store the
@@ -879,6 +1027,7 @@ class DeltaInteropSpec extends AnyFunSuite with TestSpark {
     //    rows must not resurrect or drop anything)
     Files.delete(logDir.resolve(f"${0L}%020d.json"))
     Files.delete(logDir.resolve(f"${1L}%020d.json"))
+    DeltaLite.clearSnapshotCache()
     assert(DeltaInterop.read(spark, path).collect().map(_.toString).toSeq
       === Seq("[2,b]"))
     // 4) the pointer parses and points at the checkpoint version; a
@@ -936,6 +1085,7 @@ class DeltaInteropSpec extends AnyFunSuite with TestSpark {
         """"writerFeatures":["appendOnly","invariants","rowTracking"]}}""" +
         "\n").getBytes("UTF-8"))
     Files.delete(logDir.resolve(f"${0L}%020d.json"))
+    DeltaLite.clearSnapshotCache()
     assert(DeltaInterop.snapshot(spark, path).files.isEmpty,
       "checkpoint fast-start + tail commit must reconstruct the table")
     val e = intercept[Exception] {
@@ -1229,6 +1379,7 @@ class DeltaInteropSpec extends AnyFunSuite with TestSpark {
     // checkpoint alone, and read the post-both-deletes rows
     (0L to 2L).foreach(v =>
       Files.delete(logD.resolve(f"$v%020d.json")))
+    DeltaLite.clearSnapshotCache()
     val ids = DeltaInterop.read(spark, path).select("id").collect()
       .map(_.getLong(0)).sorted.toSeq
     assert(ids === (1L to 8L).filterNot(i => i % 3 == 0 || i % 4 == 0))
@@ -1518,6 +1669,7 @@ class DeltaInteropSpec extends AnyFunSuite with TestSpark {
       DeltaInterop.exportCheckpoint(spark, path)
       (0L to 2L).foreach(v => Files.delete(
         Paths.get(path, "_delta_log").resolve(f"$v%020d.json")))
+      DeltaLite.clearSnapshotCache()
       assert(run(path, "id = 7") === 3L)
       assert(DeltaInterop.read(spark, path).select("id").collect()
         .map(_.getLong(0)).sorted.toSeq ===

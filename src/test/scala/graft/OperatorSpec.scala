@@ -425,4 +425,17 @@ class OperatorSpec extends AnyFunSuite with TestSpark {
     assert(SparkEntry.oracleSql.contains("l2_containment"))
     assert(SparkEntry.oracleSql.contains("l2_containment_directed"))
   }
+
+  test("Verify's oracle_sql.json names exactly the queries a subset run dumps; no subset keeps every declared query") {
+    def keys(json: String): Set[String] =
+      org.json4s.jackson.JsonMethods.parse(json) match {
+        case org.json4s.JObject(fs) => fs.map(_._1).toSet
+        case other => fail(s"not a JSON object: $other")
+      }
+    val all = SparkEntry.oracleSql
+    val two = all.keys.toSeq.sorted.take(2).toSet
+    assert(two.size === 2)
+    assert(keys(Verify.oracleSqlJson(all, two)) === two)
+    assert(keys(Verify.oracleSqlJson(all, Set.empty)) === all.keySet)
+  }
 }

@@ -249,10 +249,9 @@ object BranchFilePruning extends Rule[LogicalPlan] with PredicateHelper {
 
   /** [[toBounds]] for callers OUTSIDE the optimizer rule — THE
     * predicate→bound converter of the row-level DML candidate path:
-    * [[graft.sources.DeltaInterop]]'s DELETE / UPDATE prune their
-    * candidate files with it, and [[DeltaLite.scopePredicateBounds]]
-    * turns MERGE `incremental_predicates` into bounds through it (one
-    * pruning semantics, not two). External callers hand ANALYZED (not
+    * [[DeltaLite.analyzePredicate]] turns every DELETE / UPDATE /
+    * replaceWhere predicate and MERGE `incremental_predicates` into
+    * bounds through it, on both logs (one pruning semantics, not two). External callers hand ANALYZED (not
     * optimized) conditions, which the rule itself never sees: type
     * coercion wraps literals in Cast (`id <= 4` on BIGINT becomes
     * `id <= cast(4 as bigint)`) and bounds may be written as

@@ -77,15 +77,15 @@ import org.json4s.jackson.JsonMethods
   * concurrent writers (including the reference stack racing the
   * exporter) interleave instead of clobbering. Row-level DML —
   * `exportDeleteWhere`, `exportUpdateWhere`, `exportMerge`, the dbt
-  * incremental `delete` / `merge` traffic — writes deletion vectors:
-  * one locator ([[locateRows]]) replays the log, gates the table,
-  * prunes candidate files with the native log's bound converters
-  * (`BranchFilePruning.boundsOf` for predicates,
-  * `DeltaLite.sourceKeyBounds` for merge keys, both through
-  * [[DeltaLite.pruneFiles]]) and cuts the matched live rows; one
-  * commit tail ([[dvFlipCommit]]) flips their DVs. Whole-partition
-  * deletes (`exportDeletePartition`) stay remove actions only, zero
-  * rewrite.
+  * incremental `delete` / `merge` traffic — is the deletion-vector
+  * tail over the one row locator both logs share
+  * ([[DeltaLite.locateRows]]: stats-pruned candidates, one positional
+  * read, the matched live rows): each export gates the table, cuts
+  * the matched rows, writes their DVs
+  * ([[DeltaLite.writeDeletionVectors]]) and commits through
+  * [[dvFlipCommit]]. The native log's copy-on-write DML is the other
+  * tail over the same locator. Whole-partition deletes
+  * (`exportDeletePartition`) stay remove actions only, zero rewrite.
   */
 object DeltaInterop {
 
@@ -1167,124 +1167,44 @@ object DeltaInterop {
     }(rebuildOnTip(spark, path, "exportDeletePartition"))
   }
 
-  /** Which rows a row-level DV op touches: rows where the SQL
-    * `predicate` holds (DELETE; UPDATE, whose `set` expressions must
-    * be deterministic too), or target rows whose `keys` equal a row of
-    * the (cut) MERGE `source`. */
-  private sealed trait RowScope
-  private final case class Where(predicate: String,
-      set: Map[String, String] = Map.empty) extends RowScope
-  private final case class OnKeys(source: DataFrame, keys: Seq[String])
-      extends RowScope
-
-  /** What [[locateRows]] hands an op's commit: the replayed state, the
-    * candidate files' positional read (table columns + `path` /
-    * `row_index`), those files' existing DV positions, and the matched
-    * LIVE rows — cut once, since every op references them several
-    * times (DV positions, rewrite source, cdc images). A DELETE's
-    * matched frame carries positions only; no data column reaches its
-    * commit. */
-  private final case class Located(snap0: Snapshot,
-      withPos: DataFrame, oldPos: DataFrame, matched: DataFrame) {
-    /** The freshly-deleted (`path`, `row_index`) positions. */
-    def fresh: DataFrame = matched.select("path", "row_index")
+  /** The gates every row-level DV export passes first, in order:
+    * writability, unmapped columns, the row-position collision check. */
+  private def requireDvWritable(snap: Snapshot, path: String, op: String,
+      commitOp: String, writesRows: Boolean): Unit = {
+    requireWritable(snap, path, op, removesRows = true, writesRows = writesRows)
+    requireUnmapped(snap, path, op)
+    DeltaLite.requireNoPosCollision(snap.schema, snap.physical,
+      s"deletion-vector ${commitOp.toLowerCase}")
   }
 
-  /** THE candidate-and-match path of the row-level DV ops (DELETE /
-    * UPDATE / MERGE), in order: log replay; the writability,
-    * unmapped-column and row-position-collision gates; the scope's own
-    * validation (determinism of predicate and SET; MERGE's key and
-    * source checks); candidate pruning — a file whose logged min/max
-    * (or partition value) disprove the scope holds no matching live
-    * row, so it is never opened (a DV'd file's stats are PHYSICAL
-    * bounds — deletion only shrinks the live set, so pruning stays
-    * sound). Predicate bounds come from
-    * [[graft.plans.BranchFilePruning.boundsOf]], key bounds from
-    * [[DeltaLite.sourceKeyBounds]] — the converters the native log
-    * prunes with. Then the DV-less positional read of the candidates
-    * (positions are per-file PHYSICAL indexes, the DV's domain), the
-    * anti-join that keeps already-deleted rows from counting as fresh
-    * matches (they would make an untouched file look touched and
-    * inflate cardinality), and the cut. Left(version) when the op is a
-    * no-op: a predicate scope over no candidate file, or an empty
-    * MERGE source (an empty target still takes a MERGE's inserts). */
-  private def locateRows(spark: SparkSession, path: String, op: String,
-      commitOp: String, scope: RowScope): Either[Long, Located] = {
-    import org.apache.spark.sql.functions.{col, count, expr, lit}
-    val snap0 = snapshot(spark, path)
-    requireWritable(snap0, path, op, removesRows = true,
-      writesRows = scope match {
-        case Where(_, set) => set.nonEmpty
-        case _: OnKeys => true
-      })
-    requireUnmapped(snap0, path, op)
-    DeltaLite.requireNoPosCollision(snap0.schema, snap0.physical,
-      s"deletion-vector ${commitOp.toLowerCase}")
-    val (bounds, matchRows) = scope match {
-      case Where(predicate, set) =>
-        val unknown = set.keySet -- snap0.schema.fieldNames
-        require(unknown.isEmpty,
-          s"$op on $path: SET names unknown column(s) " +
-            s"${unknown.toSeq.sorted.mkString(", ")}")
-        if (snap0.files.isEmpty) return Left(snap0.version)
-        // analyzing over an empty frame validates the predicate's
-        // names/types before any I/O
-        val emptyT = spark.createDataFrame(
-          new java.util.ArrayList[Row](), snap0.schema)
-        val conds = emptyT.filter(expr(predicate))
-          .queryExecution.analyzed.collect {
-            case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-              f.condition -> f.child.outputSet
-          }
-        DeltaLite.requireDeterministicDv(op, path, predicate,
-          conds.forall(_._1.deterministic))
-        // SET expressions re-evaluate on rebase retries and feed cdc
-        // postimages — nondeterminism would let the three disagree
-        require(emptyT.select(set.toSeq.map { case (k, e) =>
-            expr(e).as(k) }: _*).queryExecution.analyzed.expressions
-            .forall(_.deterministic),
-          s"$op on $path: a SET expression is nondeterministic — " +
-            "materialize the choice into a column first")
-        (conds.flatMap { case (c, out) =>
-            graft.plans.BranchFilePruning.boundsOf(c, out) },
-          (pos: DataFrame) => {
-            val hit = pos.filter(expr(predicate))
-            // a DELETE (no SET) reads positions only
-            if (set.isEmpty) hit.select(col("path"), col("row_index"))
-            else hit
-          })
-      case OnKeys(src, keys) =>
-        requireSchemaMatch(src, snap0, path, op)
-        require(keys.nonEmpty, s"$op on $path: empty key list")
-        val unknown = keys.toSet -- snap0.schema.fieldNames
-        require(unknown.isEmpty,
-          s"$op on $path: unknown key column(s) " +
-            s"${unknown.toSeq.sorted.mkString(", ")}")
-        require(src.groupBy(keys.map(col): _*)
-            .agg(count(lit(1)).as("__n"))
-            .filter(col("__n") > 1).limit(1).count() == 0L,
-          s"$op on $path: duplicate source keys — a target row " +
-            "matched by two source rows is ambiguous (delta-spark's " +
-            "multiple-source-match error); de-duplicate the source " +
-            "first")
-        // empty source: nothing matches, nothing inserts
-        if (src.isEmpty) return Left(snap0.version)
-        (DeltaLite.sourceKeyBounds(src, keys),
-          (pos: DataFrame) =>
-            pos.join(src.select(keys.map(col): _*), keys, "left_semi"))
-    }
-    val candidates = DeltaLite.pruneFiles(snap0, bounds)
-    if (candidates.isEmpty && scope.isInstanceOf[Where])
-      return Left(snap0.version)
-    val withPos = DeltaLite.readFilesWithPos(spark, path, snap0.schema,
-      candidates.map(_.copy(dv = None)), snap0.partitionBy, snap0.physical,
-      snap0.properties)
-    val (oldPos, _) = DeltaLite.dvPositionsFrame(spark, path,
-      candidates.flatMap(f => f.dv.map(f.path -> _)))
-    val matched = graft.Frames.cut(matchRows(withPos).join(oldPos,
-      col("path") === col("__dv_path") &&
-        col("row_index") === col("__dv_ri"), "left_anti"))
-    Right(Located(snap0, withPos, oldPos, matched))
+  /** The predicate exports' locate step ([[exportDeleteWhere]], and
+    * [[exportUpdateWhere]] with its `set`), in order: the DV gates, the
+    * SET's column names, a no-op on a table with no live file, the DV
+    * determinism decline of the predicate and of the SET expressions
+    * (they re-evaluate on rebase retries and feed cdc postimages —
+    * nondeterminism would let the three disagree), then
+    * [[DeltaLite.locateRows]]. None when the op is a no-op: no live
+    * file, or no candidate file. */
+  private def locateWhere(spark: SparkSession, path: String, op: String,
+      commitOp: String, snap0: Snapshot, predicate: String,
+      set: Map[String, String] = Map.empty): Option[DeltaLite.Located] = {
+    import org.apache.spark.sql.functions.expr
+    requireDvWritable(snap0, path, op, commitOp, writesRows = set.nonEmpty)
+    val unknown = set.keySet -- snap0.schema.fieldNames
+    require(unknown.isEmpty,
+      s"$op on $path: SET names unknown column(s) " +
+        s"${unknown.toSeq.sorted.mkString(", ")}")
+    if (snap0.files.isEmpty) return None
+    val cond = expr(predicate)
+    DeltaLite.requireDeterministicDv(op, path, predicate,
+      DeltaLite.analyzePredicate(spark, snap0.schema, cond).deterministic)
+    require(spark.createDataFrame(new java.util.ArrayList[Row](), snap0.schema)
+        .select(set.toSeq.map { case (k, e) => expr(e).as(k) }: _*)
+        .queryExecution.analyzed.expressions.forall(_.deterministic),
+      s"$op on $path: a SET expression is nondeterministic — " +
+        "materialize the choice into a column first")
+    Some(DeltaLite.locateRows(spark, path, snap0, DeltaLite.Where(cond)))
+      .filter(_.candidates.nonEmpty)
   }
 
   /** Row-level DELETE on a standard Delta table via DELETION VECTORS —
@@ -1304,19 +1224,22 @@ object DeltaInterop {
     * concurrent flip or file removal declines loudly (delta-spark's
     * concurrent-delete conflict), never commits a DV that would
     * resurrect or double-count rows. Candidate files and matched rows
-    * come from [[locateRows]]. Returns the committed version, or the
-    * current version unchanged when no live row matches. */
+    * come from [[DeltaLite.locateRows]]; the matched positions are cut
+    * once. Returns the committed version, or the current version
+    * unchanged when no live row matches. */
   def exportDeleteWhere(spark: SparkSession, path: String,
       predicate: String): Long = {
-    import org.apache.spark.sql.functions.{expr, lit}
-    locateRows(spark, path, "exportDeleteWhere", "DELETE",
-        Where(predicate)).fold(identity, l =>
-      dvFlipCommit(spark, path, "exportDeleteWhere", "DELETE", l.snap0,
-        l.fresh, l.oldPos, () => Nil,
-        () => Some(l.withPos.filter(expr(predicate))
-          .join(l.fresh, Seq("path", "row_index"), "left_semi")
-          .drop("path", "row_index")
-          .withColumn("_change_type", lit("delete")))))
+    import org.apache.spark.sql.functions.lit
+    val snap0 = snapshot(spark, path)
+    locateWhere(spark, path, "exportDeleteWhere", "DELETE", snap0, predicate)
+        .fold(snap0.version) { l =>
+      // a DELETE cuts positions only; no data column reaches its commit
+      dvFlipCommit(spark, path, "exportDeleteWhere", "DELETE", snap0,
+        graft.Frames.cut(l.matched.select("path", "row_index")), l.oldPos,
+        () => Nil,
+        () => Some(l.matched.drop("path", "row_index")
+          .withColumn("_change_type", lit("delete"))))
+    }
   }
 
   /** Row-level UPDATE via deletion vectors on the export path: DV the
@@ -1324,7 +1247,8 @@ object DeltaInterop {
     * survivors) and append the rewritten rows as fresh files, in ONE
     * OCC commit. `set` maps column name → SQL expression; every
     * expression evaluates against the row's OLD values (standard
-    * UPDATE semantics) and casts to the column's declared type.
+    * UPDATE semantics, [[DeltaLite.updateProjection]]) and casts to the
+    * column's declared type.
     * Updating a partition column is allowed — the rewritten rows land
     * in their new partitions through the partitioned stage write.
     * Matching, pruning, DV union, rebase and serializability rules
@@ -1334,30 +1258,29 @@ object DeltaInterop {
     * update_preimage/update_postimage change files. */
   def exportUpdateWhere(spark: SparkSession, path: String,
       predicate: String, set: Map[String, String]): Long = {
-    import org.apache.spark.sql.functions.{col, expr, lit}
+    import org.apache.spark.sql.functions.{expr, lit}
     require(set.nonEmpty, s"exportUpdateWhere on $path: empty SET")
-    locateRows(spark, path, "exportUpdateWhere", "UPDATE",
-        Where(predicate, set)).fold(identity, l => {
-      val matchedData = l.matched.drop("path", "row_index")
-      // every SET expression sees the OLD row (one select, not chained
-      // withColumn — a chained form would let one SET read another's
-      // result); the cast to the declared type is UPDATE's implicit cast
-      val rewritten = matchedData.select(l.snap0.schema.fields.map(f =>
-        set.get(f.name)
-          .map(e => expr(e).cast(f.dataType).as(f.name))
-          .getOrElse(col(f.name))).toSeq: _*)
-      requireSchemaMatch(rewritten, l.snap0, path, "exportUpdateWhere")
-      dvFlipCommit(spark, path, "exportUpdateWhere", "UPDATE", l.snap0,
-        l.fresh, l.oldPos,
-        () => if (l.matched.isEmpty) Nil
+    val snap0 = snapshot(spark, path)
+    locateWhere(spark, path, "exportUpdateWhere", "UPDATE", snap0,
+        predicate, set).fold(snap0.version) { l =>
+      // cut once: the DV positions, the rewrite and the cdc images all
+      // read the matched rows
+      val matched = graft.Frames.cut(l.matched)
+      val matchedData = matched.drop("path", "row_index")
+      val rewritten = DeltaLite.updateProjection(matchedData, snap0.schema,
+        set.map { case (k, e) => k -> expr(e) }, hit = None)
+      requireSchemaMatch(rewritten, snap0, path, "exportUpdateWhere")
+      dvFlipCommit(spark, path, "exportUpdateWhere", "UPDATE", snap0,
+        matched.select("path", "row_index"), l.oldPos,
+        () => if (matched.isEmpty) Nil
           else writeDataFiles(spark, rewritten, root(path),
-            l.snap0.partitionBy),
+            snap0.partitionBy),
         () => Some(
           matchedData
             .withColumn("_change_type", lit("update_preimage"))
             .unionByName(rewritten
               .withColumn("_change_type", lit("update_postimage")))))
-    })
+    }
   }
 
   /** MERGE (upsert) on the export path — the reference stack's
@@ -1370,42 +1293,59 @@ object DeltaInterop {
     * as fresh files; ONE OCC commit carries both. Source keys must be
     * unique (two source rows matching one target row is ambiguous —
     * delta-spark's multiple-source-match error). Candidate files
-    * prune by the source's per-key min/max against log stats — a
-    * selective merge into a 100 TB table opens only key-overlapping
-    * files. CDF tables get update_preimage/update_postimage/insert
-    * change files. */
+    * prune by the source's per-key min/max against log stats
+    * ([[DeltaLite.locateRows]]) — a selective merge into a 100 TB
+    * table opens only key-overlapping files. CDF tables get
+    * update_preimage/update_postimage/insert change files. */
   def exportMerge(spark: SparkSession, path: String,
       source: DataFrame, keys: Seq[String]): Long = {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.{col, count, lit}
+    val op = "exportMerge"
     val src = graft.Frames.cut(source)
-    locateRows(spark, path, "exportMerge", "MERGE", OnKeys(src, keys))
-        .fold(identity, l => {
-      val cols = l.snap0.schema.fieldNames.map(col).toSeq
-      val matchedData = l.matched.drop("path", "row_index")
-      // WHEN MATCHED: each matched target row takes its source row's
-      // values (a key shared by N target rows yields N identical
-      // rewrites — delta-spark's multi-target-match semantics)
-      val rewritten = l.matched.select(keys.map(col): _*)
-        .join(src, keys, "inner").select(cols: _*)
-      // WHEN NOT MATCHED: source rows whose key matches no LIVE target
-      // row (candidate pruning is sound for this anti-join too — a
-      // non-candidate file cannot hold a matching key)
-      val inserts = src.join(l.matched.select(keys.map(col): _*),
-        keys, "left_anti").select(cols: _*)
-      val appendDf = rewritten.unionByName(inserts)
-      dvFlipCommit(spark, path, "exportMerge", "MERGE", l.snap0,
-        l.fresh, l.oldPos,
-        () => if (appendDf.isEmpty) Nil
-          else writeDataFiles(spark, appendDf, root(path),
-            l.snap0.partitionBy),
-        () => Some(
-          matchedData
-            .withColumn("_change_type", lit("update_preimage"))
-            .unionByName(rewritten
-              .withColumn("_change_type", lit("update_postimage")))
-            .unionByName(inserts
-              .withColumn("_change_type", lit("insert")))))
-    })
+    val snap0 = snapshot(spark, path)
+    requireDvWritable(snap0, path, op, "MERGE", writesRows = true)
+    requireSchemaMatch(src, snap0, path, op)
+    require(keys.nonEmpty, s"$op on $path: empty key list")
+    val unknown = keys.toSet -- snap0.schema.fieldNames
+    require(unknown.isEmpty,
+      s"$op on $path: unknown key column(s) " +
+        s"${unknown.toSeq.sorted.mkString(", ")}")
+    require(src.groupBy(keys.map(col): _*)
+        .agg(count(lit(1)).as("__n"))
+        .filter(col("__n") > 1).limit(1).count() == 0L,
+      s"$op on $path: duplicate source keys — a target row " +
+        "matched by two source rows is ambiguous (delta-spark's " +
+        "multiple-source-match error); de-duplicate the source " +
+        "first")
+    // empty source: nothing matches, nothing inserts (an empty target
+    // still takes a non-empty source's inserts)
+    if (src.isEmpty) return snap0.version
+    val l = DeltaLite.locateRows(spark, path, snap0, DeltaLite.OnKeys(src, keys))
+    val matched = graft.Frames.cut(l.matched)
+    val cols = snap0.schema.fieldNames.map(col).toSeq
+    val matchedData = matched.drop("path", "row_index")
+    // WHEN MATCHED: each matched target row takes its source row's
+    // values (a key shared by N target rows yields N identical
+    // rewrites — delta-spark's multi-target-match semantics)
+    val rewritten = matched.select(keys.map(col): _*)
+      .join(src, keys, "inner").select(cols: _*)
+    // WHEN NOT MATCHED: source rows whose key matches no LIVE target
+    // row (candidate pruning is sound for this anti-join too — a
+    // non-candidate file cannot hold a matching key)
+    val inserts = src.join(matched.select(keys.map(col): _*),
+      keys, "left_anti").select(cols: _*)
+    val appendDf = rewritten.unionByName(inserts)
+    dvFlipCommit(spark, path, op, "MERGE", snap0,
+      matched.select("path", "row_index"), l.oldPos,
+      () => if (appendDf.isEmpty) Nil
+        else writeDataFiles(spark, appendDf, root(path), snap0.partitionBy),
+      () => Some(
+        matchedData
+          .withColumn("_change_type", lit("update_preimage"))
+          .unionByName(rewritten
+            .withColumn("_change_type", lit("update_postimage")))
+          .unionByName(inserts
+            .withColumn("_change_type", lit("insert")))))
   }
 
   /** The shared COMMIT TAIL of the row-level DV write surfaces

@@ -39,11 +39,16 @@ import scala.jdk.CollectionConverters._
   *                    adds files, removes nothing — unchanged files are
   *                    never rewritten. At 100 TB a daily append costs the
   *                    day, not the decade.
-  *   - MERGE/DELETE/UPDATE rewrite ONLY touched files: candidate files
-  *                    are pruned by per-file min/max stats (data
-  *                    skipping), then the truly-hit files are found with a
-  *                    `_metadata.file_path` scan; everything else is
-  *                    carried forward by reference.
+  *   - row-level DML: one locator for both logs ([[locateRows]]) —
+  *                    candidate files pruned by per-file min/max stats
+  *                    (data skipping), then one positional read of the
+  *                    candidates finds the matched live rows. Two write
+  *                    tails sit on top: copy-on-write (MERGE / DELETE /
+  *                    UPDATE / replaceWhere rewrite ONLY the touched
+  *                    files; everything else is carried forward by
+  *                    reference) and deletion vectors
+  *                    ([[deleteVectorized]] and the `_delta_log`
+  *                    exports: zero data files rewritten).
   *   - data skipping: [[scan]] prunes files whose [min,max] cannot
   *                    intersect a column bound before Spark ever opens
   *                    them — the Delta/iceberg stats-pruning read path.
@@ -3041,24 +3046,18 @@ object DeltaLite {
     * positions); [[compact]]/[[cluster]]/[[reorgPurge]] materialize DVs
     * away, [[vacuum]] keeps the DV files of retained versions. Prior
     * DVs of touched files are folded into the new DV so each file
-    * references exactly one. A nondeterministic `cond` is declined. */
+    * references exactly one. A nondeterministic `cond` is declined.
+    * Matched rows come from [[locateRows]], so only the files whose
+    * stats admit `cond` are read. */
   def deleteVectorized(spark: SparkSession, path: String, cond: Column): Long = {
     val snap = snapshot(path)
     rejectIfAppendOnly(snap, "DELETE_DV")
     requireNoPosCollision(snap.schema, snap.physical, "DELETE_DV")
     requireDeterministicDv("DELETE_DV", path, cond.toString,
-      spark.createDataFrame(new java.util.ArrayList[Row](), snap.schema)
-        .filter(cond).queryExecution.analyzed.collect {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            f.condition.deterministic
-        }.forall(identity))
-    val fresh = graft.Frames.cut(readFilesWithPos(spark, path, snap.schema,
-        snap.files, snap.partitionBy, snap.physical)
-      .filter(coalesce(cond, lit(false)))
-      .select("path", "row_index"))
-    val (oldPos, _) = dvPositionsFrame(spark, path,
-      snap.files.flatMap(f => f.dv.map(f.path -> _)))
-    val newDv = writeDeletionVectors(spark, path, fresh, oldPos).toMap
+      analyzePredicate(spark, snap.schema, cond).deterministic)
+    val l = locateRows(spark, path, snap, Where(cond))
+    val newDv = writeDeletionVectors(spark, path,
+      graft.Frames.cut(l.matched.select("path", "row_index")), l.oldPos).toMap
     if (newDv.isEmpty) return commit(path, snap, "DELETE_DV")
     val readds = snap.files.filter(f => newDv.contains(f.path))
       .map(f => f.copy(dv = newDv.get(f.path)))
@@ -4902,11 +4901,13 @@ object DeltaLite {
         s"$op is not allowed: this table is append-only " +
           "(TBLPROPERTIES delta.appendOnly = true)")
 
-  /** MERGE INTO upsert (dbt incremental `merge` / Delta MERGE / S8).
-    * Rewrites ONLY the files that contain a key present in `updates`:
-    * stats-prune candidates by the updates' key ranges, locate truly-hit
-    * files with a `_metadata.file_path` semi-join, upsert those rows, and
-    * carry every other file forward by reference. */
+  /** MERGE INTO upsert (dbt incremental `merge` / Delta MERGE / S8),
+    * copy-on-write. Rewrites ONLY the files that hold a key present in
+    * `updates`: [[locateRows]] stats-prunes candidates by the updates'
+    * key ranges and semi-joins the candidates' rows on the keys, the
+    * copy-on-write tail ([[touchedFiles]]) collects the hit files,
+    * their rows are upserted, and every other file is carried forward
+    * by reference. */
   def merge(spark: SparkSession, path: String, updatesIn: DataFrame,
       keys: Seq[String]): Long = {
     require(keys.nonEmpty, "merge keys required")
@@ -4915,7 +4916,8 @@ object DeltaLite {
     rejectIfAppendOnly(snap, "MERGE")
     checkWriteSchema(updatesIn.schema, snap.schema, "MERGE")
     withMaterializedSource(updatesIn) { updates =>
-      val (touched, touchedRows) = filesHoldingKeys(spark, path, snap, updates, keys)
+      val (touched, touchedRows) = touchedFiles(spark, path, snap,
+        OnKeys(updates, keys))
       val merged = graft.operators.Merge.upsert(touchedRows, align(updates, snap.schema), keys)
       checkConstraints(merged, snap.schema, snap.constraints, "MERGE")
       val v = snap.version + 1
@@ -4928,8 +4930,8 @@ object DeltaLite {
   /** Materialize a merge/delete+insert SOURCE once before its multiple
     * consumers run (Delta's MERGE materializes its source for the same
     * reason): the source plan is evaluated up to four times per commit —
-    * key-bounds aggregate, candidate-confirm semi-join, duplicate-key
-    * guard, and the merge join itself — and for CDF-derived sources
+    * [[locateRows]]' key-bounds aggregate and key semi-join,
+    * duplicate-key guard, and the merge join itself — and for CDF-derived sources
     * (incremental MV refreshes) each evaluation replays the whole
     * change-diff. A spillable within-commit cache collapses that to one
     * evaluation; unpersisted before returning, so nothing outlives the
@@ -4947,10 +4949,10 @@ object DeltaLite {
     * MATCHED BY SOURCE ...`): clause semantics from
     * [[graft.operators.Merge.merge]], file discipline from [[merge]] —
     * only files that can hold an affected row are rewritten. With any
-    * NOT MATCHED BY SOURCE clause every live file is a candidate (rows
-    * absent from the source live anywhere); otherwise candidates are
-    * stats-pruned by the source's key bounds and confirmed with a
-    * `_metadata.file_path` semi-join.
+    * NOT MATCHED BY SOURCE clause every candidate file of the scope is
+    * rewritten (rows absent from the source live anywhere); otherwise
+    * the touched files are [[locateRows]]' key matches, collected by
+    * the copy-on-write tail ([[touchedFiles]]).
     *
     * `incrementalPredicates` is dbt's `incremental_predicates` config:
     * declared SQL predicates over TARGET columns that scope the merge's
@@ -4963,7 +4965,7 @@ object DeltaLite {
     * only target match is out of scope INSERTs a second row — the
     * config trades that contract for scan cost. At scale this is the
     * point: simple `col <op> literal` conjuncts become stats bounds
-    * ([[scopePredicateBounds]]) that shrink the candidate-file set the
+    * ([[candidateFiles]]) that shrink the candidate-file set the
     * key-confirm scan reads (on a 100 TB target a `day >= X` predicate
     * turns the confirm scan from all-files into the recent tail);
     * conjuncts the extractor cannot read still apply row-level, so
@@ -5010,18 +5012,16 @@ object DeltaLite {
     val scopeCol: Option[Column] =
       if (incrementalPredicates.isEmpty) None
       else Some(incrementalPredicates.map(p => expr(p)).reduce(_ && _))
-    val scopeBounds =
-      scopePredicateBounds(spark, snap.schema, incrementalPredicates)
     val (touched, touchedRows) =
       if (hasBySource) {
         // by-source clauses can touch ANY in-scope row; candidates are
         // every file the scope bounds cannot disprove (all files when
         // no predicates are declared — the pre-config behavior)
-        val cands = pruneFiles(snap, scopeBounds)
+        val cands = scopeCol.fold(snap.files)(c =>
+          candidateFiles(spark, snap, Where(c)))
         (cands.map(_.path),
           readFiles(spark, path, snap.schema, cands, snap.partitionBy, snap.physical))
-      } else filesHoldingKeys(spark, path, snap, source, keys,
-        scopeCol, scopeBounds)
+      } else touchedFiles(spark, path, snap, OnKeys(source, keys, scopeCol))
     val target = newFields.foldLeft(touchedRows)((d, f) =>
       d.withColumn(f.name, lit(null).cast(f.dataType)))
     // Column DEFAULTs apply to MERGE INSERTs exactly as in SQL: an INSERT
@@ -5095,7 +5095,8 @@ object DeltaLite {
     val batchRaw = applyDefaults(batchIn, snap.schema, snap.properties)
     checkWriteSchema(batchRaw.schema, snap.schema, "DELETE_INSERT")
     withMaterializedSource(batchRaw) { batch =>
-      val (touched, touchedRows) = filesHoldingKeys(spark, path, snap, batch, keys)
+      val (touched, touchedRows) = touchedFiles(spark, path, snap,
+        OnKeys(batch, keys))
       val survivors = touchedRows.join(
         batch.select(keys.map(batch.col): _*).distinct(), keys, "left_anti")
       val newData = survivors.unionByName(align(batch, snap.schema))
@@ -5287,44 +5288,63 @@ object DeltaLite {
       tsMillis: Long): Long =
     restore(spark, path, versionAtTimestamp(path, tsMillis))
 
-  /** Stats-prunable [[ColumnBound]]s of dbt-style
-    * `incremental_predicates` strings: the predicates analyze over an
-    * empty frame of the table's schema and the condition converts
-    * through [[graft.plans.BranchFilePruning.boundsOf]] — the one
-    * predicate→bound converter, shared with the read path and the
-    * standard-log DML. Anything it cannot read is simply not used for
-    * file pruning — the caller still applies the predicate row-level,
-    * so extraction stays a pure optimization. */
-  private[graft] def scopePredicateBounds(spark: SparkSession,
-      schema: StructType, preds: Seq[String]): Seq[ColumnBound] = {
-    if (preds.isEmpty) return Nil
-    val empty = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    empty.filter(preds.map(p => expr(p)).reduce(_ && _))
-      .queryExecution.analyzed.collect {
+  /** Which rows a row-level op touches: rows where `cond` holds (a NULL
+    * result is no match — DELETE, UPDATE, replaceWhere), or live rows
+    * whose `keys` equal a key of `source` (MERGE, delete+insert) among
+    * the rows where `within` holds (dbt `incremental_predicates`). */
+  private[graft] sealed trait RowScope
+  private[graft] final case class Where(cond: Column) extends RowScope
+  private[graft] final case class OnKeys(source: DataFrame, keys: Seq[String],
+      within: Option[Column] = None) extends RowScope
+
+  /** What [[locateRows]] finds: the candidate files, the deleted
+    * positions of their deletion vectors ([[dvPositionsFrame]]), and the
+    * matched LIVE rows — table columns plus `path` (the file's log key)
+    * and `row_index` (its physical position, the DV's domain). `matched`
+    * is lazy and uncut: the copy-on-write tail collects its distinct
+    * paths, the deletion-vector tails cut it. */
+  private[graft] final case class Located(candidates: Seq[AddFile],
+      oldPos: DataFrame, matched: DataFrame)
+
+  /** A predicate analyzed over an empty frame of the table schema, so
+    * names and types validate before any I/O: whether it is
+    * deterministic (the DV ops decline one that is not), and the bounds
+    * [[graft.plans.BranchFilePruning.boundsOf]] reads from it. What it
+    * cannot read is not used for pruning; the predicate still applies
+    * row-level. */
+  private[graft] final case class PredicateInfo(deterministic: Boolean,
+      bounds: Seq[ColumnBound])
+
+  private[graft] def analyzePredicate(spark: SparkSession,
+      schema: StructType, cond: Column): PredicateInfo = {
+    val conds = spark.createDataFrame(new java.util.ArrayList[Row](), schema)
+      .filter(cond).queryExecution.analyzed.collect {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-          graft.plans.BranchFilePruning.boundsOf(f.condition,
-            f.child.outputSet)
-      }.flatten
+          f.condition -> f.child.outputSet
+      }
+    PredicateInfo(conds.forall(_._1.deterministic), conds.flatMap {
+      case (c, out) => graft.plans.BranchFilePruning.boundsOf(c, out) })
   }
 
-  /** The candidate-file set a MERGE with these keys (+ optional
-    * incremental predicates) would read for its key-confirm scan —
-    * source key bounds plus predicate bounds through [[pruneFiles]].
-    * Exposed for tests/inspection of the predicate's pruning effect. */
-  private[graft] def mergeCandidates(spark: SparkSession, path: String,
-      source: DataFrame, keys: Seq[String],
-      incrementalPredicates: Seq[String] = Nil): Seq[AddFile] = {
-    val snap = snapshot(path)
-    pruneFiles(snap, sourceKeyBounds(source, keys) ++
-      scopePredicateBounds(spark, snap.schema, incrementalPredicates))
+  /** The locator's candidate step: the live files of `snap` whose
+    * logged min/max (or partition value) cannot disprove `scope` —
+    * [[pruneFiles]] over the predicate's bounds, or over the source's
+    * key bounds ([[sourceKeyBounds]], one small agg) plus `within`'s. */
+  private[graft] def candidateFiles(spark: SparkSession, snap: Snapshot,
+      scope: RowScope): Seq[AddFile] = {
+    def bounds(c: Column) = analyzePredicate(spark, snap.schema, c).bounds
+    pruneFiles(snap, scope match {
+      case Where(cond) => bounds(cond)
+      case OnKeys(src, keys, within) =>
+        sourceKeyBounds(src, keys) ++ within.toSeq.flatMap(bounds)
+    })
   }
 
   /** Per-key [min, max] bounds of `keyed`'s key columns (one small
     * agg) — THE key-bound builder of the merge candidate path, for both
-    * logs ([[merge]] here, [[DeltaInterop.exportMerge]] on `_delta_log`).
-    * Values stay in their collected external form; [[pruneFiles]]
-    * normalizes them. An all-null key column yields an open bound. */
+    * logs (through [[candidateFiles]]). Values stay in their collected
+    * external form; [[pruneFiles]] normalizes them. An all-null key
+    * column yields an open bound. */
   private[graft] def sourceKeyBounds(keyed: DataFrame,
       keys: Seq[String]): Seq[ColumnBound] = {
     val aggExprs = keys.zipWithIndex.flatMap { case (k, i) => Seq(
@@ -5336,46 +5356,87 @@ object DeltaLite {
     }
   }
 
-  /** Files of `snap` holding at least one of `keyed`'s key tuples, plus
-    * a DataFrame of exactly those files' rows: stats-prune candidates by
-    * the key bounds (one tiny agg), then an exact `_metadata.file_path`
-    * semi-join. Shared by [[merge]] and [[deleteInsert]]. */
-  private def filesHoldingKeys(spark: SparkSession, path: String,
-      snap: Snapshot, keyed: DataFrame, keys: Seq[String],
-      scope: Option[Column] = None,
-      scopeBounds: Seq[ColumnBound] = Nil)
-      : (Seq[String], DataFrame) = {
-    val r = root(path)
-    val bounds = sourceKeyBounds(keyed, keys) ++ scopeBounds
-    val candidates = pruneFiles(snap, bounds)
-    val touched: Seq[String] =
-      if (candidates.isEmpty) Nil
-      else {
-        val base = readFilesWithPos(spark, path, snap.schema, candidates,
-          snap.partitionBy, snap.physical)
-        // the confirm scan only needs IN-SCOPE matches: an out-of-scope
-        // row can never be touched, so its file need not rewrite
-        val cand = scope.fold(base)(c => base.filter(coalesce(c, lit(false))))
-        cand.select(col("path").as("__fp") +: keys.map(cand.col): _*)
-          .join(keyed.select(keys.map(keyed.col): _*).distinct(), keys, "left_semi")
-          .select("__fp").distinct().collect()
-          .map(_.getString(0))
-          .toSeq
-      }
-    val touchedSet = touched.toSet
-    (touched, readFiles(spark, path, snap.schema,
-      snap.files.filter(f => touchedSet.contains(f.path)), snap.partitionBy, snap.physical))
+  /** THE candidate-and-match step of every row-level op on both logs,
+    * under two write tails: copy-on-write ([[delete]], [[update]],
+    * [[replaceWhere]], [[merge]], [[mergeClauses]], [[deleteInsert]],
+    * through [[touchedFiles]]) and deletion vectors
+    * ([[deleteVectorized]] and `DeltaInterop`'s `exportDeleteWhere`,
+    * `exportUpdateWhere` and `exportMerge`: cut `matched`, then
+    * [[writeDeletionVectors]]). A file whose stats disprove the scope
+    * ([[candidateFiles]]) is never opened; a DV'd file's stats are
+    * PHYSICAL bounds, and deletion only shrinks the live set, so
+    * pruning stays sound. The match is one positional read of the
+    * candidates, the scope's filter or key semi-join, and, when a
+    * candidate carries a DV, the anti-join that keeps already-deleted
+    * rows from matching. Each op keeps its own gates. */
+  private[graft] def locateRows(spark: SparkSession, path: String,
+      snap: Snapshot, scope: RowScope): Located = {
+    val candidates = candidateFiles(spark, snap, scope)
+    val withPos = readFilesWithPos(spark, path, snap.schema,
+      candidates.map(_.copy(dv = None)), snap.partitionBy, snap.physical,
+      snap.properties)
+    val hits = scope match {
+      case Where(cond) => withPos.filter(cond)
+      case OnKeys(src, keys, within) =>
+        within.fold(withPos)(c => withPos.filter(c))
+          .join(src.select(keys.map(col): _*), keys, "left_semi")
+    }
+    val dvs = candidates.flatMap(f => f.dv.map(f.path -> _))
+    val (oldPos, _) = dvPositionsFrame(spark, path, dvs)
+    Located(candidates, oldPos,
+      if (dvs.isEmpty) hits
+      else hits.join(oldPos, col("path") === col("__dv_path") &&
+        col("row_index") === col("__dv_ri"), "left_anti"))
   }
 
-  /** Delta `DELETE FROM ... WHERE cond`: rewrites ONLY files containing a
-    * matching row (found via `_metadata.file_path`); all other files are
-    * carried forward. Rows where `cond` is NULL are kept (SQL DELETE
-    * semantics). */
+  /** The copy-on-write tail's locate step: the live files holding at
+    * least one row of `scope`, and a read of exactly those files' live
+    * rows (the rewrite's input). A partition-only predicate resolves
+    * from the log alone ([[partitionOnlyTouched]], zero jobs); otherwise
+    * the touched files are the distinct `path`s of [[locateRows]]'
+    * matches — one collect, and no scan at all without a candidate. */
+  private def touchedFiles(spark: SparkSession, path: String,
+      snap: Snapshot, scope: RowScope): (Seq[String], DataFrame) = {
+    val hitPaths = (scope match {
+      case Where(cond) =>
+        partitionOnlyTouched(spark, snap, coalesce(cond, lit(false)))
+      case _: OnKeys => None
+    }).map(_.toSet).getOrElse {
+      val l = locateRows(spark, path, snap, scope)
+      if (l.candidates.isEmpty) Set.empty[String]
+      else l.matched.select("path").distinct().collect()
+        .map(_.getString(0)).toSet
+    }
+    val touched = snap.files.filter(f => hitPaths.contains(f.path))
+    (touched.map(_.path), readFiles(spark, path, snap.schema, touched,
+      snap.partitionBy, snap.physical))
+  }
+
+  /** UPDATE's SET projection on both logs: ONE select in which every
+    * SET expression — and `hit`, when only some rows of `df` are updated
+    * — reads the row's OLD values (chained `withColumn`s would let a
+    * later SET, and the re-checked predicate, see an earlier SET's
+    * result), each cast to its column's declared type (UPDATE's
+    * implicit cast). */
+  private[sources] def updateProjection(df: DataFrame, schema: StructType,
+      set: Map[String, Column], hit: Option[Column]): DataFrame =
+    df.select(schema.fields.toSeq.map { f =>
+      set.get(f.name).map { e =>
+        val v = e.cast(f.dataType)
+        hit.fold(v)(h => when(h, v).otherwise(col(f.name))).as(f.name)
+      }.getOrElse(col(f.name))
+    }: _*)
+
+  /** Delta `DELETE FROM ... WHERE cond`, copy-on-write: rewrites ONLY
+    * the files holding a matching row ([[touchedFiles]] over
+    * [[locateRows]], which opens only the files whose stats admit
+    * `cond`); all other files are carried forward. Rows where `cond` is
+    * NULL are kept (SQL DELETE semantics). */
   def delete(spark: SparkSession, path: String, cond: Column): Long = {
     val snap = snapshot(path)
     rejectIfAppendOnly(snap, "DELETE")
     val hit = coalesce(cond, lit(false))
-    val (touched, kept) = touchedBy(spark, path, snap, hit)
+    val (touched, kept) = touchedFiles(spark, path, snap, Where(cond))
     val rewritten = kept.filter(!hit)
     val v = snap.version + 1
     val adds = if (touched.isEmpty) Nil
@@ -5391,7 +5452,8 @@ object DeltaLite {
   }
 
   /** Delta `UPDATE ... SET col = expr WHERE cond`: same touched-file
-    * discipline as [[delete]]. */
+    * discipline as [[delete]]; every SET and the predicate read the old
+    * row ([[updateProjection]]). */
   def update(spark: SparkSession, path: String, cond: Column,
       set: Map[String, Column]): Long = {
     val snap = snapshot(path)
@@ -5409,11 +5471,8 @@ object DeltaLite {
           "and cannot be assigned")
     }
     val hit = coalesce(cond, lit(false))
-    val (touched, kept) = touchedBy(spark, path, snap, hit)
-    val rewritten = kept.columns.foldLeft(kept) { (df, c) =>
-      set.get(c).map(e => df.withColumn(c, when(hit, e).otherwise(df(c))))
-        .getOrElse(df)
-    }
+    val (touched, kept) = touchedFiles(spark, path, snap, Where(cond))
+    val rewritten = updateProjection(kept, snap.schema, set, Some(hit))
     if (touched.nonEmpty)
       checkConstraints(rewritten, snap.schema, snap.constraints, "UPDATE")
     val v = snap.version + 1
@@ -5442,7 +5501,7 @@ object DeltaLite {
     rejectIdentity(snap, "REPLACE_WHERE")
     rejectIfAppendOnly(snap, "REPLACE_WHERE")
     val hit = coalesce(cond, lit(false))
-    val (touched, kept) = touchedBy(spark, path, snap, hit)
+    val (touched, kept) = touchedFiles(spark, path, snap, Where(cond))
     val df = applyDefaults(dfIn, snap.schema, snap.properties)
     checkWriteSchema(df.schema, snap.schema, "REPLACE_WHERE")
     val newData = kept.filter(!hit).unionByName(align(df, snap.schema))
@@ -5452,24 +5511,6 @@ object DeltaLite {
     val adds = writeData(spark, root(path), v, newData, snap.schema,
       snap.partitionBy, snap.physical, snap.generated, snap.properties)
     commit(path, snap, "REPLACE_WHERE", adds = adds, removes = touched)
-  }
-
-  /** Files of `snap` containing a row where `hit` is true, plus a
-    * DataFrame of exactly those files' rows. */
-  private def touchedBy(spark: SparkSession, path: String, snap: Snapshot,
-      hit: Column): (Seq[String], DataFrame) = {
-    val touched =
-      if (snap.files.isEmpty) Nil
-      else partitionOnlyTouched(spark, snap, hit).getOrElse {
-        readFilesWithPos(spark, path, snap.schema, snap.files, snap.partitionBy, snap.physical)
-          .select(col("path").as("__fp"), hit.as("__hit"))
-          .filter(col("__hit")).select("__fp").distinct().collect()
-          .map(_.getString(0))
-          .toSeq
-      }
-    val touchedSet = touched.toSet
-    (touched, readFiles(spark, path, snap.schema,
-      snap.files.filter(f => touchedSet.contains(f.path)), snap.partitionBy, snap.physical))
   }
 
   /** Metadata-only touched-file resolution for PARTITION-scoped

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import graft.operators.SkewJoin
 import graft.sources.DeltaLite
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -3990,8 +3991,12 @@ class ScaleSpec extends AnyFunSuite with TestSpark {
       .toDF("k", "d", "v").withColumn("day", to_date($"d")).drop("d")
       .select($"k", $"day", $"v")
     val pathA = build()
-    val without = DeltaLite.mergeCandidates(spark, pathA, src, Seq("k"))
-    val withPred = DeltaLite.mergeCandidates(spark, pathA, src, Seq("k"), preds)
+    // the candidate step of the row locator, as mergeClauses calls it
+    def mergeCandidates(ps: Seq[String]) = DeltaLite.candidateFiles(spark,
+      DeltaLite.snapshot(pathA),
+      DeltaLite.OnKeys(src, Seq("k"), ps.map(p => expr(p)).reduceOption(_ && _)))
+    val without = mergeCandidates(Nil)
+    val withPred = mergeCandidates(preds)
     assert(without.size === 2, "both waves overlap the source key bounds")
     assert(withPred.size === 1, "the Jan file must prune on the day bound")
     assert(withPred.size < without.size)
@@ -3999,8 +4004,7 @@ class ScaleSpec extends AnyFunSuite with TestSpark {
     // bound — each shape once had only one of two extractors
     Seq("day IN (DATE'2024-02-15', DATE'2024-03-01')",
         "day >= date_add(DATE'2024-01-31', 1)").foreach { p =>
-      val cands = DeltaLite.mergeCandidates(spark, pathA, src, Seq("k"),
-        Seq(p))
+      val cands = mergeCandidates(Seq(p))
       assert(cands.map(_.path) === withPred.map(_.path),
         s"the Jan file must prune on $p: $cands")
     }
@@ -4137,5 +4141,214 @@ class ScaleSpec extends AnyFunSuite with TestSpark {
       assert(!cachedIn(after), "a read of the next version must not")
       assert(after.count() === 210)
     } finally cached.unpersist()
+  }
+
+  test("UPDATE: every SET and the predicate read the OLD row, through the API and SQL") {
+    import spark.implicits._
+    def table(): String = {
+      val p = Files.createTempDirectory("graft_update_old_row").toString
+      DeltaLite.create(spark, p,
+        (0L until 10L).map(k => (k, k * 10.0 + 1)).toDF("k", "v").coalesce(1))
+      p
+    }
+    def rows(p: String) =
+      DeltaLite.read(spark, p).as[(Long, Double)].collect().toSeq.sorted
+    val untouched = (5L until 10L).map(k => (k, k * 10.0 + 1))
+    // SET k moves the matched rows out of the predicate; SET v must
+    // still apply to every one of them
+    val moved = ((0L until 5L).map(k => (k + 100, -1.0)) ++ untouched).sorted
+    val a = table()
+    DeltaLite.update(spark, a, col("k") < 5,
+      Map("k" -> (col("k") + 100), "v" -> lit(-1.0)))
+    assert(rows(a) === moved)
+    val b = table()
+    spark.sql(s"UPDATE '$b' SET k = k + 100, v = -1.0 WHERE k < 5").collect()
+    assert(rows(b) === moved)
+    // a swap: each SET reads the other column's OLD value
+    val swapped = ((0L until 5L).map(k => ((k * 10 + 1), k * 1.0)) ++ untouched).sorted
+    val c = table()
+    DeltaLite.update(spark, c, col("k") < 5,
+      Map("k" -> col("v"), "v" -> col("k")))
+    assert(rows(c) === swapped)
+    val d = table()
+    spark.sql(s"UPDATE '$d' SET k = v, v = k WHERE k < 5").collect()
+    assert(rows(d) === swapped)
+  }
+
+  /** Every parquet scan over files under `root` that the actions of
+    * `body` execute: its `numFiles` SQL metric and the files it reads.
+    * Captured from each action's executed plan; a flush job after
+    * `body` proves every earlier event was delivered (the query
+    * listeners and this one share the listener queue). */
+  private def scansOf(root: String)(body: => Unit): Seq[(Long, Set[String])] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object Plans extends AdaptiveSparkPlanHelper
+    val scans = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Set[String])]
+    val queries = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        Plans.collect(qe.executedPlan) { case s: FileSourceScanExec => s }
+          .map(s => s.metrics("numFiles").value ->
+            s.relation.location.inputFiles.map(new java.net.URI(_).getPath).toSet)
+          .filter(_._2.exists(_.startsWith(root)))
+          .foreach(scans.add)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val group = s"scan-pin-${java.util.UUID.randomUUID}"
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val jobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+            .contains(group)) flushed.countDown()
+    }
+    val sc = spark.sparkContext
+    spark.listenerManager.register(queries)
+    sc.addSparkListener(jobs)
+    try {
+      body
+      sc.setJobGroup(group, "listener flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      scans.asScala.toSeq
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(jobs)
+      spark.listenerManager.unregister(queries)
+    }
+  }
+
+  /** A byte-identical copy of a table directory (the log keeps
+    * table-relative paths, so the copy is the same table). */
+  private def copyTable(src: String): String = {
+    val dst = Files.createTempDirectory("graft_table_copy").resolve("t")
+    val walk = Files.walk(Paths.get(src))
+    try walk.iterator().asScala.foreach { f =>
+      Files.copy(f, dst.resolve(Paths.get(src).relativize(f).toString))
+    } finally walk.close()
+    dst.toString
+  }
+
+  test("row locator: every row-level op opens only the files whose stats admit its predicate") {
+    import spark.implicits._
+    // 20 files, each a range of 50 keys
+    val base = Files.createTempDirectory("graft_locator_prune").toString
+    DeltaLite.create(spark, base, spark.range(0, 1000)
+      .select(col("id").as("k"), (col("id") * 2.0).as("v"))
+      .repartitionByRange(20, col("k")))
+    val files = DeltaLite.snapshot(base).files
+    assert(files.size === 20)
+    // only one file's [min, max] of k admits the predicate
+    val cond = col("k") >= 510L && col("k") < 515L
+    val admitted = files.filter(f => f.stats("k") match {
+      case DeltaLite.ColStats(Some(lo: Long), Some(hi: Long)) => lo < 515L && hi >= 510L
+      case _ => true
+    })
+    assert(admitted.size === 1)
+    val ops: Seq[(String, (String, Column) => Long)] = Seq(
+      "delete" -> ((p, c) => DeltaLite.delete(spark, p, c)),
+      "update" -> ((p, c) => DeltaLite.update(spark, p, c, Map("v" -> lit(-1.0)))),
+      "replaceWhere" -> ((p, c) => DeltaLite.replaceWhere(spark, p, c,
+        Seq((5000L, 0.0)).toDF("k", "v"))),
+      "deleteVectorized" -> ((p, c) => DeltaLite.deleteVectorized(spark, p, c)))
+    /** The op's commit: removed paths, re-added paths with their DV
+      * cardinality, and the rows of the new data files. */
+    def lastCommit(p: String) = {
+      val after = DeltaLite.snapshot(p)
+      val before = DeltaLite.snapshot(p, Some(after.version - 1)).files
+      val added = after.files.filterNot(before.contains)
+      val (readds, fresh) = added.partition(a => before.exists(_.path == a.path))
+      (before.filterNot(after.files.contains).map(_.path).toSet,
+        readds.map(a => a.path -> a.dv.map(_.cardinality)).toSet,
+        DeltaLite.readFiles(spark, p, after.schema, fresh, Nil, Map.empty)
+          .as[(Long, Double)].collect().toSeq.sorted)
+    }
+    ops.foreach { case (name, op) =>
+      val pruned = copyTable(base)
+      val scans = scansOf(pruned)(op(pruned, cond))
+      val candidate = Set(Paths.get(pruned).resolve(admitted.head.path).toString)
+      assert(scans.nonEmpty, s"$name ran no scan")
+      assert(scans.forall(_ == (1L -> candidate)),
+        s"$name must read only the admitted file: $scans")
+      // reference: the same predicate in a form no bound is read from
+      val reference = copyTable(base)
+      val refScans = scansOf(reference)(
+        op(reference, coalesce(cond, lit(false))))
+      assert(refScans.exists(_._1 == 20L), s"$name reference: $refScans")
+      val (removed, readds, freshRows) = lastCommit(pruned)
+      assert(removed === Set(admitted.head.path), name)
+      assert((removed, readds, freshRows) === lastCommit(reference), name)
+      assert(DeltaLite.read(spark, pruned).as[(Long, Double)].collect().sorted ===
+        DeltaLite.read(spark, reference).as[(Long, Double)].collect().sorted, name)
+    }
+  }
+
+  test("strategy parity: copy-on-write, native DV and _delta_log DV agree with a model at every step") {
+    import spark.implicits._
+    import graft.sources.DeltaInterop
+    val rnd = new scala.util.Random(19)
+    sealed trait Step
+    final case class Del(lo: Long, hi: Long) extends Step
+    final case class Upd(lo: Long, hi: Long, add: Double) extends Step
+    final case class Mrg(rows: Seq[(Long, Double)]) extends Step
+    val initial = (0L until 200L).map(k => (k, k * 1.0))
+    var nextKey = 200L
+    val script: Seq[Step] = (1 to 10).map { _ =>
+      val lo = rnd.nextInt(200).toLong
+      val hi = lo + 1 + rnd.nextInt(40)
+      rnd.nextInt(3) match {
+        case 0 => Del(lo, hi)
+        case 1 => Upd(lo, hi, 1 + rnd.nextInt(100))
+        case _ =>
+          val fresh = (0 until rnd.nextInt(4)).map(i => (nextKey + i, -1.0 * i))
+          nextKey += fresh.size
+          Mrg((lo until hi by 3).map(k => (k, 1000.0 + k)) ++ fresh)
+      }
+    }
+    def cond(lo: Long, hi: Long) = col("k") >= lo && col("k") < hi
+    def sqlCond(lo: Long, hi: Long) = s"k >= $lo AND k < $hi"
+    final case class Strategy(name: String, create: (String, DataFrame) => Unit,
+        run: (String, Step) => Unit, read: String => DataFrame)
+    def nativeWith(name: String, del: (String, Column) => Unit) = Strategy(name,
+      (p, df) => DeltaLite.create(spark, p, df),
+      (p, step) => step match {
+        case Del(lo, hi) => del(p, cond(lo, hi))
+        case Upd(lo, hi, add) =>
+          DeltaLite.update(spark, p, cond(lo, hi), Map("v" -> (col("v") + add)))
+        case Mrg(rows) => DeltaLite.merge(spark, p, rows.toDF("k", "v"), Seq("k"))
+      },
+      p => DeltaLite.read(spark, p))
+    val strategies = Seq(
+      nativeWith("copy-on-write", (p, c) => DeltaLite.delete(spark, p, c)),
+      nativeWith("native DV", (p, c) => DeltaLite.deleteVectorized(spark, p, c)),
+      Strategy("_delta_log DV",
+        (p, df) => DeltaInterop.exportToDelta(spark, df, p),
+        (p, step) => step match {
+          case Del(lo, hi) => DeltaInterop.exportDeleteWhere(spark, p, sqlCond(lo, hi))
+          case Upd(lo, hi, add) => DeltaInterop.exportUpdateWhere(spark, p,
+            sqlCond(lo, hi), Map("v" -> s"v + $add"))
+          case Mrg(rows) => DeltaInterop.exportMerge(spark, p, rows.toDF("k", "v"), Seq("k"))
+        },
+        p => DeltaInterop.read(spark, p)))
+    val paths = strategies.map { st =>
+      val p = Files.createTempDirectory("graft_parity").resolve("t").toString
+      st.create(p, initial.toDF("k", "v").repartitionByRange(8, col("k")))
+      st -> p
+    }
+    var model = initial.toMap
+    script.zipWithIndex.foreach { case (step, i) =>
+      model = step match {
+        case Del(lo, hi) => model.filter { case (k, _) => k < lo || k >= hi }
+        case Upd(lo, hi, add) => model.map { case (k, v) =>
+          k -> (if (k >= lo && k < hi) v + add else v) }
+        case Mrg(rows) => model ++ rows
+      }
+      paths.foreach { case (st, p) =>
+        st.run(p, step)
+        assert(st.read(p).as[(Long, Double)].collect().toMap === model,
+          s"${st.name} after step $i ($step)")
+      }
+    }
   }
 }

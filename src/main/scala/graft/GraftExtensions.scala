@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graft.ActiveContextConf
+import org.apache.spark.sql.internal.StaticSQLConf
 import graft.functions.{CollateKey, FloatVectorDot, HilbertIndex, InterleaveBits, JaroWinklerSimilarity, MinHashAgg, QuantileSketchAgg, SimHashAgg}
 
 /** Spark extension entry point (SURVEY.md §2.10 / builder prompt: custom
@@ -15,6 +17,24 @@ import graft.functions.{CollateKey, FloatVectorDot, HilbertIndex, InterleaveBits
   * per-session [[graft.functions.GraftFunctions.register]] (which remains
   * as an idempotent fallback for sessions created without the config). */
 object GraftExtensions {
+  /** Entries in Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, Spark's default 100), set on
+    * the context of every graft session unless the user set the key.
+    * The cache is one LRU per JVM, keyed by generated source, so a query
+    * re-run with the same plan reuses its compiled classes only while
+    * they are still cached. One pass of perfbench's four batch queries
+    * compiles 213-217 classes (at most 64 per query), so at 100 entries
+    * every re-run recompiled nearly every class (Janino, then the JIT);
+    * at 4,096 a re-run compiles about a tenth of them. 4,096 holds one
+    * warm pass of a batch sample of up to 64 such queries. A cached
+    * entry costs about 7.7 KB of metaspace (a full cache about 31 MB;
+    * `plans/codegen_cache.md`).
+    * Known limit: Spark sizes the cache once per JVM, from the conf of
+    * the session active on the thread where code is first generated; a
+    * JVM that ran codegen before its first graft session, or first on a
+    * thread with no active session, keeps Spark's size. */
+  val GeneratedClassCacheEntries = 4096
+
   /** `minhash_agg(shingle[, numHashes])` — the optional second argument
     * must be a foldable int literal (it sizes the signature buffer). */
   val minHashBuilder: Seq[Expression] => Expression = {
@@ -56,6 +76,10 @@ object GraftExtensions {
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // keep generated classes between executions: the session's SQLConf
+    // merges the context's conf after the extensions run
+    ActiveContextConf.setDefault(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
+      GraftExtensions.GeneratedClassCacheEntries.toString)
     // Maintenance SQL (DESCRIBE HISTORY/DETAIL, VACUUM, OPTIMIZE) — the
     // graft statements parse in GraftSqlParser, all other SQL delegates
     // to Spark's parser untouched.

@@ -1190,10 +1190,7 @@ object DeltaInterop {
       set: Map[String, String] = Map.empty): Option[DeltaLite.Located] = {
     import org.apache.spark.sql.functions.expr
     requireDvWritable(snap0, path, op, commitOp, writesRows = set.nonEmpty)
-    val unknown = set.keySet -- snap0.schema.fieldNames
-    require(unknown.isEmpty,
-      s"$op on $path: SET names unknown column(s) " +
-        s"${unknown.toSeq.sorted.mkString(", ")}")
+    DeltaLite.requireKnownSetColumns(op, path, snap0.schema, set.keys)
     if (snap0.files.isEmpty) return None
     val cond = expr(predicate)
     DeltaLite.requireDeterministicDv(op, path, predicate,

@@ -5427,6 +5427,18 @@ object DeltaLite {
       }.getOrElse(col(f.name))
     }: _*)
 
+  /** UPDATE's SET-name gate on both logs: every SET key names a column
+    * of `schema` ([[updateProjection]] iterates the schema, so an
+    * unknown key would otherwise be dropped and the op would commit
+    * an unchanged rewrite). Checked before any data is read. */
+  private[sources] def requireKnownSetColumns(op: String, path: String,
+      schema: StructType, set: Iterable[String]): Unit = {
+    val unknown = set.toSet -- schema.fieldNames
+    require(unknown.isEmpty,
+      s"$op on $path: SET names unknown column(s) " +
+        s"${unknown.toSeq.sorted.mkString(", ")}")
+  }
+
   /** Delta `DELETE FROM ... WHERE cond`, copy-on-write: rewrites ONLY
     * the files holding a matching row ([[touchedFiles]] over
     * [[locateRows]], which opens only the files whose stats admit
@@ -5458,6 +5470,7 @@ object DeltaLite {
       set: Map[String, Column]): Long = {
     val snap = snapshot(path)
     rejectIfAppendOnly(snap, "UPDATE")
+    requireKnownSetColumns("UPDATE", path, snap.schema, set.keys)
     // GENERATED ALWAYS AS columns cannot be assigned (Delta's rule); they
     // are recomputed from the updated base columns inside writeData.
     set.keys.find(snap.generated.contains).foreach { c =>

@@ -33,6 +33,30 @@ class FunctionsSpec extends AnyFunSuite with TestSpark {
     assert(r.getDouble(0) > 0.0)
   }
 
+  test("GraftExtensions keeps generated classes: a re-generated projection reuses its class") {
+    import org.apache.spark.sql.catalyst.expressions.{Add, BoundReference, Literal}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.LongType
+    // TestSpark.beforeAll built the session, and with it the extension,
+    // and made it this suite's active session before any test ran
+    def projection(c: Long) = GenerateUnsafeProjection.generate(
+      Seq(Add(BoundReference(0, LongType, nullable = false), Literal(c))))
+    val first = projection(0L)
+    // more distinct classes than Spark's default of 100 cached entries
+    (1L to 150L).foreach(projection)
+    assert(projection(0L).getClass eq first.getClass)
+  }
+
+  test("ActiveContextConf.setDefault leaves a key the conf already sets unchanged") {
+    import org.apache.spark.sql.graft.ActiveContextConf
+    import org.apache.spark.sql.internal.StaticSQLConf
+    val key = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
+    val set = GraftExtensions.GeneratedClassCacheEntries.toString
+    assert(spark.sparkContext.getConf.get(key) === set)
+    ActiveContextConf.setDefault(key, "7")
+    assert(spark.sparkContext.getConf.get(key) === set)
+  }
+
   test("collate_key: locale order beats binary order; strengths nest") {
     import spark.implicits._
     val words = Seq("zebra", "éclair", "apple", "BANANA", "banana")

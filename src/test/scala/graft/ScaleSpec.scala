@@ -4175,6 +4175,24 @@ class ScaleSpec extends AnyFunSuite with TestSpark {
     assert(rows(d) === swapped)
   }
 
+  test("UPDATE: a SET naming an unknown column throws and commits nothing, through the API and SQL") {
+    import spark.implicits._
+    val p = Files.createTempDirectory("graft_update_unknown_set").toString
+    DeltaLite.create(spark, p,
+      (0L until 10L).map(k => (k, k * 10.0 + 1)).toDF("k", "v").coalesce(1))
+    val before = DeltaLite.latestVersion(p)
+    val api = intercept[IllegalArgumentException](
+      DeltaLite.update(spark, p, col("k") < 5, Map("nope" -> lit(1.0))))
+    assert(api.getMessage.contains("SET names unknown column(s) nope"))
+    assert(DeltaLite.latestVersion(p) === before)
+    val sql = intercept[IllegalArgumentException](
+      spark.sql(s"UPDATE '$p' SET nope = 1 WHERE k < 5").collect())
+    assert(sql.getMessage.contains("SET names unknown column(s) nope"))
+    assert(DeltaLite.latestVersion(p) === before)
+    assert(DeltaLite.read(spark, p).as[(Long, Double)].collect().toSeq.sorted ===
+      (0L until 10L).map(k => (k, k * 10.0 + 1)))
+  }
+
   /** Every parquet scan over files under `root` that the actions of
     * `body` execute: its `numFiles` SQL metric and the files it reads.
     * Captured from each action's executed plan; a flush job after

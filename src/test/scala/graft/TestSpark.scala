@@ -12,6 +12,15 @@ trait TestSpark extends BeforeAndAfterAll { self: Suite =>
 
   lazy val spark: SparkSession = TestSpark.session
 
+  // suites run on threads that predate the shared session; make it their
+  // active session, as a driver's worker threads inherit it, so Spark
+  // code that reads SQLConf.get outside an action sees the session's
+  // conf (among it the code generator sizing its class cache on first use)
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    SparkSession.setActiveSession(spark)
+  }
+
   override def afterAll(): Unit = super.afterAll()
 }
 

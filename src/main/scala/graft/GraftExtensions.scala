@@ -3,8 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 import org.apache.spark.sql.graft.ActiveContextConf
-import org.apache.spark.sql.internal.StaticSQLConf
+import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 import graft.functions.{CollateKey, FloatVectorDot, HilbertIndex, InterleaveBits, JaroWinklerSimilarity, MinHashAgg, QuantileSketchAgg, SimHashAgg}
 
 /** Spark extension entry point (SURVEY.md §2.10 / builder prompt: custom
@@ -80,6 +82,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // merges the context's conf after the extensions run
     ActiveContextConf.setDefault(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
       GraftExtensions.GeneratedClassCacheEntries.toString)
+    // ...and let one stage's code share its class wherever the stage sits:
+    // with the stage id in the class name, a lookup that meets one more
+    // scan branch numbers its stages differently and recompiles the same
+    // code (plans/hoisted_literals.md)
+    ActiveContextConf.setDefault(SQLConf.WHOLESTAGE_CODEGEN_USE_ID_IN_CLASS_NAME.key, "false")
     // Maintenance SQL (DESCRIBE HISTORY/DETAIL, VACUUM, OPTIMIZE) — the
     // graft statements parse in GraftSqlParser, all other SQL delegates
     // to Spark's parser untouched.
@@ -111,6 +118,17 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // time, empty the fact branches they can never match (see
     // DynamicBranchPruning; off by conf)
     ext.injectOptimizerRule(_ => graft.plans.DynamicBranchPruning)
+    // comparison constants leave the generated source, so a lookup
+    // re-run with new bounds reuses its compiled classes; a columnar
+    // pre-transition rule runs just before CollapseCodegenStages on
+    // non-AQE plans and on every AQE stage (see HoistLiterals)
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = graft.plans.HoistLiterals
+    })
+    // a Filter over an empty local relation (a lookup whose stats pruning
+    // left no file) is that relation, before the optimizer compiles the
+    // Filter's condition to evaluate it over no rows (see HoistLiterals)
+    ext.injectPlanNormalizationRule(_ => graft.plans.HoistLiterals.EmptyRelationFilters)
     ext.injectFunction((
       FunctionIdentifier("vec_dot"),
       new ExpressionInfo(classOf[FloatVectorDot].getName, "vec_dot"),

@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.graft.LogFileScan
@@ -386,6 +387,25 @@ object DeltaInterop {
           .build())
       else f
     })
+
+  /** `numRecords` of an add's `stats` JSON, read with a streaming parser
+    * that skips every other field unparsed (the per-column min/max/null
+    * payloads); 0 when the field is absent or not an integer, or when
+    * the JSON is malformed before it. */
+  private def numRecordsOf(statsJson: String): Long = {
+    val p = statsJsonFactory.createParser(statsJson)
+    try {
+      if (p.nextToken() != JsonToken.START_OBJECT) return 0L
+      while (p.nextToken() == JsonToken.FIELD_NAME) {
+        val name = p.currentName
+        if (p.nextToken() == JsonToken.VALUE_NUMBER_INT && name == "numRecords")
+          return p.getLongValue
+        p.skipChildren()
+      }
+      0L
+    } catch { case _: java.io.IOException => 0L } finally p.close()
+  }
+  private val statsJsonFactory = new JsonFactory
 
   /** Delta per-file `stats` JSON → (numRecords, typed graft ColStats).
     * Values land in the DECODED representation [[DeltaLite]] prunes on
@@ -983,8 +1003,7 @@ object DeltaInterop {
           case ("add", JObject(a)) =>
             nAdd += 1
             a.toMap.get("stats").foreach {
-              case JString(x) if x.nonEmpty =>
-                rowsAdded += parseStats(x, null, Nil)._1
+              case JString(x) if x.nonEmpty => rowsAdded += numRecordsOf(x)
               case _ => ()
             }
           case ("remove", _) => nRemove += 1
@@ -1296,7 +1315,7 @@ object DeltaInterop {
     * update_preimage/update_postimage/insert change files. */
   def exportMerge(spark: SparkSession, path: String,
       source: DataFrame, keys: Seq[String]): Long = {
-    import org.apache.spark.sql.functions.{col, count, lit}
+    import org.apache.spark.sql.functions.{col, count, lit, max}
     val op = "exportMerge"
     val src = graft.Frames.cut(source)
     val snap0 = snapshot(spark, path)
@@ -1307,9 +1326,11 @@ object DeltaInterop {
     require(unknown.isEmpty,
       s"$op on $path: unknown key column(s) " +
         s"${unknown.toSeq.sorted.mkString(", ")}")
-    require(src.groupBy(keys.map(col): _*)
-        .agg(count(lit(1)).as("__n"))
-        .filter(col("__n") > 1).limit(1).count() == 0L,
+    // an aggregate, not a LIMIT: Spark names each limit's counter from a
+    // JVM-wide sequence, so a LIMIT stage compiles a new class every run
+    val maxRowsPerKey = src.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("__n")).agg(max(col("__n"))).head()
+    require(maxRowsPerKey.isNullAt(0) || maxRowsPerKey.getLong(0) <= 1L,
       s"$op on $path: duplicate source keys — a target row " +
         "matched by two source rows is ambiguous (delta-spark's " +
         "multiple-source-match error); de-duplicate the source " +
@@ -1612,16 +1633,18 @@ object DeltaInterop {
     // writer-v2 obligation), not the batch's nullable flag — every
     // file-sourced frame reads back nullable=true even when it holds
     // no nulls, so a flag check would decline all round-trips (review
-    // finding). One cheap existence probe per affected column; usually
-    // none are.
+    // finding). One null count over the affected columns; usually there
+    // are none.
     val suspect = snap.schema.fields
       .filter(tf => !tf.nullable &&
         df.schema.fields.exists(bf => bf.name == tf.name && bf.nullable))
       .map(_.name)
     if (suspect.nonEmpty) {
-      import org.apache.spark.sql.functions.col
-      val offending = suspect.find(c =>
-        df.filter(col(c).isNull).limit(1).count() > 0)
+      import org.apache.spark.sql.functions.{col, count, when}
+      // an aggregate, not a LIMIT per column (see exportMerge)
+      val nulls = suspect.map(c => count(when(col(c).isNull, 1)))
+      val row = df.agg(nulls.head, nulls.tail: _*).head()
+      val offending = suspect.indices.find(row.getLong(_) > 0).map(suspect)
       offending.foreach(c => sys.error(
         s"$op on $path: column '$c' contains nulls but the table " +
           "schema declares it non-nullable — foreign readers trust " +

@@ -2487,8 +2487,9 @@ object DeltaLite {
     * Hashed through a 1-row local projection with each literal CAST to
     * the column's type, so the probe hash matches the write-side
     * xxhash64(col) exactly (xxhash64 output depends on the input's
-    * Catalyst type). IN-set values hash in ONE local 1-row job (probe
-    * sets are driver-side metadata — queries × probes ints). */
+    * Catalyst type). IN-set values hash in ONE driver-side 1-row
+    * projection (probe sets are driver-side metadata — queries × probes
+    * ints). */
   private def bloomProbesFor(spark: SparkSession, snap: Snapshot,
       bounds: Seq[ColumnBound]): Map[String, Seq[Long]] =
     bloomProbeHashes(spark,
@@ -2498,8 +2499,8 @@ object DeltaLite {
 
   /** Point bounds (equality / IN-set) on bloom-indexed columns →
     * per-column probe hash lists, via the SAME xxhash64 expression the
-    * bloom builder hashed with (one tiny spark job evaluates the whole
-    * literal batch). Shared by [[scan]]'s snapshot path and the
+    * bloom builder hashed with (evaluated on the driver, [[oneLocalRow]]).
+    * Shared by [[scan]]'s snapshot path and the
     * branch-scan pruning rule ([[graft.plans.BranchFilePruning]], where
     * bound names are already physical — `phys` = identity there). */
   private[graft] def bloomProbeHashes(spark: SparkSession,
@@ -2516,8 +2517,8 @@ object DeltaLite {
       (pointVals, types.get(b.column)) match {
         case (Some(vs), Some(dt)) if indexed.contains(phys(b.column)) =>
           val hashes = if (vs.isEmpty) Seq.empty[Long] else {
-            val row = spark.range(1).select(vs.zipWithIndex.map { case (v, i) =>
-              xxhash64(lit(v).cast(dt)).as(s"h$i") }: _*).collect()(0)
+            val row = oneLocalRow(spark).select(
+              vs.map(v => xxhash64(lit(v).cast(dt))): _*).collect()(0)
             vs.indices.map(row.getLong)
           }
           Some(phys(b.column) -> hashes)
@@ -2597,16 +2598,24 @@ object DeltaLite {
   private case object FormatShape extends ShapeKind
   private case object PrefixShape extends ShapeKind
 
-  /** Evaluate generation expression `e` at base-column value `v` — a
-    * 1-row LOCAL projection (LocalTableScan, driver-only, no cluster
-    * work), so the mapping uses EXACTLY the same Catalyst semantics and
-    * session timezone as write-time materialization in [[writeData]]. */
+  /** Evaluate generation expression `e` at base-column value `v` on the
+    * driver ([[oneLocalRow]]), so the mapping uses the same Catalyst
+    * semantics and session time zone as write-time materialization in
+    * [[writeData]]. */
   private def evalGeneratedAt(spark: SparkSession, e: String,
       baseCol: String, v: Any): Option[Any] = {
-    val row = spark.range(1).select(lit(v).as(baseCol))
+    val row = oneLocalRow(spark).select(lit(v).as(baseCol))
       .select(expr(e).as("__g")).collect()(0)
     if (row.isNullAt(0)) None else Some(row.get(0))
   }
+
+  /** A one-row, zero-column local frame for evaluating constants on the
+    * driver: a projection over it folds into a local relation in the
+    * optimizer (`ConvertToLocalRelation`, interpreted), so `collect`
+    * starts no job and compiles no class. Analysis gives casts the
+    * session time zone. */
+  private def oneLocalRow(spark: SparkSession): DataFrame =
+    spark.createDataFrame(java.util.Collections.singletonList(Row()), new StructType())
 
   /** Balanced unionByName: keeps the plan O(log n) deep for n scan
     * branches — a left-deep reduce grows analysis time linearly with the

@@ -88,6 +88,8 @@ class DeltaInteropSpec extends AnyFunSuite with TestSpark {
     assert(h.map(_.getString(1)).toSeq === Seq("DELETE", "WRITE", "WRITE"))
     assert(h.last.getInt(3) > 0 && h.last.getLong(5) > 0L,
       s"commit 0 must report its add count and rows: ${h.toSeq}")
+    // rows_added sums each add's stats numRecords exactly
+    assert(h.map(_.getLong(5)).toSeq === Seq(0L, second.count(), first.count()))
     assert(h.head.getInt(4) > 0 && h.head.getInt(3) === 0,
       s"the delete commit must report removes and no adds: ${h.toSeq}")
     // DESCRIBE DETAIL dispatches too: live rows/files at the latest
@@ -1540,6 +1542,24 @@ class DeltaInteropSpec extends AnyFunSuite with TestSpark {
     assert(cdf === Seq((2L, "B", "update_postimage"),
       (2L, "b", "update_preimage"), (5L, "E", "insert")),
       s"merge CDF must carry all three change types: $cdf")
+  }
+
+  test("exportAppend declines nulls in a non-nullable column, naming the first offending column") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val path = tmp("interop_notnull")
+    def frame(nullable: Boolean, rows: Row*) = spark.createDataFrame(
+      java.util.Arrays.asList(rows: _*), StructType(Seq("k", "v", "w")
+        .map(StructField(_, LongType, nullable))))
+    DeltaInterop.exportToDelta(spark, frame(false, Row(1L, 1L, 1L)), path)
+    assert(DeltaInterop.snapshot(spark, path).schema.forall(!_.nullable))
+    // a nullable batch without nulls appends
+    assert(DeltaInterop.exportAppend(spark, frame(true, Row(2L, 2L, 2L)), path) === 1L)
+    val ex = intercept[RuntimeException] {
+      DeltaInterop.exportAppend(spark, frame(true, Row(3L, 3L, null), Row(4L, null, null)), path)
+    }
+    assert(ex.getMessage.contains("column 'v' contains nulls"), ex.getMessage)
+    assert(DeltaInterop.read(spark, path).count() === 2L)
   }
 
   test("exportMerge prunes candidate files by source key bounds: files outside the source's key range never open") {

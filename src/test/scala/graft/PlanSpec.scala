@@ -2328,4 +2328,211 @@ class PlanSpec extends AnyFunSuite with TestSpark {
     assert(D.snapshot(native).files.count(_.dv.isDefined) === 1)
     checkPlan(D.read(spark, native))
   }
+
+  // ---- HoistLiterals: comparison constants leave the generated source
+
+  import org.apache.spark.sql.functions._
+
+  /** The executed plan after the action ran (AQE's final plan). */
+  private def finalPlan(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.execution.SparkPlan =
+    df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.finalPhysicalPlan
+      case p => p
+    }
+
+  private object AqeHelper
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** Every whole-stage codegen body of the executed plan. */
+  private def codegenBodies(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    AqeHelper.collect(finalPlan(df)) {
+      case w: org.apache.spark.sql.execution.WholeStageCodegenExec =>
+        w.doCodeGen()._2.body
+    }
+
+  private def hoisted(df: org.apache.spark.sql.DataFrame): Seq[graft.plans.HoistedLiteral] =
+    AqeHelper.flatMap(finalPlan(df))(_.expressions.flatMap(_.collect {
+      case h: graft.plans.HoistedLiteral => h }))
+
+  test("HoistLiterals: 20 lookups with distinct keys generate one whole-stage source on both logs") {
+    import graft.sources.{DeltaInterop, DeltaLite}
+    val rows = spark.range(0L, 2000L)
+      .select(col("id").as("k"), (col("id") * 3L).as("v"))
+      .repartitionByRange(4, col("k")).sortWithinPartitions("k")
+    val lite = graft.TempDirs.fresh("hoist_lite") + "/t"
+    val delta = graft.TempDirs.fresh("hoist_delta") + "/t"
+    DeltaLite.create(spark, lite, rows)
+    DeltaInterop.exportToDelta(spark, rows, delta)
+    val scans: Seq[(String, Seq[DeltaLite.ColumnBound] => org.apache.spark.sql.DataFrame)] =
+      Seq("DeltaLite" -> (DeltaLite.scan(spark, lite, _)),
+        "DeltaInterop" -> (DeltaInterop.scan(spark, delta, _)))
+    scans.foreach { case (name, scan) =>
+      val sources = (0 until 20).map { i =>
+        val k = 37L + i * 97L
+        val df = scan(Seq(DeltaLite.ColumnBound("k", Some(k), Some(k))))
+          .filter(col("k") >= k && col("k") < k + 1L)
+        assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ===
+          Seq((k, k * 3L)), s"$name lookup of $k")
+        codegenBodies(df)
+      }
+      assert(sources.head.nonEmpty, s"$name: no whole-stage codegen stage")
+      assert(sources.distinct.size === 1,
+        s"$name: lookups that differ only in their key must generate one source")
+    }
+  }
+
+  test("HoistLiterals: subplans with different constants are never reused; equal ones are") {
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    Seq("true", "false").foreach { aqe =>
+      val s2 = spark.newSession()
+      s2.conf.set("spark.sql.adaptive.enabled", aqe)
+      val t = s2.range(0L, 200L).toDF("id")
+      def sub(c: Long) = t.filter(col("id") > c)
+        .groupBy((col("id") % 5L).as("g")).count()
+      def reused(df: org.apache.spark.sql.DataFrame) =
+        AqeHelper.collect(finalPlan(df)) { case r: ReusedExchangeExec => r }.size
+      val diff = sub(10L).union(sub(150L))
+      val got = diff.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      val want = (Seq.tabulate(5)(g => (g.toLong, (11L until 200L).count(_ % 5 == g).toLong)) ++
+        Seq.tabulate(5)(g => (g.toLong, (151L until 200L).count(_ % 5 == g).toLong))).sorted
+      assert(got === want, s"aqe=$aqe")
+      assert(reused(diff) === 0, s"aqe=$aqe: different constants must not share an exchange")
+      val same = sub(10L).union(sub(10L))
+      assert(same.count() === 10L)
+      assert(reused(same) === 1, s"aqe=$aqe: equal constants still share one exchange")
+      assert(hoisted(same).nonEmpty, s"aqe=$aqe: the filter constant must be hoisted")
+    }
+  }
+
+  test("HoistLiterals: seeds, scales, frame bounds, string and decimal literals stay Literals") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.types.{DecimalType, IntegerType, StringType}
+    val df = spark.range(0L, 100L).select(col("id"),
+        (col("id") / 7.0).as("x"), (col("id") % 3L).cast("string").as("s"),
+        (col("id") / 4).cast(DecimalType(10, 2)).as("d"))
+      .filter(col("s") =!= "2" && col("d") > lit(BigDecimal("1.50")) && col("id") > 3L)
+      .select(col("id"), rand(42).as("r"), round(col("x"), 2).as("x2"),
+        sum(col("id")).over(Window.orderBy(col("id")).rowsBetween(-2, 0)).as("w"),
+        (col("x") > 5.5).as("big"))
+    df.collect()
+    val lits = AqeHelper.flatMap(finalPlan(df))(_.expressions.flatMap(
+      _.collect { case l: Literal => l }))
+    def kept(what: String)(p: Literal => Boolean): Unit =
+      assert(lits.exists(p), s"$what must stay a Literal: $lits")
+    kept("the string constant")(l => l.dataType == StringType && l.value.toString == "2")
+    kept("the decimal constant")(_.dataType.isInstanceOf[DecimalType])
+    kept("rand's seed")(_.value == 42L)
+    kept("round's scale")(l => l.dataType == IntegerType && l.value == 2)
+    kept("the frame bound")(_.value == -2)
+    val hoistedValues = hoisted(df).map(_.value).toSet
+    assert(hoistedValues === Set[Any](3L, 5.5), s"only the primitive comparison operands: $hoistedValues")
+  }
+
+  test("HoistLiterals: every primitive type compares identically with codegen and interpreted") {
+    import java.time.{Instant, LocalDate, LocalDateTime}
+    import org.apache.spark.sql.types._
+    // id 0..39 as int, long, short, byte, float, double, date, timestamp
+    // and timestamp_ntz (hours after 2024-01-01 UTC); each comparison
+    // constant below is a hoisted operand of one primitive type
+    val q = (s: org.apache.spark.sql.SparkSession) => {
+      val ts = timestamp_seconds(lit(1704067200L) + col("id") * 3600L)
+      s.range(0L, 40L).select(col("id").cast("int").as("i"), col("id").as("l"),
+          col("id").cast("short").as("sh"), col("id").cast("byte").as("b"),
+          (col("id") / 2).cast("float").as("f"), (col("id") / 4.0).as("dbl"),
+          date_add(lit(LocalDate.parse("2024-01-01")), col("id").cast("int")).as("dt"),
+          ts.as("ts"), (lit(LocalDateTime.parse("2024-01-01T00:00:00")) +
+            make_dt_interval(lit(0), col("id").cast("int"))).as("ntz"))
+        .filter(col("i") >= 3 && col("l") < 35L && col("sh") =!= 7.toShort &&
+          col("b") > 1.toByte && col("f") <= 17.5f && col("dbl") =!= 2.25 &&
+          col("dt") > lit(LocalDate.parse("2024-01-05")) &&
+          col("ts") < lit(Instant.parse("2024-01-01T23:00:00Z")) &&
+          col("ntz") >= lit(LocalDateTime.parse("2024-01-01T04:00:00")))
+        .select(col("l"), (col("dbl") >= 3.0).as("p"), (col("i") <=> 20).as("e"))
+        .orderBy("l")
+    }
+    val codegen = q(spark)
+    val rows = codegen.collect().toSeq
+    val interp = spark.newSession()
+    interp.conf.set("spark.sql.codegen.wholeStage", "false")
+    interp.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    val interpreted = q(interp)
+    assert(interpreted.collect().toSeq === rows)
+    assert(rows.map(_.getLong(0)) === (5L until 23L).filterNot(Set(7L, 9L)),
+      s"rows: $rows")
+    assert(rows.forall(r => r.getBoolean(1) == (r.getLong(0) / 4.0 >= 3.0)))
+    assert(rows.forall(r => r.getBoolean(2) == (r.getLong(0) == 20L)))
+    Seq(codegen, interpreted).foreach { df =>
+      val types = hoisted(df).map(_.dataType).toSet
+      assert(Set[DataType](IntegerType, LongType, ShortType, ByteType, FloatType,
+        DoubleType, DateType, TimestampType, TimestampNTZType).subsetOf(types),
+        s"every primitive comparison operand is hoisted: $types")
+    }
+  }
+
+  test("HoistLiterals: a stage's code shares one class wherever the stage sits in the plan") {
+    // the same filter stage numbers first alone and later behind a union
+    // branch; without the stage id in the class name both generate one source
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    val t = s2.range(0L, 100L).toDF("k")
+    def stage(df: org.apache.spark.sql.DataFrame) = {
+      df.collect()
+      AqeHelper.collect(finalPlan(df)) {
+        case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w }
+    }
+    val alone = stage(t.filter(col("k") >= 10L))
+    val behind = stage(s2.range(0L, 5L).toDF("k").groupBy("k").count().select("k")
+      .union(t.filter(col("k") >= 20L)))
+    val filterStage = (ws: Seq[org.apache.spark.sql.execution.WholeStageCodegenExec]) =>
+      ws.filter(_.child.exists(_.isInstanceOf[org.apache.spark.sql.execution.FilterExec]))
+    val (a, b) = (filterStage(alone).head, filterStage(behind).head)
+    assert(a.codegenStageId != b.codegenStageId)
+    assert(a.doCodeGen()._2.body === b.doCodeGen()._2.body)
+  }
+
+  test("HoistLiterals: a filter over an empty local relation never reaches the optimizer") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val empty = spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+      StructType(Seq(StructField("k", LongType))))
+    val q = empty.filter(col("k") >= 4711L && col("k") < 4712L)
+    assert(q.queryExecution.normalized.isInstanceOf[LocalRelation],
+      q.queryExecution.normalized.treeString)
+    // the analyzed plan keeps it: predicates are analyzed over empty frames
+    assert(q.queryExecution.analyzed.isInstanceOf[Filter])
+    assert(q.collect().isEmpty && q.schema === empty.schema)
+    // a non-empty local relation keeps its filter
+    val one = spark.createDataFrame(java.util.Collections.singletonList(
+      org.apache.spark.sql.Row(4711L)), empty.schema)
+    val kept = one.filter(col("k") >= 4711L)
+    assert(kept.queryExecution.normalized.isInstanceOf[Filter])
+    assert(kept.collect().map(_.getLong(0)).toSeq === Seq(4711L))
+  }
+
+  test("HoistLiterals: the rewrite happens with and without AQE and renders like a Literal") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types._
+    Seq("true", "false").foreach { aqe =>
+      val s2 = spark.newSession()
+      s2.conf.set("spark.sql.adaptive.enabled", aqe)
+      val df = s2.range(0L, 50L).filter(col("id") >= 4711L || col("id") < 3L)
+        .groupBy((col("id") % 2L).as("g")).count()
+      assert(df.collect().map(_.getLong(1)).sum === 3L)
+      assert(hoisted(df).map(_.value).toSet === Set[Any](4711L, 3L), s"aqe=$aqe")
+      val shown = finalPlan(df).toString
+      assert(shown.contains(">= 4711)") && shown.contains("< 3)"),
+        s"aqe=$aqe: a hoisted constant prints as its literal:\n$shown")
+    }
+    Seq[(Any, DataType)]((4711, IntegerType), (4711L, LongType), (2.5, DoubleType),
+      (1.5f, FloatType), (7.toShort, ShortType), (7.toByte, ByteType), (19000, DateType),
+      (1700000000000000L, TimestampType), (1700000000000000L, TimestampNTZType)).foreach {
+      case (v, t) =>
+        val h = graft.plans.HoistedLiteral(v, t)
+        assert(h.toString === Literal(v, t).toString && h.sql === Literal(v, t).sql)
+        assert(h.eval() == v && h.canonicalized == h && h != graft.plans.HoistedLiteral(v, StringType))
+    }
+  }
 }

@@ -4105,6 +4105,44 @@ class ScaleSpec extends AnyFunSuite with TestSpark {
     assert(pruned.count() === 3500)
   }
 
+  test("planning a point scan evaluates bloom probes and generated bounds on the driver: no job") {
+    import spark.implicits._
+    // bloom-indexed: hash-bucketed files each span the whole key range,
+    // so only the per-file blooms can drop files for a point bound
+    val bloomy = Files.createTempDirectory("graft_bloom_nojob").toString
+    DeltaLite.create(spark, bloomy,
+      (0L until 4000L).map(i => (i, s"name$i")).toDF("k", "s")
+        .repartition(8, pmod(col("k"), lit(8))),
+      properties = Map("graft.bloom.columns" -> "k"))
+    val all = DeltaLite.snapshot(bloomy).files.size
+    var point: DataFrame = null
+    assert(jobsSubmitted {
+      point = DeltaLite.scan(spark, bloomy, Seq(DeltaLite.ColumnBound("k", Some(1234L), Some(1234L))))
+      point.inputFiles
+    } === 0)
+    val needle = DeltaLite.read(spark, bloomy).filter(col("k") === 1234L).inputFiles.toSet
+    assert(all > 2 && needle.size === 1)
+    assert(needle.subsetOf(point.inputFiles.toSet) && point.inputFiles.length <= 2,
+      s"the blooms keep the needle's file of $all: ${point.inputFiles.toSeq}")
+    assert(point.filter(col("k") === 1234L).select("s").as[String].collect().toSeq === Seq("name1234"))
+    // generated column day = date(ts): a point bound on ts maps to one day
+    val gen = Files.createTempDirectory("graft_gen_nojob").toString
+    DeltaLite.create(spark, gen, (0L until 240L).map(i =>
+        (i, java.sql.Timestamp.valueOf(f"2024-06-${(i % 4) + 1}%02d 10:00:00")))
+      .toDF("k", "ts").repartition(2), partitionBy = Seq("day"),
+      generated = Map("day" -> "date(ts)"))
+    val ts = java.sql.Timestamp.valueOf("2024-06-03 10:00:00")
+    var onDay: DataFrame = null
+    assert(jobsSubmitted {
+      onDay = DeltaLite.scan(spark, gen, Seq(DeltaLite.ColumnBound("ts", Some(ts), Some(ts))))
+      onDay.inputFiles
+    } === 0)
+    val dayFiles = DeltaLite.snapshot(gen).files.filter(_.pv("day") == "2024-06-03")
+    assert(dayFiles.nonEmpty && onDay.inputFiles.length === dayFiles.size,
+      s"the ts bound prunes to day 2024-06-03: ${onDay.inputFiles.toSeq}")
+    assert(onDay.filter(col("ts") === ts).count() === 60L)
+  }
+
   test("log-driven scans: same-snapshot reads match, cache serves them, file metadata kept") {
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
     val p = Files.createTempDirectory("graft_scan_id").toString

@@ -81,8 +81,8 @@ object DeletionVectors {
       "sizeInBytes" -> JInt(BigInt(d.sizeInBytes)),
       "cardinality" -> JLong(d.cardinality)))
 
-  /** Compact JSON of [[toJValue]] — the native parquet checkpoint's
-    * `dv` string column. */
+  /** Compact JSON of [[toJValue]] — the `dv` string column of the
+    * native checkpoint's parquet sidecars. */
   private[graft] def toJson(d: Descriptor): String =
     JsonMethods.compact(toJValue(d))
 

@@ -1252,7 +1252,7 @@ object DeltaInterop {
       // a DELETE cuts positions only; no data column reaches its commit
       dvFlipCommit(spark, path, "exportDeleteWhere", "DELETE", snap0,
         graft.Frames.cut(l.matched.select("path", "row_index")), l.oldPos,
-        () => Nil,
+        _ => Nil,
         () => Some(l.matched.drop("path", "row_index")
           .withColumn("_change_type", lit("delete"))))
     }
@@ -1288,7 +1288,8 @@ object DeltaInterop {
       requireSchemaMatch(rewritten, snap0, path, "exportUpdateWhere")
       dvFlipCommit(spark, path, "exportUpdateWhere", "UPDATE", snap0,
         matched.select("path", "row_index"), l.oldPos,
-        () => if (matched.isEmpty) Nil
+        // no deletion vector written = no row matched
+        newDv => if (newDv.isEmpty) Nil
           else writeDataFiles(spark, rewritten, root(path),
             snap0.partitionBy),
         () => Some(
@@ -1335,9 +1336,10 @@ object DeltaInterop {
         "matched by two source rows is ambiguous (delta-spark's " +
         "multiple-source-match error); de-duplicate the source " +
         "first")
-    // empty source: nothing matches, nothing inserts (an empty target
-    // still takes a non-empty source's inserts)
-    if (src.isEmpty) return snap0.version
+    // empty source (no key group, so a null max): nothing matches,
+    // nothing inserts (an empty target still takes a non-empty source's
+    // inserts)
+    if (maxRowsPerKey.isNullAt(0)) return snap0.version
     val l = DeltaLite.locateRows(spark, path, snap0, DeltaLite.OnKeys(src, keys))
     val matched = graft.Frames.cut(l.matched)
     val cols = snap0.schema.fieldNames.map(col).toSeq
@@ -1352,11 +1354,12 @@ object DeltaInterop {
     // non-candidate file cannot hold a matching key)
     val inserts = src.join(matched.select(keys.map(col): _*),
       keys, "left_anti").select(cols: _*)
-    val appendDf = rewritten.unionByName(inserts)
+    // a non-empty source always appends: each source row is a rewrite
+    // (its key matched) or an insert (the anti-join keeps it)
     dvFlipCommit(spark, path, op, "MERGE", snap0,
       matched.select("path", "row_index"), l.oldPos,
-      () => if (appendDf.isEmpty) Nil
-        else writeDataFiles(spark, appendDf, root(path), snap0.partitionBy),
+      _ => writeDataFiles(spark, rewritten.unionByName(inserts), root(path),
+        snap0.partitionBy),
       () => Some(
         matchedData
           .withColumn("_change_type", lit("update_preimage"))
@@ -1375,8 +1378,9 @@ object DeltaInterop {
     * concurrent-append serializability checks. `fresh` is the
     * (path, row_index) frame of freshly-deleted positions (already
     * anti-joined against existing DVs, already cut); `stageAdds`
-    * stages the op's appended data files (empty for DELETE) and runs
-    * only when the commit will actually be attempted; `cdcFrame`
+    * stages the op's appended data files (empty for DELETE) from the
+    * DV write's result (one descriptor per touched file, empty when no
+    * row matched); `cdcFrame`
     * builds the change rows (table columns + _change_type) and runs
     * only when delta.enableChangeDataFeed=true. cdc files stage
     * pre-claim like the DV file: uncommitted files are invisible, and
@@ -1385,10 +1389,10 @@ object DeltaInterop {
   private def dvFlipCommit(spark: SparkSession, path: String,
       op: String, commitOp: String, snap0: Snapshot,
       fresh: DataFrame, oldPos: DataFrame,
-      stageAdds: () => Seq[AddFile],
+      stageAdds: Seq[(String, DeletionVectors.Descriptor)] => Seq[AddFile],
       cdcFrame: () => Option[DataFrame]): Long = {
     val newDv = DeltaLite.writeDeletionVectors(spark, path, fresh, oldPos)
-    val newAdds = stageAdds()
+    val newAdds = stageAdds(newDv)
     if (newDv.isEmpty && newAdds.isEmpty) return snap0.version // no-op
     // delta.enableChangeDataFeed=true obliges ROW-LEVEL change files:
     // a foreign CDF reader sees remove+re-add of the same path as a

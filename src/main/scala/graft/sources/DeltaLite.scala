@@ -256,11 +256,11 @@ object DeltaLite {
     /** Retention-driven deletion of an EXPIRED log artifact (DELETE on
       * an object store) — the one place immutability is waived, used
       * only by [[cleanupLogs]] behind its checkpoint-anchor guard.
-      * Multi-part checkpoint dirs delete recursively on POSIX; object
-      * stores have no dirs, so the default's recursion is a no-op
+      * Legacy multi-part checkpoint dirs delete recursively on POSIX;
+      * object stores have no dirs, so the default's recursion is a no-op
       * there. */
     def deleteLog(target: Path): Unit = {
-      if (Files.isDirectory(target)) { // multi-part checkpoint dir
+      if (Files.isDirectory(target)) { // legacy multi-part checkpoint dir
         val parts = Files.list(target)
         try parts.iterator().asScala.foreach(Files.deleteIfExists(_))
         finally parts.close()
@@ -655,50 +655,43 @@ object DeltaLite {
     * `_last_checkpoint` design; keeps log replay O(1) in table age). */
   val CheckpointInterval: Long = 10L
 
-  /** A discovered checkpoint: version + format. Parquet checkpoints are
-    * directories `checkpoint-<V>.parquet/` of N part files (multi-part),
-    * valid only once Spark's `_SUCCESS` marker exists; JSON checkpoints
-    * are the single-file `checkpoint-<V>.json` form; v2 checkpoints are a
-    * JSON manifest `checkpoint-<V>.v2.json` referencing parquet SIDECAR
-    * files under `_graft_log/_sidecars/` (Delta's v2Checkpoint design —
-    * unchanged sidecars are REUSED across checkpoints, so writing one is
-    * O(changed buckets), not O(live files)). Format ranks replay
-    * preference at a version tie: v2 > parquet > json (all restate the
-    * same resolved state; higher ranks scale better). */
-  private final case class CkptRef(version: Long, format: String) {
-    def rank: Int = format match {
-      case "v2" => 2
+  /** A discovered checkpoint: its version and its file name's suffix.
+    * `json` is the inline form, `checkpoint-<V>.json`; `v2.json` is the
+    * sidecar manifest, whose add rows live in parquet files under
+    * `_graft_log/_sidecars/` (Delta's v2Checkpoint design, see
+    * [[writeCheckpoint]]); `parquet` is the legacy multi-part directory
+    * `checkpoint-<V>.parquet/`, no longer written but still read. The
+    * suffix ranks replay preference at a version tie: v2.json > parquet
+    * > json (all restate the same resolved state). */
+  private final case class CkptRef(version: Long, suffix: String) {
+    def name: String = s"checkpoint-$version.$suffix"
+    def rank: Int = suffix match {
+      case "v2.json" => 2
       case "parquet" => 1
       case _ => 0
     }
   }
 
-  /** Every checkpoint among the log's file names `names`; parquet and
-    * v2 forms only when `parquetOk` (their replay needs a live session —
-    * skipped, never a crash). A parquet directory counts once Spark's
-    * `_SUCCESS` marker exists. */
-  private def checkpointRefs(path: String, names: Seq[String],
-      parquetOk: Boolean): Seq[CkptRef] = {
-    val ld = logDir(path)
-    names.flatMap { n =>
-      // the .v2.json test must run FIRST: the plain-json branch's
-      // suffix strip would otherwise parse "15.v2" as a version
-      if (!n.startsWith("checkpoint-")) None
-      else if (n.endsWith(".v2.json"))
-        if (parquetOk) Some(CkptRef(
-          n.stripPrefix("checkpoint-").stripSuffix(".v2.json").toLong, "v2"))
-        else None
-      else if (n.endsWith(".json"))
-        Some(CkptRef(
-          n.stripPrefix("checkpoint-").stripSuffix(".json").toLong, "json"))
-      else if (parquetOk && n.endsWith(".parquet") &&
-          Files.exists(ld.resolve(n).resolve("_SUCCESS")))
-        Some(CkptRef(
-          n.stripPrefix("checkpoint-").stripSuffix(".parquet").toLong,
-          "parquet"))
-      else None
-    }
+  private val CheckpointName = """checkpoint-(\d+)\.(json|v2\.json|parquet)""".r
+
+  /** The checkpoint a log file name names, if any. */
+  private def checkpointName(n: String): Option[CkptRef] = n match {
+    case CheckpointName(v, suffix) => Some(CkptRef(v.toLong, suffix))
+    case _ => None
   }
+
+  /** Every readable checkpoint among the log's file names `names`; the
+    * sidecar and legacy parquet forms only when `sessionOk` (their
+    * replay needs a live session — skipped, never a crash). A legacy
+    * parquet directory counts once Spark's `_SUCCESS` marker exists. */
+  private def checkpointRefs(path: String, names: Seq[String],
+      sessionOk: Boolean): Seq[CkptRef] =
+    names.flatMap(checkpointName).filter(c => c.suffix match {
+      case "json" => true
+      case "v2.json" => sessionOk
+      case _ => sessionOk &&
+        Files.exists(logDir(path).resolve(c.name).resolve("_SUCCESS"))
+    })
 
   // --------------------------------------------- protocol table features
 
@@ -714,7 +707,7 @@ object DeltaLite {
     * operations auto-register (widenColumnType → typeWidening,
     * deleteVectorized → deletionVectors), mirroring Delta's automatic
     * protocol upgrades. "v2Checkpoint" (manifest + sidecar checkpoints,
-    * [[writeV2Checkpoint]]) is a SUPPORTED reader feature since round 7 —
+    * [[writeCheckpoint]]) is a SUPPORTED reader feature since round 7 —
     * tables whose checkpoints use the sidecar form are readable, and ones
     * requiring features beyond this list still refuse. */
   private[graft] val ProtocolReaderKey = "graft.protocol.readerFeatures"
@@ -835,9 +828,10 @@ object DeltaLite {
   /** The native table at version `asOf` (default latest): the
     * `_graft_log` codec ([[GraftLog]]) through the shared replayer
     * ([[replayLog]] — tip cache, checkpoint selection, [[fold]]).
-    * Parquet and v2 checkpoints need a live session; without one their
-    * discovery skips them (checkpoints are an optimization, commits stay
-    * the source of truth — a cost difference, never a correctness one). */
+    * Sidecar and legacy parquet checkpoints need a live session; without
+    * one their discovery skips them (checkpoints are an optimization,
+    * commits stay the source of truth — a cost difference, never a
+    * correctness one). */
   def snapshot(path: String, asOf: Option[Long] = None): Snapshot =
     replayLog(GraftLog, SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession), path, asOf)
@@ -996,9 +990,9 @@ object DeltaLite {
   }
 
   /** The `_graft_log` codec: graft-JSON commits `<v>.json` listed and
-    * read through the claim store, three checkpoint forms (JSON,
-    * multi-part parquet, v2 manifest + sidecars; at a shared version v2
-    * > parquet > json), and the reader-feature gate. */
+    * read through the claim store, its checkpoints (the inline JSON and
+    * sidecar-manifest files, one reader, and the legacy multi-part
+    * parquet directory; see [[CkptRef]]), and the reader-feature gate. */
   private object GraftLog extends LogCodec {
     def logDir(path: String): Path = DeltaLite.logDir(path)
 
@@ -1023,16 +1017,13 @@ object DeltaLite {
 
     def checkpoints(spark: Option[SparkSession], path: String,
         log: LogListing, v: Long): Seq[(Long, () => Seq[LogAction])] =
-      checkpointRefs(path, log.names, parquetOk = spark.isDefined)
+      checkpointRefs(path, log.names, sessionOk = spark.isDefined)
         .filter(_.version <= v).groupBy(_.version).values
         .map(_.maxBy(_.rank)).toSeq.sortBy(-_.version)
-        .map(c => c.version -> (() => c.format match {
-          case "v2" => readV2Checkpoint(spark.get, path, c.version)
-          case "parquet" => readParquetCheckpoint(spark.get, path, c.version)
-          case _ => graftActions(claimStore.readImmutable(
-              logDir(path).resolve(s"checkpoint-${c.version}.json")),
-            s"table $path checkpoint ${c.version}")
-        }))
+        .map(c => c.version -> (() =>
+          if (c.suffix == "parquet")
+            readParquetCheckpoint(spark.get, path, c.version)
+          else readCheckpoint(spark, path, c)))
 
     def commit(path: String, v: Long): Seq[LogAction] =
       graftActions(claimStore.readImmutable(logDir(path).resolve(s"$v.json")),
@@ -1646,7 +1637,7 @@ object DeltaLite {
     val commitMs =
       if (!ictOn || version == 0L) clockMs()
       else math.max(
-        commitHeaderMs(path, version - 1).map(_ + 1L).getOrElse(Long.MinValue),
+        commitHeader(path, version - 1)._2.map(_ + 1L).getOrElse(Long.MinValue),
         clockMs())
     Seq(
       JsonMethods.compact(JObject(List("commit" -> JObject(List(
@@ -1661,22 +1652,33 @@ object DeltaLite {
       adds2.map(f => JsonMethods.compact(encodeAdd(f, meta.schema, meta.physical)))
   }
 
+  /** Live files at which a checkpoint switches from the inline JSON form
+    * to the sidecar manifest. */
+  private val SidecarThreshold: Int = 10000
+
+  /** Sidecars per manifest checkpoint: live files are bucketed by a
+    * stable hash of their path. */
+  private val SidecarBuckets: Int = 16
+
   /** Materialize the resolved state at `version` as a checkpoint so
     * later replays skip the preceding history. Failure-safe: a missing
     * checkpoint only costs replay time, never correctness.
     *
-    * Two formats (the Delta classic-vs-v2 checkpoint split, re-expressed):
-    * small tables write the single-file JSON form (driver-parsed, zero
-    * Spark jobs — right for the lifecycle-query scale); a table whose
-    * live-file count crosses `graft.checkpoint.parquetThreshold`
-    * (default 10000) writes a MULTI-PART PARQUET checkpoint instead —
-    * `checkpoint-<V>.parquet/` with ~`graft.checkpoint.partRows` add
-    * actions per part — which replay reads as a DISTRIBUTED Spark scan.
-    * At 100-TB metadata (millions of add actions) a single JSON file and
-    * its driver-side line parse are the metadata bottleneck; the parquet
-    * form spreads both the bytes and the parse across executors, and
-    * the driver only collects the already-typed rows it must hold to
-    * resolve a snapshot. */
+    * One writer, two forms (Delta's classic and v2 checkpoints), chosen
+    * by the live-file count:
+    *   - below [[SidecarThreshold]] files, `checkpoint-<V>.json` holds
+    *     the metaData line, the txn lines and one add line per file
+    *     (driver-parsed, zero Spark jobs — right for the lifecycle-query
+    *     scale);
+    *   - at or above it, `checkpoint-<V>.v2.json` is a MANIFEST: the
+    *     same metaData and txn lines plus one `sidecar` line per bucket,
+    *     with the add actions in parquet sidecars ([[writeSidecars]]).
+    *     At 100-TB metadata (millions of add actions) a single JSON file
+    *     and its driver-side line parse are the bottleneck; replay reads
+    *     sidecars as a distributed scan of typed rows, and a bucket
+    *     unchanged since the previous manifest reuses its sidecar, so a
+    *     checkpoint writes O(changed buckets), not O(live files).
+    * With no live session the inline form is written at any size. */
   private def writeCheckpoint(path: String, version: Long): Unit = {
     val snap0 = snapshot(path, Some(version))
     // persist un-ANALYZEd row churn INTO the checkpoint (as a property
@@ -1690,42 +1692,33 @@ object DeltaLite {
       if (snap0.churnVersions.isEmpty) snap0
       else snap0.copy(properties = snap0.properties +
         (PendingChurnKey -> snap0.churnVersions.mkString(",")))
-    val threshold = snap.properties.collectFirst {
-      case (k, x) if k.equalsIgnoreCase("graft.checkpoint.parquetThreshold") => x
-    }.flatMap(x => scala.util.Try(x.trim.toLong).toOption).getOrElse(10000L)
-    val sparkOpt = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession)
-    val v2 = snap.properties.exists { case (k, x) =>
-      k.equalsIgnoreCase("graft.checkpoint.v2") && x.equalsIgnoreCase("true") }
-    if (v2 && sparkOpt.isDefined)
-      writeV2Checkpoint(sparkOpt.get, path, version, snap)
-    else if (snap.files.length >= threshold && sparkOpt.isDefined)
-      writeParquetCheckpoint(sparkOpt.get, path, version, snap)
-    else {
-      val lines = checkpointJsonLines(snap) ++
-        snap.files.map(f =>
-          JsonMethods.compact(encodeAdd(f, snap.schema, snap.physical)))
-      // checkpoints are an optimization: a lost claim race is a no-op
-      try claimStore.claim(logDir(path).resolve(s"checkpoint-$version.json"),
-        lines.mkString("\n").getBytes("UTF-8"))
-      catch { case _: java.nio.file.FileAlreadyExistsException => ()
-              case _: AmbiguousClaimException => () } // best-effort only
-    }
-  }
-
-  /** The metaData + txn lines shared by both checkpoint formats. */
-  private def checkpointJsonLines(snap: Snapshot): Seq[String] =
-    metaDataLine(snap) +:
+    val sidecarSession =
+      if (snap.files.length < SidecarThreshold) None
+      else SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+    val header = metaDataLine(snap) +:
       snap.txns.toSeq.sortBy(_._1).map { case (app, ver) =>
         JsonMethods.compact(JObject(List("txn" -> JObject(List(
           "app" -> JString(app), "version" -> JLong(ver)))))) }
+    val (suffix, body) = sidecarSession match {
+      case Some(spark) => "v2.json" -> writeSidecars(spark, path, version, snap)
+      case None => "json" -> snap.files.map(f =>
+        JsonMethods.compact(encodeAdd(f, snap.schema, snap.physical)))
+    }
+    // checkpoints are an optimization: a lost claim race is a no-op
+    try claimStore.claim(logDir(path).resolve(CkptRef(version, suffix).name),
+      (header ++ body).mkString("\n").getBytes("UTF-8"))
+    catch { case _: java.nio.file.FileAlreadyExistsException => ()
+            case _: AmbiguousClaimException => () } // best-effort only
+    if (sidecarSession.isDefined) gcSidecars(path)
+  }
 
-  /** Parquet checkpoint row shape: `meta` rows carry the metaData/txn
-    * JSON line (a handful, driver-parsed); `add` rows carry the file
-    * action as TYPED columns, so replay never JSON-parses the file set —
-    * executors decode parquet, the driver reads fields. Stats are
-    * tag-encoded strings (`L:`/`D:`/`S:` + value) per column: decoding
-    * is a prefix switch, not a parser. */
+  /** Typed checkpoint row shape of the legacy multi-part form: `meta`
+    * rows carry the metaData/txn JSON line (a handful, driver-parsed);
+    * `add` rows carry the file action as TYPED columns, so replay never
+    * JSON-parses the file set — executors decode parquet, the driver
+    * reads fields. Stats are tag-encoded strings (`L:`/`D:`/`S:` +
+    * value) per column: decoding is a prefix switch, not a parser.
+    * Sidecar rows are the `add` rows ([[SidecarSchema]]). */
   private val CkptParquetSchema = StructType(Seq(
     StructField("kind", StringType, nullable = false),
     StructField("json", StringType, nullable = true),
@@ -1739,6 +1732,9 @@ object DeltaLite {
     StructField("bloom", MapType(StringType, StringType), nullable = true),
     StructField("stats_min", MapType(StringType, StringType), nullable = true),
     StructField("stats_max", MapType(StringType, StringType), nullable = true)))
+
+  private val SidecarSchema = StructType(CkptParquetSchema.fields.filterNot(f =>
+    f.name == "kind" || f.name == "json"))
 
   private def tagStat(dt: DataType, v: Any): Option[String] =
     encodeStat(dt, v).collect {
@@ -1760,43 +1756,6 @@ object DeltaLite {
       }
     }
 
-  private def writeParquetCheckpoint(spark: SparkSession, path: String,
-      version: Long, snap: Snapshot): Unit = {
-    val types = snap.schema.fields.map(f =>
-      snap.physical.getOrElse(f.name, f.name) -> f.dataType).toMap
-    val metaRows = checkpointJsonLines(snap).map(j =>
-      Row("meta", j, null, null, null, null, null, null, null, null, null, null))
-    val addRows = snap.files.map { f =>
-      def statMap(pick: ColStats => Option[Any]): Map[String, String] =
-        f.stats.flatMap { case (cn, cs) =>
-          for { dt <- types.get(cn); v <- pick(cs); t <- tagStat(dt, v) }
-            yield cn -> t
-        }
-      Row("add", null, f.path, f.rows, f.bytes,
-        f.dv.map(DeletionVectors.toJson).orNull,
-        f.baseRowId.map(Long.box).orNull,
-        f.rowCommitVersion.map(Long.box).orNull,
-        f.pv, f.bloom, statMap(_.min), statMap(_.max))
-    }
-    val partRows = snap.properties.collectFirst {
-      case (k, x) if k.equalsIgnoreCase("graft.checkpoint.partRows") => x
-    }.flatMap(x => scala.util.Try(x.trim.toInt).toOption).getOrElse(50000)
-    val nParts = math.max(1,
-      ((addRows.length + partRows - 1) / partRows)).min(512)
-    val tmp = logDir(path).resolve(
-      s".checkpoint-$version-${java.util.UUID.randomUUID.toString.take(8)}.parquet.tmp")
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(metaRows ++ addRows, nParts),
-        CkptParquetSchema)
-      .write.mode("errorifexists").parquet(tmp.toString)
-    val fin = logDir(path).resolve(s"checkpoint-$version.parquet")
-    // atomic same-fs dir rename claims the name; a racing writer's copy
-    // of the SAME resolved state losing the race is fine — drop ours
-    try Files.move(tmp, fin, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch { case _: java.nio.file.FileSystemException =>
-      deleteRecursively(tmp) }
-  }
-
   private def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
       if (Files.isDirectory(p)) {
@@ -1806,30 +1765,28 @@ object DeltaLite {
       Files.deleteIfExists(p)
     }
 
-  /** Distributed checkpoint replay: one tiny collect for the meta rows,
-    * one typed collect for the add rows. The JSON-parse work a 10⁵-file
-    * table's replay used to do line-by-line on the driver is now the
-    * executors' parquet decode. */
+  /** Replay of a legacy multi-part `checkpoint-<V>.parquet/` directory,
+    * kept so existing tables (and cleanup anchors) still resolve: one
+    * tiny collect for the meta rows, one typed collect for the add rows. */
   private def readParquetCheckpoint(spark: SparkSession, path: String,
       cv: Long): Seq[LogAction] = {
-    val dir = logDir(path).resolve(s"checkpoint-$cv.parquet")
+    val dir = logDir(path).resolve(CkptRef(cv, "parquet").name)
     val df = spark.read.schema(CkptParquetSchema).parquet(dir.toString)
     val metaLines = df.filter(col("kind") === "meta").select(col("json"))
       .collect().map(_.getString(0)).toSeq
     require(metaLines.exists(_.startsWith("{\"metaData\"")),
       s"parquet checkpoint at $dir has no metaData row")
     graftActions(metaLines, s"table $path checkpoint $cv") ++
-      ckptAdds(df.filter(col("kind") === "add").drop("kind", "json"),
-        s"table $path checkpoint $cv")
+      ckptAdds(df.filter(col("kind") === "add").drop("kind", "json")
+        .collect().toSeq, s"table $path checkpoint $cv")
   }
 
   /** The add rows of a parquet or sidecar checkpoint, typed on fold. */
-  private def ckptAdds(rows: DataFrame, where: String): Seq[LogAction] =
-    rows.collect().toSeq.map(r =>
-      LogAction.Add(s => addFromCkptRow(r, s.statTypes, where)))
+  private def ckptAdds(rows: Seq[Row], where: String): Seq[LogAction] =
+    rows.map(r => LogAction.Add(s => addFromCkptRow(r, s.statTypes, where)))
 
   /** Decode one typed checkpoint/sidecar parquet row back to an AddFile
-    * (shared by the multi-part and v2-sidecar replay paths). */
+    * (shared by the multi-part and sidecar replay paths). */
   private def addFromCkptRow(r: Row, types: Map[String, DataType],
       where: String): AddFile = {
     def statsOf(minCol: String, maxCol: String): Map[String, ColStats] = {
@@ -1861,22 +1818,9 @@ object DeltaLite {
         .map(_.asInstanceOf[Long]))
   }
 
-  // --------------------------------------- v2 checkpoints (sidecar form)
+  // ------------------------------------------- sidecars (manifest form)
 
-  /** Delta v2Checkpoint: `checkpoint-<V>.v2.json` is a small JSON
-    * MANIFEST (metaData/txn lines + one `sidecar` line per bucket) whose
-    * file actions live in parquet SIDECAR files under
-    * `_graft_log/_sidecars/`, bucketed by a stable hash of the data-file
-    * path. The property this buys over the multi-part form is
-    * INCREMENTAL checkpointing: a bucket whose membership is unchanged
-    * since the previous v2 checkpoint keeps its fingerprint, so its
-    * sidecar file is REUSED by reference — at 100-TB metadata (millions
-    * of add actions, checkpoint every 10 commits) each checkpoint writes
-    * O(changed buckets) instead of re-serializing the full live set.
-    * Sidecar rows use [[CkptParquetSchema]] minus `kind`/`json`, so
-    * replay is the same distributed scan + typed decode as multi-part.
-    *
-    * Sidecar GC runs at write time: files unreferenced by ANY present v2
+  /** Sidecar GC runs at write time: files unreferenced by ANY present
     * manifest AND older than [[SidecarGcAgeMs]] are deleted — the age
     * floor keeps a concurrent writer's just-written, not-yet-linked
     * sidecars safe (same reasoning as Delta's checkpoint retention). */
@@ -1885,10 +1829,10 @@ object DeltaLite {
   private def sidecarDir(path: String): Path =
     logDir(path).resolve("_sidecars")
 
-  private def sidecarBucket(filePath: String, nBuckets: Int): Int =
-    Math.floorMod(scala.util.hashing.MurmurHash3.stringHash(filePath), nBuckets)
+  private def sidecarBucket(filePath: String): Int = Math.floorMod(
+    scala.util.hashing.MurmurHash3.stringHash(filePath), SidecarBuckets)
 
-  /** Parse the sidecar lines of a v2 manifest:
+  /** Parse the sidecar lines of a manifest:
     * bucket → (relative file, fingerprint, nAdds). */
   private def manifestSidecars(lines: Seq[String]): Map[Int, (String, String, Long)] =
     lines.filter(_.nonEmpty).flatMap { line =>
@@ -1906,16 +1850,21 @@ object DeltaLite {
       }
     }.toMap
 
-  private def writeV2Checkpoint(spark: SparkSession, path: String,
-      version: Long, snap: Snapshot): Unit = {
-    val nBuckets = snap.properties.collectFirst {
-      case (k, x) if k.equalsIgnoreCase("graft.checkpoint.sidecarBuckets") => x
-    }.flatMap(x => scala.util.Try(x.trim.toInt).toOption)
-      .filter(_ > 0).getOrElse(16)
+  /** The manifests present in the log. */
+  private def manifests(path: String): Seq[CkptRef] =
+    claimStore.listLog(logDir(path)).flatMap(checkpointName)
+      .filter(_.suffix == "v2.json")
+
+  /** Write the sidecars of the manifest checkpoint at `version` and
+    * return its `sidecar` lines (bucket, file, fingerprint, nAdds). A
+    * bucket whose fingerprint — md5 over its path-sorted encoded add
+    * actions, so any member/stat/schema-encoding change changes it —
+    * equals the one in the newest earlier manifest REUSES that
+    * manifest's sidecar file by reference. */
+  private def writeSidecars(spark: SparkSession, path: String,
+      version: Long, snap: Snapshot): Seq[String] = {
     val byBucket: Map[Int, Seq[AddFile]] =
-      snap.files.groupBy(f => sidecarBucket(f.path, nBuckets))
-    // fingerprint = md5 over the bucket's path-sorted encoded add actions
-    // — any member/stat/schema-encoding change changes it
+      snap.files.groupBy(f => sidecarBucket(f.path))
     def fingerprint(files: Seq[AddFile]): String = {
       val md = java.security.MessageDigest.getInstance("MD5")
       files.sortBy(_.path).foreach { f =>
@@ -1927,36 +1876,25 @@ object DeltaLite {
     }
     val prints: Map[Int, String] =
       byBucket.map { case (b, fs) => b -> fingerprint(fs) }
-    // previous v2 manifest (any version < this one): reusable sidecars
     val ld = logDir(path)
-    val prevVersion: Option[Long] =
-      claimStore.listLog(ld).iterator
-        .filter(n => n.startsWith("checkpoint-") && n.endsWith(".v2.json"))
-        .map(_.stripPrefix("checkpoint-").stripSuffix(".v2.json").toLong)
-        .filter(_ < version)
-        .foldLeft(Option.empty[Long])((acc, x) =>
-          Some(acc.fold(x)(math.max(_, x))))
-    val prev: Map[Int, (String, String, Long)] = prevVersion.map { pv =>
-      manifestSidecars(claimStore.readImmutable(
-        ld.resolve(s"checkpoint-$pv.v2.json")))
-    }.getOrElse(Map.empty)
+    val prev: Map[Int, (String, String, Long)] =
+      manifests(path).filter(_.version < version).maxByOption(_.version)
+        .map(c => manifestSidecars(claimStore.readImmutable(ld.resolve(c.name))))
+        .getOrElse(Map.empty)
     val reused: Map[Int, String] = byBucket.keys.flatMap { b =>
       prev.get(b).collect { case (file, fp, _) if fp == prints(b) => b -> file }
     }.toMap
     val changed = byBucket.keys.filterNot(reused.contains).toSeq.sorted
     // write every changed bucket in ONE partitioned job: repartition on
-    // the bucket key puts each bucket's rows in a single task, so each
-    // bucket directory gets exactly one parquet part — one sidecar file
+    // the bucket key puts each bucket's rows in a single task, and
+    // maxRecordsPerFile 0 keeps a session's cap from splitting it, so
+    // each bucket directory gets exactly one parquet part — one sidecar
     val written: Map[Int, String] =
       if (changed.isEmpty) Map.empty
       else {
         Files.createDirectories(sidecarDir(path))
         val types = snap.schema.fields.map(f =>
           snap.physical.getOrElse(f.name, f.name) -> f.dataType).toMap
-        val schemaWithBucket = StructType(
-          StructField("bucket", IntegerType, nullable = false) +:
-            CkptParquetSchema.fields.filterNot(f =>
-              f.name == "kind" || f.name == "json"))
         val rows = changed.flatMap { b =>
           byBucket(b).map { f =>
             def statMap(pick: ColStats => Option[Any]): Map[String, String] =
@@ -1975,54 +1913,52 @@ object DeltaLite {
           s".v2tmp-$version-${java.util.UUID.randomUUID.toString.take(8)}")
         spark.createDataFrame(
             spark.sparkContext.parallelize(rows, math.max(1, changed.size)),
-            schemaWithBucket)
+            StructType(StructField("bucket", IntegerType, nullable = false) +:
+              SidecarSchema.fields))
           .repartition(col("bucket"))
-          .write.partitionBy("bucket").parquet(tmp.toString)
+          .write.option("maxRecordsPerFile", 0L)
+          .partitionBy("bucket").parquet(tmp.toString)
         try {
           changed.map { b =>
             val bdir = tmp.resolve(s"bucket=$b")
-            val part = {
-              val st = Files.list(bdir)
-              try st.iterator().asScala
-                .find(p => p.getFileName.toString.endsWith(".parquet"))
-                .getOrElse(sys.error(s"no parquet part for sidecar bucket $b"))
-              finally st.close()
-            }
-            val name =
-              s"${java.util.UUID.randomUUID.toString}.parquet"
-            Files.move(part, sidecarDir(path).resolve(name))
+            val parts =
+              if (!Files.isDirectory(bdir)) Nil
+              else {
+                val st = Files.list(bdir)
+                try st.iterator().asScala.filter(p =>
+                  p.getFileName.toString.endsWith(".parquet")).toList
+                finally st.close()
+              }
+            if (parts.size != 1) throw new IllegalStateException(
+              s"table $path checkpoint $version: sidecar bucket $b was " +
+                s"written as ${parts.size} parquet parts; a manifest " +
+                "names exactly one per bucket")
+            val name = s"${java.util.UUID.randomUUID.toString}.parquet"
+            Files.move(parts.head, sidecarDir(path).resolve(name))
             b -> s"_sidecars/$name"
           }.toMap
         } finally deleteRecursively(tmp)
       }
-    val sidecarLines = byBucket.keys.toSeq.sorted.map { b =>
+    byBucket.keys.toSeq.sorted.map { b =>
       val file = reused.getOrElse(b, written(b))
       JsonMethods.compact(JObject(List("sidecar" -> JObject(List(
         "bucket" -> JInt(b), "file" -> JString(file),
         "fingerprint" -> JString(prints(b)),
         "nAdds" -> JLong(byBucket(b).size.toLong))))))
     }
-    val lines = checkpointJsonLines(snap) ++ sidecarLines
-    try claimStore.claim(ld.resolve(s"checkpoint-$version.v2.json"),
-      lines.mkString("\n").getBytes("UTF-8"))
-    catch { case _: java.nio.file.FileAlreadyExistsException => ()
-            case _: AmbiguousClaimException => () } // best-effort only
-    gcSidecars(path)
   }
 
-  /** Delete sidecar files referenced by NO present v2 manifest, aged past
+  /** Delete sidecar files referenced by NO present manifest, aged past
     * [[SidecarGcAgeMs]] (concurrent-writer safety floor). */
   private def gcSidecars(path: String): Unit = {
     val sd = sidecarDir(path)
     if (!Files.isDirectory(sd)) return
     val ld = logDir(path)
-    val referenced: Set[String] =
-      claimStore.listLog(ld).iterator
-        .filter(n => n.startsWith("checkpoint-") && n.endsWith(".v2.json"))
-        .flatMap(n => manifestSidecars(
-          claimStore.readImmutable(ld.resolve(n))).values.map(_._1))
-        .map(_.stripPrefix("_sidecars/"))
-        .toSet
+    val referenced: Set[String] = manifests(path)
+      .flatMap(c => manifestSidecars(
+        claimStore.readImmutable(ld.resolve(c.name))).values.map(_._1))
+      .map(_.stripPrefix("_sidecars/"))
+      .toSet
     val cutoff = System.currentTimeMillis() - SidecarGcAgeMs
     val stream = Files.list(sd)
     try stream.iterator().asScala
@@ -2033,25 +1969,33 @@ object DeltaLite {
     finally stream.close()
   }
 
-  private def readV2Checkpoint(spark: SparkSession, path: String,
-      cv: Long): Seq[LogAction] = {
+  /** The reader of both checkpoint files, `checkpoint-<V>.json` and the
+    * `.v2.json` manifest: metaData, txn and inline add lines decode
+    * through [[graftActions]] (`sidecar` lines fall through its
+    * catch-all); the sidecars a manifest lists are read in one
+    * distributed scan, and their rows must number the manifest's
+    * `nAdds` in sum — a swapped or truncated sidecar fails loudly
+    * instead of resolving a wrong file set. */
+  private def readCheckpoint(spark: Option[SparkSession], path: String,
+      c: CkptRef): Seq[LogAction] = {
     val ld = logDir(path)
-    val lines = claimStore.readImmutable(
-      ld.resolve(s"checkpoint-$cv.v2.json"))
+    val lines = claimStore.readImmutable(ld.resolve(c.name))
     require(lines.exists(_.startsWith("{\"metaData\"")),
-      s"v2 checkpoint manifest checkpoint-$cv.v2.json has no metaData row")
-    // metaData/txn lines decode as usual; `sidecar` lines fall through
-    // the codec's catch-all and are parsed separately below
-    val manifest = graftActions(lines, s"table $path checkpoint $cv")
+      s"checkpoint ${c.name} of $path has no metaData row")
+    val where = s"table $path checkpoint ${c.version}"
+    val inline = graftActions(lines, where)
     val sidecars = manifestSidecars(lines)
-    if (sidecars.isEmpty) return manifest
-    val sidecarSchema = StructType(CkptParquetSchema.fields.filterNot(f =>
-      f.name == "kind" || f.name == "json"))
+    if (sidecars.isEmpty) return inline
     // sidecar refs are log-dir-relative ("_sidecars/<uuid>.parquet")
-    val paths = sidecars.values.map(s => ld.resolve(s._1).toString)
+    val files = sidecars.values.map(s => ld.resolve(s._1).toString)
       .toSeq.distinct
-    manifest ++ ckptAdds(spark.read.schema(sidecarSchema).parquet(paths: _*),
-      s"table $path checkpoint $cv")
+    val rows = spark.get.read.schema(SidecarSchema).parquet(files: _*)
+      .collect().toSeq
+    val listed = sidecars.values.map(_._3).sum
+    if (rows.length != listed) throw new IllegalStateException(
+      s"$where: its sidecars hold ${rows.length} adds, but the nAdds of " +
+        s"manifest ${c.name} sum to $listed")
+    inline ++ ckptAdds(rows, where)
   }
 
   // ------------------------------- optimistic concurrency (Delta-style)
@@ -3081,20 +3025,20 @@ object DeltaLite {
     * tests; production value is the system clock). */
   private[graft] var clockMs: () => Long = () => System.currentTimeMillis()
 
-  /** One commit's header instant — a one-line read. */
-  private def commitHeaderMs(path: String, v: Long): Option[Long] = {
-    val first = Files.lines(logDir(path).resolve(s"$v.json"))
-    try first.iterator().asScala.take(1).toSeq.headOption.flatMap(
-      parseLine(_) match {
-        case JObject(fields) => fields.collectFirst {
-          case ("commit", JObject(c)) => c.collectFirst {
-            case ("committedAtMs", JLong(ms)) => ms
-            case ("committedAtMs", JInt(ms)) => ms.toLong
-          }
-        }.flatten
-        case _ => None
-      })
-    finally first.close()
+  /** Version `v`'s commit header: its op and its instant
+    * (`committedAtMs`), each None when absent — a one-line read. */
+  private def commitHeader(path: String, v: Long): (Option[String], Option[Long]) = {
+    val lines = Files.lines(logDir(path).resolve(s"$v.json"))
+    val first = try lines.iterator().asScala.take(1).toList finally lines.close()
+    first.flatMap(parseLine(_) match {
+      case JObject(fields) => fields.collectFirst {
+        case ("commit", JObject(c)) => c.toMap
+      }
+      case _ => None
+    }).headOption.fold((Option.empty[String], Option.empty[Long])) { c =>
+      (c.get("op").collect { case JString(op) => op },
+        longOf(c.get("committedAtMs")))
+    }
   }
 
   /** `TIMESTAMP AS OF` time travel: the newest version committed at or
@@ -3105,21 +3049,8 @@ object DeltaLite {
       .getOrElse(throw new IllegalArgumentException(s"no DeltaLite table at $path"))
     // start at the earliest RETAINED commit — below it the headers were
     // pruned by cleanupLogs and a timestamp there is unresolvable anyway
-    val vs = (earliestVersion(path).getOrElse(0L) to latest).flatMap { v =>
-      val first = Files.lines(logDir(path).resolve(s"$v.json"))
-      try {
-        val header = first.iterator().asScala.take(1).toSeq.headOption
-        header.flatMap(parseLine(_) match {
-          case JObject(fields) => fields.collectFirst {
-            case ("commit", JObject(c)) => c.collectFirst {
-              case ("committedAtMs", JLong(ms)) => (v, ms)
-              case ("committedAtMs", JInt(ms)) => (v, ms.toLong)
-            }
-          }.flatten
-          case _ => None
-        })
-      } finally first.close()
-    }
+    val vs = (earliestVersion(path).getOrElse(0L) to latest).flatMap(v =>
+      commitHeader(path, v)._2.map(v -> _))
     vs.filter(_._2 <= tsMillis).map(_._1).maxOption.getOrElse(
       throw new IllegalArgumentException(
         s"no version of $path existed at or before timestamp $tsMillis"))
@@ -5705,24 +5636,12 @@ object DeltaLite {
     // CDF source always calls this.
     val (insLabel, delLabel) =
       if (toVersion == fromVersion + 1 &&
-          commitOp(path, toVersion).contains("UPDATE"))
+          commitHeader(path, toVersion)._1.contains("UPDATE"))
         ("update_postimage", "update_preimage")
       else ("insert", "delete")
     addedRows.exceptAll(removedRows).withColumn("_change_type", lit(insLabel))
       .unionByName(
         removedRows.exceptAll(addedRows).withColumn("_change_type", lit(delLabel)))
-  }
-
-  /** The op string recorded in version `v`'s commit header. */
-  private def commitOp(path: String, v: Long): Option[String] = {
-    val lines = claimStore.readImmutable(logDir(path).resolve(s"$v.json"))
-    lines.headOption.flatMap(l => parseLine(l) match {
-      case JObject(fields) => fields.collectFirst {
-        case ("commit", JObject(c)) =>
-          c.collectFirst { case ("op", JString(o)) => o }
-      }.flatten
-      case _ => None
-    })
   }
 
   /** A partition-scope bound resolved to [[cmp]]'s comparable space,
@@ -5970,23 +5889,11 @@ object DeltaLite {
     // re-adds. Find the last pass by reading version HEADERS backward
     // (one line each), then collect add paths from only the commits
     // since it: O(delta commits), not O(table age).
-    def commitOp(v: Long): String = {
-      val first = Files.lines(logDir(path).resolve(s"$v.json"))
-      try first.iterator().asScala.take(1).toSeq.headOption.flatMap(
-        parseLine(_) match {
-          case JObject(fields) => fields.collectFirst {
-            case ("commit", JObject(c)) =>
-              c.collectFirst { case ("op", JString(s)) => s }.getOrElse("")
-          }
-          case _ => None
-        }).getOrElse("")
-      finally first.close()
-    }
     // the backward header scan stops at the log-cleanup floor: below it
     // commit files were pruned, and "no pass found" already degrades
     // safely to the every-live-file first-pass rewrite
     val lastPass = (snap.version to earliestVersion(path).getOrElse(0L) by -1L)
-      .find(v => commitOp(v) == "CLUSTER_INCREMENTAL")
+      .find(v => commitHeader(path, v)._1.contains("CLUSTER_INCREMENTAL"))
     // First pass on a table: EVERY live file is a victim, so the add-walk
     // result would be discarded — skip the O(full history) JSON parsing
     // entirely and only walk commits when a prior pass bounds the range.
@@ -6164,11 +6071,12 @@ object DeltaLite {
         case (k, v) if k.equalsIgnoreCase("graft.retention.logKeepVersions") => v
       }.flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(30)
     val earliestRetained = math.max(0L, latest - keep + 1)
-    // anchor on ANY checkpoint format — replay needs a live session for
-    // parquet/v2 forms, but every query path here runs with one
+    // anchor on ANY checkpoint form — replay needs a live session for
+    // the sidecar and legacy parquet forms, but every query path here
+    // runs with one
     val ld = logDir(path)
     val names = claimStore.listLog(ld)
-    val anchor = checkpointRefs(path, names, parquetOk = true)
+    val anchor = checkpointRefs(path, names, sessionOk = true)
       .map(_.version).filter(_ <= earliestRetained).maxOption match {
       case Some(cv) => cv
       case None => return 0 // no safe anchor: refuse to cut the chain
@@ -6176,13 +6084,7 @@ object DeltaLite {
     if (anchor <= 0L) return 0
     val victims = names.filter { n =>
         if (n.matches("""\d+\.json""")) n.stripSuffix(".json").toLong < anchor
-        else if (n.startsWith("checkpoint-") && n.endsWith(".v2.json"))
-          n.stripPrefix("checkpoint-").stripSuffix(".v2.json").toLong < anchor
-        else if (n.startsWith("checkpoint-") && n.endsWith(".json"))
-          n.stripPrefix("checkpoint-").stripSuffix(".json").toLong < anchor
-        else if (n.startsWith("checkpoint-") && n.endsWith(".parquet"))
-          n.stripPrefix("checkpoint-").stripSuffix(".parquet").toLong < anchor
-        else false
+        else checkpointName(n).exists(_.version < anchor)
       }.toList
     if (!dryRun) {
       victims.foreach(n => claimStore.deleteLog(ld.resolve(n)))

@@ -1484,6 +1484,77 @@ class DeltaInteropSpec extends AnyFunSuite with TestSpark {
     assert(bSide === Seq(1L, 3L))
   }
 
+  /** The optimized plans of every action `body` runs in `session`. A
+    * flush job after `body` proves every earlier event was delivered
+    * (the query listeners and the job listener share the bus's queue). */
+  private def actionPlans(session: org.apache.spark.sql.SparkSession)(
+      body: => Unit): Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]
+    val queries = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.optimizedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val group = s"plan-pin-${java.util.UUID.randomUUID}"
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val jobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+            .contains(group)) flushed.countDown()
+    }
+    val sc = session.sparkContext
+    session.listenerManager.register(queries)
+    sc.addSparkListener(jobs)
+    try {
+      body
+      sc.setJobGroup(group, "listener flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      import scala.jdk.CollectionConverters._
+      plans.asScala.toSeq
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(jobs)
+      session.listenerManager.unregister(queries)
+    }
+  }
+
+  test("exportMerge and exportUpdateWhere plan no LIMIT: emptiness comes from the source aggregate and the DV write") {
+    import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit}
+    // a session of its own: its listener sees only this test's actions
+    val s = spark.newSession()
+    import s.implicits._
+    val path = tmp("interop_nolimit")
+    DeltaInterop.exportToDelta(s,
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s").coalesce(1),
+      path)                                                          // v0
+    def limits(plans: Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]) =
+      plans.flatMap(_.collect { case l @ (_: LocalLimit | _: GlobalLimit) => l })
+    var v1, v2, v3 = -1L
+    val plans = actionPlans(s) {
+      v1 = DeltaInterop.exportMerge(s, path,
+        Seq((2L, "B"), (4L, "D")).toDF("id", "s"), Seq("id"))
+      v2 = DeltaInterop.exportUpdateWhere(s, path, "id = 1", Map("s" -> "'A'"))
+      // a predicate no row matches: a no-op, decided without a LIMIT
+      v3 = DeltaInterop.exportUpdateWhere(s, path, "id = 3 AND s = 'z'",
+        Map("s" -> "'Z'"))
+    }
+    assert(plans.nonEmpty, "the listener must see the ops' actions")
+    assert(limits(plans).isEmpty,
+      s"a LIMIT was planned: ${limits(plans).mkString("; ")}")
+    assert((v1, v2, v3) === (1L, 2L, 2L))
+    assert(DeltaInterop.read(s, path).select("id", "s").as[(Long, String)]
+      .collect().toSeq.sorted ===
+      Seq((1L, "A"), (2L, "B"), (3L, "c"), (4L, "D")))
+    // the empty source still commits nothing
+    assert(DeltaInterop.exportMerge(s, path,
+      Seq.empty[(Long, String)].toDF("id", "s"), Seq("id")) === 2L)
+  }
+
   test("exportMerge: matched rows rewrite to source values, unmatched insert, DV-deleted rows re-insert; duplicate source keys decline; CDF carries all three change types") {
     import spark.implicits._
     val path = tmp("interop_merge")

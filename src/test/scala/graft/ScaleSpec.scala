@@ -1418,69 +1418,99 @@ class ScaleSpec extends AnyFunSuite with TestSpark {
     assert(DeltaLite.read(spark, path, Some(10L)).count() === 11)
   }
 
-  test("DeltaLite parquet multi-part checkpoint: written past the threshold, replayed via a distributed scan, equal to log replay") {
-    import spark.implicits._
-    val path = Files.createTempDirectory("graft_pckpt").toString
-    // force the parquet form at toy scale: 1-file threshold, 4-row parts
+  /** A synthetic add for the checkpoint tests: no data file behind it
+    * (checkpoints need only the log), `k` in [10·i, 10·i + 9]. */
+  private def synthAdd(v: Long, i: Int): DeltaLite.AddFile = DeltaLite.AddFile(
+    path = f"files-$v%05d/part-$i%05d.parquet", rows = 10L, bytes = 1000L,
+    stats = Map("k" -> DeltaLite.ColStats(Some(i * 10L), Some(i * 10L + 9L))))
+
+  /** A (k long, v double) table whose version 1 replaces the created
+    * table's files with `n` synthetic adds; property commits then pad it
+    * to version `upTo`. */
+  private def synthTable(n: Int, upTo: Long = 10L): String = {
+    import org.apache.spark.sql.types._
+    val path = Files.createTempDirectory("graft_synth_ckpt").toString
+    val schema = StructType(Seq(StructField("k", LongType),
+      StructField("v", DoubleType)))
     DeltaLite.create(spark, path,
-      (0L until 8L).map(i => (i, i * 2.0)).toDF("k", "v").repartition(2),
-      properties = Map(
-        "graft.checkpoint.parquetThreshold" -> "1",
-        "graft.checkpoint.partRows" -> "4"))
-    (1 to 12).foreach { b =>
-      DeltaLite.append(spark, path,
-        Seq((100L + b, b * 1.0)).toDF("k", "v").coalesce(1))
-    }
-    // the 10th commit wrote a parquet checkpoint DIR, not a JSON file
-    val ckpt = Paths.get(path, "_graft_log", "checkpoint-10.parquet")
-    assert(Files.isDirectory(ckpt), "expected a parquet checkpoint dir")
-    assert(Files.exists(ckpt.resolve("_SUCCESS")))
-    val parts = Files.list(ckpt).iterator().asScala
-      .count(_.getFileName.toString.endsWith(".parquet"))
-    assert(parts > 1, s"expected multi-part checkpoint, got $parts part(s)")
-    assert(!Files.exists(Paths.get(path, "_graft_log", "checkpoint-10.json")))
-    // cold resolution goes through the parquet checkpoint...
+      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema))
+    val base = DeltaLite.snapshot(path)
+    DeltaLite.commit(path, base, "APPEND", adds = (0 until n).map(synthAdd(1L, _)),
+      removes = base.files.map(_.path))
+    (2L to upTo).foreach(v =>
+      DeltaLite.setProperties(path, Map(s"pad.k$v" -> v.toString)))
+    path
+  }
+
+  /** Cold resolution through the log file `ckpt` (a checkpoint) equals a
+    * commit-only replay with it hidden, field by field: the AddFile set,
+    * the schema and the properties. Returns the checkpoint's snapshot. */
+  private def assertCheckpointReplay(path: String,
+      ckpt: String): DeltaLite.Snapshot = {
+    val ld = Paths.get(path, "_graft_log")
+    assert(Files.exists(ld.resolve(ckpt)), s"expected $ckpt")
     DeltaLite.clearSnapshotCache()
     val viaCkpt = DeltaLite.snapshot(path)
-    assert(viaCkpt.version === 12 && viaCkpt.files.length === 14)
-    assert(DeltaLite.read(spark, path).count() === 20)
-    // ...and resolves EXACTLY the state a commit-only replay produces
-    // (field-level AddFile equality: stats, row-id bases, the lot)
-    Files.move(ckpt, Paths.get(path, "_graft_log", ".ckpt-hidden"))
-    DeltaLite.clearSnapshotCache()
-    val viaLog = DeltaLite.snapshot(path)
-    assert(viaCkpt.files.toSet === viaLog.files.toSet)
-    assert(viaCkpt.schema === viaLog.schema)
-    assert(viaCkpt.properties === viaLog.properties)
+    Files.move(ld.resolve(ckpt), ld.resolve(".ckpt-hidden"))
+    try {
+      DeltaLite.clearSnapshotCache()
+      val viaLog = DeltaLite.snapshot(path)
+      assert(viaCkpt.version === viaLog.version)
+      assert(viaCkpt.files.size === viaLog.files.size)
+      assert(viaCkpt.files.toSet === viaLog.files.toSet)
+      assert(viaCkpt.schema === viaLog.schema)
+      assert(viaCkpt.properties === viaLog.properties)
+    } finally {
+      Files.move(ld.resolve(".ckpt-hidden"), ld.resolve(ckpt))
+      DeltaLite.clearSnapshotCache()
+    }
+    viaCkpt
+  }
+
+  /** The sidecar files the manifest `checkpoint-<v>.v2.json` names. */
+  private def sidecarsOf(path: String, v: Long): Seq[String] =
+    Files.readAllLines(Paths.get(path, "_graft_log", s"checkpoint-$v.v2.json"))
+      .asScala.flatMap("\"file\":\"([^\"]+)\"".r.findFirstMatchIn(_)
+        .map(_.group(1))).toSeq
+
+  test("DeltaLite parquet multi-part checkpoint: written past the threshold, replayed via a distributed scan, equal to log replay") {
+    // 10,000 live files: the checkpoint is a manifest over 16 parquet
+    // sidecars, not one JSON file
+    val path = synthTable(10000)
+    val ld = Paths.get(path, "_graft_log")
+    assert(!Files.exists(ld.resolve("checkpoint-10.json")))
+    val sidecars = sidecarsOf(path, 10)
+    assert(sidecars.size === 16 && sidecars.distinct.size === 16,
+      s"expected one sidecar per bucket, got $sidecars")
+    assert(sidecars.forall(f => f.startsWith("_sidecars/") &&
+      Files.isRegularFile(ld.resolve(f))))
+    // cold resolution goes through the sidecars and resolves EXACTLY the
+    // state a commit-only replay produces
+    val viaCkpt = assertCheckpointReplay(path, "checkpoint-10.v2.json")
+    assert(viaCkpt.version === 10 && viaCkpt.files.length === 10000)
     // stats survived the typed round-trip → data skipping still prunes
-    Files.move(Paths.get(path, "_graft_log", ".ckpt-hidden"), ckpt)
-    DeltaLite.clearSnapshotCache()
-    val pruned = DeltaLite.scan(spark, path,
-      Seq(DeltaLite.ColumnBound("k", Some(108L), Some(108L))))
-    assert(pruned.count() === 1)
-    // vacuum must never eat checkpoint parts (they live in the log dir)
+    val pruned = DeltaLite.pruneFiles(viaCkpt,
+      Seq(DeltaLite.ColumnBound("k", Some(42L), Some(42L))))
+    assert(pruned.map(_.path) === Seq("files-00001/part-00004.parquet"))
+    // vacuum must never eat sidecars (they live in the log dir)
     DeltaLite.vacuum(path, keepVersions = 1)
-    assert(Files.exists(ckpt.resolve("_SUCCESS")))
-    assert(Files.list(ckpt).iterator().asScala
-      .count(_.getFileName.toString.endsWith(".parquet")) === parts)
+    assert(sidecars.forall(f => Files.isRegularFile(ld.resolve(f))))
+    assert(Files.list(ld.resolve("_sidecars")).iterator().asScala.size === 16)
   }
 
   test("DeltaLite parquet checkpoint at 1e5 actions: snapshot resolution without driver JSON parse") {
     import org.apache.spark.sql.types._
     // Fabricate a log whose add actions were never driver-JSON-encoded:
     // 10 commits x 10k adds through the real commit path, then the
-    // checkpoint trigger writes the multi-part parquet form and a cold
+    // checkpoint trigger writes the sidecar manifest and a cold
     // snapshot resolves 100k files through the distributed scan.
     val path = Files.createTempDirectory("graft_pckpt_big").toString
     val schema = StructType(Seq(StructField("k", LongType),
       StructField("v", DoubleType)))
-    val props = Map(
-      "graft.checkpoint.parquetThreshold" -> "1",
-      "graft.checkpoint.partRows" -> "20000")
     DeltaLite.create(spark, path,
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema),
-      properties = props)
+      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema))
     val seedFiles = DeltaLite.snapshot(path).files.map(_.path)
+    var writeSec = 0.0
     (1L to 10L).foreach { v =>
       val adds = (0 until 10000).map { i =>
         DeltaLite.AddFile(
@@ -1489,15 +1519,17 @@ class ScaleSpec extends AnyFunSuite with TestSpark {
           stats = Map("k" -> DeltaLite.ColStats(
             Some((v * 10000 + i) * 10L), Some((v * 10000 + i) * 10L + 9L))))
       }
+      val t0 = System.nanoTime()
       DeltaLite.commit(path,
-        DeltaLite.Snapshot(v - 1, schema, Nil, properties = props), "APPEND",
+        DeltaLite.Snapshot(v - 1, schema, Nil), "APPEND",
         adds = adds, removes = if (v == 1L) seedFiles else Nil)
+      writeSec = (System.nanoTime() - t0) / 1e9
     }
-    val ckpt = Paths.get(path, "_graft_log", "checkpoint-10.parquet")
-    assert(Files.isDirectory(ckpt) && Files.exists(ckpt.resolve("_SUCCESS")))
-    assert(Files.list(ckpt).iterator().asScala
-      .count(_.getFileName.toString.endsWith(".parquet")) >= 5,
-      "100k actions at 20k/part must be multi-part")
+    val ld = Paths.get(path, "_graft_log")
+    assert(Files.exists(ld.resolve("checkpoint-10.v2.json")))
+    assert(!Files.exists(ld.resolve("checkpoint-10.json")))
+    assert(sidecarsOf(path, 10).distinct.size === 16,
+      "100k actions must spread over the 16 sidecar buckets")
     DeltaLite.clearSnapshotCache()
     val t0 = System.nanoTime()
     val snap = DeltaLite.snapshot(path)
@@ -1506,7 +1538,106 @@ class ScaleSpec extends AnyFunSuite with TestSpark {
     // spot-check a typed stat made the round trip
     val f = snap.files.find(_.path == "files-00003/part-00042.parquet").get
     assert(f.stats("k") === DeltaLite.ColStats(Some(300420L), Some(300429L)))
-    info(f"100k-file snapshot resolved from parquet checkpoint in $sec%.2f s")
+    info(f"commit 10 with its sidecar checkpoint took $writeSec%.2f s; " +
+      f"the 100k-file snapshot resolved from it in $sec%.2f s")
+  }
+
+  test("checkpoint form follows the live-file count: 9,999 files inline in checkpoint-<V>.json, 10,000 in a sidecar manifest") {
+    val small = synthTable(9999)
+    val sld = Paths.get(small, "_graft_log")
+    assert(!Files.exists(sld.resolve("checkpoint-10.v2.json")))
+    assert(!Files.exists(sld.resolve("_sidecars")))
+    val lines = Files.readAllLines(sld.resolve("checkpoint-10.json")).asScala
+    assert(lines.head.startsWith("{\"metaData\""))
+    assert(lines.count(_.startsWith("{\"add\"")) === 9999)
+    assert(assertCheckpointReplay(small, "checkpoint-10.json").files.size === 9999)
+    val large = synthTable(10000)
+    val lld = Paths.get(large, "_graft_log")
+    assert(!Files.exists(lld.resolve("checkpoint-10.json")))
+    val manifest = Files.readAllLines(lld.resolve("checkpoint-10.v2.json")).asScala
+    assert(manifest.head.startsWith("{\"metaData\""))
+    assert(!manifest.exists(_.startsWith("{\"add\"")))
+    assert(manifest.count(_.startsWith("{\"sidecar\"")) === 16)
+    assert(assertCheckpointReplay(large, "checkpoint-10.v2.json").files.size === 10000)
+  }
+
+  test("sidecar writer: a session's maxRecordsPerFile never splits a bucket") {
+    // a session that caps files at 100 rows would split each ~625-add
+    // bucket into parts, and a manifest names one file per bucket
+    val capped = spark.newSession()
+    capped.conf.set("spark.sql.files.maxRecordsPerFile", "100")
+    org.apache.spark.sql.SparkSession.setActiveSession(capped)
+    val path =
+      try synthTable(10000)
+      finally org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    val sidecars = sidecarsOf(path, 10)
+    assert(sidecars.distinct.size === 16)
+    val ld = Paths.get(path, "_graft_log")
+    assert(Files.list(ld.resolve("_sidecars")).iterator().asScala.size === 16,
+      "no stray parts beside the 16 sidecars")
+    assert(assertCheckpointReplay(path, "checkpoint-10.v2.json").files.size === 10000)
+  }
+
+  test("sidecar reader: a sidecar whose row count disagrees with the manifest's nAdds fails loudly") {
+    val path = synthTable(10000)
+    val ld = Paths.get(path, "_graft_log")
+    // (file, nAdds) per bucket; swap one sidecar for another valid one
+    // holding a different number of adds
+    val entries = Files.readAllLines(ld.resolve("checkpoint-10.v2.json"))
+      .asScala.flatMap("\"file\":\"([^\"]+)\".*\"nAdds\":(\\d+)".r
+        .findFirstMatchIn(_).map(m => m.group(1) -> m.group(2).toLong)).toSeq
+    assert(entries.size === 16)
+    val (a, na) = entries.head
+    val (b, _) = entries.find(_._2 != na).get
+    Files.copy(ld.resolve(b), ld.resolve(a),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    DeltaLite.clearSnapshotCache()
+    val e = intercept[IllegalStateException](DeltaLite.snapshot(path))
+    Seq(path, "checkpoint-10.v2.json", "nAdds").foreach(w =>
+      assert(e.getMessage.contains(w), s"'$w' missing from: ${e.getMessage}"))
+  }
+
+  test("a legacy multi-part checkpoint-<V>.parquet directory still resolves, also as the log-cleanup anchor") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("graft_legacy_pckpt").toString
+    DeltaLite.create(spark, path,
+      (0L until 8L).map(i => (i, i * 2.0)).toDF("k", "v").repartition(2))
+    (1 to 12).foreach(b => DeltaLite.append(spark, path,
+      Seq((100L + b, b * 1.0)).toDF("k", "v").coalesce(1)))
+    // replace checkpoint-10.json with the legacy layout: `meta` rows
+    // carry the metaData/txn lines, `add` rows the typed file actions
+    // (stats tag-encoded `L:`/`D:`), spread over three parts
+    val ld = Paths.get(path, "_graft_log")
+    val metaLines = Files.readAllLines(ld.resolve("checkpoint-10.json")).asScala
+      .filterNot(_.startsWith("{\"add\""))
+    def tag(x: Option[Any]): Option[String] = x.map {
+      case l: Long => s"L:$l"
+      case d: Double => s"D:$d"
+    }
+    val adds = DeltaLite.snapshot(path, Some(10L)).files.map { f =>
+      def stat(pick: DeltaLite.ColStats => Option[Any]) =
+        f.stats.flatMap { case (c, s) => tag(pick(s)).map(c -> _) }
+      ("add", null: String, f.path, f.rows, f.bytes, null: String,
+        f.baseRowId, f.rowCommitVersion, f.pv, f.bloom,
+        stat(_.min), stat(_.max))
+    }
+    val rows = metaLines.map(j => ("meta", j, null: String, 0L, 0L,
+      null: String, Option.empty[Long], Option.empty[Long],
+      Map.empty[String, String], Map.empty[String, String],
+      Map.empty[String, String], Map.empty[String, String])) ++ adds
+    rows.toSeq.toDF("kind", "json", "path", "rows", "bytes", "dv", "base_row_id",
+        "row_commit_version", "pv", "bloom", "stats_min", "stats_max")
+      .repartition(3).write.parquet(ld.resolve("checkpoint-10.parquet").toString)
+    Files.delete(ld.resolve("checkpoint-10.json"))
+    val viaCkpt = assertCheckpointReplay(path, "checkpoint-10.parquet")
+    assert(viaCkpt.version === 12 && viaCkpt.files.length === 14)
+    // anchored on the directory, cleanup deletes commits 0..9 and the
+    // directory alone carries the state below version 10
+    assert(DeltaLite.cleanupLogs(path, keepVersions = 2) === 10)
+    assert(!Files.exists(ld.resolve("9.json")))
+    DeltaLite.clearSnapshotCache()
+    assert(DeltaLite.snapshot(path).files.toSet === viaCkpt.files.toSet)
+    assert(DeltaLite.read(spark, path).count() === 20)
   }
 
   test("DeltaLite in-commit timestamps: monotonic headers under clock skew; TIMESTAMP AS OF and RESTORE resolve from them") {
@@ -2057,22 +2188,15 @@ class ScaleSpec extends AnyFunSuite with TestSpark {
     val e = intercept[IllegalStateException](DeltaLite.snapshot(path))
     Seq(path, "version 1", retired, "no longer reads").foreach(w =>
       assert(e.getMessage.contains(w), s"'$w' missing from: ${e.getMessage}"))
-    // parquet checkpoint: its add rows carry the retired string
-    val cpath = Files.createTempDirectory("graft_dv_retired_ckpt").toString
-    DeltaLite.create(spark, cpath, Seq(0L).toDF("k"),
-      properties = Map("graft.checkpoint.parquetThreshold" -> "1"))
-    (1 to 10).foreach(b => DeltaLite.append(spark, cpath, Seq(b.toLong).toDF("k")))
-    val ckpt = Paths.get(cpath, "_graft_log", "checkpoint-10.parquet")
-    assert(Files.isDirectory(ckpt), "expected a parquet checkpoint dir")
+    // sidecar checkpoint: its add rows carry the retired string
+    val cpath = synthTable(10000)
+    val sidecar = Paths.get(cpath, "_graft_log", sidecarsOf(cpath, 10).head)
     val forged = Paths.get(cpath, "_graft_log", ".forged")
-    spark.read.parquet(ckpt.toString)
-      .withColumn("dv", when($"kind" === "add", lit(retired))
-        .otherwise($"dv"))
-      .write.parquet(forged.toString)
-    val w = Files.walk(ckpt)
-    try w.iterator().asScala.toSeq.reverse.foreach(Files.delete(_))
-    finally w.close()
-    Files.move(forged, ckpt)
+    spark.read.parquet(sidecar.toString).withColumn("dv", lit(retired))
+      .coalesce(1).write.parquet(forged.toString)
+    val part = Files.list(forged).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    Files.move(part, sidecar, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     DeltaLite.clearSnapshotCache()
     val ce = intercept[IllegalStateException](DeltaLite.snapshot(cpath))
     Seq(cpath, "checkpoint 10", retired, "no longer reads").foreach(w =>
@@ -3113,27 +3237,12 @@ class ScaleSpec extends AnyFunSuite with TestSpark {
   }
 
   test("v2 checkpoints: sidecar manifest replay + incremental sidecar reuse") {
-    import spark.implicits._
-    val path = Files.createTempDirectory("graft_v2ckpt").toString
-    DeltaLite.create(spark, path,
-      (0L until 40L).map(i => (i, i * 1.0)).toDF("k", "v").repartition(4))
-    DeltaLite.setProperties(path, Map("graft.checkpoint.v2" -> "true",
-      "graft.checkpoint.sidecarBuckets" -> "8"))
-    DeltaLite.enableTableFeature(path, "v2Checkpoint", reader = true)
-    // single-file appends up to version 10 — the checkpoint boundary
-    while (DeltaLite.latestVersion(path).get < 10)
-      DeltaLite.append(spark, path,
-        Seq((100L + DeltaLite.latestVersion(path).get, 0.0)).toDF("k", "v")
-          .coalesce(1))
+    val path = synthTable(10000)
     val ld = java.nio.file.Paths.get(path, "_graft_log")
     assert(Files.exists(ld.resolve("checkpoint-10.v2.json")),
-      "v2-enabled table must write a manifest, not a classic checkpoint")
+      "a 10,000-file table must write a manifest, not a classic checkpoint")
     assert(!Files.exists(ld.resolve("checkpoint-10.json")))
-    def sidecarsOf(v: Long): Seq[String] =
-      Files.readAllLines(ld.resolve(s"checkpoint-$v.v2.json")).asScala
-        .flatMap("\"file\":\"([^\"]+)\"".r.findFirstMatchIn(_)
-          .map(_.group(1))).toSeq
-    val s10 = sidecarsOf(10)
+    val s10 = sidecarsOf(path, 10)
     assert(s10.nonEmpty && s10.forall(_.startsWith("_sidecars/")))
     assert(s10.forall(f => Files.exists(ld.resolve(f))))
     // cache-cleared resolution through the manifest equals the live state
@@ -3146,21 +3255,23 @@ class ScaleSpec extends AnyFunSuite with TestSpark {
     // touches exactly one bucket; every other sidecar must be REUSED
     (1 to 9).foreach(i =>
       DeltaLite.setProperties(path, Map(s"audit.k$i" -> i.toString)))
-    DeltaLite.append(spark, path, Seq((999L, 9.9)).toDF("k", "v").coalesce(1))
+    DeltaLite.commit(path, DeltaLite.snapshot(path), "APPEND",
+      adds = Seq(synthAdd(20L, 0)))
     assert(DeltaLite.latestVersion(path).get === 20)
-    val s20 = sidecarsOf(20)
-    assert((s20.toSet -- s10.toSet).size <= 1,
-      s"one appended file may rewrite at most its own bucket; " +
+    val s20 = sidecarsOf(path, 20)
+    assert((s20.toSet -- s10.toSet).size === 1,
+      s"one appended file rewrites exactly its own bucket; " +
         s"got new sidecars ${(s20.toSet -- s10.toSet)}")
-    assert((s10.toSet intersect s20.toSet).nonEmpty,
+    assert((s10.toSet intersect s20.toSet).size === 15,
       "unchanged buckets must reuse their sidecar files by reference")
     // hard replay proof: with commits 0..19 gone, only the manifest +
     // sidecars can resolve the table
-    val rowsAt20 = DeltaLite.read(spark, path).count()
+    val at20 = DeltaLite.snapshot(path)
     (0L until 20L).foreach(v => Files.deleteIfExists(ld.resolve(s"$v.json")))
     DeltaLite.clearSnapshotCache()
-    assert(DeltaLite.read(spark, path).count() === rowsAt20)
-    assert(DeltaLite.snapshot(path).properties.get("audit.k9") === Some("9"))
+    val cold = DeltaLite.snapshot(path)
+    assert(cold.files.toSet === at20.files.toSet && cold.files.size === 10001)
+    assert(cold.properties.get("audit.k9") === Some("9"))
   }
 
   test("cleanupLogs prunes pre-anchor history; retained range stays resolvable") {

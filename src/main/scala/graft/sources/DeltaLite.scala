@@ -1662,7 +1662,8 @@ object DeltaLite {
 
   /** Materialize the resolved state at `version` as a checkpoint so
     * later replays skip the preceding history. Failure-safe: a missing
-    * checkpoint only costs replay time, never correctness.
+    * checkpoint only costs replay time, never correctness, and [[commit]]
+    * logs a failed write instead of failing its committed version.
     *
     * One writer, two forms (Delta's classic and v2 checkpoints), chosen
     * by the live-file count:
@@ -1860,7 +1861,10 @@ object DeltaLite {
     * bucket whose fingerprint — md5 over its path-sorted encoded add
     * actions, so any member/stat/schema-encoding change changes it —
     * equals the one in the newest earlier manifest REUSES that
-    * manifest's sidecar file by reference. */
+    * manifest's sidecar file by reference. A bucket no commit since that
+    * manifest added to or removed from, under the same schema and
+    * physical names, keeps its fingerprint without re-encoding, so the
+    * driver hashes O(changed files), not O(live files). */
   private def writeSidecars(spark: SparkSession, path: String,
       version: Long, snap: Snapshot): Seq[String] = {
     val byBucket: Map[Int, Seq[AddFile]] =
@@ -1874,19 +1878,36 @@ object DeltaLite {
       }
       f"${new java.math.BigInteger(1, md.digest())}%032x"
     }
-    val prints: Map[Int, String] =
-      byBucket.map { case (b, fs) => b -> fingerprint(fs) }
     val ld = logDir(path)
-    val prev: Map[Int, (String, String, Long)] =
-      manifests(path).filter(_.version < version).maxByOption(_.version)
-        .map(c => manifestSidecars(claimStore.readImmutable(ld.resolve(c.name))))
-        .getOrElse(Map.empty)
+    val prevRef = manifests(path).filter(_.version < version)
+      .maxByOption(_.version)
+    val prevLines = prevRef.toSeq.flatMap(c =>
+      claimStore.readImmutable(ld.resolve(c.name)))
+    val prev: Map[Int, (String, String, Long)] = manifestSidecars(prevLines)
+    val carried: Map[Int, String] = prevRef.filter { c =>
+      graftActions(prevLines, s"table $path checkpoint ${c.version}")
+        .collectFirst { case LogAction.Meta(update) => update(Unreplayed) }
+        .exists(m => m.schema == snap.schema && m.physical == snap.physical)
+    }.flatMap { c =>
+      val since = (c.version + 1) to version
+      val commits = GraftLog.list(path).commits
+      if (!since.forall(commits)) None
+      else {
+        val hit = since.flatMap(GraftLog.commit(path, _)).collect {
+          case LogAction.Add(decode) => sidecarBucket(decode(snap).path)
+          case r: LogAction.Remove => sidecarBucket(r.path)
+        }.toSet
+        Some(prev.collect { case (b, (_, fp, _)) if !hit(b) => b -> fp })
+      }
+    }.getOrElse(Map.empty)
+    val prints: Map[Int, String] = byBucket.map { case (b, fs) =>
+      b -> carried.getOrElse(b, fingerprint(fs)) }
     val reused: Map[Int, String] = byBucket.keys.flatMap { b =>
       prev.get(b).collect { case (file, fp, _) if fp == prints(b) => b -> file }
     }.toMap
     val changed = byBucket.keys.filterNot(reused.contains).toSeq.sorted
-    // write every changed bucket in ONE partitioned job: repartition on
-    // the bucket key puts each bucket's rows in a single task, and
+    // write every changed bucket in ONE partitioned job: one input
+    // partition per bucket puts its rows in a single task (no shuffle), and
     // maxRecordsPerFile 0 keeps a session's cap from splitting it, so
     // each bucket directory gets exactly one parquet part — one sidecar
     val written: Map[Int, String] =
@@ -1895,7 +1916,7 @@ object DeltaLite {
         Files.createDirectories(sidecarDir(path))
         val types = snap.schema.fields.map(f =>
           snap.physical.getOrElse(f.name, f.name) -> f.dataType).toMap
-        val rows = changed.flatMap { b =>
+        val rows = changed.map { b =>
           byBucket(b).map { f =>
             def statMap(pick: ColStats => Option[Any]): Map[String, String] =
               f.stats.flatMap { case (cn, cs) =>
@@ -1912,10 +1933,9 @@ object DeltaLite {
         val tmp = ld.resolve(
           s".v2tmp-$version-${java.util.UUID.randomUUID.toString.take(8)}")
         spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, math.max(1, changed.size)),
+            spark.sparkContext.parallelize(rows, changed.size).flatMap(identity),
             StructType(StructField("bucket", IntegerType, nullable = false) +:
               SidecarSchema.fields))
-          .repartition(col("bucket"))
           .write.option("maxRecordsPerFile", 0L)
           .partitionBy("bucket").parquet(tmp.toString)
         try {
@@ -1984,7 +2004,9 @@ object DeltaLite {
       s"checkpoint ${c.name} of $path has no metaData row")
     val where = s"table $path checkpoint ${c.version}"
     val inline = graftActions(lines, where)
-    val sidecars = manifestSidecars(lines)
+    // only a manifest lists sidecars: an inline checkpoint parses once
+    val sidecars =
+      if (c.suffix == "v2.json") manifestSidecars(lines) else Map.empty
     if (sidecars.isEmpty) return inline
     // sidecar refs are log-dir-relative ("_sidecars/<uuid>.parquet")
     val files = sidecars.values.map(s => ld.resolve(s._1).toString)
@@ -2163,8 +2185,16 @@ object DeltaLite {
       }
     }
     if (claimed) {
+      // the version has landed: a checkpoint that fails to write costs
+      // later replays time, so it is logged, never the commit's failure
       if (version > 0 && version % CheckpointInterval == 0)
-        writeCheckpoint(path, version)
+        try writeCheckpoint(path, version)
+        catch {
+          case scala.util.control.NonFatal(e) =>
+            org.slf4j.LoggerFactory.getLogger("graft.DeltaLite").warn(
+              s"checkpoint $version of $path was not written (replay " +
+                "folds its commits instead)", e)
+        }
       // churn repair needs the removed files' partitions, which only
       // the pre-commit snapshot can name
       if (ChurnOps(op) && (adds.nonEmpty || removes.nonEmpty)) {

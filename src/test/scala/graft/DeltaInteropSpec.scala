@@ -1484,44 +1484,10 @@ class DeltaInteropSpec extends AnyFunSuite with TestSpark {
     assert(bSide === Seq(1L, 3L))
   }
 
-  /** The optimized plans of every action `body` runs in `session`. A
-    * flush job after `body` proves every earlier event was delivered
-    * (the query listeners and the job listener share the bus's queue). */
+  /** The optimized plans of every action `body` runs in `session`. */
   private def actionPlans(session: org.apache.spark.sql.SparkSession)(
-      body: => Unit): Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.util.QueryExecutionListener
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]
-    val queries = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.optimizedPlan)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    val group = s"plan-pin-${java.util.UUID.randomUUID}"
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val jobs = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
-            .contains(group)) flushed.countDown()
-    }
-    val sc = session.sparkContext
-    session.listenerManager.register(queries)
-    sc.addSparkListener(jobs)
-    try {
-      body
-      sc.setJobGroup(group, "listener flush")
-      sc.parallelize(Seq(1), 1).count()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      import scala.jdk.CollectionConverters._
-      plans.asScala.toSeq
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(jobs)
-      session.listenerManager.unregister(queries)
-    }
-  }
+      body: => Unit): Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] =
+    withQueryExecutions(session)(qe => Seq(qe.optimizedPlan))(body)
 
   test("exportMerge and exportUpdateWhere plan no LIMIT: emptiness comes from the source aggregate and the DV write") {
     import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit}

@@ -3237,7 +3237,10 @@ class ScaleSpec extends AnyFunSuite with TestSpark {
   }
 
   test("v2 checkpoints: sidecar manifest replay + incremental sidecar reuse") {
-    val path = synthTable(10000)
+    // the table declares the v2Checkpoint reader feature, so every cold
+    // replay below also passes the reader-feature gate
+    val path = synthTable(10000, upTo = 9)
+    DeltaLite.enableTableFeature(path, "v2Checkpoint", reader = true)   // v10
     val ld = java.nio.file.Paths.get(path, "_graft_log")
     assert(Files.exists(ld.resolve("checkpoint-10.v2.json")),
       "a 10,000-file table must write a manifest, not a classic checkpoint")
@@ -3272,6 +3275,47 @@ class ScaleSpec extends AnyFunSuite with TestSpark {
     val cold = DeltaLite.snapshot(path)
     assert(cold.files.toSet === at20.files.toSet && cold.files.size === 10001)
     assert(cold.properties.get("audit.k9") === Some("9"))
+    assert(DeltaLite.featurePresent(cold.properties, reader = true,
+      "v2Checkpoint"))
+  }
+
+  test("sidecar reuse re-encodes every bucket after a schema change") {
+    // dropping k drops its stats from every encoded add: no bucket's old
+    // sidecar matches what the writer would write now, though only one
+    // bucket's files changed
+    val path = synthTable(10000)
+    val ld = Paths.get(path, "_graft_log")
+    val s10 = sidecarsOf(path, 10)
+    DeltaLite.dropColumn(path, "k")                                     // v11
+    (12 to 19).foreach(i =>
+      DeltaLite.setProperties(path, Map(s"audit.k$i" -> i.toString)))
+    DeltaLite.commit(path, DeltaLite.snapshot(path), "APPEND",
+      adds = Seq(synthAdd(20L, 0)))                                     // v20
+    val s20 = sidecarsOf(path, 20)
+    assert(s20.size === 16 && (s20.toSet intersect s10.toSet).isEmpty,
+      "a schema change re-encodes every bucket; none may reuse its sidecar")
+    // the rewritten sidecars resolve the live file set (stats of the
+    // dropped column are not re-encoded, so compare paths)
+    val live = DeltaLite.snapshot(path)
+    DeltaLite.clearSnapshotCache()
+    val cold = DeltaLite.snapshot(path)
+    assert(cold.files.map(_.path).toSet === live.files.map(_.path).toSet &&
+      cold.files.size === 10001 && !cold.schema.fieldNames.contains("k"))
+    assert(Files.list(ld.resolve("_sidecars")).iterator().asScala.size === 32)
+  }
+
+  test("a checkpoint that fails to write never fails its committed version") {
+    val path = synthTable(10000, upTo = 9)
+    val ld = Paths.get(path, "_graft_log")
+    // a plain file where the sidecar directory goes: the manifest write fails
+    Files.write(ld.resolve("_sidecars"), Array[Byte](1))
+    assert(DeltaLite.setProperties(path, Map("pad.k10" -> "10")) === 10L)
+    assert(DeltaLite.latestVersion(path) === Some(10L))
+    assert(!Files.exists(ld.resolve("checkpoint-10.v2.json")) &&
+      !Files.exists(ld.resolve("checkpoint-10.json")))
+    DeltaLite.clearSnapshotCache()
+    val snap = DeltaLite.snapshot(path)
+    assert(snap.version === 10 && snap.files.size === 10000)
   }
 
   test("cleanupLogs prunes pre-anchor history; retained range stays resolvable") {
@@ -4344,46 +4388,16 @@ class ScaleSpec extends AnyFunSuite with TestSpark {
 
   /** Every parquet scan over files under `root` that the actions of
     * `body` execute: its `numFiles` SQL metric and the files it reads.
-    * Captured from each action's executed plan; a flush job after
-    * `body` proves every earlier event was delivered (the query
-    * listeners and this one share the listener queue). */
+    * Captured from each action's executed plan. */
   private def scansOf(root: String)(body: => Unit): Seq[(Long, Set[String])] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.util.QueryExecutionListener
     object Plans extends AdaptiveSparkPlanHelper
-    val scans = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Set[String])]
-    val queries = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        Plans.collect(qe.executedPlan) { case s: FileSourceScanExec => s }
-          .map(s => s.metrics("numFiles").value ->
-            s.relation.location.inputFiles.map(new java.net.URI(_).getPath).toSet)
-          .filter(_._2.exists(_.startsWith(root)))
-          .foreach(scans.add)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    val group = s"scan-pin-${java.util.UUID.randomUUID}"
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val jobs = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
-            .contains(group)) flushed.countDown()
-    }
-    val sc = spark.sparkContext
-    spark.listenerManager.register(queries)
-    sc.addSparkListener(jobs)
-    try {
-      body
-      sc.setJobGroup(group, "listener flush")
-      sc.parallelize(Seq(1), 1).count()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      scans.asScala.toSeq
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(jobs)
-      spark.listenerManager.unregister(queries)
-    }
+    withQueryExecutions(spark)(qe =>
+      Plans.collect(qe.executedPlan) { case s: FileSourceScanExec => s }
+        .map(s => s.metrics("numFiles").value ->
+          s.relation.location.inputFiles.map(new java.net.URI(_).getPath).toSet)
+        .filter(_._2.exists(_.startsWith(root))))(body)
   }
 
   /** A byte-identical copy of a table directory (the log keeps

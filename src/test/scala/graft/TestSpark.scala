@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.Suite
 
@@ -22,6 +23,43 @@ trait TestSpark extends BeforeAndAfterAll { self: Suite =>
   }
 
   override def afterAll(): Unit = super.afterAll()
+
+  /** What `collect` takes from each action `session` runs during `body`.
+    * A flush job after `body` proves every earlier event was delivered
+    * (the query listeners and the job listener share the bus's queue). */
+  protected def withQueryExecutions[T](session: SparkSession)(
+      collect: QueryExecution => Seq[T])(body: => Unit): Seq[T] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[T]
+    val queries = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        collect(qe).foreach(seen.add)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val group = s"listener-flush-${java.util.UUID.randomUUID}"
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val jobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+            .contains(group)) flushed.countDown()
+    }
+    val sc = session.sparkContext
+    session.listenerManager.register(queries)
+    sc.addSparkListener(jobs)
+    try {
+      body
+      sc.setJobGroup(group, "listener flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      import scala.jdk.CollectionConverters._
+      seen.asScala.toSeq
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(jobs)
+      session.listenerManager.unregister(queries)
+    }
+  }
 }
 
 object TestSpark {
